@@ -2,7 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** Incremental validation — the shape a DAILY 100 TB validation run
   * actually wants.
@@ -114,15 +114,23 @@ object IncrementalValidation {
     val p = new org.apache.hadoop.fs.Path(rowsPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dirtyGroups = dirty.map(b => reportGroupOf(b, groups)).distinct
-    // an all-clean prior report can be an EMPTY store (no schema to
-    // infer) — carried is then empty by construction
+    // an all-clean prior report can be an EMPTY store — carried is then
+    // empty by construction. Any other read failure propagates: an
+    // empty stand-in would silently drop the clean buckets' rows. The
+    // explicit schema (files hold the recomputed columns, directories
+    // a LongType `__bgroup`) needs no inference job, and the group
+    // IN-list compares the raw partition attribute, so it prunes
+    val storeSchema = StructType(
+      recomputed.schema.fields.map(_.copy(nullable = true)) :+
+        StructField("__bgroup", LongType))
     val carried =
-      try spark.read.parquet(rowsPath)
-        .filter(col("__bgroup").isin(dirtyGroups: _*) &&
-          !col("bucket").isin(dirty: _*))
-        .drop("__bgroup")
-        .select(recomputed.columns.map(col): _*)
-      catch { case scala.util.control.NonFatal(_) => recomputed.limit(0) }
+      if (graft.ops.IncrementalAgg.storeHasData(fs, rowsPath))
+        spark.read.schema(storeSchema).parquet(rowsPath)
+          .filter(col("__bgroup").isin(dirtyGroups: _*) &&
+            !col("bucket").isin(dirty: _*))
+          .drop("__bgroup")
+          .select(recomputed.columns.map(col): _*)
+      else recomputed.limit(0)
     val staging = new org.apache.hadoop.fs.Path(rowsPath + "__swap")
     if (fs.exists(staging)) fs.delete(staging, true)
     reportLaidOut(recomputed.unionByName(carried), groups)
@@ -846,7 +854,7 @@ object IncrementalValidation {
         sum("missing_in_second").as("missing_in_second"),
         sum("n_differing").as("n_differing"),
         sum("n_matched").as("n_matched"))
-    val summary = broadcast(posSeed).join(perCol, Seq("pos"), "left_outer")
+    val summary = posSeed.join(broadcast(perCol), Seq("pos"), "left_outer")
       .na.fill(0L, termCols)
       .select(element_at(names, col("pos").cast("int") + 1).as("column_name") +:
         termCols.map(col): _*)

@@ -153,12 +153,6 @@ object Validator {
         .otherwise("conflict").as("status"))
   }
 
-  /** Default bucketing: hash of the key (xxhash64). Pass a custom
-    * `bucketExpr` (e.g. `pmod(id.cast(long), n)`) when cross-engine
-    * reproducibility of bucket ids matters. */
-  def defaultBucket(nBuckets: Int): Column =
-    pmod(xxhash64(col("id")), lit(nBuckets.toLong))
-
   def bucketChecksums(keyed: DataFrame, bucketExpr: Column): DataFrame =
     keyed.groupBy(bucketExpr.as("bucket"))
       .agg(count(lit(1)).as("n_rows"),
@@ -458,7 +452,7 @@ object Validator {
     // exists (summaryFast's zeros-row behavior, per column)
     val seed = first.sparkSession.range(checks.size)
       .select(col("id").cast("int").as("pos"))
-    broadcast(seed).join(perCol, Seq("pos"), "left_outer")
+    seed.join(broadcast(perCol), Seq("pos"), "left_outer")
       .na.fill(0L, Seq("__nf", "__ns", "__mif", "__mis",
         "n_differing", "n_matched"))
       .crossJoin(broadcast(nulls(first, "__nn1")))

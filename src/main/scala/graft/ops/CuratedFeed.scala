@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** CONTINUOUS CURATED LOADER FEED — the streaming twin of the whole
@@ -59,11 +59,15 @@ import org.apache.spark.sql.functions._
   * rebased — start a fresh `stateDir`.
   *
   * Scale shape (per batch, at any corpus size): the curation stages
-  * are one-scan expression filters over the batch; the novelty check
-  * reads only the seen-store partitions the batch's fingerprints hash
-  * into; the encode is one narrow mapPartitions pass over survivors;
-  * the cut is one shard-keyed exchange of the batch plus a
-  * constant-memory sweep. Nothing re-reads the corpus.
+  * are one expression pass over the batch, spread round-robin over the
+  * session's task slots (one extra batch-sized exchange) and
+  * materialized once — the novelty check, the survivors and the ledger
+  * all read that materialization, and the ledger's input counts are
+  * observed on the pass itself; the novelty check reads only the
+  * seen-store partitions the batch's fingerprints hash into; the
+  * encode is one narrow mapPartitions pass over survivors; the cut is
+  * one shard-keyed exchange of the batch plus a constant-memory sweep.
+  * Nothing re-reads the corpus or the raw batch.
   */
 object CuratedFeed {
 
@@ -212,10 +216,21 @@ object CuratedFeed {
       s"batch $batchId arrived over a curated feed at batch $last — a " +
         "GAP in an order-dependent feed loses stream content; deliver " +
         s"batch ${last + 1} first")
-    // quality gate: word-count bounds over the normalized text — a
-    // one-scan expression filter
+    // THE CURATION PASS, computed once per batch: quality gate → PII
+    // mask → fingerprint (→ decontamination), spread round-robin over
+    // the session's task slots first (a batch arriving as one file
+    // would otherwise run every regex on one core) and eagerly
+    // materialized. The novelty check, the survivors and the ledger all
+    // read that materialization; the ledger's rows_in / quality_kept
+    // are observed on the same pass instead of rescanning the batch.
     val nWords = size(split(TextAnalysis.normalized(col(textCol)), " "))
-    val qualified = docs.filter(nWords.between(minWords, maxWords))
+    val funnel = Observation()
+    val qualified = docs
+      .repartition(spark.sparkContext.defaultParallelism)
+      .withColumn("__q", nWords.between(minWords, maxWords))
+      .observe(funnel, count(lit(1)).as("rows_in"),
+        count_if(col("__q")).as("quality_kept"))
+      .filter(col("__q"))
     // mask BEFORE the fingerprint or tokenizer touches the text —
     // nothing downstream (either store included) ever sees raw PII
     val masked = Curation.redactPii(qualified, textCol)
@@ -223,10 +238,10 @@ object CuratedFeed {
       .select(col(idCol), col(textCol))
       .withColumn("__fp", TextAnalysis.fingerprint(col(textCol)))
     // decontaminate on the MASKED text, before anything persists: the
-    // benchmark shingle set is deduped + broadcast inside contamination,
-    // so the stage is one batch-sized pass (see the scaladoc for why
-    // this commutes with the first-occurrence dedup below)
-    val cleared = benchmark match {
+    // benchmark shingle set is deduped + broadcast inside contamination
+    // (see the scaladoc for why this commutes with the first-occurrence
+    // dedup below)
+    val cleared = (benchmark match {
       case Some(bench) =>
         val hits = Curation.contamination(masked, bench, idCol, textCol,
             decontaminateNgram)
@@ -234,7 +249,7 @@ object CuratedFeed {
           .select(col("id").as(idCol))
         masked.join(hits, Seq(idCol), "left_anti")
       case None => masked
-    }
+    }).localCheckpoint(true)
     // head-of-batch compaction only, guarded below the current batch
     // (see the object scaladoc for why mid-batch folding cannot heal)
     if (maxBatchParts > 0 &&
@@ -261,21 +276,18 @@ object CuratedFeed {
     // novel (first occurrences), sequences cut. First delivery wins
     // (counts are deterministic, and a replay of a batch whose store
     // partition was since folded would see 0 cut rows); written AFTER
-    // both stores so a crash re-derives it with the batch. Costs up to
-    // three extra batch-sized passes (rows_in / quality / cleared are
-    // recounted; novel is already materialized and the cut total is
-    // carry-diffed, metadata-priced) — `writeLedger = false` opts out.
+    // both stores so a crash re-derives it with the batch. Every count
+    // is already paid for: rows_in / quality_kept were observed on the
+    // curation pass, decontaminated_kept counts the materialized slice,
+    // novel counts the materialized survivors and the cut total is
+    // carry-diffed (metadata-priced) — `writeLedger = false` opts out.
     if (writeLedger) {
       val lp = new org.apache.hadoop.fs.Path(ledgerPath(stateDir, batchId))
       if (!fs.exists(lp)) {
         import spark.implicits._
-        // rows_in and quality_kept from ONE batch scan (count + the
-        // gate predicate as a conditional sum), not one scan each
-        val inQ = docs.agg(count(lit(1)).as("n"),
-          coalesce(sum(when(nWords.between(minWords, maxWords), 1L)
-            .otherwise(0L)), lit(0L)).as("q")).head()
-        val rowsIn = inQ.getLong(0)
-        val qualityKept = inQ.getLong(1)
+        val observed = funnel.get
+        val rowsIn = observed("rows_in").asInstanceOf[Long]
+        val qualityKept = observed("quality_kept").asInstanceOf[Long]
         val clearedKept =
           if (benchmark.isDefined) cleared.count() else qualityKept
         val novel = survivors.count()

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.TextAnalysis.normalized
 
@@ -252,7 +253,10 @@ object Curation {
     * this batch id. A composed caller prevents that case by compacting
     * only below the current batch (see [[CuratedFeed]]); a direct
     * caller re-reading the store gets the cumulative corpus via
-    * [[seenRows]]. */
+    * [[seenRows]]. The batch is computed twice (the touched-bucket set,
+    * then the novelty pass), so a caller whose batch is costly to
+    * derive passes it materialized, as [[CuratedFeed.curatedAppend]]
+    * does. */
   def seenAppendReturning(batch: DataFrame, batchId: Long, stateDir: String,
       fpCol: String, orderCol: String, nBuckets: Int = 256)
       : Option[DataFrame] = {
@@ -285,23 +289,19 @@ object Curation {
             .collect().map(_.getLong(0)) // <= nBuckets rows: metadata
           val touchedGroups =
             touched.map(IncrementalAgg.appendGroupOf).distinct
-          val store = spark.read
+          // explicit schema: only the fingerprint and the layout columns
+          // are read, no inference job runs, and the partition levels
+          // are typed LongType so the `__batch` / `__bgroup` predicates
+          // compare the raw partition attribute and prune directories
+          val historySchema = StructType(Seq(
+            slice.schema(fpCol).copy(nullable = true),
+            StructField("__bucket", LongType),
+            StructField("__batch", LongType),
+            StructField("__bgroup", LongType)))
+          val seen = spark.read.schema(historySchema)
             .parquet(IncrementalAgg.appendStorePath(stateDir))
-          // partition-pruning filters must compare the RAW partition
-          // attribute — a cast wrapping the column defeats directory
-          // pruning unless the optimizer's unwrap-cast rule fires. Type
-          // the LITERALS to the inferred partition type instead.
-          def partLits(c: String, vs: Seq[Long]): Seq[Any] =
-            store.schema(c).dataType match {
-              case org.apache.spark.sql.types.IntegerType => vs.map(_.toInt)
-              case org.apache.spark.sql.types.StringType => vs.map(_.toString)
-              case _ => vs
-            }
-          val seen = store
-            .filter(!col("__batch").isin(
-                partLits("__batch", Seq(batchId)): _*) &&
-              col("__bgroup").isin(
-                partLits("__bgroup", touchedGroups.toSeq): _*) &&
+            .filter(col("__batch") =!= batchId &&
+              col("__bgroup").isin(touchedGroups.toSeq: _*) &&
               col("__bucket").isin(touched: _*))
             .select(col(fpCol).as("__seen_fp"))
           firstInBatch.join(seen,
@@ -344,12 +344,17 @@ object Curation {
     seenKeyCols(spark, stateDir).foreach(keys =>
       IncrementalAgg.compactAppendStore(spark, stateDir, keys, "__n"))
 
-  /** [[IncrementalAgg.maybeCompactAppendStore]] for a seen store. */
+  /** [[IncrementalAgg.maybeCompactAppendStore]] for a seen store. The
+    * key columns cost a schema read, so they are looked up only when a
+    * fold is due — the per-batch check is one directory listing. */
   def maybeCompactSeenStore(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, maxBatchParts: Int): Boolean =
-    seenKeyCols(spark, stateDir).exists(keys =>
-      IncrementalAgg.maybeCompactAppendStore(spark, stateDir,
-        maxBatchParts, keys, "__n"))
+      stateDir: String, maxBatchParts: Int): Boolean = {
+    require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
+    val due = IncrementalAgg.batchPartitions(spark,
+      IncrementalAgg.appendStorePath(stateDir)).size > maxBatchParts
+    if (due) compactSeenStore(spark, stateDir)
+    due
+  }
 
   /** The stored data columns (compaction group keys): everything except
     * the `__n` fold column and the partition levels. None when the

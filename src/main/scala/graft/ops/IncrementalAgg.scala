@@ -254,7 +254,7 @@ object IncrementalAgg {
     * cannot infer a schema from — that case falls back to an empty
     * frame; any OTHER read failure (corrupt footer, transient FS
     * error) must PROPAGATE, not silently answer empty. */
-  private def storeHasData(fs: org.apache.hadoop.fs.FileSystem,
+  private[graft] def storeHasData(fs: org.apache.hadoop.fs.FileSystem,
       path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     fs.exists(p) && {
@@ -782,14 +782,20 @@ object IncrementalAgg {
     * into the base). One driver-side directory listing; the guard a
     * composed caller uses to compact only BELOW the batch it is about
     * to process (see [[graft.ops.CuratedFeed]]). */
-  def maxStoredBatch(spark: SparkSession, stateDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
+  def maxStoredBatch(spark: SparkSession, stateDir: String): Long =
+    batchPartitions(spark, storePath(stateDir)).foldLeft(-1L)(math.max)
+
+  /** The batch ids a `__batch=`-partitioned store holds as their own
+    * partitions (the folded base `__batch=-1` excluded; empty when the
+    * store does not exist) — one driver-side directory listing. */
+  private[ops] def batchPartitions(spark: SparkSession,
+      storeDir: String): Seq[Long] = {
+    val p = new org.apache.hadoop.fs.Path(storeDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).map(_.getPath.getName)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
       .filter(n => n.startsWith("__batch=") && n != "__batch=-1")
       .map(_.stripPrefix("__batch=").toLong)
-      .foldLeft(-1L)(math.max)
   }
 
   /** Compact iff the store holds more than `maxBatchParts` batch
@@ -797,15 +803,7 @@ object IncrementalAgg {
   def maybeCompactAppendStore(spark: SparkSession, stateDir: String,
       maxBatchParts: Int, keyCols: Seq[String], valCol: String): Boolean = {
     require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBatches =
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count { st =>
-        val n = st.getPath.getName
-        n.startsWith("__batch=") && n != "__batch=-1"
-      }
-    if (nBatches > maxBatchParts) {
+    if (batchPartitions(spark, storePath(stateDir)).size > maxBatchParts) {
       compactAppendStore(spark, stateDir, keyCols, valCol); true
     } else false
   }

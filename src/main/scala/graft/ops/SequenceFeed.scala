@@ -75,6 +75,11 @@ object SequenceFeed {
   private[graft] final case class Carry(shard: Long, next_seq: Long,
       ids: Array[Int], docs: Array[Long])
 
+  /** The carry files' schema, passed to every carry read (no inference
+    * job). */
+  private val carrySchema =
+    org.apache.spark.sql.Encoders.product[Carry].schema
+
   /** One emitted complete sequence (the fixedSequences shape; always
     * complete here, pads never apply mid-stream). */
   private[graft] final case class FeedSeq(shard: Long, seq_id: Long,
@@ -174,7 +179,8 @@ object SequenceFeed {
       // carry BEFORE this batch, which is always retained
       val prev: Map[Long, Carry] =
         if (batchId == 0) Map.empty
-        else spark.read.parquet(carryPath(stateDir, batchId - 1))
+        else spark.read.schema(carrySchema)
+          .parquet(carryPath(stateDir, batchId - 1))
           .as[Carry].collect().map(c => c.shard -> c).toMap
       val bc = spark.sparkContext.broadcast(prev)
       val cut = enc
@@ -381,15 +387,8 @@ object SequenceFeed {
   def maybeCompactFeedStore(spark: SparkSession, stateDir: String,
       maxBatchParts: Int): Boolean = {
     require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val nBatches =
-      if (!fs.exists(p)) 0
-      else fs.listStatus(p).count { st =>
-        val n = st.getPath.getName
-        n.startsWith("__batch=") && n != "__batch=-1"
-      }
-    if (nBatches > maxBatchParts) {
+    if (IncrementalAgg.batchPartitions(spark, storePath(stateDir)).size >
+        maxBatchParts) {
       compactFeedStore(spark, stateDir); true
     } else false
   }
@@ -531,7 +530,7 @@ object SequenceFeed {
     val p = new org.apache.hadoop.fs.Path(carryPath(stateDir, batchId))
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) 0L
-    else spark.read.parquet(p.toString)
+    else spark.read.schema(carrySchema).parquet(p.toString)
       .agg(coalesce(sum(col("next_seq")), lit(0L))).head().getLong(0)
   }
 

@@ -30,8 +30,6 @@ object TextAnalysis {
     length(text) - length(regexp_replace(text, "[0-9]", ""))
   def punctCount(text: Column): Column =
     length(text) - length(regexp_replace(text, "[\\p{Punct}]", ""))
-  def upperCount(text: Column): Column =
-    length(text) - length(regexp_replace(text, "[A-Z]", ""))
 
   private val stopwordsEn = Seq("the", "a", "an", "of", "to", "in", "and",
     "is", "it", "that", "for", "on", "with", "as", "was", "at", "by")

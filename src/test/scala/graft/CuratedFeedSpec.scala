@@ -125,6 +125,88 @@ class CuratedFeedSpec extends AnyFunSuite with SparkSpec {
     assert(t103 == "alpha beta mail <EMAIL> gamma")
   }
 
+  test("curatedAppend: a batch delivered as several input partitions or " +
+      "as one gives identical ledger rows, corpus and sequence rows") {
+    val layouts = Seq(5, 1).map { parts =>
+      val stateDir = freshStateDir()
+      val all = viaParquet(corpus().toDF("doc_id", "text").repartition(parts))
+      val nParts = all.rdd.getNumPartitions
+      for (b <- 0L to 2L)
+        CuratedFeed.curatedAppend(
+          all.filter(pmod(col("doc_id"), lit(3L)) === b), b, stateDir,
+          merges, seqLen = 16, nShards = 4, minWords = 3, maxWords = 10)
+      val ledger = CuratedFeed.ledger(spark, stateDir).collect().toSeq
+      val docs = CuratedFeed.corpus(spark, stateDir).collect()
+        .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+      val seqs = CuratedFeed.sequences(spark, stateDir)
+        .select("shard", "seq_id", "n_tokens", "n_docs", "first_doc",
+          "last_doc", "token_ids", "ids_sum")
+        .collect().map(_.toSeq.map {
+          case a: scala.collection.Seq[_] => a.toSeq
+          case v => v
+        }).sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Long]))
+        .toSeq
+      (nParts, ledger, docs, seqs)
+    }
+    val Seq((manyParts, ledgerM, docsM, seqsM),
+      (oneParts, ledgerO, docsO, seqsO)) = layouts
+    assert(manyParts > 1 && oneParts == 1,
+      s"input partitions: $manyParts and $oneParts")
+    assert(ledgerM.length == 3)
+    assert(ledgerM == ledgerO)
+    assert(docsM.nonEmpty && docsM == docsO)
+    assert(seqsM.nonEmpty && seqsM == seqsO)
+  }
+
+  /** Spark jobs `f` launches, counted with a listener as PhaseProfile
+    * does. `f` runs under a fresh job group so other threads' jobs are
+    * not counted; a sentinel job in a second group flushes the
+    * asynchronous listener bus before the count is read. */
+  private def jobsLaunchedBy(f: => Unit): Int = {
+    val group = s"counted-${java.util.UUID.randomUUID()}"
+    val sentinel = s"$group-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`sentinel`) => flushed.countDown()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try f finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the sentinel job")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("job budget: one steady-state curatedAppend batch launches at " +
+      "most the pinned number of Spark jobs") {
+    val stateDir = freshStateDir()
+    val all = runBatches(stateDir, upTo = 1L)
+    val jobs = jobsLaunchedBy {
+      CuratedFeed.curatedAppend(
+        all.filter(pmod(col("doc_id"), lit(3L)) === 2L), 2L, stateDir,
+        merges, seqLen = 16, nShards = 4, minWords = 3, maxWords = 10)
+    }
+    // 19 = the one curation pass (its round-robin exchange and the
+    // materialization), the touched-bucket set, the novelty checkpoint,
+    // the encode + cut + carry, the two store writes and the ledger
+    // write, with adaptive execution running each exchange as its own
+    // job. Pinned so a stage that starts rescanning the batch, or a
+    // store read that starts inferring its schema, shows here
+    assert(jobs <= 19, s"$jobs jobs for one steady-state batch")
+  }
+
   test("curatedAppend replay: re-delivering an already-processed batch " +
       "leaves both stores byte-identical (at-least-once safe)") {
     val stateDir = freshStateDir()

@@ -277,6 +277,37 @@ class Round13OpsSpec extends AnyFunSuite with SparkSpec {
     assert(repE.count() == 0)
   }
 
+  test("report surgery: a carried read that fails throws instead of " +
+      "dropping the clean buckets' report rows") {
+    val stateDir = freshStateDir()
+    val mode = CompareMode.Fuzzy(1.0)
+    val f = viaParquet(randomKeyed(200, 100))
+    val s0 = viaParquet(randomKeyed(200, 100))
+    val (_, r1) = IncrementalValidation.reportIncremental(f, s0, mode,
+      stateDir, nBuckets = 32, dirtyFractionLimit = 1.0)
+    assert(r1.rebuilt)
+    // every stored report file unreadable: the surgery's carried read of
+    // the dirty groups cannot succeed
+    val files = {
+      val st = java.nio.file.Files.walk(
+        java.nio.file.Paths.get(s"$stateDir/report"))
+      try {
+        import scala.jdk.CollectionConverters._
+        st.iterator().asScala.filter { p =>
+          val n = p.getFileName.toString
+          java.nio.file.Files.isRegularFile(p) && n.endsWith(".parquet")
+        }.toList
+      } finally st.close()
+    }
+    assert(files.nonEmpty)
+    files.foreach(p => java.nio.file.Files.write(p, "not parquet".getBytes))
+    val s1 = viaParquet(churn(s0, salt = 71, rate = 0.06))
+    intercept[org.apache.spark.SparkException] {
+      IncrementalValidation.reportIncremental(f, s1, mode, stateDir,
+        nBuckets = 32, dirtyFractionLimit = 1.0)
+    }
+  }
+
   test("multi digest is position-salted: a value moving between columns " +
       "around a null is always dirty") {
     // (num=null, fz="x") vs (num="x", fz=null) must DIFFER in digest:
