@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
@@ -41,12 +41,16 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * row (the second is salted with a distinct leading literal, not
   * derived from the first — a collision in one says nothing about the
   * other), and the sums are multiset-homomorphic (order- and
-  * partitioning-independent), accumulating in DECIMAL(38,0) — exact in
-  * both ANSI and legacy modes, never a silent wrap difference between
-  * engines. A false "clean" requires a simultaneous coincidence across
-  * both 64-bit sums at equal counts (~2^-128 per bucket per run under
-  * the standard independent-hash heuristic) — the same class of
-  * guarantee every checksum-based snapshot differ rests on. Any doubt
+  * partitioning-independent) and EXACT, stored as DECIMAL(38,0) — never
+  * a silent wrap difference between ANSI and legacy modes or between
+  * engines. The kernel never does per-row DECIMAL arithmetic: each hash
+  * splits into three 21-bit limbs whose sums accumulate in `long`
+  * (exact below 2^42 rows per bucket) and recombine into DECIMAL(38,0)
+  * once per bucket ([[limbSums]]). A false "clean" requires a
+  * simultaneous coincidence across both 64-bit sums at equal counts
+  * (~2^-128 per bucket per run under the standard independent-hash
+  * heuristic) — the same class of guarantee every checksum-based
+  * snapshot differ rests on. Any doubt
   * is resolved toward DIRTY: digests hash the RAW
   * string-cast value, so changes invisible to a mode's coercion (e.g.
   * "1.0" -> "1.00" under Numeric) re-validate their bucket and get the
@@ -109,7 +113,7 @@ object IncrementalValidation {
     * staged fully and swapped in by renames. Caller has already deleted
     * the digest witness, so any crash mid-swap rebuilds wholesale. */
   private def reportSurgery(rowsPath: String, recomputed: DataFrame,
-      dirty: Seq[Long], groups: Int): Unit = {
+      dirty: Seq[Long], groups: Int, lease: Lease): Unit = {
     val spark = recomputed.sparkSession
     val p = new org.apache.hadoop.fs.Path(rowsPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -136,6 +140,10 @@ object IncrementalValidation {
     reportLaidOut(recomputed.unionByName(carried), groups)
       .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
       .parquet(staging.toString)
+    // the staging write is the long step: re-verify the lease right
+    // before the commit-point renames, never swap under a broken one
+    commitPointHook("report.renames")
+    lease.check()
     fs.mkdirs(p)
     for (g <- dirtyGroups) {
       val dst = new org.apache.hadoop.fs.Path(s"$rowsPath/__bgroup=$g")
@@ -173,6 +181,36 @@ object IncrementalValidation {
 
   private val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
 
+  private val LIMB_BITS = 21
+  private val LIMB_MASK = (1L << LIMB_BITS) - 1
+
+  /** Exact per-group sums of 64-bit hash columns, without per-row DECIMAL
+    * arithmetic: h = hi·2^42 + mid·2^21 + lo with hi = h >> 42 (signed,
+    * |hi| <= 2^21) and mid, lo in [0, 2^21), so each limb sums in `long`
+    * without overflow below 2^42 rows per group. Returns the limb
+    * aggregates (to pass to one `agg`) and, per `(name, h)`, the column
+    * that recombines them into the exact DECIMAL(38,0) sum named `name`
+    * (to `select` after the `agg`) — bit-identical to
+    * `sum(h.cast(DECIMAL(38,0)))`. Shared by [[digests]] and
+    * [[graft.ops.IncrementalAgg.digests]]. */
+  private[graft] def limbSums(hashes: Seq[(String, Column)])
+      : (Seq[Column], Seq[Column]) = {
+    val wide = org.apache.spark.sql.types.DataTypes.createDecimalType(20, 0)
+    def limbs(h: Column) = Seq(shiftright(h, 2 * LIMB_BITS),
+      shiftright(h, LIMB_BITS).bitwiseAND(LIMB_MASK), h.bitwiseAND(LIMB_MASK))
+    def limbName(name: String, i: Int) = s"__${name}_limb$i"
+    val aggs = hashes.flatMap { case (name, h) =>
+      limbs(h).zipWithIndex.map { case (l, i) => sum(l).as(limbName(name, i)) }
+    }
+    val totals = hashes.map { case (name, _) =>
+      (0 to 2).map { i =>
+        col(limbName(name, i)).cast(wide) *
+          lit(java.math.BigDecimal.valueOf(1L << ((2 - i) * LIMB_BITS)))
+      }.reduce(_ + _).cast(dec).as(name)
+    }
+    (aggs, totals)
+  }
+
   /** Whole-row digest payload for a k-column check list: one 64-bit
     * value combining every check column, POSITION-SALTED — each column
     * hashes with its index first (`xxhash64(lit(j), c_j)`), so a null
@@ -206,17 +244,17 @@ object IncrementalValidation {
       xxhash64(lit(1L), col("id").cast(StringType), valueExpr)
         .as("h2"),
       lit(tag).as("side"))
-    def s1(c: Column) = sum(when(col("side") === 1, c).otherwise(lit(0L))
-      .cast(dec))
-    def s0(c: Column) = sum(when(col("side") === 0, c).otherwise(lit(0L))
-      .cast(dec))
+    def on(tag: Int, c: Column) =
+      when(col("side") === tag, c).otherwise(lit(0L))
+    val (limbAggs, totals) = limbSums(Seq(
+      "h1a" -> on(1, col("h")), "h1b" -> on(1, col("h2")),
+      "h2a" -> on(0, col("h")), "h2b" -> on(0, col("h2"))))
     side(first, 1).unionByName(side(second, 0))
       .groupBy("bucket")
-      .agg(
-        s1(lit(1L)).cast("long").as("n1"),
-        s1(col("h")).as("h1a"), s1(col("h2")).as("h1b"),
-        s0(lit(1L)).cast("long").as("n2"),
-        s0(col("h")).as("h2a"), s0(col("h2")).as("h2b"))
+      .agg(sum(on(1, lit(1L))).as("n1"),
+        sum(on(0, lit(1L))).as("n2") +: limbAggs: _*)
+      .select(col("bucket"), col("n1"), totals(0), totals(1), col("n2"),
+        totals(2), totals(3))
   }
 
   /** summaryFast's per-id algebra with the bucket carried through,
@@ -503,12 +541,19 @@ object IncrementalValidation {
     * exact point a concurrent writer would be most destructive. */
   private[graft] var beforeMutationHook: () => Unit = () => ()
 
+  /** Test seam: invoked with a commit point's name just before the
+    * stored state crosses it ("report.renames", "agg.renames",
+    * "pq.books_sig") — lets a spec break the lease or crash exactly
+    * there. */
+  private[graft] var commitPointHook: String => Unit = _ => ()
+
   /** The digest-compare phase shared by every incremental surface:
     * current digests (localCheckpointed), meta check, dirty set vs the
     * stored digest frame at `digestPath`. */
   private final case class PruneResult(
       cd: DataFrame, total: Long, haveState: Boolean,
-      dirtyRows: Option[Seq[(Long, Boolean)]]) {
+      dirtyRows: Option[Seq[(Long, Boolean)]],
+      nFirst: Long, nSecond: Long) {
     def dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
     def dirtyInCurrent: Long = dirtyRows.map(_.count(_._2).toLong).getOrElse(0L)
   }
@@ -560,7 +605,11 @@ object IncrementalValidation {
     }
     val cdLocal = spark.createDataFrame(
       spark.sparkContext.parallelize(cdRows.toSeq, 1), cdSchema)
-    PruneResult(cdLocal, total, haveState && old.isDefined, dirtyRows)
+    // per-side row counts of the current inputs (null ids included):
+    // the digest counts summed on the driver, no job
+    def rowsOf(f: String) = cdRows.map(r => r.getLong(r.fieldIndex(f))).sum
+    PruneResult(cdLocal, total, haveState && old.isDefined, dirtyRows,
+      rowsOf("n1"), rowsOf("n2"))
   }
 
   /** The dirty-bucket row predicate FOR ONE SIDE: a plain attribute
@@ -880,11 +929,29 @@ object IncrementalValidation {
   private def reportRowsPath(stateDir: String) = s"$stateDir/report"
   private def reportDigestsPath(stateDir: String) = s"$stateDir/report_digests"
 
-  private val reportSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("kind", StringType),
-    org.apache.spark.sql.types.StructField("id", StringType),
-    org.apache.spark.sql.types.StructField("check_first", StringType),
-    org.apache.spark.sql.types.StructField("check_second", StringType)))
+  private val reportSchema = StructType(
+    Seq("kind", "id", "check_first", "check_second")
+      .map(StructField(_, StringType)))
+  private val multiReportSchema = StructType(
+    Seq("kind", "id", "column_name", "check_first", "check_second")
+      .map(StructField(_, StringType)))
+
+  /** The stored report rows with the `rows` columns, read with an
+    * explicit schema (the files add the row's `bucket`, the directories
+    * a LongType `__bgroup`), so the read needs no inference job. None
+    * when the store holds no data file — an all-clean table pair can
+    * leave a data-less report directory; any other read failure
+    * propagates. */
+  private def storedRows(spark: SparkSession, rowsPath: String,
+      rows: StructType): Option[DataFrame] = {
+    val fs = new org.apache.hadoop.fs.Path(rowsPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!graft.ops.IncrementalAgg.storeHasData(fs, rowsPath)) None
+    else Some(spark.read.schema(StructType(rows.fields ++ Seq(
+        StructField("bucket", LongType), StructField("__bgroup", LongType))))
+      .parquet(rowsPath)
+      .select(rows.fieldNames.map(col).toIndexedSeq: _*))
+  }
 
   /** Incrementally-maintained ROW-LEVEL report — the reference's actual
     * outputs (missing ids both ways + differing value pairs,
@@ -918,13 +985,44 @@ object IncrementalValidation {
     * thousands of near-empty directories cost more in listing/footer
     * overhead than the finer recompute granularity buys.
     *
-    * @return (current full report — a read of the stored table, so
-    *         collect it before the next maintenance run — and the
-    *         prune record). */
+    * @return (current full report — the stored table read once and
+    *         materialized, so it stays valid after the next maintenance
+    *         run — and the prune record). */
   def reportIncremental(first: DataFrame, second: DataFrame,
       mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
       dirtyFractionLimit: Double = 0.25,
       bucketCol: Option[String] = None): (DataFrame, IncrementalReport) = {
+    val m = reportIncrementalWithSummary(first, second, mode, stateDir,
+      nBuckets, dirtyFractionLimit, bucketCol)
+    (m.current, m.report)
+  }
+
+  /** [[reportIncremental]]'s outputs plus the run's six-metric summary. */
+  final case class MaintainedReport(current: DataFrame,
+      report: IncrementalReport, summary: DataFrame)
+
+  private val summarySchema = StructType(Seq("n_first", "n_second",
+    "missing_in_first", "missing_in_second", "n_differing", "n_matched")
+    .map(StructField(_, LongType)))
+
+  /** [[reportIncremental]], also returning [[Validator.summaryFast]]'s
+    * one-row summary of the same inputs, built on the driver: the row
+    * counts are the current digests' per-side sums, the mismatch counts
+    * are observed on the one materializing read of the stored report,
+    * and the identities
+    *
+    *   n_matched    = n_second - missing_in_first
+    *   n_differing  = |differing report rows|   (m-by-n pair multiplicity)
+    *
+    * hold exactly for summaryFast's semantics (a second-side row either
+    * matches some first id or is missing from first; null ids sit in the
+    * missing frames and in both sides' digest counts). The summary is a
+    * local one-row frame: collecting it launches no Spark job, and the
+    * whole daily run costs one digest scan plus churn-sized work. */
+  def reportIncrementalWithSummary(first: DataFrame, second: DataFrame,
+      mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
+      dirtyFractionLimit: Double = 0.25,
+      bucketCol: Option[String] = None): MaintainedReport = {
     require(nBuckets > 0, "nBuckets must be positive")
     val spark = first.sparkSession
     import spark.implicits._
@@ -974,79 +1072,52 @@ object IncrementalValidation {
     } else if (dirty.get.nonEmpty) {
       val d = dirty.get
       fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      // persist the CHURN-SIZED slices: the report is three joins (two
-      // anti, one inner) and each would otherwise rescan + re-filter
-      // both inputs — six passes for data that is, by definition of the
-      // dirty set, a small fraction of the table
-      val fD = first.filter(dirtyPred(first, bucketCol, nBuckets, d)).persist()
-      val sD = second.filter(dirtyPred(second, bucketCol, nBuckets, d)).persist()
-      try reportSurgery(rowsPath, reportRows(fD, sD), d, groups)
-      finally { fD.unpersist(); sD.unpersist() }
+      // materialize the CHURN-SIZED slices eagerly: the report is three
+      // joins (two anti, one inner) and each would otherwise rescan +
+      // re-filter both inputs — and a lazy cache lets adaptive execution
+      // start every join stage against a cache still being filled
+      val fD = first.filter(dirtyPred(first, bucketCol, nBuckets, d))
+        .localCheckpoint()
+      val sD = second.filter(dirtyPred(second, bucketCol, nBuckets, d))
+        .localCheckpoint()
+      reportSurgery(rowsPath, reportRows(fD, sD), d, groups, lease)
       swapWrite(spark, pr.cd, digPath)
     } // zero dirty: report and witness both stand untouched
 
-    // an all-clean table pair can leave an empty report directory —
-    // parquet cannot infer a schema from zero files, so shape it by hand
-    val current =
-      try spark.read.parquet(rowsPath)
-        .select("kind", "id", "check_first", "check_second")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            reportSchema)
-      }
+    // the stored report, read ONCE and materialized with its three kind
+    // counts observed on the same pass — the tidy files, the compat
+    // files and the summary all read this
+    val kindNames = Seq("missing_in_first", "missing_in_second", "differing")
+    val (current, counts) = storedRows(spark, rowsPath, reportSchema) match {
+      case Some(rows) =>
+        val kinds = Observation()
+        val cur = rows.observe(kinds, count_if(col("kind") === kindNames.head)
+            .as(kindNames.head),
+            kindNames.tail.map(k => count_if(col("kind") === k).as(k)): _*)
+          .localCheckpoint()
+        val got = kinds.get
+        (cur, kindNames.map(k => got(k).asInstanceOf[Long]))
+      case None => (emptyFrame(spark, reportSchema), kindNames.map(_ => 0L))
+    }
+    val Seq(missingInFirst, missingInSecond, nDiffering) = counts
+    val summary = spark.createDataFrame(
+      java.util.Collections.singletonList(org.apache.spark.sql.Row(
+        pr.nFirst, pr.nSecond, missingInFirst, missingInSecond, nDiffering,
+        pr.nSecond - missingInFirst)),
+      summarySchema)
     val report = IncrementalReport(
       rebuilt = rebuild,
       totalBuckets = pr.total,
       dirtyBuckets =
         if (rebuild) pr.total else dirty.map(_.size.toLong).getOrElse(0L),
       cleanBuckets = if (rebuild) 0L else pr.total - pr.dirtyInCurrent)
-    (current, report)
+    MaintainedReport(current, report, summary)
     } finally lease.release()
   }
 
-  /** The six-metric summary derived from a MAINTAINED report store —
-    * call after [[reportIncremental]] has run for the same inputs. Row
-    * counts come from the digest witness (per-bucket n1/n2 sums),
-    * mismatch counts from the stored report rows; the identities
-    *
-    *   n_matched    = n_second - missing_in_first
-    *   n_differing  = |differing report rows|   (m-by-n pair multiplicity)
-    *
-    * hold exactly for [[Validator.summaryFast]]'s semantics (a
-    * second-side row either matches some first id or is missing from
-    * first; null ids sit in the missing frames and the digest counts on
-    * both sides). So a YAML run that maintains the report gets its
-    * summary for a metadata-sized read — ONE digest scan prices the
-    * whole daily run, no second state surface, no third pass over the
-    * inputs. */
-  def summaryFromStoredReport(spark: SparkSession,
-      stateDir: String): DataFrame = {
-    val dig = spark.read.parquet(reportDigestsPath(stateDir))
-      .agg(sum(col("n1")).as("n_first"), sum(col("n2")).as("n_second"))
-      .na.fill(0L)
-    val rep =
-      try spark.read.parquet(reportRowsPath(stateDir)).select("kind")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            reportSchema).select("kind")
-      }
-    val kinds = rep.agg(
-      sum(when(col("kind") === "missing_in_first", 1L).otherwise(0L))
-        .as("missing_in_first"),
-      sum(when(col("kind") === "missing_in_second", 1L).otherwise(0L))
-        .as("missing_in_second"),
-      sum(when(col("kind") === "differing", 1L).otherwise(0L))
-        .as("n_differing")).na.fill(0L)
-    dig.crossJoin(broadcast(kinds)).select(
-      col("n_first"), col("n_second"),
-      col("missing_in_first"), col("missing_in_second"),
-      col("n_differing"),
-      (col("n_second") - col("missing_in_first")).as("n_matched"))
-  }
+  private def emptyFrame(spark: SparkSession, schema: StructType) =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** The per-column six-metric summary derived from a MAINTAINED
     * multi-column report store — call after [[reportIncrementalMulti]]
@@ -1060,18 +1131,15 @@ object IncrementalValidation {
   def summaryMultiFromStoredReport(spark: SparkSession, stateDir: String,
       columns: Seq[String]): DataFrame = {
     require(columns.nonEmpty, "need the check-column list (names, in order)")
-    val dig = spark.read.parquet(reportDigestsPath(stateDir))
+    // explicit schemas, no inference jobs; a missing witness or an
+    // unreadable store file fails the read instead of answering zero
+    val dig = spark.read.schema(StructType(Seq(StructField("n1", LongType),
+        StructField("n2", LongType))))
+      .parquet(reportDigestsPath(stateDir))
       .agg(sum(col("n1")).as("n_first"), sum(col("n2")).as("n_second"))
       .na.fill(0L)
-    val rep =
-      try spark.read.parquet(reportRowsPath(stateDir))
-        .select("kind", "column_name")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            multiReportSchema).select("kind", "column_name")
-      }
+    val rep = multiReportRows(spark, reportRowsPath(stateDir))
+      .select("kind", "column_name")
     val missing = rep.agg(
       sum(when(col("kind") === "missing_in_first", 1L).otherwise(0L))
         .as("missing_in_first"),
@@ -1092,12 +1160,9 @@ object IncrementalValidation {
         (col("n_second") - col("missing_in_first")).as("n_matched"))
   }
 
-  private val multiReportSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("kind", StringType),
-    org.apache.spark.sql.types.StructField("id", StringType),
-    org.apache.spark.sql.types.StructField("column_name", StringType),
-    org.apache.spark.sql.types.StructField("check_first", StringType),
-    org.apache.spark.sql.types.StructField("check_second", StringType)))
+  private def multiReportRows(spark: SparkSession, rowsPath: String) =
+    storedRows(spark, rowsPath, multiReportSchema)
+      .getOrElse(emptyFrame(spark, multiReportSchema))
 
   /** Incrementally-maintained MULTI-COLUMN row-level report: the two
     * id-level missing frames (kind ∈ {missing_in_first,
@@ -1197,30 +1262,20 @@ object IncrementalValidation {
     } else if (dirty.get.nonEmpty) {
       val d = dirty.get
       fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      // churn-sized slices persisted: two anti-joins + the k-column diff
-      // join would otherwise rescan + re-filter both inputs per frame
+      // churn-sized slices materialized eagerly: two anti-joins + the
+      // k-column diff join would otherwise rescan + re-filter both
+      // inputs per frame
       val fD = first.filter(dirtyPred(first, bucketCol, nBuckets, d))
-        .persist()
+        .localCheckpoint()
       val sD = second.filter(dirtyPred(second, bucketCol, nBuckets, d))
-        .persist()
-      try reportSurgery(rowsPath, reportRows(fD, sD), d, groups)
-      finally { fD.unpersist(); sD.unpersist() }
+        .localCheckpoint()
+      reportSurgery(rowsPath, reportRows(fD, sD), d, groups, lease)
       swapWrite(spark, pr.cd, digPath)
     } // zero dirty: report and witness both stand untouched
 
-    val current =
-      try spark.read.parquet(rowsPath)
-        .filter(col("kind") === "differing")
-        .select("id", "column_name", "check_first", "check_second")
-      catch {
-        case scala.util.control.NonFatal(_) =>
-          // an all-equal table pair leaves an empty report directory —
-          // parquet cannot infer a schema from zero files
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            multiReportSchema)
-            .select("id", "column_name", "check_first", "check_second")
-      }
+    val current = multiReportRows(spark, rowsPath)
+      .filter(col("kind") === "differing")
+      .select("id", "column_name", "check_first", "check_second")
     val report = IncrementalReport(
       rebuilt = rebuild,
       totalBuckets = pr.total,

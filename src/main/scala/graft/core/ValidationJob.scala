@@ -211,12 +211,13 @@ object ValidationJob {
     * table (only churned buckets' partitions rewritten per run; the
     * tidy/compat files re-derive from that store — report-sized writes,
     * never a table-sized recompute), and the summary derives from the
-    * same store's digest witness + report rows
-    * ([[IncrementalValidation.summaryFromStoredReport]]) — the whole
+    * same run's digests + report kind counts
+    * ([[IncrementalValidation.reportIncrementalWithSummary]]) — the whole
     * daily run costs one digest scan of each input plus churn-sized
-    * work. Set `report_incremental: false` to keep the classic
-    * full-input report path while the summary answers through the
-    * digest-pruned term state instead. */
+    * work, and the stored report is read once for every output. Set
+    * `report_incremental: false` to keep the classic full-input report
+    * path while the summary answers through the digest-pruned term
+    * state instead. */
   def run(spark: SparkSession, cfg: ValidationConfig,
       writeReports: Boolean = true): (ValidationOutput, DataFrame) = {
     val first = side(spark, cfg, cfg.first, cfg.dateColumnFirst)
@@ -227,21 +228,20 @@ object ValidationJob {
     // summary-only caller (writeReports = false) never pays it
     if (incremental && cfg.reportIncremental && writeReports) {
       // the fully-incremental daily run: ONE digest scan steers the
-      // report maintenance, and the summary derives from the store
-      // (digest row counts + report mismatch counts) — no second state
-      // surface, no third pass over the inputs
-      val (current, _) = IncrementalValidation.reportIncremental(
+      // report maintenance, every report file derives from the one
+      // materialized read of the store, and the summary is built on the
+      // driver (digest row counts + observed report kind counts) — no
+      // second state surface, no third pass over the inputs
+      val maintained = IncrementalValidation.reportIncrementalWithSummary(
         first, second, mode, reportStateDir(cfg),
         nBuckets = cfg.reportBuckets)
-      val out = outputFromStored(current, cfg.firstName, cfg.secondName,
-        cfg.checkColumn, first.schema("check").dataType,
+      val out = outputFromStored(maintained.current, cfg.firstName,
+        cfg.secondName, cfg.checkColumn, first.schema("check").dataType,
         second.schema("check").dataType)
       ReportWriter.writeTidy(out, s"${cfg.outputDirectory}/tidy")
       ReportWriter.writeCompat(out, s"${cfg.outputDirectory}/result",
         cfg.firstName, cfg.secondName, cfg.checkColumn)
-      val summary = IncrementalValidation.summaryFromStoredReport(
-        spark, reportStateDir(cfg))
-      (out, summary)
+      (out, maintained.summary)
     } else {
       val out = Validator.validate(first, second, mode,
         cfg.firstName, cfg.secondName, cfg.checkColumn)

@@ -298,9 +298,10 @@ object IncrementalAgg {
   private[graft] def digests(table: DataFrame, idCol: String,
       dependsOn: Seq[String], nBuckets: Int,
       bucketCol: Option[String]): DataFrame = {
-    val dec = org.apache.spark.sql.types.DataTypes.createDecimalType(38, 0)
     val id = col(idCol).cast(StringType)
     val v = valueExpr(table, dependsOn)
+    val (limbAggs, totals) = IncrementalValidation.limbSums(
+      Seq("ha" -> col("h"), "hb" -> col("h2")))
     table.select(
         bucketCol.map(c => col(c).cast("long")).getOrElse(
           when(col(idCol).isNull, lit(-1L))
@@ -308,9 +309,8 @@ object IncrementalAgg {
         xxhash64(id, v).as("h"),
         xxhash64(lit(1L), id, v).as("h2"))
       .groupBy("bucket")
-      .agg(count(lit(1)).as("n"),
-        sum(col("h").cast(dec)).as("ha"),
-        sum(col("h2").cast(dec)).as("hb"))
+      .agg(count(lit(1)).as("n"), limbAggs: _*)
+      .select(col("bucket") +: col("n") +: totals: _*)
   }
 
   /** State-identity meta as a MARKER FILE (version, bucket count, agg
@@ -500,6 +500,10 @@ object IncrementalAgg {
         laidOut(recomputed.unionByName(carried))
           .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
           .parquet(staging.toString)
+        // the staging write is the long step: re-verify the lease right
+        // before the commit-point renames, never swap under a broken one
+        IncrementalValidation.commitPointHook("agg.renames")
+        lease.check()
         fs.mkdirs(new org.apache.hadoop.fs.Path(storePath(stateDir)))
         for (g <- dirtyGroups) {
           val dst = new org.apache.hadoop.fs.Path(

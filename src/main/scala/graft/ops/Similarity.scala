@@ -801,8 +801,14 @@ object Similarity {
         val b = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), fit.schema)
         lease.check()
+        // a leftover marker describes OTHER books: delete it before the
+        // swap, so a crash before the new marker lands leaves none and
+        // booksSigOf recomputes it from the books actually stored
+        fs.delete(new org.apache.hadoop.fs.Path(booksSigPath(stateDir)),
+          false)
         graft.core.IncrementalValidation.swapWrite(spark, b,
           booksPath(stateDir))
+        graft.core.IncrementalValidation.commitPointHook("pq.books_sig")
         // signature marker rides with the books (see booksSigOf)
         IncrementalAgg.writeMarker(fs, booksSigPath(stateDir),
           booksSignature(b))

@@ -59,28 +59,46 @@ object ReportWriter {
   }
 
   /** Reference-compatible padded summary frame: the three result sets
-    * ranked independently and full-outer-joined on rank — positionally
-    * zipped columns, null-padded to the longest, exactly the shape of the
-    * reference's summary CSV (minus Python-repr: dicts become JSON).
+    * positionally zipped by their own row order, null-padded to the
+    * longest — exactly the shape of the reference's summary CSV (minus
+    * Python-repr: dicts become JSON).
     *
-    * Scale note: `row_number` over a global (un-partitioned) window is a
-    * single-task bottleneck by construction — acceptable because diff
-    * reports are small relative to inputs; for huge reports use
-    * [[writeTidy]] instead (the padded shape is inherently ordered).
+    * One shuffle: the three sets are tagged and unioned, each row takes
+    * `monotonically_increasing_id()` (its set's own order) BEFORE one
+    * `repartition(1)` — upstream stages keep their parallelism, which a
+    * `coalesce(1)` would collapse — then `row_number` per set, one
+    * `groupBy` on the row number and the final sort all run in that one
+    * partition, needing no further exchange.
+    *
+    * Scale note: that single partition is a one-task bottleneck by
+    * construction — acceptable because diff reports are small relative
+    * to inputs; for huge reports use [[writeTidy]] instead (the padded
+    * shape is inherently ordered).
     */
   def paddedSummary(out: ValidationOutput): DataFrame = {
-    def ranked(df: DataFrame, valueCol: org.apache.spark.sql.Column, name: String): DataFrame = {
-      val w = Window.orderBy(monotonically_increasing_id())
-      df.select(valueCol.as(name)).withColumn("rn", row_number().over(w))
-    }
-    val m1 = ranked(out.missingInFirst, col("id"), "missing_in_first")
-    val m2 = ranked(out.missingInSecond, col("id"), "missing_in_second")
-    val dv = ranked(out.differing, to_json(struct(out.differing.columns.toIndexedSeq.map(col): _*)),
-      "differing_values")
-    m1.join(m2, Seq("rn"), "full_outer")
-      .join(dv, Seq("rn"), "full_outer")
-      .orderBy("rn")
-      .select("missing_in_first", "missing_in_second", "differing_values")
+    val sets = Seq(
+      "missing_in_first" -> out.missingInFirst.select(col("id")),
+      "missing_in_second" -> out.missingInSecond.select(col("id")),
+      "differing_values" -> out.differing.select(
+        to_json(struct(out.differing.columns.toIndexedSeq.map(col): _*))))
+    val names = sets.map(_._1)
+    val types = sets.map(_._2.schema.head.dataType)
+    // one column per set, null outside its own rows
+    val tagged = sets.zipWithIndex.map { case ((_, df), k) =>
+      df.select(lit(k).as("__tag") +: names.indices.map { j =>
+        (if (j == k) col(df.columns.head) else lit(null).cast(types(j)))
+          .as(names(j))
+      }: _*)
+    }.reduce(_ unionByName _)
+    tagged.withColumn("__mono", monotonically_increasing_id())
+      .repartition(1)
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy("__tag").orderBy("__mono")))
+      .groupBy("__rn")
+      .agg(max(names.head).as(names.head),
+        names.tail.map(n => max(n).as(n)): _*)
+      .orderBy("__rn")
+      .select(names.map(col): _*)
   }
 
   /** Reference-named CSV pair:
@@ -92,7 +110,7 @@ object ReportWriter {
   def writeCompat(out: ValidationOutput, dir: String, db1: String, db2: String,
       check: String): Unit = {
     val base = s"$dir/output_${db1}_${db2}_${check}_result.csv"
-    paddedSummary(out).coalesce(1).write.mode(SaveMode.Overwrite)
+    paddedSummary(out).write.mode(SaveMode.Overwrite)
       .option("header", "true").csv(base)
     // single partition sorted within => deterministic in-file row order
     // (by id) — byte-reproducible output, matching the reference's golden

@@ -158,37 +158,6 @@ class CuratedFeedSpec extends AnyFunSuite with SparkSpec {
     assert(seqsM.nonEmpty && seqsM == seqsO)
   }
 
-  /** Spark jobs `f` launches, counted with a listener as PhaseProfile
-    * does. `f` runs under a fresh job group so other threads' jobs are
-    * not counted; a sentinel job in a second group flushes the
-    * asynchronous listener bus before the count is read. */
-  private def jobsLaunchedBy(f: => Unit): Int = {
-    val group = s"counted-${java.util.UUID.randomUUID()}"
-    val sentinel = s"$group-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => flushed.countDown()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try f finally sc.clearJobGroup()
-      sc.setJobGroup(sentinel, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener never saw the sentinel job")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("job budget: one steady-state curatedAppend batch launches at " +
       "most the pinned number of Spark jobs") {
     val stateDir = freshStateDir()

@@ -382,9 +382,9 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("summaryFromStoredReport == summaryFast across randomized churn " +
-      "(duplicate ids, null ids, garbage values, all modes) — the " +
-      "derivation identities hold on the torture domain") {
+  test("reportIncrementalWithSummary's summary == summaryFast across " +
+      "randomized churn (duplicate ids, null ids, garbage values, all " +
+      "modes) — the derivation identities hold on the torture domain") {
     def keyed(n: Int) = randomMulti(n, 60)
       .select(col("id"), col("num").as("check"))
     for (trial <- 1 to 4) {
@@ -393,10 +393,9 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
       val stateDir = freshStateDir()
       val f = viaParquet(keyed(rnd.nextInt(150) + 60))
       val s0 = viaParquet(keyed(rnd.nextInt(150) + 60))
-      IncrementalValidation.reportIncremental(f, s0, mode, stateDir,
-        nBuckets = 16, dirtyFractionLimit = 1.0)
-      val got1 = IncrementalValidation
-        .summaryFromStoredReport(spark, stateDir).collect()(0)
+      val got1 = IncrementalValidation.reportIncrementalWithSummary(f, s0,
+        mode, stateDir, nBuckets = 16, dirtyFractionLimit = 1.0)
+        .summary.collect()(0)
       val want1 = Validator.summaryFast(f, s0, mode).collect()(0)
       assert(got1.toSeq == want1.toSeq, s"trial $trial build: " +
         s"${got1.toSeq} vs ${want1.toSeq}")
@@ -407,10 +406,9 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
           .withColumn("fz", lit(null).cast("string")),
         salt = trial + 90, rate = 0.1)
         .select(col("id"), col("num").as("check")))
-      IncrementalValidation.reportIncremental(f, s1, mode, stateDir,
-        nBuckets = 16, dirtyFractionLimit = 1.0)
-      val got2 = IncrementalValidation
-        .summaryFromStoredReport(spark, stateDir).collect()(0)
+      val got2 = IncrementalValidation.reportIncrementalWithSummary(f, s1,
+        mode, stateDir, nBuckets = 16, dirtyFractionLimit = 1.0)
+        .summary.collect()(0)
       val want2 = Validator.summaryFast(f, s1, mode).collect()(0)
       assert(got2.toSeq == want2.toSeq, s"trial $trial churn: " +
         s"${got2.toSeq} vs ${want2.toSeq}")
