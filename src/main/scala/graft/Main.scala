@@ -102,7 +102,7 @@ object Main {
     * lease is the operator's call (the abandoned run aborts before its
     * next mutation). */
   def runBreakLease(spark: SparkSession, stateDir: String): Unit = {
-    graft.core.IncrementalValidation.breakLease(spark, stateDir)
+    graft.state.StateStore.breakLease(spark, stateDir)
     println(s"lease broken at $stateDir")
   }
 

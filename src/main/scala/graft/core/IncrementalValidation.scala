@@ -1,8 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+
+import graft.state.StateStore
 
 /** Incremental validation — the shape a DAILY 100 TB validation run
   * actually wants.
@@ -60,9 +62,8 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * `<stateDir>/meta` carrying (n_buckets, mode, version)); a missing or
   * parameter-mismatched state — or a run whose dirty fraction exceeds
   * `dirtyFractionLimit` — falls back to a full rebuild, so a stale or
-  * foreign state can never silently answer. Updates write to a sibling
-  * staging directory and swap (delete + rename), the standard
-  * rename-based exposure outside transactional table formats.
+  * foreign state can never silently answer. Updates are staged and
+  * swapped in by renames only ([[graft.state.StateStore.swap]]).
   */
 object IncrementalValidation {
 
@@ -82,77 +83,13 @@ object IncrementalValidation {
   // a v1 state mismatches on version and rebuilds, the safe direction.
   // v3: marker-file meta (no Spark job to check state identity) +
   // bucket-GROUP physical layout for the report stores (see
-  // reportGroupCount); a v2 state reads as no-state and rebuilds.
+  // StateStore.groupCount); a v2 state reads as no-state and rebuilds.
   private val STATE_VERSION = 3
-
-  // report-store physical layout: one directory per logical bucket costs
-  // a fixed per-directory price on every surgery write and every read
-  // (the IncrementalAgg.runGroupCount rationale, verbatim) — physical
-  // dirs are bucket GROUPS of ~16, the bucket rides as a data column
-  private def reportGroupCount(nBuckets: Int): Int =
-    math.min(nBuckets, math.max(16, nBuckets / 16))
-  private def reportGroupOf(bucket: Long, groups: Int): Long =
-    ((bucket % groups) + groups) % groups
 
   private def modeKey(mode: CompareMode): String = mode match {
     case CompareMode.Numeric  => "numeric"
     case CompareMode.Date     => "date"
     case CompareMode.Fuzzy(t) => s"fuzzy:$t"
-  }
-
-  /** The grouped physical layout for report rows: one file per group
-    * directory, rows sorted by (group, bucket) so per-bucket reads prune
-    * on parquet row-group min/max stats. */
-  private def reportLaidOut(rows: DataFrame, groups: Int): DataFrame =
-    rows.withColumn("__bgroup", pmod(col("bucket"), lit(groups.toLong)))
-      .repartition(col("__bgroup"))
-      .sortWithinPartitions("__bgroup", "bucket")
-
-  /** Group-granular report surgery: the dirty buckets' GROUPS rewrite as
-    * (recomputed dirty rows) ∪ (the same groups' carried clean rows),
-    * staged fully and swapped in by renames. Caller has already deleted
-    * the digest witness, so any crash mid-swap rebuilds wholesale. */
-  private def reportSurgery(rowsPath: String, recomputed: DataFrame,
-      dirty: Seq[Long], groups: Int, lease: Lease): Unit = {
-    val spark = recomputed.sparkSession
-    val p = new org.apache.hadoop.fs.Path(rowsPath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirtyGroups = dirty.map(b => reportGroupOf(b, groups)).distinct
-    // an all-clean prior report can be an EMPTY store — carried is then
-    // empty by construction. Any other read failure propagates: an
-    // empty stand-in would silently drop the clean buckets' rows. The
-    // explicit schema (files hold the recomputed columns, directories
-    // a LongType `__bgroup`) needs no inference job, and the group
-    // IN-list compares the raw partition attribute, so it prunes
-    val storeSchema = StructType(
-      recomputed.schema.fields.map(_.copy(nullable = true)) :+
-        StructField("__bgroup", LongType))
-    val carried =
-      if (graft.ops.IncrementalAgg.storeHasData(fs, rowsPath))
-        spark.read.schema(storeSchema).parquet(rowsPath)
-          .filter(col("__bgroup").isin(dirtyGroups: _*) &&
-            !col("bucket").isin(dirty: _*))
-          .drop("__bgroup")
-          .select(recomputed.columns.map(col): _*)
-      else recomputed.limit(0)
-    val staging = new org.apache.hadoop.fs.Path(rowsPath + "__swap")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    reportLaidOut(recomputed.unionByName(carried), groups)
-      .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
-      .parquet(staging.toString)
-    // the staging write is the long step: re-verify the lease right
-    // before the commit-point renames, never swap under a broken one
-    commitPointHook("report.renames")
-    lease.check()
-    fs.mkdirs(p)
-    for (g <- dirtyGroups) {
-      val dst = new org.apache.hadoop.fs.Path(s"$rowsPath/__bgroup=$g")
-      if (fs.exists(dst)) fs.delete(dst, true)
-      val src = new org.apache.hadoop.fs.Path(s"$staging/__bgroup=$g")
-      // a group with no staged dir drained entirely — the delete IS the swap
-      if (fs.exists(src)) graft.ops.IncrementalAgg.mustRename(fs, src, dst)
-    }
-    fs.delete(staging, true)
   }
 
   /** Null ids live in their own sidecar bucket (-1): they never join, so
@@ -319,7 +256,7 @@ object IncrementalValidation {
 
   // written-state schemas, stated explicitly so state reads skip parquet
   // schema inference (one Spark job per read otherwise)
-  private def fullStateSchema(pr: PruneResult) =
+  private def fullStateSchema(pr: StateStore.Compared) =
     org.apache.spark.sql.types.StructType(pr.cd.schema.fields ++
       termCols.map(c => org.apache.spark.sql.types.StructField(
         c, org.apache.spark.sql.types.LongType)))
@@ -401,215 +338,19 @@ object IncrementalValidation {
       sum(when(col("tot1") > 0L, col("tot2")).otherwise(0L)).as("n_matched"))
   }
 
-  /** State-identity meta as a MARKER FILE (version, bucket count, mode
-    * key): checking it is a driver-side read, never a Spark job — every
-    * incremental run pays this check. A legacy parquet meta DIRECTORY
-    * fails the marker read and reads as no-state — the rebuild
-    * direction. */
-  private def metaMatches(spark: SparkSession, stateDir: String,
-      nBuckets: Int, modeStr: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(metaPath(stateDir))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && !fs.getFileStatus(p).isDirectory &&
-        graft.ops.IncrementalAgg.readMarker(fs, metaPath(stateDir))
-          .exists { s =>
-            s.split("\n", 3) match {
-              case Array(v, n, k) =>
-                v == STATE_VERSION.toString && n == nBuckets.toString &&
-                  k == modeStr
-              case _ => false
-            }
-          }
-    } catch { case scala.util.control.NonFatal(_) => false }
-
-  private def writeMeta(spark: SparkSession, stateDir: String,
-      nBuckets: Int, modeStr: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // a legacy parquet meta is a non-empty directory: clear it first
-    // (writeMarker's own delete is non-recursive)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
-    graft.ops.IncrementalAgg.writeMarker(fs, metaPath(stateDir),
-      s"$STATE_VERSION\n$nBuckets\n$modeStr")
-  }
-
-  /** Swap-write `df` as the new state: stage to a sibling directory,
-    * then delete + rename — the staged write fully materializes before
-    * the old state (which the plan may be reading) is touched. */
-  private[graft] def swapWrite(spark: SparkSession, df: DataFrame,
-      target: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(target)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "__staging")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    df.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    if (fs.exists(p)) fs.delete(p, true)
-    fs.rename(tmp, p)
-  }
-
-  private def leasePath(stateDir: String) = s"$stateDir/lease"
-
-  /** Single-writer guard on a state directory. The swap-write discipline
-    * is crash-safe for ONE writer; two concurrent runs could interleave
-    * delete/rename (or, on the report surface, partition deletes with
-    * appends) — so every mutating surface takes this lease at run start
-    * and re-verifies it before each mutation. The lease is an
-    * exclusively-created file whose body is (nonce, pid, epoch-millis):
-    * a second run fails fast on the create, and a run whose lease was
-    * broken mid-flight aborts BEFORE its next mutation instead of
-    * tearing a state another writer now owns.
-    *
-    * A crashed run leaves its lease behind by design (auto-expiry would
-    * steal the lease out from under a legitimately long run) — the error
-    * message carries the holder's pid/timestamp and the recovery action
-    * is [[breakLease]]. Exclusive-create atomicity is the filesystem's:
-    * HDFS and local FS give it outright; on S3-style stores front this
-    * with an external coordinator if two schedulers can race. */
-  private[graft] final class Lease(
-      fs: org.apache.hadoop.fs.FileSystem,
-      path: org.apache.hadoop.fs.Path,
-      nonce: String) {
-    private def holder(): String =
-      try {
-        val in = fs.open(path)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-          buf.toString("UTF-8")
-        } finally in.close()
-      } catch { case scala.util.control.NonFatal(_) => "" }
-    /** Abort unless the lease file still carries OUR nonce — called
-      * before every state mutation. */
-    def check(): Unit =
-      if (!holder().startsWith(nonce))
-        throw new IllegalStateException(
-          s"incremental-state lease at $path is no longer held by this " +
-            "run (broken or taken by another writer); aborting before " +
-            "any state mutation")
-    def release(): Unit =
-      // delete only if still ours: never remove a successor's lease
-      if (holder().startsWith(nonce))
-        try fs.delete(path, false)
-        catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  private[graft] def acquireLease(spark: SparkSession,
-      stateDir: String): Lease = {
-    val p = new org.apache.hadoop.fs.Path(leasePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    val nonce = java.util.UUID.randomUUID().toString
-    val payload = nonce + "\n" +
-      ProcessHandle.current().pid() + "\n" +
-      System.currentTimeMillis() + "\n"
-    val out =
-      try fs.create(p, /* overwrite = */ false)
-      catch {
-        case e: java.io.IOException =>
-          val held = try {
-            val in = fs.open(p)
-            try {
-              val buf = new java.io.ByteArrayOutputStream()
-              org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 4096, false)
-              buf.toString("UTF-8").trim.replace('\n', ' ')
-            } finally in.close()
-          } catch { case scala.util.control.NonFatal(_) => "<unreadable>" }
-          throw new IllegalStateException(
-            s"incremental state at $stateDir is locked by another " +
-              s"validation run (lease nonce/pid/epoch-ms: $held); " +
-              "concurrent writers would tear the stored state. If the " +
-              "holder crashed, clear it with IncrementalValidation" +
-              ".breakLease(spark, stateDir) and re-run.", e)
-      }
-    try out.write(payload.getBytes("UTF-8")) finally out.close()
-    new Lease(fs, p, nonce)
-  }
-
-  /** Operator recovery: remove a lease a CRASHED run left behind. Never
-    * call while the holder may still be alive — that reintroduces the
-    * concurrent-writer exposure the lease exists to close. */
-  def breakLease(spark: SparkSession, stateDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(leasePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, false)
-  }
-
-  /** Test seam: invoked after the read-only prune phase, before the
-    * first state mutation — lets a spec interleave a second run at the
-    * exact point a concurrent writer would be most destructive. */
-  private[graft] var beforeMutationHook: () => Unit = () => ()
-
-  /** Test seam: invoked with a commit point's name just before the
-    * stored state crosses it ("report.renames", "agg.renames",
-    * "pq.books_sig") — lets a spec break the lease or crash exactly
-    * there. */
-  private[graft] var commitPointHook: String => Unit = _ => ()
-
-  /** The digest-compare phase shared by every incremental surface:
-    * current digests (localCheckpointed), meta check, dirty set vs the
-    * stored digest frame at `digestPath`. */
-  private final case class PruneResult(
-      cd: DataFrame, total: Long, haveState: Boolean,
-      dirtyRows: Option[Seq[(Long, Boolean)]],
-      nFirst: Long, nSecond: Long) {
-    def dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
-    def dirtyInCurrent: Long = dirtyRows.map(_.count(_._2).toLong).getOrElse(0L)
-  }
-
   private val digestFields = Seq("n1", "h1a", "h1b", "n2", "h2a", "h2b")
 
+  /** The digest-compare phase shared by every incremental surface: the
+    * current digests of both sides against the witness at `digestPath`
+    * ([[StateStore.Witness.compare]]). */
   private def prune(first: DataFrame, second: DataFrame, nBuckets: Int,
       bucketCol: Option[String], valueExpr: Column, stateDir: String,
-      modeStr: String, digestPath: String): PruneResult = {
-    val spark = first.sparkSession
-    // digests are <= nBuckets+1 rows BY CONTRACT (metadata-sized at any
-    // scale): collect and compare on the driver — one job for the scan
-    // instead of localCheckpoint + count + a join job, and the witness
-    // rewrite becomes a single local partition (one file)
-    val cdSrc = digests(first, second, nBuckets, bucketCol, valueExpr)
-    val cdSchema = cdSrc.schema
-    val cdRows = cdSrc.collect()
-    val total = cdRows.length.toLong
-    val haveState = metaMatches(spark, stateDir, nBuckets, modeStr)
-    // explicit schema: every witness/state read below is of rows this
-    // module wrote with a known schema — skipping parquet inference
-    // skips one Spark job per read
-    val old: Option[Array[org.apache.spark.sql.Row]] =
-      if (haveState)
-        try Some(spark.read.schema(cdSchema).parquet(digestPath).collect())
-        catch { case scala.util.control.NonFatal(_) => None }
-      else None
-    def sig(rows: Array[org.apache.spark.sql.Row])
-        : Map[Long, Seq[Any]] =
-      rows.map { r =>
-        r.getLong(r.fieldIndex("bucket")) ->
-          digestFields.map(f => r.get(r.fieldIndex(f)): Any)
-      }.toMap
-    def fieldEq(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-        x.compareTo(y) == 0
-      case _ => a == b
-    }
-    val dirtyRows = old.map { st =>
-      val cur = sig(cdRows)
-      val prev = sig(st)
-      (cur.keySet ++ prev.keySet).toSeq.flatMap { b =>
-        (cur.get(b), prev.get(b)) match {
-          case (Some(c), Some(p))
-              if c.zip(p).forall { case (x, y) => fieldEq(x, y) } => None
-          case (c, _) => Some(b -> c.isDefined)
-        }
-      }
-    }
-    val cdLocal = spark.createDataFrame(
-      spark.sparkContext.parallelize(cdRows.toSeq, 1), cdSchema)
-    // per-side row counts of the current inputs (null ids included):
-    // the digest counts summed on the driver, no job
-    def rowsOf(f: String) = cdRows.map(r => r.getLong(r.fieldIndex(f))).sum
-    PruneResult(cdLocal, total, haveState && old.isDefined, dirtyRows,
-      rowsOf("n1"), rowsOf("n2"))
+      modeStr: String, digestPath: String)
+      : (StateStore.Witness, StateStore.Compared) = {
+    val w = StateStore.Witness(digestPath, metaPath(stateDir), STATE_VERSION,
+      nBuckets, modeStr)
+    (w, w.compare(digests(first, second, nBuckets, bucketCol, valueExpr),
+      digestFields))
   }
 
   /** The dirty-bucket row predicate FOR ONE SIDE: a plain attribute
@@ -684,7 +425,7 @@ object IncrementalValidation {
       return (Validator.summaryFast(first, second, mode),
         IncrementalReport(rebuilt = true, totalBuckets = 0L,
           dirtyBuckets = 0L, cleanBuckets = 0L))
-    val lease = acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
     // phases 1+2: current digests (one scan of each side, tiny
@@ -692,7 +433,7 @@ object IncrementalValidation {
     // new state's digest columns) compared with the stored row per
     // bucket; one-sided buckets (appeared or fully drained) are dirty
     // by the full-outer null mismatch
-    val pr = prune(first, second, nBuckets, bucketCol,
+    val (w, pr) = prune(first, second, nBuckets, bucketCol,
       col("check").cast(StringType), stateDir, modeKey(mode),
       statePath(stateDir))
     val cdDf = pr.cd
@@ -703,9 +444,7 @@ object IncrementalValidation {
       else None
     val dirtyBuckets: Option[Seq[Long]] = pr.dirty
 
-    val tooDirty = dirtyBuckets.exists(d =>
-      total > 0 && d.size.toDouble / total > dirtyFractionLimit)
-    val rebuild = oldState.isEmpty || tooDirty
+    val rebuild = oldState.isEmpty || pr.tooDirty(dirtyFractionLimit)
 
     val newState: DataFrame = {
       val nullTerms = nullBucketTerms(cdDf)
@@ -745,14 +484,13 @@ object IncrementalValidation {
     // a zero-dirty re-run (the daily no-change case) proves the state
     // current — rewriting it would only churn bytes; leave it in place
     val noChange = !rebuild && dirtyBuckets.exists(_.isEmpty)
-    beforeMutationHook()
-    lease.check()
+    lease.check("state.mutate")
     // the state is nBuckets-sized (metadata) — one output file, not one
     // per shuffle partition (repartition, not coalesce: coalesce(1)
     // would collapse the upstream terms computation into one task)
     if (!noChange)
-      swapWrite(spark, newState.repartition(1), statePath(stateDir))
-    if (!pr.haveState) writeMeta(spark, stateDir, nBuckets, modeKey(mode))
+      StateStore.swapWrite(newState.repartition(1), statePath(stateDir), lease)
+    if (!pr.haveState) w.writeMeta(StateStore.fsOf(spark, stateDir))
 
     // phase 3: the global summary is the column-sum over the stored
     // per-bucket terms — read back from the swapped-in state so the
@@ -767,13 +505,7 @@ object IncrementalValidation {
         sum("n_differing").as("n_differing"),
         sum("n_matched").as("n_matched"))
       .na.fill(0L)
-    val report = IncrementalReport(
-      rebuilt = rebuild,
-      totalBuckets = total,
-      dirtyBuckets =
-        if (rebuild) total else dirtyBuckets.map(_.size.toLong).getOrElse(0L),
-      cleanBuckets = if (rebuild) 0L else total - pr.dirtyInCurrent)
-    (summary, report)
+    (summary, pr.record(rebuild))
     } finally lease.release()
   }
 
@@ -821,10 +553,10 @@ object IncrementalValidation {
           dirtyBuckets = 0L, cleanBuckets = 0L))
     val modeStr = "multi:" + checks
       .map { case (c, m) => s"$c=${modeKey(m)}" }.mkString(",")
-    val lease = acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
-    val pr = prune(first, second, nBuckets, bucketCol,
+    val (w, pr) = prune(first, second, nBuckets, bucketCol,
       multiValueExpr(checks.map(_._1)), stateDir, modeStr,
       statePath(stateDir))
     val cdDf = pr.cd
@@ -837,9 +569,7 @@ object IncrementalValidation {
       else None
     val dirtyBuckets: Option[Seq[Long]] =
       if (oldTerms.isEmpty) None else pr.dirty
-    val tooDirty = dirtyBuckets.exists(d =>
-      total > 0 && d.size.toDouble / total > dirtyFractionLimit)
-    val rebuild = oldTerms.isEmpty || tooDirty
+    val rebuild = oldTerms.isEmpty || pr.tooDirty(dirtyFractionLimit)
 
     // null sidecar: one row PER COLUMN POSITION off the -1 digest counts
     val posSeed = spark.range(checks.size).select(col("id").cast("int").as("pos"))
@@ -881,17 +611,16 @@ object IncrementalValidation {
     }
 
     val noChange = !rebuild && dirtyBuckets.exists(_.isEmpty)
-    beforeMutationHook()
-    lease.check()
+    lease.check("terms.mutate")
     if (!noChange) {
       // terms first, then digests: a crash between the two leaves the
       // NEW terms with the OLD digests, which over-marks buckets dirty
       // on the next run (safe direction); the reverse order could mark
       // stale terms clean
-      swapWrite(spark, newTerms.repartition(1), termsPath(stateDir))
-      swapWrite(spark, cdDf, statePath(stateDir))
+      StateStore.swapWrite(newTerms.repartition(1), termsPath(stateDir), lease)
+      StateStore.swapWrite(cdDf, statePath(stateDir), lease)
     }
-    if (!pr.haveState) writeMeta(spark, stateDir, nBuckets, modeStr)
+    if (!pr.haveState) w.writeMeta(StateStore.fsOf(spark, stateDir))
 
     val names = array(checks.map { case (c, _) => lit(c) }: _*)
     val perCol = spark.read.schema(multiTermsSchema)
@@ -907,13 +636,7 @@ object IncrementalValidation {
       .na.fill(0L, termCols)
       .select(element_at(names, col("pos").cast("int") + 1).as("column_name") +:
         termCols.map(col): _*)
-    val report = IncrementalReport(
-      rebuilt = rebuild,
-      totalBuckets = total,
-      dirtyBuckets =
-        if (rebuild) total else dirtyBuckets.map(_.size.toLong).getOrElse(0L),
-      cleanBuckets = if (rebuild) 0L else total - pr.dirtyInCurrent)
-    (summary, report)
+    (summary, pr.record(rebuild))
     } finally lease.release()
   }
 
@@ -936,6 +659,28 @@ object IncrementalValidation {
     Seq("kind", "id", "column_name", "check_first", "check_second")
       .map(StructField(_, StringType)))
 
+  /** The row-level report store's maintenance, shared by both report
+    * surfaces ([[StateStore.Witness.maintain]]): a rebuild rewrites the
+    * whole store; otherwise the dirty buckets' groups are recomputed
+    * from both sides filtered to the dirty set, materialized eagerly —
+    * the report is several joins, each would otherwise rescan and
+    * re-filter both inputs, and a lazy cache lets adaptive execution
+    * start every join stage against a cache still being filled.
+    * Returns whether it rebuilt. */
+  private def maintainReport(first: DataFrame, second: DataFrame,
+      w: StateStore.Witness, pr: StateStore.Compared, stateDir: String,
+      dirtyFractionLimit: Double, bucketCol: Option[String],
+      lease: StateStore.Lease)(
+      reportRows: (DataFrame, DataFrame) => DataFrame): Boolean =
+    w.maintain(pr, reportRowsPath(stateDir), "bucket", Nil,
+        dirtyFractionLimit, lease)(
+      reportRows(first, second),
+      dirty => reportRows(
+        first.filter(dirtyPred(first, bucketCol, w.nBuckets, dirty))
+          .localCheckpoint(),
+        second.filter(dirtyPred(second, bucketCol, w.nBuckets, dirty))
+          .localCheckpoint()))
+
   /** The stored report rows with the `rows` columns, read with an
     * explicit schema (the files add the row's `bucket`, the directories
     * a LongType `__bgroup`), so the read needs no inference job. None
@@ -944,9 +689,8 @@ object IncrementalValidation {
     * propagates. */
   private def storedRows(spark: SparkSession, rowsPath: String,
       rows: StructType): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(rowsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!graft.ops.IncrementalAgg.storeHasData(fs, rowsPath)) None
+    if (!StateStore.storeHasData(StateStore.fsOf(spark, rowsPath), rowsPath))
+      None
     else Some(spark.read.schema(StructType(rows.fields ++ Seq(
         StructField("bucket", LongType), StructField("__bgroup", LongType))))
       .parquet(rowsPath)
@@ -1027,15 +771,12 @@ object IncrementalValidation {
     val spark = first.sparkSession
     import spark.implicits._
     val rowsPath = reportRowsPath(stateDir)
-    val digPath = reportDigestsPath(stateDir)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
-    val pr = prune(first, second, nBuckets, bucketCol,
+    val (w, pr) = prune(first, second, nBuckets, bucketCol,
       col("check").cast(StringType), stateDir, s"report:${modeKey(mode)}",
-      digPath)
+      reportDigestsPath(stateDir))
 
     def reportRows(f: DataFrame, s: DataFrame): DataFrame = {
       val out = Validator.validate(f, s, mode)
@@ -1051,38 +792,8 @@ object IncrementalValidation {
         .withColumn("bucket", bucketExpr(nBuckets))
     }
 
-    val dirty = pr.dirty
-    val tooDirty = dirty.exists(d =>
-      pr.total > 0 && d.size.toDouble / pr.total > dirtyFractionLimit)
-    val rebuild = !pr.haveState || tooDirty
-    beforeMutationHook()
-    lease.check()
-
-    val groups = reportGroupCount(nBuckets)
-    if (rebuild) {
-      // invalidate the witness first: torn output must never read clean
-      if (fs.exists(new org.apache.hadoop.fs.Path(digPath)))
-        fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      reportLaidOut(reportRows(first, second), groups)
-        .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
-        .parquet(rowsPath)
-      swapWrite(spark, pr.cd, digPath)
-      if (!pr.haveState)
-        writeMeta(spark, stateDir, nBuckets, s"report:${modeKey(mode)}")
-    } else if (dirty.get.nonEmpty) {
-      val d = dirty.get
-      fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      // materialize the CHURN-SIZED slices eagerly: the report is three
-      // joins (two anti, one inner) and each would otherwise rescan +
-      // re-filter both inputs — and a lazy cache lets adaptive execution
-      // start every join stage against a cache still being filled
-      val fD = first.filter(dirtyPred(first, bucketCol, nBuckets, d))
-        .localCheckpoint()
-      val sD = second.filter(dirtyPred(second, bucketCol, nBuckets, d))
-        .localCheckpoint()
-      reportSurgery(rowsPath, reportRows(fD, sD), d, groups, lease)
-      swapWrite(spark, pr.cd, digPath)
-    } // zero dirty: report and witness both stand untouched
+    val rebuild = maintainReport(first, second, w, pr, stateDir,
+      dirtyFractionLimit, bucketCol, lease)(reportRows)
 
     // the stored report, read ONCE and materialized with its three kind
     // counts observed on the same pass — the tidy files, the compat
@@ -1102,16 +813,10 @@ object IncrementalValidation {
     val Seq(missingInFirst, missingInSecond, nDiffering) = counts
     val summary = spark.createDataFrame(
       java.util.Collections.singletonList(org.apache.spark.sql.Row(
-        pr.nFirst, pr.nSecond, missingInFirst, missingInSecond, nDiffering,
-        pr.nSecond - missingInFirst)),
+        pr.sum("n1"), pr.sum("n2"), missingInFirst, missingInSecond,
+        nDiffering, pr.sum("n2") - missingInFirst)),
       summarySchema)
-    val report = IncrementalReport(
-      rebuilt = rebuild,
-      totalBuckets = pr.total,
-      dirtyBuckets =
-        if (rebuild) pr.total else dirty.map(_.size.toLong).getOrElse(0L),
-      cleanBuckets = if (rebuild) 0L else pr.total - pr.dirtyInCurrent)
-    MaintainedReport(current, report, summary)
+    MaintainedReport(current, pr.record(rebuild), summary)
     } finally lease.release()
   }
 
@@ -1209,18 +914,16 @@ object IncrementalValidation {
     val spark = first.sparkSession
     import spark.implicits._
     val rowsPath = reportRowsPath(stateDir)
-    val digPath = reportDigestsPath(stateDir)
     // ".v2": the store gained the kind column + missing rows — a
     // prior-format state mismatches on meta and rebuilds, never misreads
     val modeStr = "multireport.v2:" + checks
       .map { case (c, m) => s"$c=${modeKey(m)}" }.mkString(",")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
-    val pr = prune(first, second, nBuckets, bucketCol,
-      multiValueExpr(checks.map(_._1)), stateDir, modeStr, digPath)
+    val (w, pr) = prune(first, second, nBuckets, bucketCol,
+      multiValueExpr(checks.map(_._1)), stateDir, modeStr,
+      reportDigestsPath(stateDir))
 
     // all three frames emit the id string-cast; bucketExpr hashes the
     // same cast, so a report row's bucket equals its input rows' bucket
@@ -1241,48 +944,13 @@ object IncrementalValidation {
         .withColumn("bucket", bucketExpr(nBuckets))
     }
 
-    val dirty = pr.dirty
-    val tooDirty = dirty.exists(d =>
-      pr.total > 0 && d.size.toDouble / pr.total > dirtyFractionLimit)
-    val rebuild = !pr.haveState || tooDirty
-    beforeMutationHook()
-    lease.check()
-
-    val groups = reportGroupCount(nBuckets)
-    if (rebuild) {
-      // invalidate the witness first: torn output must never read clean
-      if (fs.exists(new org.apache.hadoop.fs.Path(digPath)))
-        fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      reportLaidOut(reportRows(first, second), groups)
-        .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
-        .parquet(rowsPath)
-      swapWrite(spark, pr.cd, digPath)
-      if (!pr.haveState)
-        writeMeta(spark, stateDir, nBuckets, modeStr)
-    } else if (dirty.get.nonEmpty) {
-      val d = dirty.get
-      fs.delete(new org.apache.hadoop.fs.Path(digPath), true)
-      // churn-sized slices materialized eagerly: two anti-joins + the
-      // k-column diff join would otherwise rescan + re-filter both
-      // inputs per frame
-      val fD = first.filter(dirtyPred(first, bucketCol, nBuckets, d))
-        .localCheckpoint()
-      val sD = second.filter(dirtyPred(second, bucketCol, nBuckets, d))
-        .localCheckpoint()
-      reportSurgery(rowsPath, reportRows(fD, sD), d, groups, lease)
-      swapWrite(spark, pr.cd, digPath)
-    } // zero dirty: report and witness both stand untouched
+    val rebuild = maintainReport(first, second, w, pr, stateDir,
+      dirtyFractionLimit, bucketCol, lease)(reportRows)
 
     val current = multiReportRows(spark, rowsPath)
       .filter(col("kind") === "differing")
       .select("id", "column_name", "check_first", "check_second")
-    val report = IncrementalReport(
-      rebuilt = rebuild,
-      totalBuckets = pr.total,
-      dirtyBuckets =
-        if (rebuild) pr.total else dirty.map(_.size.toLong).getOrElse(0L),
-      cleanBuckets = if (rebuild) 0L else pr.total - pr.dirtyInCurrent)
-    (current, report)
+    (current, pr.record(rebuild))
     } finally lease.release()
   }
 }

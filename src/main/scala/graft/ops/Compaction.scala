@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.StateStore
+
 /** Small-file compaction — the file-size governance a 100 TB table needs.
   *
   * Streaming micro-batches, over-parallel writers and incremental loads
@@ -205,7 +207,8 @@ object Compaction {
     // rename(tmp, base) left the ONLY copy stranded in the staging
     // sibling — rename it back into place before anything else, so a
     // re-run heals instead of throwing FileNotFound at the listing
-    if (!fs0.exists(base0) && fs0.exists(tmp0)) fs0.rename(tmp0, base0)
+    if (!fs0.exists(base0) && fs0.exists(tmp0))
+      StateStore.mustRename(fs0, tmp0, base0)
     val in = listDataFiles(spark, dir)
     val (fi, bi) = (in.size.toLong, in.map(_._2).sum)
     val planned =
@@ -223,7 +226,7 @@ object Compaction {
     rewriteInto(rewriteSession(spark, targetBytes), dir, tmp.toString)
     val out = listDataFiles(spark, tmp.toString)
     fs.delete(base, true)
-    fs.rename(tmp, base)
+    StateStore.mustRename(fs, tmp, base)
     Seq((fi, bi, out.size.toLong, out.map(_._2).sum, planned, true))
       .toDF("files_in", "bytes_in", "files_out", "bytes_out",
         "files_planned", "rewritten")

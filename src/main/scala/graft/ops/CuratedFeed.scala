@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.state.StateStore
+
 /** CONTINUOUS CURATED LOADER FEED — the streaming twin of the whole
   * declarative pipeline ([[graft.core.PipelineJob]]): each arriving
   * batch of raw documents runs the curation chain
@@ -168,42 +170,33 @@ object CuratedFeed {
         "(the Chunking.fixedSequences contract)")
     require(decontaminateNgram >= 1, "decontaminateNgram must be >= 1")
     val spark = docs.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, stateDir)
     // recipe pin: every delivery of one feed must run the same curation
     // recipe or replay healing silently diverges (see recipeLine)
     val recipe = recipeLine(merges, seqLen, nShards, minWords, maxWords,
       specials, boundary, nBuckets,
       benchmark.map(b => (benchDigest(b, textCol), decontaminateNgram)))
-    IncrementalAgg.readMarker(fs, recipePath(stateDir)) match {
-      case Some(prev) if prev != recipe =>
-        throw new IllegalArgumentException(
-          s"curated feed at $stateDir was built with recipe\n  $prev\n" +
-            s"but this batch declares\n  $recipe\n— a feed's curation " +
-            "recipe is immutable for its lifetime (replays re-derive " +
-            "survivors from it). Restore the original parameters or " +
-            "start a fresh stateDir.")
-      case None =>
-        IncrementalAgg.writeMarker(fs, recipePath(stateDir), recipe)
-      case _ => ()
+    StateStore.pinMarker(fs, recipePath(stateDir), recipe) { prev =>
+      new IllegalArgumentException(
+        s"curated feed at $stateDir was built with recipe\n  $prev\n" +
+          s"but this batch declares\n  $recipe\n— a feed's curation " +
+          "recipe is immutable for its lifetime (replays re-derive " +
+          "survivors from it). Restore the original parameters or " +
+          "start a fresh stateDir.")
     }
     // ownership at the COMPOSED level (both stores sit behind it): a
     // reset checkpoint restarts batch ids, which over curated state is
     // unrecoverable in place — sample identity is arrival order
     IncrementalAgg.streamIdentity(fs, stateDir).foreach { sid =>
-      IncrementalAgg.readMarker(fs, ownerPath(stateDir)) match {
-        case Some(owner) if owner != sid =>
-          throw new IllegalStateException(
-            s"curated feed at $stateDir was built by streaming query " +
-              s"$owner but this batch comes from query $sid — the " +
-              "checkpoint was reset while the state was kept. Batch ids " +
-              "are not comparable across query lifetimes and sample " +
-              "identity is arrival order, so the feed cannot be " +
-              "rebased; start a fresh stateDir (both stores remain " +
-              "readable).")
-        case None =>
-          IncrementalAgg.writeMarker(fs, ownerPath(stateDir), sid)
-        case _ => ()
+      StateStore.pinMarker(fs, ownerPath(stateDir), sid) { owner =>
+        new IllegalStateException(
+          s"curated feed at $stateDir was built by streaming query " +
+            s"$owner but this batch comes from query $sid — the " +
+            "checkpoint was reset while the state was kept. Batch ids " +
+            "are not comparable across query lifetimes and sample " +
+            "identity is arrival order, so the feed cannot be " +
+            "rebased; start a fresh stateDir (both stores remain " +
+            "readable).")
       }
     }
     // in-sequence check BEFORE any mutation: a gap folded into the seen
@@ -350,11 +343,9 @@ object CuratedFeed {
     * line; null before the first append) and seen_batches (the seen
     * store's highest batch id, -1 when empty). */
   def describe(spark: SparkSession, stateDir: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
     SequenceFeed.describe(spark, feedDir(stateDir))
-      .withColumn("recipe",
-        lit(IncrementalAgg.readMarker(fs, recipePath(stateDir)).orNull))
+      .withColumn("recipe", lit(StateStore.readMarker(
+        StateStore.fsOf(spark, stateDir), recipePath(stateDir)).orNull))
       .withColumn("seen_batches",
         lit(IncrementalAgg.maxStoredBatch(spark, seenDir(stateDir))))
   }

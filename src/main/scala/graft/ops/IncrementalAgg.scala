@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
 import graft.core.IncrementalValidation
+import graft.state.StateStore
 
 /** Churn-priced MATERIALIZED AGGREGATES over one table — the
   * incremental-validation discipline ([[graft.core.IncrementalValidation]])
@@ -41,10 +42,10 @@ import graft.core.IncrementalValidation
   * composition that groups by (__bucket, keys) all qualify; a global
   * median does not (store its countable partials instead).
   *
-  * Crash discipline is [[IncrementalValidation.reportIncremental]]'s,
-  * verbatim: the digest witness is DELETED before any store partition is
-  * mutated and swapped back only after, so a torn store can never read
-  * clean; the single-writer lease guards every mutating run; a missing /
+  * Crash discipline is [[graft.state.StateStore]]'s: the digest witness
+  * is DELETED before any store partition is mutated and swapped back
+  * only after, so a torn store can never read clean; the single-writer
+  * lease guards every mutating run; a missing /
   * version-skewed / `aggKey`-mismatched state rebuilds wholesale (the
   * safe direction). `aggKey` must encode the aggregate's identity AND
   * parameters — two different aggregates pointed at one stateDir must
@@ -55,9 +56,9 @@ object IncrementalAgg {
   /** One run's execution record (same shape as validation's). */
   type IncrementalReport = IncrementalValidation.IncrementalReport
   // v2: marker-file meta + bucket-GROUP physical layout for the [[run]]
-  // store (see runGroupCount). A v1 state mismatches the meta check and
-  // rebuilds wholesale — the safe direction; run() stores are always
-  // rebuildable from the table.
+  // store (see StateStore.groupCount). A v1 state mismatches the meta
+  // check and rebuilds wholesale — the safe direction; run() stores are
+  // always rebuildable from the table.
   private val STATE_VERSION = 2
 
   private def storePath(stateDir: String) = s"$stateDir/agg"
@@ -69,59 +70,15 @@ object IncrementalAgg {
   private[ops] def appendStorePath(stateDir: String): String =
     storePath(stateDir)
 
-  /** [[storeHasData]] against the append store — the sibling-operator
+  /** [[StateStore.storeHasData]] against the append store — the sibling-operator
     * twin of [[appendStorePath]]. */
   private[ops] def appendStoreHasData(spark: SparkSession,
-      stateDir: String): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    storeHasData(fs, storePath(stateDir))
-  }
+      stateDir: String): Boolean =
+    StateStore.storeHasData(StateStore.fsOf(spark, stateDir),
+      storePath(stateDir))
   private def digestsPath(stateDir: String) = s"$stateDir/agg_digests"
   private def metaPath(stateDir: String) = s"$stateDir/meta"
   private def watermarkPath(stateDir: String) = s"$stateDir/agg_compact_watermark"
-
-  /** Hadoop FileSystems report rename failure by RETURNING FALSE, not by
-    * throwing — an unchecked rename(p, old) that failed would let the
-    * following rename(tmp, p) move the staging directory INSIDE the
-    * still-present store (rename-into-existing-dir semantics), nesting a
-    * `__staging` subtree that corrupts partition discovery. Every swap
-    * rename goes through this: a false ABORTS the swap, leaving the
-    * recoverable tmp/old layout for [[recoverStore]]. */
-  private[graft] def mustRename(fs: org.apache.hadoop.fs.FileSystem,
-      from: org.apache.hadoop.fs.Path, to: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(from, to))
-      throw new java.io.IOException(
-        s"rename $from -> $to failed (filesystem returned false); " +
-          "store left in its recoverable pre-swap layout")
-
-  /** Small marker file, read fully; None when absent. */
-  private[graft] def readMarker(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val chunk = new Array[Byte](256)
-        var n = in.read(chunk)
-        while (n >= 0) { buf.write(chunk, 0, n); n = in.read(chunk) }
-        Some(new String(buf.toByteArray, "UTF-8").trim)
-      } finally in.close()
-    }
-  }
-
-  /** Atomic (write-tmp + rename) small marker write. */
-  private[graft] def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, value: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
-    if (fs.exists(p)) fs.delete(p, false)
-    mustRename(fs, tmp, p)
-  }
 
   /** Highest batch id COMPACTION has folded into the base partition
     * (-1 when none) — the replay fence: a micro-batch whose store write
@@ -137,14 +94,15 @@ object IncrementalAgg {
     * under-fence). */
   private def readWatermark(fs: org.apache.hadoop.fs.FileSystem,
       stateDir: String): Long =
-    readMarker(fs, watermarkPath(stateDir)).map(_.toLong).getOrElse(-1L)
+    StateStore.readMarker(fs, watermarkPath(stateDir)).map(_.toLong)
+      .getOrElse(-1L)
 
   private def writeWatermark(fs: org.apache.hadoop.fs.FileSystem,
       stateDir: String, value: Long): Unit =
     // a crash inside writeMarker's delete+rename window only LOWERS the
     // fence (no watermark / the old one) — replays then fall back to
     // the dynamic-overwrite idempotency, which is still correct pre-swap
-    writeMarker(fs, watermarkPath(stateDir), value.toString)
+    StateStore.writeMarker(fs, watermarkPath(stateDir), value.toString)
 
   private def fenceOwnerPath(stateDir: String) = s"$stateDir/agg_fence_owner"
 
@@ -170,27 +128,6 @@ object IncrementalAgg {
   private[graft] def appendGroupOf(bucket: Long): Long =
     ((bucket % APPEND_PHYS_PARTS) + APPEND_PHYS_PARTS) % APPEND_PHYS_PARTS
 
-  // ---- churn-priced (run) store physical layout -----------------------
-  // The same disease and cure for the [[run]] store: one directory per
-  // logical `__bucket` makes every dirty-bucket surgery pay a fixed
-  // per-directory commit price (delete + writer open/close + footer +
-  // commit rename, ~14 ms/dir locally) and every store READ pay a
-  // per-directory listing/footer price — costs that scale with the
-  // BUCKET COUNT, not the data. Physical directories are bucket GROUPS
-  // (`__bgroup = __bucket mod groups`) with `__bucket` a SORTED data
-  // column, so the dirty-input pruning (which filters the INPUT table by
-  // bucket, not the store) and the digest granularity are untouched; a
-  // surgery rewrites the dirty buckets' GROUPS (recomputed dirty rows +
-  // carried clean rows of the same groups, staged then swapped by
-  // renames). The group count grows with nBuckets — ~16 buckets per
-  // group, floor 16 — so the clean-row copy a surgery pays is bounded at
-  // ~16x the dirty buckets' store rows at EVERY scale, while the
-  // directory count drops 16x (a 4096-bucket production state keeps 256
-  // physical partitions; a 256-bucket state keeps 16).
-  private[graft] def runGroupCount(nBuckets: Int): Int =
-    math.min(nBuckets, math.max(16, nBuckets / 16))
-  private[graft] def runGroupOf(bucket: Long, groups: Int): Long =
-    ((bucket % groups) + groups) % groups
   private def layoutPath(stateDir: String) = s"$stateDir/agg_layout"
   private val APPEND_LAYOUT_VERSION = "2"
 
@@ -202,38 +139,23 @@ object IncrementalAgg {
     * re-runs the migration, which is idempotent (recomputing `__bgroup`
     * of an already-grouped store is a no-op rewrite). */
   private def ensureAppendLayout(spark: SparkSession, stateDir: String,
-      lease: IncrementalValidation.Lease): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (readMarker(fs, layoutPath(stateDir)).contains(APPEND_LAYOUT_VERSION))
+      lease: StateStore.Lease): Unit = {
+    val fs = StateStore.fsOf(spark, stateDir)
+    if (StateStore.readMarker(fs, layoutPath(stateDir))
+        .contains(APPEND_LAYOUT_VERSION))
       return
-    if (!storeHasData(fs, storePath(stateDir))) {
-      writeMarker(fs, layoutPath(stateDir), APPEND_LAYOUT_VERSION)
-      return
-    }
-    val tmp = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__staging")
-    val old = new org.apache.hadoop.fs.Path(p.getParent, p.getName + "__old")
-    if (fs.exists(tmp)) fs.delete(tmp, true)
-    if (fs.exists(old)) fs.delete(old, true)
-    // the migration is a store mutation like any other: re-verify the
-    // caller's lease before staging and again immediately before the
-    // commit-point renames — a broken lease must never swap over a
-    // successor writer's store
-    lease.check()
-    val store = spark.read.parquet(storePath(stateDir))
-    store
-      .withColumn("__bucket", col("__bucket").cast("long"))
-      .withColumn("__bgroup", appendGroup(col("__bucket")))
-      .repartition(col("__batch"), col("__bgroup"))
-      .sortWithinPartitions("__batch", "__bgroup", "__bucket")
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("__batch", "__bgroup")
-      .parquet(tmp.toString)
-    lease.check()
-    mustRename(fs, p, old)
-    mustRename(fs, tmp, p)
-    fs.delete(old, true)
-    writeMarker(fs, layoutPath(stateDir), APPEND_LAYOUT_VERSION)
+    if (StateStore.storeHasData(fs, storePath(stateDir)))
+      StateStore.swap(fs, storePath(stateDir), lease, ()) { tmp =>
+        spark.read.parquet(storePath(stateDir))
+          .withColumn("__bucket", col("__bucket").cast("long"))
+          .withColumn("__bgroup", appendGroup(col("__bucket")))
+          .repartition(col("__batch"), col("__bgroup"))
+          .sortWithinPartitions("__batch", "__bgroup", "__bucket")
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("__batch", "__bgroup")
+          .parquet(tmp)
+      }
+    StateStore.writeMarker(fs, layoutPath(stateDir), APPEND_LAYOUT_VERSION)
   }
 
   /** The streaming query that feeds this store, when one is co-located:
@@ -245,32 +167,9 @@ object IncrementalAgg {
     * any API plumbing; direct batch callers have none. */
   private[ops] def streamIdentity(fs: org.apache.hadoop.fs.FileSystem,
       stateDir: String): Option[String] =
-    readMarker(fs, s"$stateDir/checkpoint/metadata").flatMap { s =>
+    StateStore.readMarker(fs, s"$stateDir/checkpoint/metadata").flatMap { s =>
       """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
     }
-
-  /** Does the store hold at least one data file? An empty-table
-    * maintenance pass writes only markers (_SUCCESS), which parquet
-    * cannot infer a schema from — that case falls back to an empty
-    * frame; any OTHER read failure (corrupt footer, transient FS
-    * error) must PROPAGATE, not silently answer empty. */
-  private[graft] def storeHasData(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) found = true
-      }
-      found
-    }
-  }
-
-  /** Test seam — fired after the read-only prune, before the first
-    * mutation (the [[IncrementalValidation.beforeMutationHook]] twin). */
-  private[graft] var beforeMutationHook: () => Unit = () => ()
 
   /** Per-bucket single-table digests: (bucket, n, ha, hb). Map-side
     * combinable end to end; the two row hashes are independently salted
@@ -313,37 +212,6 @@ object IncrementalAgg {
       .select(col("bucket") +: col("n") +: totals: _*)
   }
 
-  /** State-identity meta as a MARKER FILE (version, bucket count, agg
-    * key), not a parquet table: checking it is a driver-side read, never
-    * a Spark job — every maintenance run pays this check, and at 100 TB
-    * as at sf0.001 it is three fields. A legacy (v1) parquet meta
-    * DIRECTORY fails the marker read and reads as no-state — the rebuild
-    * direction. aggKey may contain any character but a newline. */
-  private def metaMatches(spark: SparkSession, stateDir: String,
-      nBuckets: Int, aggKey: String): Boolean =
-    try {
-      val p = new org.apache.hadoop.fs.Path(metaPath(stateDir))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.exists(p) && !fs.getFileStatus(p).isDirectory &&
-        readMarker(fs, metaPath(stateDir)).exists { s =>
-          s.split("\n", 3) match {
-            case Array(v, n, k) =>
-              v == STATE_VERSION.toString && n == nBuckets.toString &&
-                k == aggKey
-            case _ => false
-          }
-        }
-    } catch { case scala.util.control.NonFatal(_) => false }
-
-  private def writeMeta(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String, nBuckets: Int, aggKey: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(metaPath(stateDir))
-    // a legacy parquet meta is a non-empty directory: clear it first
-    // (writeMarker's own delete is non-recursive)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
-    writeMarker(fs, metaPath(stateDir), s"$STATE_VERSION\n$nBuckets\n$aggKey")
-  }
-
   /** Maintain the partial store for `table` and return (a read of the
     * current store with `__bucket` dropped, the prune record). Run the
     * final merge (e.g. `groupBy(keys).agg(sum...)`) on the returned
@@ -377,57 +245,13 @@ object IncrementalAgg {
     require(nBuckets > 0, "nBuckets must be positive")
     require(dependsOn.nonEmpty, "dependsOn must name the columns read")
     val spark = table.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val fs = StateStore.fsOf(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
-      // digests are <= nBuckets+1 rows BY CONTRACT (metadata-sized at
-      // every scale) — collect them and compare on the driver: one job
-      // for the scan instead of localCheckpoint + count + a join job,
-      // and the rewritten witness is one file instead of one per
-      // shuffle partition
-      val cdDf = digests(table, idCol, dependsOn, nBuckets, bucketCol)
-      val cdSchema = cdDf.schema
-      val cdRows = cdDf.collect()
-      val total = cdRows.length.toLong
-      val haveState = metaMatches(spark, stateDir, nBuckets, aggKey)
-      // explicit schema: the witness is written from cdSchema, and
-      // skipping parquet schema inference skips its per-read Spark job
-      val old: Option[Array[org.apache.spark.sql.Row]] =
-        if (haveState)
-          try Some(spark.read.schema(cdSchema)
-            .parquet(digestsPath(stateDir)).collect())
-          catch { case scala.util.control.NonFatal(_) => None }
-        else None
-      def triples(rows: Array[org.apache.spark.sql.Row])
-          : Map[Long, (Long, java.math.BigDecimal, java.math.BigDecimal)] =
-        rows.map { r =>
-          r.getLong(r.fieldIndex("bucket")) ->
-            ((r.getLong(r.fieldIndex("n")),
-              r.getDecimal(r.fieldIndex("ha")),
-              r.getDecimal(r.fieldIndex("hb"))))
-        }.toMap
-      def decEq(a: java.math.BigDecimal, b: java.math.BigDecimal): Boolean =
-        (a eq b) || (a != null && b != null && a.compareTo(b) == 0)
-      // (bucket, present-in-current): a bucket can go dirty by VANISHING
-      // (every row deleted) — its store partition must still be dropped
-      val dirtyRows: Option[Seq[(Long, Boolean)]] = old.map { st =>
-        val cur = triples(cdRows)
-        val prev = triples(st)
-        (cur.keySet ++ prev.keySet).toSeq.flatMap { b =>
-          (cur.get(b), prev.get(b)) match {
-            case (Some(c), Some(p))
-                if c._1 == p._1 && decEq(c._2, p._2) && decEq(c._3, p._3) =>
-              None
-            case (c, _) => Some(b -> c.isDefined)
-          }
-        }
-      }
-      val dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
-      // the witness rewrite source: the collected digest rows as one
-      // local partition (one output file)
-      def cdLocal: DataFrame = spark.createDataFrame(
-        spark.sparkContext.parallelize(cdRows.toSeq, 1), cdSchema)
+      val w = StateStore.Witness(digestsPath(stateDir), metaPath(stateDir),
+        STATE_VERSION, nBuckets, aggKey)
+      val cmp = w.compare(digests(table, idCol, dependsOn, nBuckets, bucketCol),
+        Seq("n", "ha", "hb"))
 
       def bucketOf(df: DataFrame): Column =
         bucketCol.map(c => col(c).cast("long")).getOrElse(
@@ -443,99 +267,20 @@ object IncrementalAgg {
         case None => table.filter(bucketOf(table).isin(d: _*))
       }
 
-      val tooDirty = dirty.exists(d =>
-        total > 0 && d.size.toDouble / total > dirtyFractionLimit)
-      val rebuild = dirty.isEmpty || tooDirty
-      beforeMutationHook()
-      lease.check()
-
-      val groups = runGroupCount(nBuckets)
-      // grouped physical layout (see runGroupCount): repartition on the
-      // GROUP so each group directory holds one file per write; within a
-      // file rows sort by (__bucket, storeSortCols) so per-bucket reads
-      // and any storeSortCols filter prune on parquet row-group min/max
-      def laidOut(df: DataFrame): DataFrame =
-        df.withColumn("__bgroup", pmod(col("__bucket"), lit(groups.toLong)))
-          .repartition(col("__bgroup"))
-          .sortWithinPartitions((col("__bgroup") +: col("__bucket") +:
-            storeSortCols.map(col)): _*)
-
-      if (rebuild) {
-        // witness first: torn store must never read clean
-        if (fs.exists(new org.apache.hadoop.fs.Path(digestsPath(stateDir))))
-          fs.delete(new org.apache.hadoop.fs.Path(digestsPath(stateDir)), true)
-        laidOut(partial(withBucketCol(table)))
-          .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
-          .parquet(storePath(stateDir))
-        IncrementalValidation.swapWrite(spark, cdLocal, digestsPath(stateDir))
-        if (!haveState) writeMeta(fs, stateDir, nBuckets, aggKey)
-      } else if (dirty.get.nonEmpty) {
-        val d = dirty.get
-        val dirtyGroups = d.map(b => runGroupOf(b, groups)).distinct
-        fs.delete(new org.apache.hadoop.fs.Path(digestsPath(stateDir)), true)
-        // the dirty buckets' GROUPS rewrite: recomputed dirty partials
-        // plus the same groups' carried clean rows (group-dir-pruned
-        // read), staged fully and swapped in by renames — a crash at any
-        // point leaves no witness, so the next run rebuilds wholesale
-        val recomputed = partial(withBucketCol(dirtySlice(d)))
-        // explicit schema (store files carry the partial's columns, the
-        // directory level is __bgroup): no inference job, and the long-
-        // typed partition column makes the group IN-list prune without
-        // a cast
-        val storeSchema = org.apache.spark.sql.types.StructType(
-          recomputed.schema.fields :+
-            org.apache.spark.sql.types.StructField("__bgroup",
-              org.apache.spark.sql.types.LongType))
-        val carried =
-          if (storeHasData(fs, storePath(stateDir)))
-            spark.read.schema(storeSchema).parquet(storePath(stateDir))
-              .filter(col("__bgroup").isin(dirtyGroups: _*) &&
-                !col("__bucket").isin(d: _*))
-              .drop("__bgroup")
-              .select(recomputed.columns.map(col): _*)
-          else recomputed.limit(0)
-        val staging = new org.apache.hadoop.fs.Path(
-          storePath(stateDir) + "__swap")
-        if (fs.exists(staging)) fs.delete(staging, true)
-        laidOut(recomputed.unionByName(carried))
-          .write.mode(SaveMode.Overwrite).partitionBy("__bgroup")
-          .parquet(staging.toString)
-        // the staging write is the long step: re-verify the lease right
-        // before the commit-point renames, never swap under a broken one
-        IncrementalValidation.commitPointHook("agg.renames")
-        lease.check()
-        fs.mkdirs(new org.apache.hadoop.fs.Path(storePath(stateDir)))
-        for (g <- dirtyGroups) {
-          val dst = new org.apache.hadoop.fs.Path(
-            s"${storePath(stateDir)}/__bgroup=$g")
-          if (fs.exists(dst)) fs.delete(dst, true)
-          val src = new org.apache.hadoop.fs.Path(
-            s"$staging/__bgroup=$g")
-          // a group with no staged dir drained entirely (every bucket in
-          // it vanished): the delete above IS the whole swap
-          if (fs.exists(src)) mustRename(fs, src, dst)
-        }
-        fs.delete(staging, true)
-        IncrementalValidation.swapWrite(spark, cdLocal, digestsPath(stateDir))
-      } // zero dirty: store and witness both stand untouched
+      val rebuild = w.maintain(cmp, storePath(stateDir), "__bucket",
+          storeSortCols, dirtyFractionLimit, lease)(
+        partial(withBucketCol(table)),
+        d => partial(withBucketCol(dirtySlice(d))))
 
       // empty-table passes leave a data-less store dir (schema
       // uninferable) — only THAT case answers empty; real read
       // failures propagate
       val current =
-        if (storeHasData(fs, storePath(stateDir)))
+        if (StateStore.storeHasData(fs, storePath(stateDir)))
           spark.read.parquet(storePath(stateDir))
             .drop("__bucket", "__bgroup")
         else partial(withBucketCol(table.limit(0))).drop("__bucket")
-      val dirtyInCurrent =
-        dirtyRows.map(_.count(_._2).toLong).getOrElse(0L)
-      val report = IncrementalValidation.IncrementalReport(
-        rebuilt = rebuild,
-        totalBuckets = total,
-        dirtyBuckets =
-          if (rebuild) total else dirty.map(_.size.toLong).getOrElse(0L),
-        cleanBuckets = if (rebuild) 0L else total - dirtyInCurrent)
-      (current, report)
+      (current, cmp.record(rebuild))
     } finally lease.release()
   }
 
@@ -549,35 +294,6 @@ object IncrementalAgg {
         explode(split(lower(col(textCol)), "[^a-z0-9]+")).as("term"))
       .filter(col("term") =!= "")
       .groupBy("__bucket", "term").agg(count(lit(1)).as("n"))
-
-  /** Crash recovery for the append-only store. [[compactVocabStore]]
-    * swaps by RENAMES ONLY (stage → rename store aside → rename staged
-    * copy in → delete the old copy): the store path is never
-    * recursively deleted while it is the only copy, so every crash
-    * window leaves at least one COMPLETE copy under a known name — and
-    * unlike the digest-witnessed batch state, an append store cannot
-    * rebuild itself (the stream's past batches are gone from the
-    * source). Recovery, on every entry point, when the store path is
-    * missing: prefer the staged compacted copy (complete by the swap
-    * order — the aside-rename only happens after staging finishes),
-    * else restore the aside copy. Leftover siblings are only discarded
-    * when the store exists. */
-  private def recoverStore(spark: SparkSession, stateDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "__staging")
-    val old = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "__old")
-    if (!fs.exists(p)) {
-      if (fs.exists(tmp) && fs.exists(old)) {
-        // crash between the two swap renames: tmp is the complete
-        // compacted copy, old the complete pre-compaction copy
-        mustRename(fs, tmp, p); fs.delete(old, true)
-      } else if (fs.exists(tmp)) mustRename(fs, tmp, p)
-      else if (fs.exists(old)) mustRename(fs, old, p)
-    }
-  }
 
   /** Append-only fold for streaming (foreachBatch) callers: add one
     * micro-batch's per-bucket vocabulary partials to the store WITHOUT
@@ -630,13 +346,13 @@ object IncrementalAgg {
     // checkpoint has already recorded the batch — it never replays).
     // Per-batch acquire/release: micro-batches are sequential within a
     // query, and a concurrent compact now fails fast instead of racing.
-    val lease = IncrementalValidation.acquireLease(batch.sparkSession,
-      stateDir)
+    val lease = StateStore.acquireLease(batch.sparkSession, stateDir)
     try {
-      recoverStore(batch.sparkSession, stateDir)
+      val wmFs = StateStore.fsOf(batch.sparkSession, stateDir)
+      // an append store cannot rebuild itself (the stream's past batches
+      // are gone from the source): heal a stranded compaction first
+      StateStore.heal(wmFs, storePath(stateDir))
       ensureAppendLayout(batch.sparkSession, stateDir, lease)
-      val wmFs = new org.apache.hadoop.fs.Path(stateDir)
-        .getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
       // fence OWNERSHIP before the fence: batch ids are only comparable
       // within ONE streaming query's lifetime. If the checkpoint was
       // reset while the store was kept, ids restart at 0 — the fence
@@ -648,28 +364,25 @@ object IncrementalAgg {
       val streamId = streamIdentity(wmFs, stateDir)
       val wm = readWatermark(wmFs, stateDir)
       streamId.foreach { sid =>
-        readMarker(wmFs, fenceOwnerPath(stateDir)) match {
-          case Some(owner) if owner != sid =>
-            throw new IllegalStateException(
-              s"append store at $stateDir was built by streaming query " +
-                s"$owner but this batch comes from query $sid — the " +
-                "checkpoint was reset (or a different stream points " +
-                "here) while the store was kept; batch ids are not " +
-                "comparable across query lifetimes, so appending would " +
-                "silently lose or double-count data. To keep the store " +
-                "and feed it from a new stream, run " +
-                "IncrementalAgg.rebaseAppendStore first; to start over, " +
-                "delete the state directory.")
-          case None =>
-            if (wm >= 0)
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"adopting streaming query $sid as fence owner of the " +
-                  s"existing append store at $stateDir (watermark $wm " +
-                  "predates ownership tracking — earlier batches cannot " +
-                  "be verified against this query's id space)")
-            writeMarker(wmFs, fenceOwnerPath(stateDir), sid)
-          case _ => ()
+        val adopted = StateStore.pinMarker(wmFs, fenceOwnerPath(stateDir),
+            sid) { owner =>
+          new IllegalStateException(
+            s"append store at $stateDir was built by streaming query " +
+              s"$owner but this batch comes from query $sid — the " +
+              "checkpoint was reset (or a different stream points " +
+              "here) while the store was kept; batch ids are not " +
+              "comparable across query lifetimes, so appending would " +
+              "silently lose or double-count data. To keep the store " +
+              "and feed it from a new stream, run " +
+              "IncrementalAgg.rebaseAppendStore first; to start over, " +
+              "delete the state directory.")
         }
+        if (adopted && wm >= 0)
+          org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            s"adopted streaming query $sid as fence owner of the " +
+              s"existing append store at $stateDir (watermark $wm " +
+              "predates ownership tracking — earlier batches cannot " +
+              "be verified against this query's id space)")
       }
       // replay fence: a batch at or below the compaction watermark has
       // already been FOLDED into the base partition — its own
@@ -701,7 +414,7 @@ object IncrementalAgg {
         .withColumn("__bgroup", appendGroup(col("__bucket")))
         .repartition(col("__bgroup"))
         .sortWithinPartitions("__bgroup", "__bucket")
-      lease.check()
+      lease.check("agg.append")
       out.write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__batch", "__bgroup")
@@ -723,10 +436,9 @@ object IncrementalAgg {
     * data-less store cannot infer one). */
   def fromAppendStore(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], valCol: String, empty: => DataFrame): DataFrame = {
-    recoverStore(spark, stateDir)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (storeHasData(fs, storePath(stateDir)))
+    val fs = StateStore.fsOf(spark, stateDir)
+    StateStore.heal(fs, storePath(stateDir))
+    if (StateStore.storeHasData(fs, storePath(stateDir)))
       spark.read.parquet(storePath(stateDir))
         .groupBy(keyCols.map(col): _*).agg(sum(col(valCol)).as(valCol))
     else empty
@@ -734,9 +446,10 @@ object IncrementalAgg {
 
   /** Generic compaction for an [[appendFold]] store: fold back to ONE
     * row per (bucket, keyCols), under the reserved base batch -1 —
-    * call every K batches to bound read amplification. Lease, replay
-    * watermark and renames-only swap are [[compactVocabStore]]'s
-    * verbatim (that surface now delegates here). */
+    * call every K batches to bound read amplification. Same lease,
+    * replay watermark and renames-only swap
+    * ([[graft.state.StateStore.swap]]) as [[compactVocabStore]], which
+    * delegates here. */
   def compactAppendStore(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], valCol: String): Unit =
     compactWith(spark, stateDir, keyCols, valCol)
@@ -761,11 +474,10 @@ object IncrementalAgg {
     require(keyCols.nonEmpty,
       "rebase needs the store's key columns — an empty key list would " +
         "fold the keys away and destroy the store")
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (storeHasData(fs, storePath(stateDir)))
+    val fs = StateStore.fsOf(spark, stateDir)
+    if (StateStore.storeHasData(fs, storePath(stateDir)))
       compactWith(spark, stateDir, keyCols, valCol)
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
       // ORDER MATTERS across crash windows: the stale checkpoint dies
       // FIRST — once the fence is reset, a resumed OLD stream's replay
@@ -822,26 +534,14 @@ object IncrementalAgg {
 
   private def compactWith(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], valCol: String): Unit = {
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
-      recoverStore(spark, stateDir) // a prior crash's stranded swap
+      val fs = StateStore.fsOf(spark, stateDir)
+      StateStore.heal(fs, storePath(stateDir)) // a prior crash's stranded swap
       ensureAppendLayout(spark, stateDir, lease)
-      val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, p.getName + "__staging")
-      val old = new org.apache.hadoop.fs.Path(
-        p.getParent, p.getName + "__old")
-      // store exists here (recovered or live): siblings are garbage
-      // (a partial staging, or an already-swapped-out old copy)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      if (fs.exists(old)) fs.delete(old, true)
-      // stage FULLY (partition layout preserved — later appends land in
-      // __batch=K dirs next to the compacted __batch=-1), then swap by
-      // RENAMES ONLY: the store is never recursively deleted while it
-      // is the only copy, so no crash point can truncate the history
-      // (a mid-delete crash under the delete+rename discipline would
-      // leave a TORN store that later entries would trust)
+      // the fold keeps the partition layout (later appends land in
+      // __batch=K dirs next to the compacted __batch=-1) and swaps by
+      // renames only, so no crash point can truncate the history
       val store = spark.read.parquet(storePath(stateDir))
       // the replay fence: the highest batch id this fold consumes —
       // monotone across compactions (an already-compacted store's max
@@ -852,33 +552,31 @@ object IncrementalAgg {
         case r if r.isNullAt(0) => -1L
         case r => r.getLong(0)
       }
-      store
-        .groupBy(("__bucket" +: keyCols).map(col): _*)
-        .agg(sum(col(valCol)).as(valCol))
-        // sum() widens (int -> long): cast back to the store's column
-        // type, or post-compaction batch appends would mix parquet
-        // physical types across files and break reads. Lossless for
-        // count stores (already long) and for fact stores (one row per
-        // key group — the "sum" IS the value)
-        .withColumn(valCol, col(valCol).cast(store.schema(valCol).dataType))
-        .withColumn("__batch", lit(-1L))
-        .withColumn("__bgroup", appendGroup(col("__bucket")))
-        .repartition(col("__bgroup"))
-        .sortWithinPartitions("__bgroup", "__bucket")
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("__batch", "__bgroup")
-        .parquet(tmp.toString)
-      lease.check()
-      // fence BEFORE the swap: if the crash lands between fence and
+      // fence BEFORE the renames: if the crash lands between fence and
       // swap, fenced batches' partitions still exist (over-fencing is
       // safe — their counts remain present either way); fencing after
       // the swap would leave a window where a replay re-appends
       // already-folded counts
-      if (maxBatch > readWatermark(fs, stateDir))
-        writeWatermark(fs, stateDir, maxBatch)
-      mustRename(fs, p, old)
-      mustRename(fs, tmp, p)
-      fs.delete(old, true)
+      StateStore.swap(fs, storePath(stateDir), lease,
+          fence = if (maxBatch > readWatermark(fs, stateDir))
+            writeWatermark(fs, stateDir, maxBatch)) { tmp =>
+        store
+          .groupBy(("__bucket" +: keyCols).map(col): _*)
+          .agg(sum(col(valCol)).as(valCol))
+          // sum() widens (int -> long): cast back to the store's column
+          // type, or post-compaction batch appends would mix parquet
+          // physical types across files and break reads. Lossless for
+          // count stores (already long) and for fact stores (one row per
+          // key group — the "sum" IS the value)
+          .withColumn(valCol, col(valCol).cast(store.schema(valCol).dataType))
+          .withColumn("__batch", lit(-1L))
+          .withColumn("__bgroup", appendGroup(col("__bucket")))
+          .repartition(col("__bgroup"))
+          .sortWithinPartitions("__bgroup", "__bucket")
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("__batch", "__bgroup")
+          .parquet(tmp)
+      }
     } finally lease.release()
   }
 
@@ -894,10 +592,9 @@ object IncrementalAgg {
     * Throws when no store exists — a missing state must never silently
     * answer empty. */
   def readStore(spark: SparkSession, stateDir: String): DataFrame = {
-    recoverStore(spark, stateDir)
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(storeHasData(fs, storePath(stateDir)),
+    val fs = StateStore.fsOf(spark, stateDir)
+    StateStore.heal(fs, storePath(stateDir))
+    require(StateStore.storeHasData(fs, storePath(stateDir)),
       s"no incremental store at $stateDir — run the maintenance " +
         "surface first")
     spark.read.parquet(storePath(stateDir))

@@ -5,7 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.IncrementalValidation
+import graft.state.StateStore
 
 /** CONTINUOUS LOADER FEED — incremental fixed-length sequence
   * construction over an arriving document stream: the streaming twin of
@@ -120,28 +120,23 @@ object SequenceFeed {
     require(batchId >= 0, "batch ids are non-negative")
     val spark = enc.sparkSession
     import spark.implicits._
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
-      recoverFeedStore(spark, stateDir)
-      val fs = new org.apache.hadoop.fs.Path(stateDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = StateStore.fsOf(spark, stateDir)
+      StateStore.heal(fs, storePath(stateDir))
       // fence ownership (the IncrementalAgg discipline): a reset
       // checkpoint restarts batch ids — over an order-dependent feed
       // that is unrecoverable in place, so it must throw, never skip
       IncrementalAgg.streamIdentity(fs, stateDir).foreach { sid =>
-        IncrementalAgg.readMarker(fs, ownerPath(stateDir)) match {
-          case Some(owner) if owner != sid =>
-            throw new IllegalStateException(
-              s"sequence feed at $stateDir was built by streaming query " +
-                s"$owner but this batch comes from query $sid — the " +
-                "checkpoint was reset while the feed was kept. Batch ids " +
-                "are not comparable across query lifetimes and the cut " +
-                "is arrival-order-dependent, so the feed cannot be " +
-                "rebased; start a fresh stateDir (the exported store " +
-                "remains readable).")
-          case None =>
-            IncrementalAgg.writeMarker(fs, ownerPath(stateDir), sid)
-          case _ => ()
+        StateStore.pinMarker(fs, ownerPath(stateDir), sid) { owner =>
+          new IllegalStateException(
+            s"sequence feed at $stateDir was built by streaming query " +
+              s"$owner but this batch comes from query $sid — the " +
+              "checkpoint was reset while the feed was kept. Batch ids " +
+              "are not comparable across query lifetimes and the cut " +
+              "is arrival-order-dependent, so the feed cannot be " +
+              "rebased; start a fresh stateDir (the exported store " +
+              "remains readable).")
         }
       }
       // sequence-length guard: the store's rows are seqLen-token facts
@@ -149,17 +144,12 @@ object SequenceFeed {
       // seqLen mid-feed would silently mix row lengths in one store and
       // mis-cut every shard at the carry boundary. The first append
       // pins it; a mismatch is a config error, never a skip.
-      IncrementalAgg.readMarker(fs, seqLenPath(stateDir)) match {
-        case Some(v) if v.toInt != seqLen =>
-          throw new IllegalArgumentException(
-            s"sequence feed at $stateDir was built with seqLen $v but " +
-              s"this batch declares $seqLen — a feed cuts ONE length " +
-              "for its whole lifetime. Fix the caller's seqLen or " +
-              "start a fresh stateDir.")
-        case None =>
-          IncrementalAgg.writeMarker(fs, seqLenPath(stateDir),
-            seqLen.toString)
-        case _ => ()
+      StateStore.pinMarker(fs, seqLenPath(stateDir), seqLen.toString) { v =>
+        new IllegalArgumentException(
+          s"sequence feed at $stateDir was built with seqLen $v but " +
+            s"this batch declares $seqLen — a feed cuts ONE length " +
+            "for its whole lifetime. Fix the caller's seqLen or " +
+            "start a fresh stateDir.")
       }
       val last = lastBatch(spark, stateDir)
       require(batchId <= last + 1,
@@ -172,9 +162,7 @@ object SequenceFeed {
       // present: the fold only ever covers batches whose carry landed
       // (see [[compactFeedStore]]), so everything fenced completed its
       // full append. Skip.
-      val wm = IncrementalAgg.readMarker(fs, watermarkPath(stateDir))
-        .map(_.toLong).getOrElse(-1L)
-      if (batchId <= wm) return None
+      if (batchId <= readWatermark(fs, stateDir)) return None
       // replay or first delivery: either way the cut derives from the
       // carry BEFORE this batch, which is always retained
       val prev: Map[Long, Carry] =
@@ -260,7 +248,7 @@ object SequenceFeed {
         }
         .persist()
       try {
-        lease.check()
+        lease.check("seqstore.append")
         cut.filter(!col("is_carry")).drop("is_carry", "docs")
           .withColumn("__batch", lit(batchId))
           .withColumn("__bucket", col("shard"))
@@ -290,40 +278,19 @@ object SequenceFeed {
     } finally lease.release()
   }
 
-  /** Heal a stranded compaction swap — the [[IncrementalAgg]]
-    * recoverStore discipline: a crash can leave the store absent with
-    * `__old`/`__staging` siblings. A staging NEXT TO an absent store is
-    * complete by construction (it is fully written before the first
-    * swap rename), so it promotes — its fence was written first, which
-    * only over-fences; otherwise the old copy restores. With a live
-    * store, siblings are garbage. Idempotent; every entry point calls
-    * it. */
-  private def recoverFeedStore(spark: SparkSession, stateDir: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "__staging")
-    val old = new org.apache.hadoop.fs.Path(
-      p.getParent, p.getName + "__old")
-    if (fs.exists(p)) {
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-    } else if (fs.exists(tmp) && fs.exists(old)) {
-      IncrementalAgg.mustRename(fs, tmp, p)
-      fs.delete(old, true)
-    } else if (fs.exists(old)) {
-      IncrementalAgg.mustRename(fs, old, p)
-    }
-  }
+  private def readWatermark(fs: org.apache.hadoop.fs.FileSystem,
+      stateDir: String): Long =
+    StateStore.readMarker(fs, watermarkPath(stateDir)).map(_.toLong)
+      .getOrElse(-1L)
 
   /** Fold batch partitions into the base (`__batch=-1`) — the
     * read-amplification bound for a LONG-RUNNING feed (a month of
     * minute-batches is ~43k partitions; readers merge across all of
     * them). Rows are immutable unique facts, so the fold is a plain
-    * rewrite (no aggregation); the swap is RENAMES-ONLY with the
-    * replay watermark written BEFORE it (over-fencing is safe — a
-    * fenced replay's rows are in the base either way), the
-    * [[IncrementalAgg]] compaction discipline verbatim.
+    * rewrite (no aggregation), swapped in by
+    * [[graft.state.StateStore.swap]] with the replay watermark written
+    * BEFORE the renames (over-fencing is safe — a fenced replay's rows
+    * are in the base either way).
     *
     * The fold covers ONLY batches whose carry landed: a batch whose
     * store write committed but whose carry write crashed heals by
@@ -335,38 +302,27 @@ object SequenceFeed {
     * without recomputing), and without pruning the per-append
     * `lastBatch` listing would grow with feed age forever. */
   def compactFeedStore(spark: SparkSession, stateDir: String): Unit = {
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
-      recoverFeedStore(spark, stateDir) // a prior crash's stranded swap
-      val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) return
-      val tmp = new org.apache.hadoop.fs.Path(
-        p.getParent, p.getName + "__staging")
-      val old = new org.apache.hadoop.fs.Path(
-        p.getParent, p.getName + "__old")
+      val fs = StateStore.fsOf(spark, stateDir)
+      StateStore.heal(fs, storePath(stateDir)) // a prior crash's stranded swap
+      if (!fs.exists(new org.apache.hadoop.fs.Path(storePath(stateDir))))
+        return
       val lastCarried = lastBatch(spark, stateDir)
       if (lastCarried < 0) return
-      val store = spark.read.parquet(storePath(stateDir))
-      store
-        .withColumn("__batch",
-          when(col("__batch").cast("long") <= lastCarried, lit(-1L))
-            .otherwise(col("__batch").cast("long")))
-        .repartition(col("__bucket"))
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("__batch", "__bucket")
-        .parquet(tmp.toString)
-      lease.check()
-      val prevWm = IncrementalAgg.readMarker(fs, watermarkPath(stateDir))
-        .map(_.toLong).getOrElse(-1L)
-      if (lastCarried > prevWm)
-        IncrementalAgg.writeMarker(fs, watermarkPath(stateDir),
-          lastCarried.toString)
-      if (!fs.rename(p, old) || !fs.rename(tmp, p))
-        throw new java.io.IOException(
-          s"feed store swap rename failed at $stateDir — store left in " +
-            "its recoverable pre-swap layout")
-      fs.delete(old, true)
+      StateStore.swap(fs, storePath(stateDir), lease,
+          fence = if (lastCarried > readWatermark(fs, stateDir))
+            StateStore.writeMarker(fs, watermarkPath(stateDir),
+              lastCarried.toString)) { tmp =>
+        spark.read.parquet(storePath(stateDir))
+          .withColumn("__batch",
+            when(col("__batch").cast("long") <= lastCarried, lit(-1L))
+              .otherwise(col("__batch").cast("long")))
+          .repartition(col("__bucket"))
+          .write.mode(SaveMode.Overwrite)
+          .partitionBy("__batch", "__bucket")
+          .parquet(tmp)
+      }
       // prune dead carries: a fenced batch never recomputes, so only
       // carry(lastCarried) (the next batch's seed / replay base) and
       // above can ever be read again
@@ -399,19 +355,9 @@ object SequenceFeed {
     * scan; empty frame when nothing has been cut. */
   def sequencesFromStore(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    recoverFeedStore(spark, stateDir)
-    val p = new org.apache.hadoop.fs.Path(storePath(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasData = fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        if (f.isFile && f.getPath.getName.endsWith(".parquet")) found = true
-      }
-      found
-    }
-    if (hasData)
+    val fs = StateStore.fsOf(spark, stateDir)
+    StateStore.heal(fs, storePath(stateDir))
+    if (StateStore.storeHasData(fs, storePath(stateDir)))
       spark.read.parquet(storePath(stateDir)).drop("__batch", "__bucket")
     else
       Seq.empty[FeedSeq].toDF()
@@ -485,7 +431,7 @@ object SequenceFeed {
     *
     * Returns the snapshot id. Requires at least one delivered batch. */
   def publishSnapshot(spark: SparkSession, stateDir: String): Long = {
-    val lease = IncrementalValidation.acquireLease(spark, stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
       val last = lastBatch(spark, stateDir)
       require(last >= 0,
@@ -500,10 +446,10 @@ object SequenceFeed {
         .select(col("shard"), col("next_seq").as("hwm"))
         .coalesce(1)
         .write.parquet(tmp.toString)
-      lease.check()
+      lease.check("snapshots.publish")
       // readers probe for the final directory: the rename is the commit,
       // so a crashed publish leaves only ignorable staging garbage
-      IncrementalAgg.mustRename(fs, tmp, fin)
+      StateStore.mustRename(fs, tmp, fin)
       last
     } finally lease.release()
   }
@@ -544,8 +490,7 @@ object SequenceFeed {
     * n_snapshots and latest_snapshot (-1 when none). */
   def describe(spark: SparkSession, stateDir: String): DataFrame = {
     import spark.implicits._
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, stateDir)
     val last = lastBatch(spark, stateDir)
     val (shards, total) =
       if (last < 0) (0L, 0L)
@@ -557,11 +502,10 @@ object SequenceFeed {
       }
     val snaps = listSnapshots(spark, stateDir)
     Seq((last,
-        IncrementalAgg.readMarker(fs, seqLenPath(stateDir))
+        StateStore.readMarker(fs, seqLenPath(stateDir))
           .map(_.toInt).getOrElse(-1),
-        IncrementalAgg.readMarker(fs, ownerPath(stateDir)).orNull,
-        IncrementalAgg.readMarker(fs, watermarkPath(stateDir))
-          .map(_.toLong).getOrElse(-1L),
+        StateStore.readMarker(fs, ownerPath(stateDir)).orNull,
+        readWatermark(fs, stateDir),
         shards, total, snaps.size.toLong,
         if (snaps.isEmpty) -1L else snaps.last))
       .toDF("last_batch", "seq_len", "owner", "compact_fence",

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{cosineSimilarity, dotProduct, intCosRankKeyFused, intCosineGteFused, intSqDistFused, l2Norm, q24Vec}
+import graft.state.StateStore
 
 /** Similarity search over an embedding column (`array<float>`).
   *
@@ -692,11 +693,10 @@ object Similarity {
     * marker together with the books ([[pqBooksWrite]]). */
   private def booksSigOf(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): String = {
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    IncrementalAgg.readMarker(fs, booksSigPath(stateDir)).getOrElse {
+    val fs = StateStore.fsOf(spark, stateDir)
+    StateStore.readMarker(fs, booksSigPath(stateDir)).getOrElse {
       val sig = booksSignature(spark.read.parquet(booksPath(stateDir)))
-      IncrementalAgg.writeMarker(fs, booksSigPath(stateDir), sig)
+      StateStore.writeMarker(fs, booksSigPath(stateDir), sig)
       sig
     }
   }
@@ -786,12 +786,10 @@ object Similarity {
       ksub: Int = 16,
       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = corpus.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(stateDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = StateStore.fsOf(spark, stateDir)
     val bp = new org.apache.hadoop.fs.Path(booksPath(stateDir))
     if (fs.exists(bp)) return
-    val lease = graft.core.IncrementalValidation.acquireLease(spark,
-      stateDir)
+    val lease = StateStore.acquireLease(spark, stateDir)
     try {
       if (!fs.exists(bp)) {
         val fit = pqFit(corpus, m, ksub, idCol, vecCol)
@@ -800,27 +798,25 @@ object Similarity {
           "cannot fit a PQ codebook on an empty corpus")
         val b = spark.createDataFrame(
           spark.sparkContext.parallelize(rows, 1), fit.schema)
-        lease.check()
+        lease.check("pq.books")
         // a leftover marker describes OTHER books: delete it before the
         // swap, so a crash before the new marker lands leaves none and
         // booksSigOf recomputes it from the books actually stored
         fs.delete(new org.apache.hadoop.fs.Path(booksSigPath(stateDir)),
           false)
-        graft.core.IncrementalValidation.swapWrite(spark, b,
-          booksPath(stateDir))
-        graft.core.IncrementalValidation.commitPointHook("pq.books_sig")
+        StateStore.swapWrite(b, booksPath(stateDir), lease)
+        lease.check("pq.books_sig")
         // signature marker rides with the books (see booksSigOf)
-        IncrementalAgg.writeMarker(fs, booksSigPath(stateDir),
-          booksSignature(b))
+        StateStore.writeMarker(fs, booksSigPath(stateDir), booksSignature(b))
         // record the seed quantization error NEXT to the books — the
         // fit-time baseline [[pqDrift]]'s re-fit signal compares churn
         // slices against. One extra corpus pass, paid exactly when the
         // fit itself is (the corpus-priced seed run)
         val subDim = rows.head
           .getAs[scala.collection.Seq[Long]]("qcsv").size
-        graft.core.IncrementalValidation.swapWrite(spark,
+        StateStore.swapWrite(
           quantErrorAgg(corpus, b, m, subDim, idCol, vecCol),
-          booksErrPath(stateDir))
+          booksErrPath(stateDir), lease)
       }
     } finally lease.release()
   }

@@ -1,0 +1,469 @@
+package graft.state
+
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+
+import graft.core.IncrementalValidation.IncrementalReport
+
+/** The stored-state primitives every incremental surface is built on:
+  * the single-writer lease, marker files, the state-identity meta, the
+  * renames-only swap and its heal, the grouped `__bgroup` layout with
+  * its group surgery, and the digest witness that guards a store: the
+  * driver-side compare and the maintenance cycle around it.
+  *
+  * Surfaces decide WHAT they store; this object decides how a store
+  * changes on disk, so the crash discipline is written once.
+  * INCREMENTAL.md's invariants 1-5 are its contract:
+  *  - every mutation runs under a [[Lease]] that is re-verified at each
+  *    named commit point ([[Lease.check]]);
+  *  - every rename's boolean result is checked ([[mustRename]]);
+  *  - a whole-store replacement is a renames-only [[swap]], so every
+  *    crash window leaves a complete copy under a known name, and
+  *    [[heal]] restores it without ever touching a live store.
+  */
+object StateStore {
+
+  /** The filesystem that holds `path`. */
+  private[graft] def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Test seam: fired with a commit point's name just before the lease
+    * is re-verified there ([[Lease.check]]) — lets a spec break the
+    * lease, interleave a second writer or crash exactly at that point. */
+  private[graft] var hook: String => Unit = _ => ()
+
+  private def readFile(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
+  // ---- lease ------------------------------------------------------------
+
+  /** Single-writer guard on a state directory. The swap discipline is
+    * crash-safe for ONE writer; two concurrent runs could interleave
+    * deletes and renames (or, on the report surface, partition deletes
+    * with appends) — so every mutating surface takes this lease at run
+    * start and re-verifies it at each commit point. The lease is an
+    * exclusively-created file whose body is (nonce, pid, epoch-millis):
+    * a second run fails fast on the create, and a run whose lease was
+    * broken mid-flight aborts BEFORE its next mutation instead of
+    * tearing a state another writer now owns.
+    *
+    * A crashed run leaves its lease behind by design (auto-expiry would
+    * steal the lease out from under a legitimately long run) — the error
+    * message carries the holder's pid/timestamp and the recovery action
+    * is [[breakLease]]. Exclusive-create atomicity is the filesystem's:
+    * HDFS and local FS give it outright; on S3-style stores front this
+    * with an external coordinator if two schedulers can race. */
+  private[graft] final class Lease private[StateStore] (fs: FileSystem,
+      path: Path, nonce: String) {
+    private def held: Boolean =
+      try readFile(fs, path).startsWith(nonce)
+      catch { case NonFatal(_) => false }
+
+    /** Commit point `point`: fire the test [[hook]], then abort unless
+      * the lease file still carries OUR nonce — called before every
+      * state mutation. */
+    def check(point: String): Unit = {
+      hook(point)
+      if (!held)
+        throw new IllegalStateException(
+          s"incremental-state lease at $path is no longer held by this " +
+            "run (broken or taken by another writer); aborting before " +
+            "any state mutation")
+    }
+
+    def release(): Unit =
+      // delete only if still ours: never remove a successor's lease
+      if (held)
+        try fs.delete(path, false)
+        catch { case NonFatal(_) => () }
+  }
+
+  private def leasePath(stateDir: String) = new Path(s"$stateDir/lease")
+
+  private[graft] def acquireLease(spark: SparkSession,
+      stateDir: String): Lease = {
+    val p = leasePath(stateDir)
+    val fs = fsOf(spark, stateDir)
+    fs.mkdirs(p.getParent)
+    val nonce = java.util.UUID.randomUUID().toString
+    val payload = nonce + "\n" +
+      ProcessHandle.current().pid() + "\n" +
+      System.currentTimeMillis() + "\n"
+    val out =
+      try fs.create(p, /* overwrite = */ false)
+      catch {
+        case e: java.io.IOException =>
+          val holder =
+            try readFile(fs, p).trim.replace('\n', ' ')
+            catch { case NonFatal(_) => "<unreadable>" }
+          throw new IllegalStateException(
+            s"incremental state at $stateDir is locked by another " +
+              s"validation run (lease nonce/pid/epoch-ms: $holder); " +
+              "concurrent writers would tear the stored state. If the " +
+              "holder crashed, clear it with StateStore.breakLease(spark, " +
+              "stateDir) or graft.Main --break-lease <stateDir>, and re-run.",
+            e)
+      }
+    try out.write(payload.getBytes("UTF-8")) finally out.close()
+    new Lease(fs, p, nonce)
+  }
+
+  /** Operator recovery: remove a lease a CRASHED run left behind. Never
+    * call while the holder may still be alive — that reintroduces the
+    * concurrent-writer exposure the lease exists to close. */
+  def breakLease(spark: SparkSession, stateDir: String): Unit = {
+    val p = leasePath(stateDir)
+    val fs = fsOf(spark, stateDir)
+    if (fs.exists(p)) fs.delete(p, false)
+  }
+
+  // ---- renames and markers ---------------------------------------------
+
+  /** Hadoop FileSystems report rename failure by RETURNING FALSE, not by
+    * throwing — an unchecked rename(p, old) that failed would let the
+    * following rename(tmp, p) move the staging directory INSIDE the
+    * still-present store (rename-into-existing-dir semantics), nesting a
+    * `__staging` subtree that corrupts partition discovery. Every rename
+    * goes through this: a false ABORTS, leaving the recoverable layout
+    * for [[heal]]. */
+  private[graft] def mustRename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to))
+      throw new java.io.IOException(
+        s"rename $from -> $to failed (filesystem returned false); " +
+          "store left in its recoverable pre-swap layout")
+
+  /** Small marker file, read fully and trimmed; None when absent. */
+  private[graft] def readMarker(fs: FileSystem, path: String): Option[String] = {
+    val p = new Path(path)
+    if (!fs.exists(p)) None else Some(readFile(fs, p).trim)
+  }
+
+  /** Atomic (write-tmp + rename) small marker write. */
+  private[graft] def writeMarker(fs: FileSystem, path: String,
+      value: String): Unit = {
+    val p = new Path(path)
+    val tmp = new Path(path + ".tmp")
+    val out = fs.create(tmp, true)
+    try out.write(value.getBytes("UTF-8")) finally out.close()
+    if (fs.exists(p)) fs.delete(p, false)
+    mustRename(fs, tmp, p)
+  }
+
+  /** A value fixed for a store's lifetime: the first writer pins
+    * `value`; any later caller declaring a different one gets
+    * `mismatch(pinned)` thrown. Returns whether this call pinned it. */
+  private[graft] def pinMarker(fs: FileSystem, path: String, value: String)(
+      mismatch: String => Exception): Boolean =
+    readMarker(fs, path) match {
+      case Some(pinned) if pinned != value => throw mismatch(pinned)
+      case Some(_) => false
+      case None => writeMarker(fs, path, value); true
+    }
+
+  /** Does the store hold at least one data file? An empty-table
+    * maintenance pass writes only markers (_SUCCESS), which parquet
+    * cannot infer a schema from — only that case may read as empty;
+    * any OTHER read failure (corrupt footer, transient FS error) must
+    * PROPAGATE, not silently answer empty. */
+  private[graft] def storeHasData(fs: FileSystem, path: String): Boolean = {
+    val p = new Path(path)
+    fs.exists(p) && {
+      val it = fs.listFiles(p, true)
+      var found = false
+      while (!found && it.hasNext) {
+        val name = it.next().getPath.getName
+        if (!name.startsWith("_") && !name.startsWith(".")) found = true
+      }
+      found
+    }
+  }
+
+  // ---- state identity ---------------------------------------------------
+
+  private def metaBody(version: Int, nBuckets: Int, key: String) =
+    s"$version\n$nBuckets\n$key"
+
+  /** State-identity meta as a MARKER FILE (`version\nnBuckets\nkey`):
+    * checking it is a driver-side read, never a Spark job — every
+    * incremental run pays this check. A legacy parquet meta DIRECTORY
+    * reads as no-state — the rebuild direction. `key` (the surface's
+    * mode or aggregate signature) may contain any character but a
+    * newline. */
+  private def metaMatches(fs: FileSystem, path: String, version: Int,
+      nBuckets: Int, key: String): Boolean =
+    try {
+      val p = new Path(path)
+      fs.exists(p) && !fs.getFileStatus(p).isDirectory &&
+        readMarker(fs, path).contains(metaBody(version, nBuckets, key))
+    } catch { case NonFatal(_) => false }
+
+  private def writeMeta(fs: FileSystem, path: String, version: Int,
+      nBuckets: Int, key: String): Unit = {
+    val p = new Path(path)
+    // a legacy parquet meta is a non-empty directory: clear it first
+    // (writeMarker's own delete is non-recursive)
+    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
+    writeMarker(fs, path, metaBody(version, nBuckets, key))
+  }
+
+  // ---- swap and heal ----------------------------------------------------
+
+  private def siblings(target: String): (Path, Path, Path) = {
+    val p = new Path(target)
+    (p, new Path(p.getParent, p.getName + "__staging"),
+      new Path(p.getParent, p.getName + "__old"))
+  }
+
+  /** Restore an APPEND store (one that cannot rebuild itself) a crashed
+    * swap left absent. Acts ONLY when the target is missing: a staging
+    * copy next to an absent target is complete (the target is renamed
+    * aside only after staging finishes, and an older delete-then-rename
+    * swap deleted it only then), so it is promoted and any `__old` copy
+    * dropped; otherwise an `__old` copy is restored. With a live target
+    * nothing is touched — a sibling may be a running swap's staging,
+    * and readers call this without the lease. Never call it on a
+    * witness or other rebuildable state: its leftover staging may be
+    * cut from older inputs, and [[swap]] discards it under the lease. */
+  private[graft] def heal(fs: FileSystem, target: String): Unit = {
+    val (p, tmp, old) = siblings(target)
+    if (!fs.exists(p)) {
+      if (fs.exists(tmp)) {
+        mustRename(fs, tmp, p)
+        if (fs.exists(old)) fs.delete(old, true)
+      } else if (fs.exists(old)) mustRename(fs, old, p)
+    }
+  }
+
+  /** Replace `target` by RENAMES ONLY: drop stale siblings, `stage` the
+    * new copy into `target__staging` (the long step), re-verify the
+    * lease, run `fence`, rename the target aside to `target__old`,
+    * rename the staging copy in, delete `__old`. The target is never
+    * deleted while it is the only copy, so every crash window leaves a
+    * complete copy under a known name. A swap never promotes a sibling
+    * it did not stage: an append store's caller [[heal]]s first, and a
+    * stale sibling of anything else is discarded. Commit points:
+    * `<name>.stage` and `<name>.swap`. */
+  private[graft] def swap(fs: FileSystem, target: String, lease: Lease,
+      fence: => Unit)(stage: String => Unit): Unit = {
+    val (p, tmp, old) = siblings(target)
+    lease.check(s"${p.getName}.stage")
+    if (fs.exists(tmp)) fs.delete(tmp, true)
+    if (fs.exists(old)) fs.delete(old, true)
+    stage(tmp.toString)
+    lease.check(s"${p.getName}.swap")
+    fence
+    val had = fs.exists(p)
+    if (had) mustRename(fs, p, old)
+    mustRename(fs, tmp, p)
+    if (had) fs.delete(old, true)
+  }
+
+  /** [[swap]] in `df`, written as parquet. */
+  private[graft] def swapWrite(df: DataFrame, target: String,
+      lease: Lease): Unit =
+    swap(fsOf(df.sparkSession, target), target, lease, ()) { tmp =>
+      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+    }
+
+  // ---- grouped layout ---------------------------------------------------
+
+  /** Physical directories of a bucketed store. One directory per logical
+    * bucket makes every dirty-bucket surgery pay a fixed per-directory
+    * commit price (delete + writer open/close + footer + commit rename,
+    * ~14 ms/dir locally) and every store read a per-directory
+    * listing/footer price — costs that scale with the BUCKET COUNT, not
+    * the data. Physical directories are bucket GROUPS (`__bgroup =
+    * bucket mod groups`) with the bucket a SORTED data column, so
+    * per-bucket reads prune on parquet row-group stats and the digest
+    * granularity is untouched. ~16 buckets per group, floor 16: the
+    * clean-row copy a surgery pays stays bounded at ~16x the dirty
+    * buckets' rows at every scale, while the directory count drops 16x
+    * (4096 buckets keep 256 directories; 256 keep 16). */
+  private[graft] def groupCount(nBuckets: Int): Int =
+    math.min(nBuckets, math.max(16, nBuckets / 16))
+
+  private[graft] def groupOf(bucket: Long, groups: Int): Long =
+    ((bucket % groups) + groups) % groups
+
+  /** Write `rows` at `path` in the grouped layout: one file per group
+    * directory, rows sorted by (group, bucket, `sortCols`) so per-bucket
+    * reads and any `sortCols` filter prune on row-group min/max stats. */
+  private def writeLaidOut(rows: DataFrame, bucketCol: String,
+      groups: Int, sortCols: Seq[String], path: String): Unit =
+    rows.withColumn("__bgroup", pmod(col(bucketCol), lit(groups.toLong)))
+      .repartition(col("__bgroup"))
+      .sortWithinPartitions(
+        (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy("__bgroup").parquet(path)
+
+  /** Group-granular surgery on a grouped store: the dirty buckets'
+    * GROUPS rewrite as (`recomputed` dirty rows) ∪ (the same groups'
+    * carried clean rows), staged fully in `store__swap` and moved in by
+    * per-group renames. The caller has already deleted its digest
+    * witness, so a crash at any point makes the next run rebuild
+    * wholesale. Commit point: `<store name>.renames`. */
+  private def groupSurgery(store: String, recomputed: DataFrame,
+      bucketCol: String, dirty: Seq[Long], groups: Int,
+      sortCols: Seq[String], lease: Lease): Unit = {
+    val spark = recomputed.sparkSession
+    val fs = fsOf(spark, store)
+    val dirtyGroups = dirty.map(groupOf(_, groups)).distinct
+    // an all-clean prior store can be data-less — carried is then empty
+    // by construction. Any other read failure propagates: an empty
+    // stand-in would silently drop the clean buckets' rows. The explicit
+    // schema needs no inference job, and the LongType group IN-list
+    // compares the raw partition attribute, so it prunes directories
+    val storeSchema = StructType(
+      recomputed.schema.fields.map(_.copy(nullable = true)) :+
+        StructField("__bgroup", LongType))
+    val carried =
+      if (storeHasData(fs, store))
+        spark.read.schema(storeSchema).parquet(store)
+          .filter(col("__bgroup").isin(dirtyGroups: _*) &&
+            !col(bucketCol).isin(dirty: _*))
+          .drop("__bgroup")
+          .select(recomputed.columns.map(col).toIndexedSeq: _*)
+      else recomputed.limit(0)
+    val staging = new Path(store + "__swap")
+    if (fs.exists(staging)) fs.delete(staging, true)
+    writeLaidOut(recomputed.unionByName(carried), bucketCol, groups,
+      sortCols, staging.toString)
+    // the staging write is the long step: re-verify the lease right
+    // before the renames, never move groups under a broken one
+    lease.check(s"${new Path(store).getName}.renames")
+    fs.mkdirs(new Path(store))
+    for (g <- dirtyGroups) {
+      val dst = new Path(s"$store/__bgroup=$g")
+      if (fs.exists(dst)) fs.delete(dst, true)
+      val src = new Path(s"$staging/__bgroup=$g")
+      // a group with no staged dir drained entirely — the delete IS the swap
+      if (fs.exists(src)) mustRename(fs, src, dst)
+    }
+    fs.delete(staging, true)
+  }
+
+  // ---- witness compare --------------------------------------------------
+
+  /** Driver-side digest compare: every bucket whose `fields` differ
+    * between the `current` digest rows and the `stored` witness rows, as
+    * (bucket, present in current). A bucket can go dirty by VANISHING
+    * (every row deleted) — its store rows must still be dropped. DECIMAL
+    * sums compare by value. */
+  private def dirtyBuckets(current: Seq[Row], stored: Seq[Row],
+      fields: Seq[String]): Seq[(Long, Boolean)] = {
+    def sig(rows: Seq[Row]): Map[Long, Seq[Any]] =
+      rows.map { r =>
+        r.getLong(r.fieldIndex("bucket")) ->
+          fields.map(f => r.get(r.fieldIndex(f)))
+      }.toMap
+    def same(a: Any, b: Any): Boolean = (a, b) match {
+      case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
+        x.compareTo(y) == 0
+      case _ => a == b
+    }
+    val cur = sig(current)
+    val prev = sig(stored)
+    (cur.keySet ++ prev.keySet).toSeq.flatMap { b =>
+      (cur.get(b), prev.get(b)) match {
+        case (Some(c), Some(p))
+            if c.zip(p).forall { case (x, y) => same(x, y) } => None
+        case (c, _) => Some(b -> c.isDefined)
+      }
+    }
+  }
+
+  // ---- witness-guarded stores -------------------------------------------
+
+  /** The digest compare of one run: the current per-bucket digest `rows`
+    * (and `cd`, the same rows as one local partition — the witness
+    * rewrite source, one file), whether a state of this identity with a
+    * readable witness exists, and the dirty buckets against it (None
+    * without one). */
+  private[graft] final case class Compared(cd: DataFrame, rows: Seq[Row],
+      haveState: Boolean, dirtyRows: Option[Seq[(Long, Boolean)]]) {
+    def total: Long = rows.size.toLong
+    def dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
+    def tooDirty(limit: Double): Boolean =
+      dirty.exists(d => total > 0 && d.size.toDouble / total > limit)
+    /** The column-sum of a LongType digest field, on the driver. */
+    def sum(field: String): Long =
+      rows.map(r => r.getLong(r.fieldIndex(field))).sum
+    /** The run's record: a rebuild re-validated every bucket. */
+    def record(rebuild: Boolean): IncrementalReport = IncrementalReport(
+      rebuilt = rebuild,
+      totalBuckets = total,
+      dirtyBuckets =
+        if (rebuild) total else dirty.map(_.size.toLong).getOrElse(0L),
+      cleanBuckets =
+        if (rebuild) 0L
+        else total - dirtyRows.map(_.count(_._2).toLong).getOrElse(0L))
+  }
+
+  /** A stored state guarded by a digest WITNESS: `path` holds the
+    * per-bucket digest rows the state was cut from, `meta` the state's
+    * identity (`version`, `nBuckets`, `key`). A bucket whose current
+    * digest equals its witness row is clean — its stored rows stand. */
+  private[graft] final case class Witness(path: String, meta: String,
+      version: Int, nBuckets: Int, key: String) {
+
+    /** Compare the current `digests` (<= nBuckets+1 rows BY CONTRACT,
+      * metadata-sized at every scale) with the witness on `fields`:
+      * collected and compared on the driver — one job for the scan
+      * instead of localCheckpoint + count + a join job. Explicit schema
+      * on the witness read: the witness is written from the digest
+      * schema, and skipping parquet inference skips its Spark job. An
+      * unreadable witness reads as no state (rebuild). */
+    def compare(digests: DataFrame, fields: Seq[String]): Compared = {
+      val spark = digests.sparkSession
+      val schema = digests.schema
+      val rows = digests.collect().toSeq
+      val old =
+        if (metaMatches(fsOf(spark, meta), meta, version, nBuckets, key))
+          try Some(spark.read.schema(schema).parquet(path).collect().toSeq)
+          catch { case NonFatal(_) => None }
+        else None
+      Compared(
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
+        rows, old.isDefined, old.map(dirtyBuckets(rows, _, fields)))
+    }
+
+    def writeMeta(fs: FileSystem): Unit =
+      StateStore.writeMeta(fs, meta, version, nBuckets, key)
+
+    /** One maintenance pass of a grouped `store` this witness guards:
+      * the witness is DELETED before the store is touched and swapped
+      * back only after, so a torn store never reads clean. A rebuild
+      * (no state, or more than `dirtyFractionLimit` of the buckets
+      * dirty) rewrites the whole store from `full`; otherwise only the
+      * dirty buckets' groups are recomputed from `recompute(dirty)`
+      * ([[groupSurgery]]). Zero dirty buckets leave store and witness
+      * untouched. Commit point: `<store name>.mutate`. Returns whether
+      * it rebuilt. */
+    def maintain(c: Compared, store: String, bucketCol: String,
+        sortCols: Seq[String], dirtyFractionLimit: Double, lease: Lease)(
+        full: => DataFrame, recompute: Seq[Long] => DataFrame): Boolean = {
+      val fs = fsOf(c.cd.sparkSession, store)
+      val rebuild = !c.haveState || c.tooDirty(dirtyFractionLimit)
+      val dirty = c.dirty.getOrElse(Nil)
+      val groups = groupCount(nBuckets)
+      lease.check(s"${new Path(store).getName}.mutate")
+      if (rebuild || dirty.nonEmpty) fs.delete(new Path(path), true)
+      if (rebuild) {
+        writeLaidOut(full, bucketCol, groups, sortCols, store)
+        swapWrite(c.cd, path, lease)
+        if (!c.haveState) writeMeta(fs)
+      } else if (dirty.nonEmpty) {
+        groupSurgery(store, recompute(dirty), bucketCol, dirty, groups,
+          sortCols, lease)
+        swapWrite(c.cd, path, lease)
+      }
+      rebuild
+    }
+  }
+}

@@ -9,11 +9,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.config.ConfigLoader
-import graft.core.{CompareMode, IncrementalValidation, ValidationJob}
+import graft.core.{CompareMode, IncrementalValidation, ValidationJob, Validator}
 import graft.ops.{IncrementalAgg, Similarity}
+import graft.state.StateStore
 
 /** Stored-state commit points: a lease broken during the staging write
-  * stops the swap before any rename, a crash between the PQ books swap
+  * stops the swap before any rename, a stale witness staging copy is
+  * never promoted, a crash between the PQ books swap
   * and its marker never serves mixed codebooks, and a multi-report store
   * that cannot be read fails the run instead of reporting nothing. */
 class CommitPointSpec extends AnyFunSuite with SparkSpec {
@@ -61,8 +63,8 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
 
   /** Run `f` with the commit-point hook set, restoring it after. */
   private def withHook[T](hook: String => Unit)(f: => T): T = {
-    IncrementalValidation.commitPointHook = hook
-    try f finally IncrementalValidation.commitPointHook = _ => ()
+    StateStore.hook = hook
+    try f finally StateStore.hook = _ => ()
   }
 
   private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
@@ -78,7 +80,7 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     val before = files(s"$stateDir/report")
     val s1 = viaParquet(churn(s0, salt = 3))
     val e = withHook {
-      case "report.renames" => IncrementalValidation.breakLease(spark, stateDir)
+      case "report.renames" => StateStore.breakLease(spark, stateDir)
       case _ => ()
     } {
       intercept[IllegalStateException] {
@@ -97,6 +99,60 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     assert(rows(healed) == rows(fresh))
   }
 
+  /** [[Validator.validate]]'s three frames in the stored report's long
+    * shape, as a multiset. */
+  private def validated(f: DataFrame, s: DataFrame,
+      mode: CompareMode): Map[Seq[Any], Int] = {
+    val out = Validator.validate(f, s, mode)
+    def shaped(df: DataFrame, kind: String, cf: String, cs: String) =
+      df.select(lit(kind), col("id").cast("string"),
+        (if (cf == null) lit(null) else col(cf)).cast("string"),
+        (if (cs == null) lit(null) else col(cs)).cast("string"))
+    bag(shaped(out.missingInFirst, "missing_in_first", null, null)
+      .union(shaped(out.missingInSecond, "missing_in_second", null, null))
+      .union(shaped(out.differing, "differing", "check_first",
+        "check_second")))
+  }
+
+  private def bag(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map {
+      case (k, v) => k -> v.size
+    }
+
+  test("witness swap: a stale staging copy from an earlier aborted run " +
+      "is never promoted, so a run aborted at the witness swap rebuilds") {
+    val stateDir = freshStateDir()
+    val mode = CompareMode.Fuzzy(1.0)
+    val f = viaParquet(randomKeyed(300, 150))
+    val s0 = viaParquet(randomKeyed(300, 150))
+    IncrementalValidation.reportIncremental(f, s0, mode, stateDir,
+      nBuckets = 32, dirtyFractionLimit = 1.0)
+    // an earlier run's complete witness of s0, left in staging
+    val fs = StateStore.fsOf(spark, stateDir)
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new org.apache.hadoop.fs.Path(s"$stateDir/report_digests"), fs,
+      new org.apache.hadoop.fs.Path(s"$stateDir/report_digests__staging"),
+      false, spark.sparkContext.hadoopConfiguration)
+    // a churned run rewrites the store, then aborts at the witness swap
+    val s1 = viaParquet(churn(s0, salt = 7))
+    withHook {
+      case "report_digests.swap" => StateStore.breakLease(spark, stateDir)
+      case _ => ()
+    } {
+      intercept[IllegalStateException] {
+        IncrementalValidation.reportIncremental(f, s1, mode, stateDir,
+          nBuckets = 32, dirtyFractionLimit = 1.0)
+      }
+    }
+    // back on s0: no live witness may vouch for the churned store
+    val (report, r) = IncrementalValidation.reportIncremental(f, s0, mode,
+      stateDir, nBuckets = 32, dirtyFractionLimit = 1.0)
+    assert(r.rebuilt, "without a witness the store must rebuild")
+    assert(bag(report) == validated(f, s0, mode))
+    assert(validated(f, s0, mode) != validated(f, s1, mode),
+      "the churn must change the report")
+  }
+
   test("churn-aggregate group surgery: a lease broken after the staging " +
       "write throws before any rename, and the next run heals") {
     val stateDir = freshStateDir()
@@ -110,7 +166,7 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     val before = files(s"$stateDir/agg")
     val t1 = viaParquet(churn(t0, salt = 5))
     val e = withHook {
-      case "agg.renames" => IncrementalValidation.breakLease(spark, stateDir)
+      case "agg.renames" => StateStore.breakLease(spark, stateDir)
       case _ => ()
     } {
       intercept[IllegalStateException](run(t1))

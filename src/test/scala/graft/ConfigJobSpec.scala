@@ -539,16 +539,16 @@ class ConfigJobSpec extends AnyFunSuite with SparkSpec {
       "without writing Scala") {
     val stateDir = Files.createTempDirectory("cfglease").toString
     // simulate the crashed run: lease acquired, never released
-    graft.core.IncrementalValidation.acquireLease(spark, stateDir)
+    graft.state.StateStore.acquireLease(spark, stateDir)
     // a second writer fails fast, as the lease contract demands
     val e = intercept[IllegalStateException] {
-      graft.core.IncrementalValidation.acquireLease(spark, stateDir)
+      graft.state.StateStore.acquireLease(spark, stateDir)
     }
     assert(e.getMessage.contains("lease"))
     // the CLI recovery action (graft.Main --break-lease <dir>)
     Main.runBreakLease(spark, stateDir)
     // now a fresh run proceeds
-    graft.core.IncrementalValidation.acquireLease(spark, stateDir)
+    graft.state.StateStore.acquireLease(spark, stateDir)
       .release()
   }
 

@@ -106,15 +106,17 @@ class IncrementalAggSpec extends AnyFunSuite with SparkSpec {
     val churned = viaParquet(d0.withColumn("text",
       when(col("doc_id") === 7, lit("stolen words")).otherwise(col("text"))))
     @volatile var innerFailure: Option[Throwable] = None
-    IncrementalAgg.beforeMutationHook = () => {
-      try IncrementalAgg.vocab(churned, stateDir, nBuckets = 16)
-      catch { case e: Throwable => innerFailure = Some(e) }
+    graft.state.StateStore.hook = {
+      case "agg.mutate" =>
+        try IncrementalAgg.vocab(churned, stateDir, nBuckets = 16)
+        catch { case e: Throwable => innerFailure = Some(e) }
+      case _ => ()
     }
     try {
       val (v, _) = IncrementalAgg.vocab(churned, stateDir, nBuckets = 16,
         dirtyFractionLimit = 1.0)
       assert(asMap(v) == fullVocab(churned), "outer run answer")
-    } finally IncrementalAgg.beforeMutationHook = () => ()
+    } finally graft.state.StateStore.hook = _ => ()
     assert(innerFailure.exists(_.getMessage.contains("locked by another")),
       s"interleaved run must fail on the lease, got: $innerFailure")
     // lease released on success: a fresh run proceeds

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CompareMode, IncrementalValidation, Validator}
+import graft.state.StateStore
 
 /** Round-14 coverage: multi-column incremental row-level report,
   * single-writer lease on incremental state, per-side dirty-predicate
@@ -147,12 +148,14 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
     // fire a second run against the same stateDir — the most destructive
     // possible moment for a concurrent writer
     @volatile var interleaved: Option[Throwable] = None
-    IncrementalValidation.beforeMutationHook = () => {
-      IncrementalValidation.beforeMutationHook = () => () // no recursion
-      interleaved = Some(intercept[IllegalStateException] {
-        IncrementalValidation.reportIncremental(f, s, CompareMode.Numeric,
-          stateDir, nBuckets = 16)
-      })
+    StateStore.hook = {
+      case "report.mutate" =>
+        StateStore.hook = _ => () // no recursion
+        interleaved = Some(intercept[IllegalStateException] {
+          IncrementalValidation.reportIncremental(f, s, CompareMode.Numeric,
+            stateDir, nBuckets = 16)
+        })
+      case _ => ()
     }
     try {
       val (rep1, r1) = IncrementalValidation.reportIncremental(f, s,
@@ -165,7 +168,7 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
       val out = Validator.validate(f, s, CompareMode.Numeric)
       val wantDiffering = out.differing.count()
       assert(rep1.filter(col("kind") === "differing").count() == wantDiffering)
-    } finally IncrementalValidation.beforeMutationHook = () => ()
+    } finally StateStore.hook = _ => ()
     // a crashed run's leftover lease: simulate by planting one
     val leaseP = new org.apache.hadoop.fs.Path(s"$stateDir/lease")
     val fs = leaseP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -177,7 +180,7 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
     }
     assert(e.getMessage.contains("breakLease"),
       s"error must name the recovery action: ${e.getMessage}")
-    IncrementalValidation.breakLease(spark, stateDir)
+    StateStore.breakLease(spark, stateDir)
     // after recovery the state still answers correctly (rebuild is fine,
     // a torn answer is not)
     val (sum, _) = IncrementalValidation.run(f, s, CompareMode.Numeric,
@@ -204,7 +207,7 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
       IncrementalValidation.reportIncrementalMulti(f, f, multiChecks,
         stateDir, nBuckets = 8)
     }
-    IncrementalValidation.breakLease(spark, stateDir)
+    StateStore.breakLease(spark, stateDir)
     // same-vs-same with DUPLICATE ids still yields differing cross
     // pairs (m x n semantics) — compare against the direct path, not 0
     val (sumM, _) = IncrementalValidation.runMulti(f, f, multiChecks,

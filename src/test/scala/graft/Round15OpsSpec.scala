@@ -46,7 +46,7 @@ class Round15OpsSpec extends AnyFunSuite with SparkSpec {
       (i.toLong, Array.fill(8)(r.nextFloat() * 2f - 1f))
     }.toDF("vec_id", "embedding")
 
-  // physical layout is bucket GROUPS (IncrementalAgg.runGroupCount):
+  // physical layout is bucket GROUPS (StateStore.groupCount):
   // the mtime pin now holds per clean GROUP, not per clean bucket
   private def mtimes(fs: org.apache.hadoop.fs.FileSystem,
       stateDir: String): Map[String, Long] =
