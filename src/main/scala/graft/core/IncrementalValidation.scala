@@ -2,7 +2,8 @@ package graft.core
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.state.StateStore
 
@@ -24,7 +25,7 @@ import graft.state.StateStore
   *  2. a PRUNE: the digests are compared with the stored state from the
   *     previous run. A bucket whose six digest fields all match carries
   *     its stored summary terms forward; only DIRTY buckets re-enter
-  *     the summaryFast algebra, with both sides filtered to the dirty
+  *     the summaryMulti algebra, with both sides filtered to the dirty
   *     bucket set — the expensive keyed shuffle moves only the churned
   *     slice of the data.
   *  3. a MERGE: per-bucket summary terms are additive (buckets partition
@@ -58,12 +59,14 @@ import graft.state.StateStore
   * "1.0" -> "1.00" under Numeric) re-validate their bucket and get the
   * same terms back.
   *
-  * The state is a parquet directory (`<stateDir>/state` + a 1-row
-  * `<stateDir>/meta` carrying (n_buckets, mode, version)); a missing or
-  * parameter-mismatched state — or a run whose dirty fraction exceeds
-  * `dirtyFractionLimit` — falls back to a full rebuild, so a stale or
-  * foreign state can never silently answer. Updates are staged and
-  * swapped in by renames only ([[graft.state.StateStore.swap]]).
+  * The state is `<stateDir>/state` (the per-bucket digest witness),
+  * `<stateDir>/terms` (the per-(bucket, column) summary terms) and
+  * `<stateDir>/meta`, a marker file holding (version, n_buckets, mode
+  * key). A missing or parameter-mismatched state — or a run whose dirty
+  * fraction exceeds `dirtyFractionLimit` — falls back to a full rebuild,
+  * so a stale or foreign state can never silently answer. The witness
+  * is deleted before the terms change and swapped back after, and every
+  * replacement is renames-only ([[graft.state.StateStore.Witness.mutate]]).
   */
 object IncrementalValidation {
 
@@ -95,8 +98,13 @@ object IncrementalValidation {
   /** Null ids live in their own sidecar bucket (-1): they never join, so
     * their terms are count-only and derivable from the digest row alone. */
   private[graft] def bucketExpr(nBuckets: Int): Column =
-    when(col("id").isNull, lit(-1L))
-      .otherwise(pmod(xxhash64(col("id").cast(StringType)), lit(nBuckets.toLong)))
+    bucketOf(col("id"), nBuckets)
+
+  /** [[bucketExpr]] over any id column: the one bucket function every
+    * digest, store and dirty filter shares. */
+  private[graft] def bucketOf(id: Column, nBuckets: Int): Column =
+    when(id.isNull, lit(-1L))
+      .otherwise(pmod(xxhash64(id.cast(StringType)), lit(nBuckets.toLong)))
 
   /** Append the bucket column [[run]] computes internally — the LAYOUT
     * hook: write the table partitioned (or clustered) by this column and
@@ -194,90 +202,12 @@ object IncrementalValidation {
         totals(2), totals(3))
   }
 
-  /** summaryFast's per-id algebra with the bucket carried through,
-    * aggregated per BUCKET instead of globally — the additive unit the
-    * incremental merge needs. Same single tagged-union exchange, same
-    * modes, same dirty-key |V1|+|V2| bound (see [[Validator.summaryFast]]);
-    * null-id rows are excluded here (their sidecar bucket's terms come
-    * straight from the digest counts). */
-  private[graft] def perBucketTerms(first: DataFrame, second: DataFrame,
-      mode: CompareMode, nBuckets: Int): DataFrame = {
-    val coerce: Column => Column = mode match {
-      case CompareMode.Numeric  => Validator.toNumeric
-      case CompareMode.Date     => Validator.toTs
-      case CompareMode.Fuzzy(_) => c => c.cast(StringType)
-    }
-    def keyedSide(df: DataFrame) = df
-      .filter(col("id").isNotNull)
-      .select(col("id").cast(StringType).as("id"), coerce(col("check")).as("v"))
-    val combined = keyedSide(first).withColumn("side", lit(1))
-      .unionByName(keyedSide(second).withColumn("side", lit(0)))
-      .repartition(col("id"))
-      .withColumn("bucket", pmod(xxhash64(col("id")), lit(nBuckets.toLong)))
-    // bucket is a pure function of id, so grouping by (bucket, id, v)
-    // keeps the hashpartitioning(id) distribution valid — no new exchange
-    val counted = combined.groupBy("bucket", "id", "v").agg(
-      sum(when(col("side") === 1, 1L).otherwise(0L)).as("c1"),
-      sum(when(col("side") === 0, 1L).otherwise(0L)).as("c2"))
-    val perId = mode match {
-      case CompareMode.Fuzzy(t) if t < 1.0 =>
-        val a = counted.filter(col("c1") > 0)
-          .select(col("bucket"), col("id"), col("v").as("v1"), col("c1"))
-        val b = counted.filter(col("c2") > 0)
-          .select(col("id"), col("v").as("v2"), col("c2"))
-        val eq = a.select(col("id"), col("v1"), col("c1"))
-          .join(b, Seq("id"))
-          .groupBy("id")
-          .agg(sum(when(Validator.differs(col("v1"), col("v2"), mode), lit(0L))
-            .otherwise(col("c1") * col("c2"))).as("eq_pairs"))
-        counted.groupBy("bucket", "id")
-          .agg(sum("c1").as("tot1"), sum("c2").as("tot2"))
-          .join(eq, Seq("id"), "left_outer")
-          .select(col("bucket"), col("tot1"),
-            coalesce(col("eq_pairs"), lit(0L)).as("eq_pairs"), col("tot2"))
-      case _ =>
-        counted.groupBy("bucket", "id")
-          .agg(sum("c1").as("tot1"),
-            sum(col("c1") * col("c2")).as("eq_pairs"),
-            sum("c2").as("tot2"))
-    }
-    perId.groupBy("bucket").agg(
-      sum(col("tot1")).as("n_first"),
-      sum(col("tot2")).as("n_second"),
-      sum(when(col("tot1") === 0L, col("tot2")).otherwise(0L)).as("missing_in_first"),
-      sum(when(col("tot2") === 0L, col("tot1")).otherwise(0L)).as("missing_in_second"),
-      sum(when(col("tot1") > 0L && col("tot2") > 0L,
-        col("tot1") * col("tot2") - col("eq_pairs")).otherwise(0L)).as("n_differing"),
-      sum(when(col("tot1") > 0L, col("tot2")).otherwise(0L)).as("n_matched"))
-  }
-
   private val termCols = Seq("n_first", "n_second", "missing_in_first",
     "missing_in_second", "n_differing", "n_matched")
 
-  // written-state schemas, stated explicitly so state reads skip parquet
-  // schema inference (one Spark job per read otherwise)
-  private def fullStateSchema(pr: StateStore.Compared) =
-    org.apache.spark.sql.types.StructType(pr.cd.schema.fields ++
-      termCols.map(c => org.apache.spark.sql.types.StructField(
-        c, org.apache.spark.sql.types.LongType)))
-  private val multiTermsSchema = org.apache.spark.sql.types.StructType(
-    Seq(org.apache.spark.sql.types.StructField("bucket",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("pos",
-        org.apache.spark.sql.types.IntegerType)) ++
-      termCols.map(c => org.apache.spark.sql.types.StructField(
-        c, org.apache.spark.sql.types.LongType)))
-
-  /** The null-id sidecar bucket's terms, derived from its digest counts:
-    * n1 null-id rows on the first side count toward (n_first,
-    * missing_in_second), n2 toward (n_second, missing_in_first) — exactly
-    * [[Validator.summaryFast]]'s sidecar semantics. */
-  private def nullBucketTerms(cd: DataFrame): DataFrame =
-    cd.filter(col("bucket") === -1L).select(
-      col("bucket"),
-      col("n1").as("n_first"), col("n2").as("n_second"),
-      col("n2").as("missing_in_first"), col("n1").as("missing_in_second"),
-      lit(0L).as("n_differing"), lit(0L).as("n_matched"))
+  // the written terms' schema, stated so reads skip parquet inference
+  private val multiTermsSchema = StructType(StructField("bucket", LongType) +:
+    StructField("pos", IntegerType) +: termCols.map(StructField(_, LongType)))
 
   private def statePath(stateDir: String) = s"$stateDir/state"
   private def metaPath(stateDir: String) = s"$stateDir/meta"
@@ -360,153 +290,30 @@ object IncrementalValidation {
     * on the type (partition inference reads small values as INT, an
     * explicit reader schema as LONG, inference-off as STRING) — build
     * the predicate per DataFrame, never share one across sides.
-    * Falls back to the hash expression per row when no bucket column
-    * is materialized. */
+    * Falls back to the hash expression over `idCol` per row when no
+    * bucket column is materialized. */
   private[graft] def dirtyPred(df: DataFrame, bucketCol: Option[String],
-      nBuckets: Int, dirty: Seq[Long]): Column =
+      nBuckets: Int, dirty: Seq[Long], idCol: String = "id"): Column =
     bucketCol.map { c =>
       df.schema(c).dataType match {
-        case org.apache.spark.sql.types.IntegerType =>
-          col(c).isin(dirty.map(_.toInt): _*)
-        case org.apache.spark.sql.types.StringType =>
-          col(c).isin(dirty.map(_.toString): _*)
+        case IntegerType => col(c).isin(dirty.map(_.toInt): _*)
+        case StringType => col(c).isin(dirty.map(_.toString): _*)
         case _ => col(c).isin(dirty: _*)
       }
-    }.getOrElse(bucketExpr(nBuckets).isin(dirty: _*))
+    }.getOrElse(bucketOf(col(idCol), nBuckets).isin(dirty: _*))
 
-  /** Incremental [[Validator.summaryFast]]: identical one-row summary
-    * (same six columns, same semantics for every mode, duplicate ids and
-    * null ids included), but answered from the stored per-bucket state
-    * wherever the bucket digests prove the data unchanged. See the
-    * object doc for the three phases and the digest contract.
-    *
-    * The state is FILTER-AGNOSTIC by construction: digests are computed
-    * over the inputs AS GIVEN, so changing an upstream predicate (e.g.
-    * the YAML `start_date`/`end_date` range) changes the filtered inputs
-    * and every bucket whose filtered content moved reads dirty — the
-    * summary self-corrects to the new range, it never answers the old
-    * one (spec-pinned).
-    *
-    * @param dirtyFractionLimit above this dirty-bucket share the run
-    *        falls back to one full recompute — when most of the table
-    *        churned, one pass beats digest + filtered pass. Expectation
-    *        for operators: a fallback run costs the digest scan PLUS the
-    *        full pass, i.e. slightly MORE than a plain summaryFast — the
-    *        limit bounds the worst case near full-churn, it does not
-    *        make heavy-churn runs free.
-    * @param bucketCol name of a PRE-MATERIALIZED bucket column on both
-    *        inputs (produced by [[withBucket]] with the same nBuckets —
-    *        trusted, see there). When the tables are partitioned or
-    *        clustered by it, the dirty filter prunes files, turning the
-    *        recompute's I/O proportional to the churn instead of the
-    *        table.
-    * @param minRowsForIncremental opt-in size floor: when > 0 and the
-    *        two inputs together hold fewer rows, skip the digest
-    *        machinery entirely and answer with one plain
-    *        [[Validator.summaryFast]] pass (the 1x rehearsal leg shows
-    *        full winning below ~1M rows — fixed digest/state costs
-    *        dominate there). Any stored state is left untouched; the
-    *        next above-floor run's digest compare simply marks churned
-    *        buckets dirty against it, the safe direction. The floor
-    *        check itself counts both inputs (empty-projection scans) —
-    *        leave it 0 on genuinely large tables.
-    * @return (summary, report); [[summaryIncremental]] returns just the
-    *         summary. */
+  /** [[Validator.summaryFast]]'s one-row summary through stored state:
+    * [[runMulti]] with the one check column `check`, `column_name`
+    * dropped. Same parameters, state layout and digest contract. */
   def run(first: DataFrame, second: DataFrame, mode: CompareMode,
       stateDir: String, nBuckets: Int = 4096,
       dirtyFractionLimit: Double = 0.25,
       bucketCol: Option[String] = None,
       minRowsForIncremental: Long = 0L): (DataFrame, IncrementalReport) = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    val spark = first.sparkSession
-    import spark.implicits._
-    if (minRowsForIncremental > 0 &&
-        first.count() + second.count() < minRowsForIncremental)
-      return (Validator.summaryFast(first, second, mode),
-        IncrementalReport(rebuilt = true, totalBuckets = 0L,
-          dirtyBuckets = 0L, cleanBuckets = 0L))
-    val lease = StateStore.acquireLease(spark, stateDir)
-    try {
-
-    // phases 1+2: current digests (one scan of each side, tiny
-    // exchange; localCheckpointed — they steer pruning AND become the
-    // new state's digest columns) compared with the stored row per
-    // bucket; one-sided buckets (appeared or fully drained) are dirty
-    // by the full-outer null mismatch
-    val (w, pr) = prune(first, second, nBuckets, bucketCol,
-      col("check").cast(StringType), stateDir, modeKey(mode),
-      statePath(stateDir))
-    val cdDf = pr.cd
-    val total = pr.total
-    val oldState: Option[DataFrame] =
-      if (pr.haveState) Some(spark.read.schema(fullStateSchema(pr))
-        .parquet(statePath(stateDir)))
-      else None
-    val dirtyBuckets: Option[Seq[Long]] = pr.dirty
-
-    val rebuild = oldState.isEmpty || pr.tooDirty(dirtyFractionLimit)
-
-    val newState: DataFrame = {
-      val nullTerms = nullBucketTerms(cdDf)
-      if (rebuild) {
-        val terms = perBucketTerms(first, second, mode, nBuckets)
-          .unionByName(nullTerms)
-        cdDf.join(terms, Seq("bucket"), "left_outer")
-          .na.fill(0L, termCols)
-      } else {
-        val dirty = dirtyBuckets.get
-        val dirtyData = dirty.filter(_ >= 0L)
-        val recomputed =
-          if (dirtyData.isEmpty)
-            // zero data-bucket churn: nothing re-enters the keyed shuffle
-            spark.range(0).select(col("id").as("bucket") +:
-              termCols.map(c => col("id").as(c)): _*)
-          else perBucketTerms(
-            first.filter(dirtyPred(first, bucketCol, nBuckets, dirtyData)),
-            second.filter(dirtyPred(second, bucketCol, nBuckets, dirtyData)),
-            mode, nBuckets)
-        val carried0 = oldState.get
-          .select(col("bucket") +: termCols.map(col): _*)
-          .filter(col("bucket") =!= -1L)
-        val carried =
-          if (dirty.isEmpty) carried0
-          else carried0.filter(!col("bucket").isin(dirty: _*))
-        val terms = carried
-          .unionByName(recomputed)
-          .unionByName(nullTerms)
-        // current digests drive membership: a bucket that drained to
-        // zero rows has no cd row and drops out of the state entirely
-        cdDf.join(terms, Seq("bucket"), "left_outer")
-          .na.fill(0L, termCols)
-      }
-    }
-
-    // a zero-dirty re-run (the daily no-change case) proves the state
-    // current — rewriting it would only churn bytes; leave it in place
-    val noChange = !rebuild && dirtyBuckets.exists(_.isEmpty)
-    lease.check("state.mutate")
-    // the state is nBuckets-sized (metadata) — one output file, not one
-    // per shuffle partition (repartition, not coalesce: coalesce(1)
-    // would collapse the upstream terms computation into one task)
-    if (!noChange)
-      StateStore.swapWrite(newState.repartition(1), statePath(stateDir), lease)
-    if (!pr.haveState) w.writeMeta(StateStore.fsOf(spark, stateDir))
-
-    // phase 3: the global summary is the column-sum over the stored
-    // per-bucket terms — read back from the swapped-in state so the
-    // returned frame is self-contained and re-executable
-    val summary = spark.read.schema(fullStateSchema(pr))
-      .parquet(statePath(stateDir))
-      .agg(
-        sum("n_first").as("n_first"),
-        sum("n_second").as("n_second"),
-        sum("missing_in_first").as("missing_in_first"),
-        sum("missing_in_second").as("missing_in_second"),
-        sum("n_differing").as("n_differing"),
-        sum("n_matched").as("n_matched"))
-      .na.fill(0L)
-    (summary, pr.record(rebuild))
-    } finally lease.release()
+    val (summary, report) = runMulti(first, second, Seq("check" -> mode),
+      stateDir, nBuckets, dirtyFractionLimit, bucketCol,
+      minRowsForIncremental)
+    (summary.drop("column_name"), report)
   }
 
   /** The summary-only surface — drop-in for [[Validator.summaryFast]]
@@ -518,25 +325,46 @@ object IncrementalValidation {
     run(first, second, mode, stateDir, nBuckets, dirtyFractionLimit,
       bucketCol)._1
 
-  /** Multi-column incremental validation — [[Validator.summaryMulti]]'s
-    * per-column summary answered through stored per-(bucket, column)
-    * terms: the WHOLE-ROW digest (one position-salted 64-bit value over
-    * all k check columns — see [[multiValueExpr]]) decides dirtiness per
-    * bucket, clean buckets carry all k columns' terms forward, and only
-    * dirty buckets re-enter the one-exchange summaryMulti algebra. A
-    * change in ANY check column dirties its bucket for ALL columns —
-    * per-column digests would multiply digest state by k to save
-    * recomputing columns that share the same dirty rows anyway.
+  /** Incremental [[Validator.summaryMulti]]: the identical per-column
+    * summary (same columns, same semantics for every mode, duplicate and
+    * null ids included), answered through stored per-(bucket, column)
+    * terms wherever the bucket digests prove the data unchanged. The
+    * WHOLE-ROW digest (one position-salted 64-bit value over all k check
+    * columns — see [[multiValueExpr]]) decides dirtiness per bucket,
+    * clean buckets carry all k columns' terms forward, and only dirty
+    * buckets re-enter the one-exchange summaryMulti algebra. A change in
+    * ANY check column dirties its bucket for ALL columns — per-column
+    * digests would multiply digest state by k to save recomputing
+    * columns that share the same dirty rows anyway. Null-id rows
+    * contribute the count-only sidecar identically for every column.
+    * k = 1 is the single-check surface, [[run]].
     *
-    * State layout: `<stateDir>/state` (per-bucket digests),
-    * `<stateDir>/terms` (per-(bucket, pos) metric rows), `<stateDir>/meta`
-    * (version, n_buckets, the full check list as the mode key — a state
-    * built for different columns/modes/thresholds never answers).
-    * Same fallback/no-change/swap discipline as [[run]]; same
-    * [[withBucket]]/`bucketCol` layout hook. Null-id rows contribute the
-    * count-only sidecar identically for every column (summaryMulti's
-    * contract). Output schema and row-per-column contract are exactly
-    * [[Validator.summaryMulti]]'s. */
+    * State layout: see the object doc; the meta's mode key is the full
+    * check list, so a state built for different columns, modes or
+    * thresholds never answers. The state is FILTER-AGNOSTIC: digests are
+    * computed over the inputs AS GIVEN, so changing an upstream predicate
+    * (e.g. the YAML `start_date`/`end_date` range) dirties every bucket
+    * whose filtered content moved — the summary self-corrects to the new
+    * range, it never answers the old one (spec-pinned).
+    *
+    * @param dirtyFractionLimit above this dirty-bucket share the run
+    *        falls back to one full recompute. A fallback run costs the
+    *        digest scan PLUS the full pass — the limit bounds the worst
+    *        case near full churn, it does not make heavy churn free.
+    * @param bucketCol name of a PRE-MATERIALIZED bucket column on both
+    *        inputs (produced by [[withBucket]] with the same nBuckets —
+    *        trusted, see there). When the tables are partitioned or
+    *        clustered by it, the dirty filter prunes files.
+    * @param minRowsForIncremental opt-in size floor: when > 0 and the
+    *        two inputs together hold fewer rows, answer with one plain
+    *        [[Validator.summaryMulti]] pass (fixed digest and state costs
+    *        dominate on small inputs; the historical 1x measurement put
+    *        the crossover near 1M rows). Any stored state is left
+    *        untouched; the next above-floor run's digest compare marks
+    *        churned buckets dirty against it. The floor check counts both
+    *        inputs — leave it 0 on genuinely large tables.
+    * @return (summary, the prune record); [[summaryMultiIncremental]]
+    *         returns just the summary. */
   def runMulti(first: DataFrame, second: DataFrame,
       checks: Seq[(String, CompareMode)], stateDir: String,
       nBuckets: Int = 4096, dirtyFractionLimit: Double = 0.25,
@@ -545,7 +373,6 @@ object IncrementalValidation {
     require(nBuckets > 0, "nBuckets must be positive")
     require(checks.nonEmpty, "runMulti needs at least one check column")
     val spark = first.sparkSession
-    import spark.implicits._
     if (minRowsForIncremental > 0 &&
         first.count() + second.count() < minRowsForIncremental)
       return (Validator.summaryMulti(first, second, checks),
@@ -556,19 +383,18 @@ object IncrementalValidation {
     val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
+    // current digests (one scan of each side, tiny exchange) against the
+    // witness; one-sided buckets (appeared or fully drained) are dirty
     val (w, pr) = prune(first, second, nBuckets, bucketCol,
       multiValueExpr(checks.map(_._1)), stateDir, modeStr,
       statePath(stateDir))
     val cdDf = pr.cd
-    val total = pr.total
     val oldTerms: Option[DataFrame] =
       if (pr.haveState)
         try Some(spark.read.schema(multiTermsSchema)
           .parquet(termsPath(stateDir)))
         catch { case scala.util.control.NonFatal(_) => None } // torn state
       else None
-    val dirtyBuckets: Option[Seq[Long]] =
-      if (oldTerms.isEmpty) None else pr.dirty
     val rebuild = oldTerms.isEmpty || pr.tooDirty(dirtyFractionLimit)
 
     // null sidecar: one row PER COLUMN POSITION off the -1 digest counts
@@ -580,15 +406,16 @@ object IncrementalValidation {
         col("n2").as("missing_in_first"), col("n1").as("missing_in_second"),
         lit(0L).as("n_differing"), lit(0L).as("n_matched"))
 
-    val newTerms: DataFrame = {
+    def newTerms: DataFrame = {
       if (rebuild)
         perBucketTermsMulti(first, second, checks, nBuckets)
           .unionByName(nullTerms)
       else {
-        val dirty = dirtyBuckets.get
+        val dirty = pr.dirty.get
         val dirtyData = dirty.filter(_ >= 0L)
         val recomputed =
           if (dirtyData.isEmpty)
+            // zero data-bucket churn: nothing re-enters the keyed shuffle
             spark.range(0).select(col("id").as("bucket") +:
               (col("id").cast("int").as("pos") +:
                 termCols.map(c => col("id").as(c))): _*)
@@ -596,12 +423,9 @@ object IncrementalValidation {
             first.filter(dirtyPred(first, bucketCol, nBuckets, dirtyData)),
             second.filter(dirtyPred(second, bucketCol, nBuckets, dirtyData)),
             checks, nBuckets)
-        val carried0 = oldTerms.get
+        val carried = oldTerms.get
           .select(col("bucket") +: col("pos") +: termCols.map(col): _*)
-          .filter(col("bucket") =!= -1L)
-        val carried =
-          if (dirty.isEmpty) carried0
-          else carried0.filter(!col("bucket").isin(dirty: _*))
+          .filter(!col("bucket").isin(-1L +: dirty: _*))
         // membership tracks the current digests: drained buckets drop.
         // cdDf is a local nBuckets-row frame with no stats — hint the
         // broadcast explicitly or the planner sort-merges this semi-join
@@ -610,28 +434,21 @@ object IncrementalValidation {
       }
     }
 
-    val noChange = !rebuild && dirtyBuckets.exists(_.isEmpty)
-    lease.check("terms.mutate")
-    if (!noChange) {
-      // terms first, then digests: a crash between the two leaves the
-      // NEW terms with the OLD digests, which over-marks buckets dirty
-      // on the next run (safe direction); the reverse order could mark
-      // stale terms clean
+    // the terms are nBuckets·k-sized (metadata) — one output file, not
+    // one per shuffle partition (repartition, not coalesce: coalesce(1)
+    // would collapse the upstream terms computation into one task)
+    w.mutate(pr, termsPath(stateDir), rebuild, lease) {
       StateStore.swapWrite(newTerms.repartition(1), termsPath(stateDir), lease)
-      StateStore.swapWrite(cdDf, statePath(stateDir), lease)
     }
-    if (!pr.haveState) w.writeMeta(StateStore.fsOf(spark, stateDir))
 
+    // the global summary is the per-column sum over the stored terms —
+    // read back from the swapped-in store so the returned frame is
+    // self-contained and re-executable
     val names = array(checks.map { case (c, _) => lit(c) }: _*)
     val perCol = spark.read.schema(multiTermsSchema)
       .parquet(termsPath(stateDir))
-      .groupBy("pos").agg(
-        sum("n_first").as("n_first"),
-        sum("n_second").as("n_second"),
-        sum("missing_in_first").as("missing_in_first"),
-        sum("missing_in_second").as("missing_in_second"),
-        sum("n_differing").as("n_differing"),
-        sum("n_matched").as("n_matched"))
+      .groupBy("pos").agg(sum("n_first").as("n_first"),
+        termCols.tail.map(c => sum(c).as(c)): _*)
     val summary = posSeed.join(broadcast(perCol), Seq("pos"), "left_outer")
       .na.fill(0L, termCols)
       .select(element_at(names, col("pos").cast("int") + 1).as("column_name") +:

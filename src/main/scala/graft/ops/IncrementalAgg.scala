@@ -203,8 +203,7 @@ object IncrementalAgg {
       Seq("ha" -> col("h"), "hb" -> col("h2")))
     table.select(
         bucketCol.map(c => col(c).cast("long")).getOrElse(
-          when(col(idCol).isNull, lit(-1L))
-            .otherwise(pmod(xxhash64(id), lit(nBuckets.toLong)))).as("bucket"),
+          IncrementalValidation.bucketOf(id, nBuckets)).as("bucket"),
         xxhash64(id, v).as("h"),
         xxhash64(lit(1L), id, v).as("h2"))
       .groupBy("bucket")
@@ -253,19 +252,13 @@ object IncrementalAgg {
       val cmp = w.compare(digests(table, idCol, dependsOn, nBuckets, bucketCol),
         Seq("n", "ha", "hb"))
 
-      def bucketOf(df: DataFrame): Column =
+      def withBucketCol(df: DataFrame) = df.withColumn("__bucket",
         bucketCol.map(c => col(c).cast("long")).getOrElse(
-          when(col(idCol).isNull, lit(-1L)).otherwise(
-            pmod(xxhash64(col(idCol).cast(StringType)),
-              lit(nBuckets.toLong))))
-      def withBucketCol(df: DataFrame) = df.withColumn("__bucket", bucketOf(df))
+          IncrementalValidation.bucketOf(col(idCol), nBuckets)))
       // dirty-row predicate: a typed attribute IN-list (partition-pruning
       // on a withBucket layout) when materialized, else the hash expr
-      def dirtySlice(d: Seq[Long]): DataFrame = bucketCol match {
-        case Some(_) => table.filter(
-          IncrementalValidation.dirtyPred(table, bucketCol, nBuckets, d))
-        case None => table.filter(bucketOf(table).isin(d: _*))
-      }
+      def dirtySlice(d: Seq[Long]): DataFrame = table.filter(
+        IncrementalValidation.dirtyPred(table, bucketCol, nBuckets, d, idCol))
 
       val rebuild = w.maintain(cmp, storePath(stateDir), "__bucket",
           storeSortCols, dirtyFractionLimit, lease)(
@@ -404,9 +397,7 @@ object IncrementalAgg {
         return
       }
       val withB = batch.withColumn("__bucket",
-        when(col(idCol).isNull, lit(-1L)).otherwise(
-          pmod(xxhash64(col(idCol).cast(StringType)),
-            lit(nBuckets.toLong))))
+        IncrementalValidation.bucketOf(col(idCol), nBuckets))
       // grouped physical layout: `__bucket` rides as a SORTED data
       // column, directories are bucket groups (see APPEND_PHYS_PARTS)
       val out = partial(withB)

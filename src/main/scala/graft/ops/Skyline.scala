@@ -119,8 +119,9 @@ object Skyline {
   /** Per-round measurements of the candidate reduction, filled by task
     * accumulators when the instrumented entry point runs: for round r,
     * (task count of that round, total rows entering the round's sweeps,
-    * per-task inflow list). `Rehearsal` reads it so the "no task ingests
-    * more than ~fanIn local skylines" claim is MEASURED, not argued. */
+    * per-task inflow list). A caller of [[skylineNDInstrumented]] reads
+    * it so the "no task ingests more than ~fanIn local skylines" claim is
+    * MEASURED, not argued (Round11OpsSpec pins it). */
   final class SkylineDiag {
     import scala.jdk.CollectionConverters._
     private[Skyline] val rounds = scala.collection.mutable.ArrayBuffer
@@ -190,7 +191,7 @@ object Skyline {
     var parts = math.max(reductionParts(spark), 1)
     while ({
       parts = math.max(1, parts / fanIn)
-      // instrumentation (rehearsal only): count rows ENTERING each
+      // instrumentation (instrumented entry only): count rows ENTERING each
       // round's sweeps, total and per task — inflow is recorded by a
       // task-completion listener so the accumulators are exact even
       // though the sweep consumes the iterator lazily
@@ -209,7 +210,7 @@ object Skyline {
               val tc = org.apache.spark.TaskContext.get()
               // transformation-side accumulators are exactly-once only for
               // a task's FIRST attempt — skip retries/speculative copies so
-              // the measured fan-in never double-counts (rehearsal-only
+              // the measured fan-in never double-counts (diagnostic-only
               // diagnostics, but "measured" must mean measured)
               if (tc != null && tc.attemptNumber() == 0)
                 tc.addTaskCompletionListener[Unit] { _ =>

@@ -433,35 +433,40 @@ object StateStore {
         rows, old.isDefined, old.map(dirtyBuckets(rows, _, fields)))
     }
 
-    def writeMeta(fs: FileSystem): Unit =
-      StateStore.writeMeta(fs, meta, version, nBuckets, key)
+    /** The witness cycle around one mutation of the `store` this witness
+      * guards: check the lease at `<store name>.mutate`, DELETE the
+      * witness, run `mutation`, swap the current digests back in as the
+      * witness and, on a first build, write the meta. A crash anywhere in
+      * between leaves no witness, so the next run rebuilds instead of
+      * reading a torn store as clean. A kept state with zero dirty
+      * buckets leaves store and witness untouched. */
+    def mutate(c: Compared, store: String, rebuild: Boolean, lease: Lease)(
+        mutation: => Unit): Unit = {
+      lease.check(s"${new Path(store).getName}.mutate")
+      if (rebuild || c.dirty.exists(_.nonEmpty)) {
+        val fs = fsOf(c.cd.sparkSession, path)
+        fs.delete(new Path(path), true)
+        mutation
+        swapWrite(c.cd, path, lease)
+        if (!c.haveState) writeMeta(fs, meta, version, nBuckets, key)
+      }
+    }
 
-    /** One maintenance pass of a grouped `store` this witness guards:
-      * the witness is DELETED before the store is touched and swapped
-      * back only after, so a torn store never reads clean. A rebuild
-      * (no state, or more than `dirtyFractionLimit` of the buckets
-      * dirty) rewrites the whole store from `full`; otherwise only the
-      * dirty buckets' groups are recomputed from `recompute(dirty)`
-      * ([[groupSurgery]]). Zero dirty buckets leave store and witness
-      * untouched. Commit point: `<store name>.mutate`. Returns whether
-      * it rebuilt. */
+    /** One maintenance pass of a grouped `store` this witness guards
+      * ([[mutate]]): a rebuild (no state, or more than
+      * `dirtyFractionLimit` of the buckets dirty) rewrites the whole
+      * store from `full`; otherwise only the dirty buckets' groups are
+      * recomputed from `recompute(dirty)` ([[groupSurgery]]). Returns
+      * whether it rebuilt. */
     def maintain(c: Compared, store: String, bucketCol: String,
         sortCols: Seq[String], dirtyFractionLimit: Double, lease: Lease)(
         full: => DataFrame, recompute: Seq[Long] => DataFrame): Boolean = {
-      val fs = fsOf(c.cd.sparkSession, store)
       val rebuild = !c.haveState || c.tooDirty(dirtyFractionLimit)
-      val dirty = c.dirty.getOrElse(Nil)
       val groups = groupCount(nBuckets)
-      lease.check(s"${new Path(store).getName}.mutate")
-      if (rebuild || dirty.nonEmpty) fs.delete(new Path(path), true)
-      if (rebuild) {
-        writeLaidOut(full, bucketCol, groups, sortCols, store)
-        swapWrite(c.cd, path, lease)
-        if (!c.haveState) writeMeta(fs)
-      } else if (dirty.nonEmpty) {
-        groupSurgery(store, recompute(dirty), bucketCol, dirty, groups,
-          sortCols, lease)
-        swapWrite(c.cd, path, lease)
+      mutate(c, store, rebuild, lease) {
+        if (rebuild) writeLaidOut(full, bucketCol, groups, sortCols, store)
+        else groupSurgery(store, recompute(c.dirty.get), bucketCol,
+          c.dirty.get, groups, sortCols, lease)
       }
       rebuild
     }

@@ -15,7 +15,8 @@ import graft.state.StateStore
 
 /** Stored-state commit points: a lease broken during the staging write
   * stops the swap before any rename, a stale witness staging copy is
-  * never promoted, a crash between the PQ books swap
+  * never promoted, a summary run that crashes after its terms swap
+  * leaves no witness, a crash between the PQ books swap
   * and its marker never serves mixed codebooks, and a multi-report store
   * that cannot be read fails the run instead of reporting nothing. */
 class CommitPointSpec extends AnyFunSuite with SparkSpec {
@@ -177,6 +178,39 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     val (healed, r) = run(t1)
     assert(r.rebuilt, "the deleted witness must force a rebuild")
     assert(totals(healed) == rows(t1.groupBy("check").agg(count(lit(1)).as("c"))))
+  }
+
+  test("multi-column summary: a run that crashes after the terms swap " +
+      "leaves no witness, so a re-run on the earlier inputs rebuilds") {
+    val stateDir = freshStateDir()
+    val checks = Seq("check" -> CompareMode.Numeric,
+      "alt" -> CompareMode.Fuzzy(1.0))
+    def twoCol(df: DataFrame) =
+      df.withColumn("alt", concat(coalesce(col("check"), lit("")), lit("!")))
+    val f = viaParquet(twoCol(randomKeyed(300, 150)))
+    val s0 = viaParquet(twoCol(randomKeyed(300, 150)))
+    def run(s: DataFrame) = IncrementalValidation.runMulti(f, s, checks,
+      stateDir, nBuckets = 32, dirtyFractionLimit = 1.0)
+    def byColumn(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    run(s0)
+    // a churned run swaps its terms in, then crashes before the witness
+    val s1 = viaParquet(churn(s0, salt = 11))
+    withHook {
+      case "state.stage" => throw new RuntimeException("crash at state.stage")
+      case _ => ()
+    } {
+      intercept[RuntimeException](run(s1))
+    }
+    // back on s0 (a rolled-back load): the old witness must not vouch
+    // for the churned run's terms
+    val (summary, r) = run(s0)
+    assert(byColumn(summary) ==
+      byColumn(Validator.summaryMulti(f, s0, checks)))
+    assert(r.rebuilt, s"without a witness the terms must rebuild: $r")
+    assert(byColumn(Validator.summaryMulti(f, s0, checks)) !=
+      byColumn(Validator.summaryMulti(f, s1, checks)),
+      "the churn must change the summary")
   }
 
   test("multi-column report: an unreadable stored report fails " +

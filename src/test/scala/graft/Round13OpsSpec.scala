@@ -490,11 +490,12 @@ class Round13OpsSpec extends AnyFunSuite with SparkSpec {
     for (mode <- Seq(CompareMode.Numeric, CompareMode.Fuzzy(0.7))) {
       val f = viaParquet(randomKeyed(300, 100))
       val s = viaParquet(randomKeyed(300, 100))
-      val terms = IncrementalValidation.perBucketTerms(f, s, mode, 32)
+      val terms = IncrementalValidation.perBucketTermsMulti(f, s,
+          Seq("check" -> mode), 32)
         .agg(metricCols.map(c => sum(c).as(c)).head,
           metricCols.map(c => sum(c).as(c)).tail: _*)
         .na.fill(0L)
-      // perBucketTerms excludes null-id rows; compare against summaryFast
+      // the terms exclude null-id rows; compare against summaryFast
       // over the null-id-free inputs
       val fNN = f.filter(col("id").isNotNull)
       val sNN = s.filter(col("id").isNotNull)

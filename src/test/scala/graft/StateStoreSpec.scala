@@ -149,6 +149,23 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
     assert(points(assert(!report(s1)._2.rebuilt)) == Seq("report.mutate",
       "report.renames", "report_digests.stage", "report_digests.swap"))
 
+    // churned summaries, single- and multi-check: the terms swap inside
+    // the witness cycle
+    val sumDir = freshDir()
+    def summary(s: DataFrame) = IncrementalValidation.run(f, s,
+      CompareMode.Numeric, sumDir, nBuckets = 32, dirtyFractionLimit = 1.0)
+    summary(s0)
+    val summaryPoints = Seq("terms.mutate", "terms.stage", "terms.swap",
+      "state.stage", "state.swap")
+    assert(points(assert(!summary(s1)._2.rebuilt)) == summaryPoints)
+    val multiDir = freshDir()
+    def alt(df: DataFrame) = df.withColumn("alt", upper(col("check")))
+    def multi(s: DataFrame) = IncrementalValidation.runMulti(alt(f), alt(s),
+      Seq("check" -> CompareMode.Numeric, "alt" -> CompareMode.Fuzzy(1.0)),
+      multiDir, nBuckets = 32, dirtyFractionLimit = 1.0)
+    multi(s0)
+    assert(points(assert(!multi(s1)._2.rebuilt)) == summaryPoints)
+
     // churned aggregate: the same surgery on the agg store
     val aggDir = freshDir()
     def agg(t: DataFrame) = IncrementalAgg.run(t, "id", Seq("check"),
