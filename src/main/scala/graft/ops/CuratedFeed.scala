@@ -50,15 +50,17 @@ import graft.state.StateStore
   *    EXTERNAL compaction manufactures that state anyway, the batch
   *    fails loudly instead of feeding sequences it cannot re-derive.
   *
-  * Inherited disciplines: single-writer lease around every store
-  * mutation; batch ids must arrive IN SEQUENCE (checked here BEFORE
-  * the seen store is touched — a gap folded into the seen history
-  * would mis-attribute first occurrences across the gap, so it throws
-  * up front, not at the feed); ownership — the co-located streaming
-  * checkpoint's query uuid is adopted on first append and a mismatch
-  * (reset checkpoint over kept state) throws: like the raw sequence
+  * Inherited disciplines: both stores run through the append-store
+  * cycle ([[graft.state.StateStore.AppendStore]]: lease, heal, stream
+  * owner, replay fence, fenced compaction). Composed on top: batch ids
+  * must arrive IN SEQUENCE (checked here BEFORE the seen store is
+  * touched — a gap folded into the seen history would mis-attribute
+  * first occurrences across the gap, so it throws up front, not at the
+  * feed); the stream owner is pinned for the composed feed too
+  * ([[graft.state.StateStore.pinStreamOwner]]): like the raw sequence
   * feed, arrival order IS sample identity, so curated state cannot be
-  * rebased — start a fresh `stateDir`.
+  * rebased — start a fresh `stateDir`; and the ledger row lands whole
+  * ([[graft.state.StateStore.landStaged]]).
   *
   * Scale shape (per batch, at any corpus size): the curation stages
   * are one expression pass over the batch, spread round-robin over the
@@ -187,17 +189,15 @@ object CuratedFeed {
     // ownership at the COMPOSED level (both stores sit behind it): a
     // reset checkpoint restarts batch ids, which over curated state is
     // unrecoverable in place — sample identity is arrival order
-    IncrementalAgg.streamIdentity(fs, stateDir).foreach { sid =>
-      StateStore.pinMarker(fs, ownerPath(stateDir), sid) { owner =>
-        new IllegalStateException(
-          s"curated feed at $stateDir was built by streaming query " +
-            s"$owner but this batch comes from query $sid — the " +
-            "checkpoint was reset while the state was kept. Batch ids " +
-            "are not comparable across query lifetimes and sample " +
-            "identity is arrival order, so the feed cannot be " +
-            "rebased; start a fresh stateDir (both stores remain " +
-            "readable).")
-      }
+    StateStore.pinStreamOwner(fs, stateDir, ownerPath(stateDir)) {
+      (owner, query) => new IllegalStateException(
+        s"curated feed at $stateDir was built by streaming query " +
+          s"$owner but this batch comes from query $query — the " +
+          "checkpoint was reset while the state was kept. Batch ids " +
+          "are not comparable across query lifetimes and sample " +
+          "identity is arrival order, so the feed cannot be " +
+          "rebased; start a fresh stateDir (both stores remain " +
+          "readable).")
     }
     // in-sequence check BEFORE any mutation: a gap folded into the seen
     // history would dedup the gap batch's later re-delivery against
@@ -269,32 +269,35 @@ object CuratedFeed {
     // novel (first occurrences), sequences cut. First delivery wins
     // (counts are deterministic, and a replay of a batch whose store
     // partition was since folded would see 0 cut rows); written AFTER
-    // both stores so a crash re-derives it with the batch. Every count
-    // is already paid for: rows_in / quality_kept were observed on the
-    // curation pass, decontaminated_kept counts the materialized slice,
-    // novel counts the materialized survivors and the cut total is
-    // carry-diffed (metadata-priced) — `writeLedger = false` opts out.
-    if (writeLedger) {
-      val lp = new org.apache.hadoop.fs.Path(ledgerPath(stateDir, batchId))
-      if (!fs.exists(lp)) {
-        import spark.implicits._
-        val observed = funnel.get
-        val rowsIn = observed("rows_in").asInstanceOf[Long]
-        val qualityKept = observed("quality_kept").asInstanceOf[Long]
-        val clearedKept =
-          if (benchmark.isDefined) cleared.count() else qualityKept
-        val novel = survivors.count()
-        val fd = feedDir(stateDir)
-        // the append already returned both carry totals (driver-side);
-        // only a fenced replay (None) re-reads the two carry files
-        val cut = carryTotals
-          .map { case (prevTotal, newTotal) => newTotal - prevTotal }
-          .getOrElse(SequenceFeed.carrySeqTotal(spark, fd, batchId) -
-            SequenceFeed.carrySeqTotal(spark, fd, batchId - 1))
+    // both stores so a crash re-derives it with the batch. It lands
+    // whole: staged beside `ledger/` (whose reader lists recursively)
+    // and renamed in, and a directory a crashed write left without
+    // data counts as absent. Every count is already paid for:
+    // rows_in / quality_kept were observed on the curation pass,
+    // decontaminated_kept counts the materialized slice, novel counts
+    // the materialized survivors and the cut total is carry-diffed
+    // (metadata-priced) — `writeLedger = false` opts out.
+    val lp = ledgerPath(stateDir, batchId)
+    if (writeLedger && !StateStore.storeHasData(fs, lp)) {
+      import spark.implicits._
+      val observed = funnel.get
+      val rowsIn = observed("rows_in").asInstanceOf[Long]
+      val qualityKept = observed("quality_kept").asInstanceOf[Long]
+      val clearedKept =
+        if (benchmark.isDefined) cleared.count() else qualityKept
+      val novel = survivors.count()
+      val fd = feedDir(stateDir)
+      // the append already returned both carry totals (driver-side);
+      // only a fenced replay (None) re-reads the two carry files
+      val cut = carryTotals
+        .map { case (prevTotal, newTotal) => newTotal - prevTotal }
+        .getOrElse(SequenceFeed.carrySeqTotal(spark, fd, batchId) -
+          SequenceFeed.carrySeqTotal(spark, fd, batchId - 1))
+      StateStore.landStaged(fs, s"$stateDir/ledger__staging", lp, ()) {
         Seq((batchId, rowsIn, qualityKept, clearedKept, novel, cut))
           .toDF("batch", "rows_in", "quality_kept", "decontaminated_kept",
             "novel_docs", "sequences_cut")
-          .coalesce(1).write.parquet(lp.toString)
+          .coalesce(1).write.parquet(_)
       }
     }
     // the feed fold is safe any time AFTER its own append: it only

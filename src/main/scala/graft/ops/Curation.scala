@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.ops.TextAnalysis.normalized
+import graft.state.StateStore
 
 /** Corpus-curation operators a training-data pipeline runs before
   * training: benchmark decontamination and PII redaction.
@@ -287,8 +288,8 @@ object Curation {
           // — see IncrementalAgg.APPEND_PHYS_PARTS)
           val touched = slice.select(col("__bucket")).distinct()
             .collect().map(_.getLong(0)) // <= nBuckets rows: metadata
-          val touchedGroups =
-            touched.map(IncrementalAgg.appendGroupOf).distinct
+          val touchedGroups = touched.map(
+            StateStore.groupOf(_, IncrementalAgg.APPEND_PHYS_PARTS)).distinct
           // explicit schema: only the fingerprint and the layout columns
           // are read, no inference job runs, and the partition levels
           // are typed LongType so the `__batch` / `__bgroup` predicates
@@ -299,7 +300,7 @@ object Curation {
             StructField("__batch", LongType),
             StructField("__bgroup", LongType)))
           val seen = spark.read.schema(historySchema)
-            .parquet(IncrementalAgg.appendStorePath(stateDir))
+            .parquet(IncrementalAgg.appendStore(stateDir).path)
             .filter(col("__batch") =!= batchId &&
               col("__bgroup").isin(touchedGroups.toSeq: _*) &&
               col("__bucket").isin(touched: _*))
@@ -313,18 +314,10 @@ object Curation {
         .withColumn("__n", lit(1L))
         .localCheckpoint(true)
     }
-    // the partial runs eagerly inside appendFold (touched-bucket collect
-    // + localCheckpoint), so the capture is set iff the fence let the
-    // batch through
-    var captured: Option[DataFrame] = None
-    val capturing = (slice: DataFrame) => {
-      val out = partial(slice)
-      captured = Some(out)
-      out
-    }
-    IncrementalAgg.appendFold(batch, batchId, stateDir, capturing, fpCol,
-      nBuckets)
-    captured.map(_.select(dataCols.map(col): _*))
+    // the partial's rows are materialized (localCheckpoint), so the
+    // survivors read nothing of the store they were written to
+    IncrementalAgg.appendFolded(batch, batchId, stateDir, partial, fpCol,
+      nBuckets).map(_.select(dataCols.map(col): _*))
   }
 
   /** The deduped corpus a [[seenAppend]] store holds — every surviving
@@ -348,13 +341,9 @@ object Curation {
     * key columns cost a schema read, so they are looked up only when a
     * fold is due — the per-batch check is one directory listing. */
   def maybeCompactSeenStore(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String, maxBatchParts: Int): Boolean = {
-    require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
-    val due = IncrementalAgg.batchPartitions(spark,
-      IncrementalAgg.appendStorePath(stateDir)).size > maxBatchParts
-    if (due) compactSeenStore(spark, stateDir)
-    due
-  }
+      stateDir: String, maxBatchParts: Int): Boolean =
+    IncrementalAgg.appendStore(stateDir).maybeCompact(spark, maxBatchParts)(
+      compactSeenStore(spark, stateDir))
 
   /** The stored data columns (compaction group keys): everything except
     * the `__n` fold column and the partition levels. None when the
@@ -363,7 +352,7 @@ object Curation {
       stateDir: String): Option[Seq[String]] =
     if (!IncrementalAgg.appendStoreHasData(spark, stateDir)) None
     else Some(spark.read
-      .parquet(IncrementalAgg.appendStorePath(stateDir))
+      .parquet(IncrementalAgg.appendStore(stateDir).path)
       .columns.toSeq
       .filterNot(Set("__n", "__batch", "__bucket", "__bgroup")))
 

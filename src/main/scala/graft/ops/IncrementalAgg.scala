@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -47,9 +47,13 @@ import graft.state.StateStore
   * only after, so a torn store can never read clean; the single-writer
   * lease guards every mutating run; a missing /
   * version-skewed / `aggKey`-mismatched state rebuilds wholesale (the
-  * safe direction). `aggKey` must encode the aggregate's identity AND
-  * parameters — two different aggregates pointed at one stateDir must
-  * never answer from each other's partials.
+  * safe direction). The append-only surfaces ([[appendFold]] and its
+  * compaction) run through the append-store cycle,
+  * [[graft.state.StateStore.AppendStore]]; what stays here is the
+  * legacy-layout migration and the rebase. `aggKey` must encode the
+  * aggregate's identity AND parameters — two different aggregates
+  * pointed at one stateDir must never answer from each other's
+  * partials.
   */
 object IncrementalAgg {
 
@@ -63,48 +67,33 @@ object IncrementalAgg {
 
   private def storePath(stateDir: String) = s"$stateDir/agg"
 
-  /** The append store's data path, for sibling operators whose PARTIAL
-    * must read the store itself (e.g. [[Curation.seenAppend]]'s novelty
-    * anti-join needs the raw `__batch`/`__bucket` partition columns the
-    * public [[readStore]] drops). Layout remains this object's. */
-  private[ops] def appendStorePath(stateDir: String): String =
-    storePath(stateDir)
+  /** The [[appendFold]] store at `stateDir` (the [[run]] store's path —
+    * a stateDir holds one or the other), whose append and compaction
+    * cycles are [[graft.state.StateStore.AppendStore]]'s. Sibling
+    * operators whose PARTIAL must read the store itself (e.g.
+    * [[Curation.seenAppend]]'s novelty anti-join needs the raw
+    * `__batch`/`__bucket` partition columns the public [[readStore]]
+    * drops) use its `path`; the layout remains this object's. */
+  private[ops] def appendStore(stateDir: String) =
+    new StateStore.AppendStore(stateDir, "agg", "agg_compact_watermark",
+      "agg_fence_owner", (owner, query) => new IllegalStateException(
+        s"append store at $stateDir was built by streaming query " +
+          s"$owner but this batch comes from query $query — the " +
+          "checkpoint was reset (or a different stream points " +
+          "here) while the store was kept; batch ids are not " +
+          "comparable across query lifetimes, so appending would " +
+          "silently lose or double-count data. To keep the store " +
+          "and feed it from a new stream, run " +
+          "IncrementalAgg.rebaseAppendStore first; to start over, " +
+          "delete the state directory."))
 
-  /** [[StateStore.storeHasData]] against the append store — the sibling-operator
-    * twin of [[appendStorePath]]. */
+  /** [[StateStore.storeHasData]] against the append store. */
   private[ops] def appendStoreHasData(spark: SparkSession,
       stateDir: String): Boolean =
     StateStore.storeHasData(StateStore.fsOf(spark, stateDir),
       storePath(stateDir))
   private def digestsPath(stateDir: String) = s"$stateDir/agg_digests"
   private def metaPath(stateDir: String) = s"$stateDir/meta"
-  private def watermarkPath(stateDir: String) = s"$stateDir/agg_compact_watermark"
-
-  /** Highest batch id COMPACTION has folded into the base partition
-    * (-1 when none) — the replay fence: a micro-batch whose store write
-    * committed but whose streaming checkpoint did not is replayed by
-    * Structured Streaming after restart, and if compaction ran in
-    * between, its `__batch=<id>` partitions no longer exist for the
-    * dynamic overwrite to replace — the replay would APPEND a second
-    * copy of already-folded counts. [[vocabAppend]] therefore skips any
-    * batch id at or below this watermark: the batch's counts are
-    * guaranteed present (folded into the base, or still in their own
-    * partitions if the fold's swap hasn't landed — the watermark is
-    * written BEFORE the swap, so it can only over-fence, never
-    * under-fence). */
-  private def readWatermark(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Long =
-    StateStore.readMarker(fs, watermarkPath(stateDir)).map(_.toLong)
-      .getOrElse(-1L)
-
-  private def writeWatermark(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String, value: Long): Unit =
-    // a crash inside writeMarker's delete+rename window only LOWERS the
-    // fence (no watermark / the old one) — replays then fall back to
-    // the dynamic-overwrite idempotency, which is still correct pre-swap
-    StateStore.writeMarker(fs, watermarkPath(stateDir), value.toString)
-
-  private def fenceOwnerPath(stateDir: String) = s"$stateDir/agg_fence_owner"
 
   // ---- append-store physical layout ----------------------------------
   // The APPEND store's directory grain is the bucket GROUP, not the
@@ -122,11 +111,14 @@ object IncrementalAgg {
   // count is a files-per-write bound, not a data-partitioning choice —
   // it does NOT need to scale with the corpus (file SIZES do, via the
   // writer's task count), so a constant is correct at every scale.
-  private[graft] val APPEND_PHYS_PARTS = 16L
-  private[graft] def appendGroup(bucket: Column): Column =
-    pmod(bucket, lit(APPEND_PHYS_PARTS))
-  private[graft] def appendGroupOf(bucket: Long): Long =
-    ((bucket % APPEND_PHYS_PARTS) + APPEND_PHYS_PARTS) % APPEND_PHYS_PARTS
+  private[graft] val APPEND_PHYS_PARTS = 16
+
+  /** Write `rows` (carrying `__bucket`) in the grouped append layout,
+    * as batch `batch` or, without one, each under its own `__batch`. */
+  private def writeAppend(rows: DataFrame, batch: Option[Long], path: String,
+      replace: Boolean): Unit =
+    StateStore.writeBatches(rows, batch, path, "__bucket",
+      Some(APPEND_PHYS_PARTS), replace)
 
   private def layoutPath(stateDir: String) = s"$stateDir/agg_layout"
   private val APPEND_LAYOUT_VERSION = "2"
@@ -146,30 +138,12 @@ object IncrementalAgg {
       return
     if (StateStore.storeHasData(fs, storePath(stateDir)))
       StateStore.swap(fs, storePath(stateDir), lease, ()) { tmp =>
-        spark.read.parquet(storePath(stateDir))
-          .withColumn("__bucket", col("__bucket").cast("long"))
-          .withColumn("__bgroup", appendGroup(col("__bucket")))
-          .repartition(col("__batch"), col("__bgroup"))
-          .sortWithinPartitions("__batch", "__bgroup", "__bucket")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("__batch", "__bgroup")
-          .parquet(tmp)
+        writeAppend(spark.read.parquet(storePath(stateDir))
+          .withColumn("__bucket", col("__bucket").cast("long")), None, tmp,
+          replace = false)
       }
     StateStore.writeMarker(fs, layoutPath(stateDir), APPEND_LAYOUT_VERSION)
   }
-
-  /** The streaming query that feeds this store, when one is co-located:
-    * Structured Streaming writes `{"id":"<uuid>"}` to `metadata` at the
-    * checkpoint root before any batch runs — stable across restarts of
-    * the SAME checkpoint, fresh when the checkpoint is reset. The
-    * [[graft.streaming.StreamingOps]] maintainers put the checkpoint at
-    * `{stateDir}/checkpoint`, so the identity is readable here without
-    * any API plumbing; direct batch callers have none. */
-  private[ops] def streamIdentity(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Option[String] =
-    StateStore.readMarker(fs, s"$stateDir/checkpoint/metadata").flatMap { s =>
-      """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
-    }
 
   /** Per-bucket single-table digests: (bucket, n, ha, hb). Map-side
     * combinable end to end; the two row hashes are independently salted
@@ -296,12 +270,10 @@ object IncrementalAgg {
     * touched buckets' partitions.
     *
     * Idempotent under Structured Streaming's at-least-once foreachBatch
-    * retries: partials land under a `__batch=<id>` partition level and
-    * the write is a DYNAMIC partition overwrite, so a replayed batch
-    * REPLACES its own partitions instead of double-counting — and a
-    * replay arriving AFTER a compaction folded the batch away (its
-    * partitions no longer exist to replace) is fenced by the compaction
-    * watermark: batch ids at or below it are skipped outright. The store
+    * retries: the append cycle ([[graft.state.StateStore.AppendStore]])
+    * lands partials under a `__batch=<id>` partition level that a
+    * replayed batch REPLACES, and skips a replay at or below the
+    * compaction's replay fence. The store
     * accumulates one partial row-set per batch (LSM-ish);
     * [[vocabFromStore]] sums across them and [[compactVocabStore]]
     * folds the store back to one row per (bucket, term) under the
@@ -327,90 +299,30 @@ object IncrementalAgg {
     * [[Indexing]]'s posting partial under
     * [[graft.streaming.StreamingOps.maintainIndex]] is the second
     * instance: CONTINUOUS index maintenance over an append-only
-    * document stream. */
+    * document stream. The cycle (lease, heal, stream-owner pin, replay
+    * fence, `agg.append`) is [[graft.state.StateStore.AppendStore]]'s;
+    * a stream-owner mismatch throws — recover with
+    * [[rebaseAppendStore]], the deliberate act. */
   def appendFold(batch: DataFrame, batchId: Long, stateDir: String,
       partial: DataFrame => DataFrame, idCol: String,
-      nBuckets: Int): Unit = {
+      nBuckets: Int): Unit =
+    appendFolded(batch, batchId, stateDir, partial, idCol, nBuckets)
+
+  /** [[appendFold]], returning the partial rows it appended; None when
+    * the replay fence skipped the batch. */
+  private[ops] def appendFolded(batch: DataFrame, batchId: Long,
+      stateDir: String, partial: DataFrame => DataFrame, idCol: String,
+      nBuckets: Int): Option[DataFrame] = {
     require(nBuckets > 0, "nBuckets must be positive")
-    require(batchId >= 0, "batch ids are non-negative (-1 is the base)")
-    // the append IS a store mutation: it must hold the same lease
-    // compaction takes, or a compact that staged its copy before this
-    // batch's partitions landed would swap them away (the streaming
-    // checkpoint has already recorded the batch — it never replays).
-    // Per-batch acquire/release: micro-batches are sequential within a
-    // query, and a concurrent compact now fails fast instead of racing.
-    val lease = StateStore.acquireLease(batch.sparkSession, stateDir)
-    try {
-      val wmFs = StateStore.fsOf(batch.sparkSession, stateDir)
-      // an append store cannot rebuild itself (the stream's past batches
-      // are gone from the source): heal a stranded compaction first
-      StateStore.heal(wmFs, storePath(stateDir))
-      ensureAppendLayout(batch.sparkSession, stateDir, lease)
-      // fence OWNERSHIP before the fence: batch ids are only comparable
-      // within ONE streaming query's lifetime. If the checkpoint was
-      // reset while the store was kept, ids restart at 0 — the fence
-      // would silently swallow real data and the dynamic overwrite
-      // would replace the OLD stream's same-numbered partitions. The
-      // co-located checkpoint's query uuid is the identity; a mismatch
-      // with the recorded owner fails LOUDLY (recover with
-      // [[rebaseAppendStore]], the deliberate act).
-      val streamId = streamIdentity(wmFs, stateDir)
-      val wm = readWatermark(wmFs, stateDir)
-      streamId.foreach { sid =>
-        val adopted = StateStore.pinMarker(wmFs, fenceOwnerPath(stateDir),
-            sid) { owner =>
-          new IllegalStateException(
-            s"append store at $stateDir was built by streaming query " +
-              s"$owner but this batch comes from query $sid — the " +
-              "checkpoint was reset (or a different stream points " +
-              "here) while the store was kept; batch ids are not " +
-              "comparable across query lifetimes, so appending would " +
-              "silently lose or double-count data. To keep the store " +
-              "and feed it from a new stream, run " +
-              "IncrementalAgg.rebaseAppendStore first; to start over, " +
-              "delete the state directory.")
-        }
-        if (adopted && wm >= 0)
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"adopted streaming query $sid as fence owner of the " +
-              s"existing append store at $stateDir (watermark $wm " +
-              "predates ownership tracking — earlier batches cannot " +
-              "be verified against this query's id space)")
-      }
-      // replay fence: a batch at or below the compaction watermark has
-      // already been FOLDED into the base partition — its own
-      // `__batch=<id>` partitions are gone, so the dynamic overwrite
-      // would append a second copy instead of replacing. Skip; the
-      // counts are provably present (see [[readWatermark]]).
-      if (batchId <= wm) {
-        if (streamId.isEmpty && wm >= 0)
-          // a direct batch caller has no verifiable identity — the skip
-          // is correct for a same-run replay but silent data loss if
-          // the caller restarted its own id sequence; say so
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"append store at $stateDir: skipping batch $batchId at or " +
-              s"below the compaction watermark $wm (no co-located " +
-              "streaming checkpoint to verify the caller's id space — " +
-              "if this batch is NOT a replay of the fenced one, its " +
-              "data is being dropped; rebaseAppendStore resets the " +
-              "fence for a new id sequence)")
-        return
-      }
-      val withB = batch.withColumn("__bucket",
-        IncrementalValidation.bucketOf(col(idCol), nBuckets))
-      // grouped physical layout: `__bucket` rides as a SORTED data
-      // column, directories are bucket groups (see APPEND_PHYS_PARTS)
-      val out = partial(withB)
-        .withColumn("__batch", lit(batchId))
-        .withColumn("__bgroup", appendGroup(col("__bucket")))
-        .repartition(col("__bgroup"))
-        .sortWithinPartitions("__bgroup", "__bucket")
-      lease.check("agg.append")
-      out.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__batch", "__bgroup")
-        .parquet(storePath(stateDir))
-    } finally lease.release()
+    val spark = batch.sparkSession
+    appendStore(stateDir).append(spark, batchId)(
+        (_, lease) => ensureAppendLayout(spark, stateDir, lease))(
+        partial(batch.withColumn("__bucket",
+          IncrementalValidation.bucketOf(col(idCol), nBuckets)))) {
+      (out, _) => writeAppend(out, Some(batchId), storePath(stateDir),
+        replace = true)
+      out
+    }
   }
 
   /** The current vocabulary from a store maintained by [[vocabAppend]]
@@ -437,13 +349,38 @@ object IncrementalAgg {
 
   /** Generic compaction for an [[appendFold]] store: fold back to ONE
     * row per (bucket, keyCols), under the reserved base batch -1 —
-    * call every K batches to bound read amplification. Same lease,
-    * replay watermark and renames-only swap
-    * ([[graft.state.StateStore.swap]]) as [[compactVocabStore]], which
-    * delegates here. */
+    * call every K batches to bound read amplification. The lease,
+    * replay fence and renames-only swap are the
+    * [[graft.state.StateStore.AppendStore]] compaction cycle's;
+    * [[compactVocabStore]] delegates here. */
   def compactAppendStore(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], valCol: String): Unit =
-    compactWith(spark, stateDir, keyCols, valCol)
+    appendStore(stateDir).compact(spark) { (_, lease) =>
+      ensureAppendLayout(spark, stateDir, lease)
+      // the fold keeps the partition layout (later appends land in
+      // __batch=K dirs next to the compacted __batch=-1)
+      val store = spark.read.parquet(storePath(stateDir))
+      // the fence: the highest batch id this fold consumes — monotone
+      // across compactions (an already-compacted store's max is the
+      // base -1, which never lowers a previous fence). Partition
+      // discovery infers `__batch=<k>` as INT: cast, or getLong throws
+      val maxBatch = store.agg(max(col("__batch").cast("long"))).head() match {
+        case r if r.isNullAt(0) => -1L
+        case r => r.getLong(0)
+      }
+      Some(maxBatch -> { tmp =>
+        writeAppend(store
+          .groupBy(("__bucket" +: keyCols).map(col): _*)
+          .agg(sum(col(valCol)).as(valCol))
+          // sum() widens (int -> long): cast back to the store's column
+          // type, or post-compaction batch appends would mix parquet
+          // physical types across files and break reads. Lossless for
+          // count stores (already long) and for fact stores (one row per
+          // key group — the "sum" IS the value)
+          .withColumn(valCol, col(valCol).cast(store.schema(valCol).dataType)),
+          Some(-1L), tmp, replace = false)
+      })
+    }((_, _) => ())
 
   /** Point a NEW streaming query (fresh checkpoint, batch ids restarting
     * at 0) at a KEPT append store — the deliberate recovery from the
@@ -467,7 +404,7 @@ object IncrementalAgg {
         "fold the keys away and destroy the store")
     val fs = StateStore.fsOf(spark, stateDir)
     if (StateStore.storeHasData(fs, storePath(stateDir)))
-      compactWith(spark, stateDir, keyCols, valCol)
+      compactAppendStore(spark, stateDir, keyCols, valCol)
     val lease = StateStore.acquireLease(spark, stateDir)
     try {
       // ORDER MATTERS across crash windows: the stale checkpoint dies
@@ -478,9 +415,7 @@ object IncrementalAgg {
       // marker throws, and the operator re-runs the rebase.
       fs.delete(new org.apache.hadoop.fs.Path(s"$stateDir/checkpoint"),
         true)
-      writeWatermark(fs, stateDir, -1L)
-      fs.delete(new org.apache.hadoop.fs.Path(fenceOwnerPath(stateDir)),
-        false)
+      appendStore(stateDir).disown(fs)
     } finally lease.release()
   }
 
@@ -490,86 +425,20 @@ object IncrementalAgg {
     * composed caller uses to compact only BELOW the batch it is about
     * to process (see [[graft.ops.CuratedFeed]]). */
   def maxStoredBatch(spark: SparkSession, stateDir: String): Long =
-    batchPartitions(spark, storePath(stateDir)).foldLeft(-1L)(math.max)
-
-  /** The batch ids a `__batch=`-partitioned store holds as their own
-    * partitions (the folded base `__batch=-1` excluded; empty when the
-    * store does not exist) — one driver-side directory listing. */
-  private[ops] def batchPartitions(spark: SparkSession,
-      storeDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(n => n.startsWith("__batch=") && n != "__batch=-1")
-      .map(_.stripPrefix("__batch=").toLong)
-  }
+    appendStore(stateDir).batches(spark).foldLeft(-1L)(math.max)
 
   /** Compact iff the store holds more than `maxBatchParts` batch
     * partitions — the generic [[maybeCompactVocabStore]]. */
   def maybeCompactAppendStore(spark: SparkSession, stateDir: String,
-      maxBatchParts: Int, keyCols: Seq[String], valCol: String): Boolean = {
-    require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
-    if (batchPartitions(spark, storePath(stateDir)).size > maxBatchParts) {
-      compactAppendStore(spark, stateDir, keyCols, valCol); true
-    } else false
-  }
+      maxBatchParts: Int, keyCols: Seq[String], valCol: String): Boolean =
+    appendStore(stateDir).maybeCompact(spark, maxBatchParts)(
+      compactAppendStore(spark, stateDir, keyCols, valCol))
 
   /** Fold the append-only store back to ONE row per (bucket, term),
     * stored under the reserved base batch -1 — call every K batches to
-    * bound read amplification. Takes the single-writer lease (it
-    * rewrites history a concurrent append could interleave with) and
-    * swap-writes, the same discipline as the batch state. */
+    * bound read amplification ([[compactAppendStore]]). */
   def compactVocabStore(spark: SparkSession, stateDir: String): Unit =
-    compactWith(spark, stateDir, Seq("term"), "n")
-
-  private def compactWith(spark: SparkSession, stateDir: String,
-      keyCols: Seq[String], valCol: String): Unit = {
-    val lease = StateStore.acquireLease(spark, stateDir)
-    try {
-      val fs = StateStore.fsOf(spark, stateDir)
-      StateStore.heal(fs, storePath(stateDir)) // a prior crash's stranded swap
-      ensureAppendLayout(spark, stateDir, lease)
-      // the fold keeps the partition layout (later appends land in
-      // __batch=K dirs next to the compacted __batch=-1) and swaps by
-      // renames only, so no crash point can truncate the history
-      val store = spark.read.parquet(storePath(stateDir))
-      // the replay fence: the highest batch id this fold consumes —
-      // monotone across compactions (an already-compacted store's max
-      // is the base -1, which never lowers a previous fence)
-      // partition discovery infers `__batch=<k>` directories as INT —
-      // cast, or getLong throws on the boxed Integer
-      val maxBatch = store.agg(max(col("__batch").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
-      // fence BEFORE the renames: if the crash lands between fence and
-      // swap, fenced batches' partitions still exist (over-fencing is
-      // safe — their counts remain present either way); fencing after
-      // the swap would leave a window where a replay re-appends
-      // already-folded counts
-      StateStore.swap(fs, storePath(stateDir), lease,
-          fence = if (maxBatch > readWatermark(fs, stateDir))
-            writeWatermark(fs, stateDir, maxBatch)) { tmp =>
-        store
-          .groupBy(("__bucket" +: keyCols).map(col): _*)
-          .agg(sum(col(valCol)).as(valCol))
-          // sum() widens (int -> long): cast back to the store's column
-          // type, or post-compaction batch appends would mix parquet
-          // physical types across files and break reads. Lossless for
-          // count stores (already long) and for fact stores (one row per
-          // key group — the "sum" IS the value)
-          .withColumn(valCol, col(valCol).cast(store.schema(valCol).dataType))
-          .withColumn("__batch", lit(-1L))
-          .withColumn("__bgroup", appendGroup(col("__bucket")))
-          .repartition(col("__bgroup"))
-          .sortWithinPartitions("__bgroup", "__bucket")
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("__batch", "__bgroup")
-          .parquet(tmp)
-      }
-    } finally lease.release()
-  }
+    compactAppendStore(spark, stateDir, Seq("term"), "n")
 
   /** Read-only access to a store maintained by [[run]] — the search-side
     * entry point for derived-index surfaces

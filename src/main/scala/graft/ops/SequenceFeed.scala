@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,21 +29,21 @@ import graft.state.StateStore
   *    always `complete = true` — the incomplete tail lives in the
   *    carry, never the store).
   *
-  * Discipline (the [[IncrementalAgg.appendFold]] family):
-  *  - single-writer lease around every mutation;
-  *  - batch ids must arrive IN SEQUENCE (`lastBatch + 1`): unlike a
-  *    summable fold, the cut is order-dependent, so a gap is an error,
-  *    not a skip;
+  * Discipline: the store's append and compaction cycles are
+  * [[graft.state.StateStore.AppendStore]]'s (lease, heal, stream-owner
+  * pin, replay fence, fenced compaction). What is the feed's own:
+  *  - the seqLen pin, and batch ids IN SEQUENCE (`lastBatch + 1`):
+  *    unlike a summable fold, the cut is order-dependent, so a gap is
+  *    an error, not a skip;
   *  - replays (batchId <= lastBatch) recompute from the RETAINED
-  *    carry of batchId-1 and dynamic-overwrite their own `__batch`
-  *    partition — byte-identical rows, at-least-once safe. A crash
-  *    between the store write and the carry write heals the same way:
+  *    carry of batchId-1 and replace their own `__batch` partition —
+  *    byte-identical rows, at-least-once safe. The carry lands whole
+  *    (staged, renamed in at the `carry.commit` point), so a crash
+  *    between the store write and the carry heals the same way:
   *    re-deliver the batch;
-  *  - fence ownership: batch ids are only comparable within one
-  *    streaming query's lifetime, so the co-located checkpoint's query
-  *    uuid is adopted on first append and a mismatch (reset checkpoint
-  *    over a kept feed) throws — recovery is a fresh stateDir (the
-  *    carry cannot be rebased: sequence identity IS the arrival order).
+  *  - a stream-owner mismatch (reset checkpoint over a kept feed)
+  *    cannot be rebased: recovery is a fresh stateDir (sequence
+  *    identity IS the arrival order).
   *
   * Scale: each batch pays one shard-keyed exchange of ITS OWN rows plus
   * a per-partition sweep with a constant-size buffer (the
@@ -56,9 +57,6 @@ object SequenceFeed {
   private def carryDir(stateDir: String) = s"$stateDir/carry"
   private def carryPath(stateDir: String, batchId: Long) =
     s"${carryDir(stateDir)}/batch=$batchId"
-  private def ownerPath(stateDir: String) = s"$stateDir/feed_owner"
-  private def watermarkPath(stateDir: String) =
-    s"$stateDir/feed_compact_watermark"
   private def seqLenPath(stateDir: String) = s"$stateDir/feed_seqlen"
   private def snapshotsDir(stateDir: String) = s"$stateDir/snapshots"
   private def snapshotPath(stateDir: String, snapId: Long) =
@@ -95,16 +93,40 @@ object SequenceFeed {
       last_doc: Long, token_ids: Array[Int], ids_sum: Long,
       docs: Array[Long])
 
+  /** The feed's sequence store. */
+  private def feedStore(stateDir: String) =
+    new StateStore.AppendStore(stateDir, "seqstore", "feed_compact_watermark",
+      "feed_owner", (owner, query) => new IllegalStateException(
+        s"sequence feed at $stateDir was built by streaming query " +
+          s"$owner but this batch comes from query $query — the " +
+          "checkpoint was reset while the feed was kept. Batch ids " +
+          "are not comparable across query lifetimes and the cut " +
+          "is arrival-order-dependent, so the feed cannot be " +
+          "rebased; start a fresh stateDir (the exported store " +
+          "remains readable)."))
+
   /** Highest batch id this feed has processed (-1 when none): the max
-    * retained carry. One driver-side directory listing. */
+    * retained carry that holds data — a carry a crashed write left
+    * without data is not a landed batch. One driver-side directory
+    * listing, plus one of that carry. */
   def lastBatch(spark: SparkSession, stateDir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(carryDir(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .map(_.stripPrefix("batch=").toLong)
-      .foldLeft(-1L)(math.max)
+    val fs = StateStore.fsOf(spark, stateDir)
+    StateStore.listIds(fs, carryDir(stateDir), "batch").sorted.reverseIterator
+      .find(b => StateStore.storeHasData(fs, carryPath(stateDir, b)))
+      .getOrElse(-1L)
+  }
+
+  /** The carry after batch `batchId`, read with its explicit schema (no
+    * inference job). A carry directory without data is a torn write: it
+    * throws, where reading it as empty would restart every shard's
+    * `seq_id`. */
+  private def readCarry(spark: SparkSession, stateDir: String,
+      batchId: Long): DataFrame = {
+    val p = carryPath(stateDir, batchId)
+    if (!StateStore.storeHasData(StateStore.fsOf(spark, stateDir), p))
+      throw new IllegalStateException(s"the carry at $p holds no data " +
+        s"(a torn write); deliver batch $batchId again")
+    spark.read.schema(carrySchema).parquet(p)
   }
 
   /** Append one batch of encoded documents to the feed. `enc` carries
@@ -117,28 +139,9 @@ object SequenceFeed {
       shardCol: String, orderCol: String, idCol: String, idsCol: String,
       seqLen: Int): Option[(Long, Long)] = {
     require(seqLen > 0, "seqLen must be positive")
-    require(batchId >= 0, "batch ids are non-negative")
     val spark = enc.sparkSession
     import spark.implicits._
-    val lease = StateStore.acquireLease(spark, stateDir)
-    try {
-      val fs = StateStore.fsOf(spark, stateDir)
-      StateStore.heal(fs, storePath(stateDir))
-      // fence ownership (the IncrementalAgg discipline): a reset
-      // checkpoint restarts batch ids — over an order-dependent feed
-      // that is unrecoverable in place, so it must throw, never skip
-      IncrementalAgg.streamIdentity(fs, stateDir).foreach { sid =>
-        StateStore.pinMarker(fs, ownerPath(stateDir), sid) { owner =>
-          new IllegalStateException(
-            s"sequence feed at $stateDir was built by streaming query " +
-              s"$owner but this batch comes from query $sid — the " +
-              "checkpoint was reset while the feed was kept. Batch ids " +
-              "are not comparable across query lifetimes and the cut " +
-              "is arrival-order-dependent, so the feed cannot be " +
-              "rebased; start a fresh stateDir (the exported store " +
-              "remains readable).")
-        }
-      }
+    feedStore(stateDir).append(spark, batchId) { (fs, _) =>
       // sequence-length guard: the store's rows are seqLen-token facts
       // and the carry's buffer is mid-cut at that length, so a changed
       // seqLen mid-feed would silently mix row lengths in one store and
@@ -156,19 +159,15 @@ object SequenceFeed {
         s"batch $batchId arrived over a feed at batch $last — a GAP in " +
           "an order-dependent feed loses stream content; deliver " +
           s"batch ${last + 1} first")
-      // compaction replay fence: a batch at or below the watermark was
-      // FOLDED into the base partition — a replay's dynamic overwrite
-      // would create a second copy next to it. Its rows are provably
-      // present: the fold only ever covers batches whose carry landed
-      // (see [[compactFeedStore]]), so everything fenced completed its
-      // full append. Skip.
-      if (batchId <= readWatermark(fs, stateDir)) return None
+      // a batch at or below the replay fence is skipped by the cycle:
+      // its rows are present, since the fold only ever covers batches
+      // whose carry landed (see [[compactFeedStore]])
+    } {
       // replay or first delivery: either way the cut derives from the
       // carry BEFORE this batch, which is always retained
       val prev: Map[Long, Carry] =
         if (batchId == 0) Map.empty
-        else spark.read.schema(carrySchema)
-          .parquet(carryPath(stateDir, batchId - 1))
+        else readCarry(spark, stateDir, batchId - 1)
           .as[Carry].collect().map(c => c.shard -> c).toMap
       val bc = spark.sparkContext.broadcast(prev)
       val cut = enc
@@ -246,17 +245,14 @@ object SequenceFeed {
             override def next(): SweepRow = { advance(); pending.dequeue() }
           }
         }
-        .persist()
+      (prev, cut)
+    } { case ((prev, cut), lease) =>
+      cut.persist()
       try {
-        lease.check("seqstore.append")
-        cut.filter(!col("is_carry")).drop("is_carry", "docs")
-          .withColumn("__batch", lit(batchId))
-          .withColumn("__bucket", col("shard"))
-          .repartition(col("__bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__batch", "__bucket")
-          .parquet(storePath(stateDir))
+        StateStore.writeBatches(cut.filter(!col("is_carry"))
+          .drop("is_carry", "docs").withColumn("__bucket", col("shard")),
+          Some(batchId), storePath(stateDir), "__bucket", None,
+          replace = true)
         // the new carry: shards touched this batch take their fresh
         // tail; untouched shards carry the previous one forward —
         // nShards rows, driver-merged (metadata-sized by contract)
@@ -266,22 +262,19 @@ object SequenceFeed {
         val freshShards = fresh.map(_.shard).toSet
         val rows = fresh.toSeq ++
           prev.view.filterKeys(s => !freshShards.contains(s)).values.toSeq
-        spark.createDataset(rows).coalesce(1)
-          .write.mode(SaveMode.Overwrite)
-          .parquet(carryPath(stateDir, batchId))
+        val target = carryPath(stateDir, batchId)
+        StateStore.landStaged(StateStore.fsOf(spark, stateDir),
+            target + "__staging", target, lease.check("carry.commit")) {
+          spark.createDataset(rows).coalesce(1)
+            .write.mode(SaveMode.Overwrite).parquet(_)
+        }
         // both carry totals are already on the driver — return them so a
         // composed caller (the curated feed's ledger) can price the
         // batch's cut without re-reading two carry files
-        Some((prev.values.map(_.next_seq).sum,
-          rows.map(_.next_seq).sum))
+        (prev.values.map(_.next_seq).sum, rows.map(_.next_seq).sum)
       } finally cut.unpersist()
-    } finally lease.release()
+    }
   }
-
-  private def readWatermark(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String): Long =
-    StateStore.readMarker(fs, watermarkPath(stateDir)).map(_.toLong)
-      .getOrElse(-1L)
 
   /** Fold batch partitions into the base (`__batch=-1`) — the
     * read-amplification bound for a LONG-RUNNING feed (a month of
@@ -301,53 +294,33 @@ object SequenceFeed {
     * PRUNED — they can never be read again (fenced replays skip
     * without recomputing), and without pruning the per-append
     * `lastBatch` listing would grow with feed age forever. */
-  def compactFeedStore(spark: SparkSession, stateDir: String): Unit = {
-    val lease = StateStore.acquireLease(spark, stateDir)
-    try {
-      val fs = StateStore.fsOf(spark, stateDir)
-      StateStore.heal(fs, storePath(stateDir)) // a prior crash's stranded swap
-      if (!fs.exists(new org.apache.hadoop.fs.Path(storePath(stateDir))))
-        return
+  def compactFeedStore(spark: SparkSession, stateDir: String): Unit =
+    feedStore(stateDir).compact(spark) { (fs, _) =>
       val lastCarried = lastBatch(spark, stateDir)
-      if (lastCarried < 0) return
-      StateStore.swap(fs, storePath(stateDir), lease,
-          fence = if (lastCarried > readWatermark(fs, stateDir))
-            StateStore.writeMarker(fs, watermarkPath(stateDir),
-              lastCarried.toString)) { tmp =>
-        spark.read.parquet(storePath(stateDir))
+      if (!fs.exists(new Path(storePath(stateDir))) || lastCarried < 0) None
+      else Some(lastCarried -> { tmp =>
+        StateStore.writeBatches(spark.read.parquet(storePath(stateDir))
           .withColumn("__batch",
             when(col("__batch").cast("long") <= lastCarried, lit(-1L))
-              .otherwise(col("__batch").cast("long")))
-          .repartition(col("__bucket"))
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy("__batch", "__bucket")
-          .parquet(tmp)
-      }
+              .otherwise(col("__batch").cast("long"))),
+          None, tmp, "__bucket", None, replace = false)
+      })
+    } { (fs, lastCarried) =>
       // prune dead carries: a fenced batch never recomputes, so only
       // carry(lastCarried) (the next batch's seed / replay base) and
       // above can ever be read again
-      val cd = new org.apache.hadoop.fs.Path(carryDir(stateDir))
-      if (fs.exists(cd))
-        fs.listStatus(cd).foreach { st =>
-          val n = st.getPath.getName
-          if (n.startsWith("batch=") &&
-              n.stripPrefix("batch=").toLong < lastCarried)
-            fs.delete(st.getPath, true)
-        }
-    } finally lease.release()
-  }
+      StateStore.listIds(fs, carryDir(stateDir), "batch")
+        .filter(_ < lastCarried)
+        .foreach(b => fs.delete(new Path(carryPath(stateDir, b)), true))
+    }
 
   /** Compact iff more than `maxBatchParts` batch partitions have
     * accumulated (the base `__batch=-1` does not count) — one
     * driver-side listing per call; see INCREMENTAL.md for sizing. */
   def maybeCompactFeedStore(spark: SparkSession, stateDir: String,
-      maxBatchParts: Int): Boolean = {
-    require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
-    if (IncrementalAgg.batchPartitions(spark, storePath(stateDir)).size >
-        maxBatchParts) {
-      compactFeedStore(spark, stateDir); true
-    } else false
-  }
+      maxBatchParts: Int): Boolean =
+    feedStore(stateDir).maybeCompact(spark, maxBatchParts)(
+      compactFeedStore(spark, stateDir))
 
   /** Every COMPLETE sequence the feed has cut so far, the
     * [[Chunking.fixedSequences]] row shape minus the
@@ -406,7 +379,7 @@ object SequenceFeed {
     import spark.implicits._
     val last = lastBatch(spark, stateDir)
     if (last < 0) Seq.empty[Carry].toDF()
-    else spark.read.parquet(carryPath(stateDir, last))
+    else readCarry(spark, stateDir, last)
   }
 
   /** PUBLISH A TRAINING SNAPSHOT — a frozen, named row set over the
@@ -436,33 +409,26 @@ object SequenceFeed {
       val last = lastBatch(spark, stateDir)
       require(last >= 0,
         s"nothing to publish at $stateDir — the feed has no batches")
-      val fin = new org.apache.hadoop.fs.Path(snapshotPath(stateDir, last))
-      val fs = fin.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(fin)) return last // idempotent republication
-      val tmp = new org.apache.hadoop.fs.Path(
-        fin.getParent, fin.getName + "__staging")
-      if (fs.exists(tmp)) fs.delete(tmp, true)
-      spark.read.parquet(carryPath(stateDir, last))
-        .select(col("shard"), col("next_seq").as("hwm"))
-        .coalesce(1)
-        .write.parquet(tmp.toString)
-      lease.check("snapshots.publish")
+      val fin = snapshotPath(stateDir, last)
+      val fs = StateStore.fsOf(spark, stateDir)
+      if (fs.exists(new Path(fin))) return last // idempotent republication
       // readers probe for the final directory: the rename is the commit,
       // so a crashed publish leaves only ignorable staging garbage
-      StateStore.mustRename(fs, tmp, fin)
+      StateStore.landStaged(fs, fin + "__staging", fin,
+          lease.check("snapshots.publish")) {
+        readCarry(spark, stateDir, last)
+          .select(col("shard"), col("next_seq").as("hwm"))
+          .coalesce(1)
+          .write.parquet(_)
+      }
       last
     } finally lease.release()
   }
 
   /** Published snapshot ids, ascending. One directory listing. */
-  def listSnapshots(spark: SparkSession, stateDir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(snapshotsDir(stateDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(n => n.startsWith("snap=") && !n.endsWith("__staging"))
-      .map(_.stripPrefix("snap=").toLong).sorted.toSeq
-  }
+  def listSnapshots(spark: SparkSession, stateDir: String): Seq[Long] =
+    StateStore.listIds(StateStore.fsOf(spark, stateDir),
+      snapshotsDir(stateDir), "snap").sorted
 
   /** Total complete rows cut through batch `batchId` — the sum of the
     * carry's `next_seq` marks (exact by the sweep's construction).
@@ -472,11 +438,9 @@ object SequenceFeed {
     * batch without scanning the store. */
   private[ops] def carrySeqTotal(spark: SparkSession, stateDir: String,
       batchId: Long): Long = {
-    if (batchId < 0) return 0L
-    val p = new org.apache.hadoop.fs.Path(carryPath(stateDir, batchId))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 0L
-    else spark.read.schema(carrySchema).parquet(p.toString)
+    if (batchId < 0 || !StateStore.fsOf(spark, stateDir).exists(
+        new Path(carryPath(stateDir, batchId)))) 0L
+    else readCarry(spark, stateDir, batchId)
       .agg(coalesce(sum(col("next_seq")), lit(0L))).head().getLong(0)
   }
 
@@ -495,7 +459,7 @@ object SequenceFeed {
     val (shards, total) =
       if (last < 0) (0L, 0L)
       else {
-        val c = spark.read.parquet(carryPath(stateDir, last))
+        val c = readCarry(spark, stateDir, last)
           .agg(count(lit(1)), coalesce(sum(col("next_seq")), lit(0L)))
           .head()
         (c.getLong(0), c.getLong(1))
@@ -504,8 +468,8 @@ object SequenceFeed {
     Seq((last,
         StateStore.readMarker(fs, seqLenPath(stateDir))
           .map(_.toInt).getOrElse(-1),
-        StateStore.readMarker(fs, ownerPath(stateDir)).orNull,
-        readWatermark(fs, stateDir),
+        feedStore(stateDir).owner(fs).orNull,
+        feedStore(stateDir).fence(fs),
         shards, total, snaps.size.toLong,
         if (snaps.isEmpty) -1L else snaps.last))
       .toDF("last_batch", "seq_len", "owner", "compact_fence",
@@ -521,14 +485,13 @@ object SequenceFeed {
     * drop at the join. */
   def readSnapshot(spark: SparkSession, stateDir: String,
       snapId: Long): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(snapshotPath(stateDir, snapId))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(p), {
+    val p = snapshotPath(stateDir, snapId)
+    require(StateStore.fsOf(spark, p).exists(new Path(p)), {
       val avail = listSnapshots(spark, stateDir)
       s"no snapshot $snapId at $stateDir — published: " +
         (if (avail.isEmpty) "none" else avail.mkString(", "))
     })
-    val hwm = spark.read.parquet(p.toString)
+    val hwm = spark.read.parquet(p)
     sequencesFromStore(spark, stateDir)
       .join(broadcast(hwm), Seq("shard"))
       .filter(col("seq_id") < col("hwm"))

@@ -3,7 +3,7 @@ package graft.state
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -12,8 +12,10 @@ import graft.core.IncrementalValidation.IncrementalReport
 /** The stored-state primitives every incremental surface is built on:
   * the single-writer lease, marker files, the state-identity meta, the
   * renames-only swap and its heal, the grouped `__bgroup` layout with
-  * its group surgery, and the digest witness that guards a store: the
-  * driver-side compare and the maintenance cycle around it.
+  * its group surgery, the digest witness that guards a store (the
+  * driver-side compare and the maintenance cycle around it), and the
+  * append-store cycle: replay fence, stream-owner pin, batch listing,
+  * `__batch` layout writer and fenced compaction.
   *
   * Surfaces decide WHAT they store; this object decides how a store
   * changes on disk, so the crash discipline is written once.
@@ -166,22 +168,51 @@ object StateStore {
       case None => writeMarker(fs, path, value); true
     }
 
-  /** Does the store hold at least one data file? An empty-table
-    * maintenance pass writes only markers (_SUCCESS), which parquet
-    * cannot infer a schema from — only that case may read as empty;
-    * any OTHER read failure (corrupt footer, transient FS error) must
-    * PROPAGATE, not silently answer empty. */
+  /** Does the store hold at least one file a reader reads? An
+    * empty-table maintenance pass writes only markers (_SUCCESS), and a
+    * crashed write leaves its files under `_temporary` — neither can a
+    * reader see, so only those cases may read as empty; any OTHER read
+    * failure (corrupt footer, transient FS error) must PROPAGATE, not
+    * silently answer empty. */
   private[graft] def storeHasData(fs: FileSystem, path: String): Boolean = {
-    val p = new Path(path)
-    fs.exists(p) && {
-      val it = fs.listFiles(p, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val name = it.next().getPath.getName
-        if (!name.startsWith("_") && !name.startsWith(".")) found = true
-      }
-      found
+    // Spark's file index skips these names, files or directories: a
+    // writer's `_temporary` and `.spark-staging-*` trees, `_SUCCESS`,
+    // checksums; `__batch=…`-style partition directories are read
+    def holds(p: Path): Boolean = fs.listStatus(p).exists { st =>
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
+        (!st.isDirectory || holds(st.getPath))
     }
+    val p = new Path(path)
+    fs.exists(p) && holds(p)
+  }
+
+  /** The ids of the `<prefix>=<id>` entries directly under `dir` (none
+    * when it does not exist) — one driver-side listing. A name whose id
+    * part is not a number (a staging copy) is not an id. */
+  private[graft] def listIds(fs: FileSystem, dir: String,
+      prefix: String): Seq[Long] = {
+    val p = new Path(dir)
+    if (!fs.exists(p)) Seq.empty
+    else fs.listStatus(p).toSeq.map(_.getPath.getName)
+      .filter(_.startsWith(prefix + "="))
+      .flatMap(_.stripPrefix(prefix + "=").toLongOption)
+  }
+
+  /** Land a small per-batch artifact whole: `stage` writes it at
+    * `staging` (a path no reader lists), `commit` runs — the caller's
+    * lease check — and the staged copy then replaces `target` by
+    * rename. A crash leaves at most the staging copy, never a torn
+    * `target`; the next attempt discards it. */
+  private[graft] def landStaged(fs: FileSystem, staging: String,
+      target: String, commit: => Unit)(stage: String => Unit): Unit = {
+    val (s, t) = (new Path(staging), new Path(target))
+    if (fs.exists(s)) fs.delete(s, true)
+    stage(staging)
+    commit
+    if (fs.exists(t)) fs.delete(t, true)
+    fs.mkdirs(t.getParent)
+    mustRename(fs, s, t)
   }
 
   // ---- state identity ---------------------------------------------------
@@ -291,12 +322,16 @@ object StateStore {
   private[graft] def groupOf(bucket: Long, groups: Int): Long =
     ((bucket % groups) + groups) % groups
 
+  /** [[groupOf]] of the `bucketCol` column. */
+  private def groupCol(bucketCol: String, groups: Int): Column =
+    pmod(col(bucketCol), lit(groups.toLong))
+
   /** Write `rows` at `path` in the grouped layout: one file per group
     * directory, rows sorted by (group, bucket, `sortCols`) so per-bucket
     * reads and any `sortCols` filter prune on row-group min/max stats. */
   private def writeLaidOut(rows: DataFrame, bucketCol: String,
       groups: Int, sortCols: Seq[String], path: String): Unit =
-    rows.withColumn("__bgroup", pmod(col(bucketCol), lit(groups.toLong)))
+    rows.withColumn("__bgroup", groupCol(bucketCol, groups))
       .repartition(col("__bgroup"))
       .sortWithinPartitions(
         (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*)
@@ -471,4 +506,171 @@ object StateStore {
       rebuild
     }
   }
+
+  // ---- append stores ----------------------------------------------------
+
+  /** Write `rows` in an append store's layout at `path`:
+    * `__batch=<id>/<level>=<v>` directories, one file each. `batch`
+    * stamps every row with one batch id; without it each row carries
+    * its own `__batch`. With `groups` the level is `__bgroup`, the bucket
+    * group of `bucketCol` ([[groupOf]]), and the bucket rides along as a
+    * sorted data column; without, `bucketCol` itself is the level.
+    * `replace` overwrites only the batches `rows` hold, so a replayed
+    * batch replaces its own partitions; otherwise `path` is written
+    * whole. */
+  private[graft] def writeBatches(rows: DataFrame, batch: Option[Long],
+      path: String, bucketCol: String, groups: Option[Int],
+      replace: Boolean): Unit = {
+    val level = if (groups.isDefined) "__bgroup" else bucketCol
+    val stamped = batch.fold(rows)(b => rows.withColumn("__batch", lit(b)))
+    // a stamped id is a literal, which the writer's required ordering
+    // skips: sorting by it too would make the writer re-sort by the
+    // group alone and lose the bucket order
+    val sortCols = batch.fold(Seq("__batch"))(_ => Nil) :+ "__bgroup" :+
+      bucketCol
+    val w = groups.fold(stamped.repartition(col(level)))(g =>
+      stamped.withColumn("__bgroup", groupCol(bucketCol, g))
+        .repartition(col("__bgroup"))
+        .sortWithinPartitions(sortCols.map(col): _*))
+      .write.mode(SaveMode.Overwrite)
+    (if (replace) w.option("partitionOverwriteMode", "dynamic") else w)
+      .partitionBy("__batch", level).parquet(path)
+  }
+
+  /** Pin the streaming query writing into `stateDir` as the owner the
+    * `marker` file records. The query's identity: Structured Streaming
+    * writes `{"id":"<uuid>"}` to `metadata` at the checkpoint root before
+    * any batch runs — stable across restarts of the SAME checkpoint,
+    * fresh when it is reset — and the streaming maintainers put the
+    * checkpoint at `{stateDir}/checkpoint`. Batch ids are only comparable
+    * within one query's lifetime: if the checkpoint was reset while the
+    * state was kept, ids restart at 0, so a different recorded owner
+    * throws `foreign(owner, query)`. Returns the query id and whether
+    * this call adopted it; None for a direct batch caller, which has no
+    * checkpoint and so no identity. */
+  private[graft] def pinStreamOwner(fs: FileSystem, stateDir: String,
+      marker: String)(
+      foreign: (String, String) => Exception): Option[(String, Boolean)] =
+    readMarker(fs, s"$stateDir/checkpoint/metadata")
+      .flatMap(""""id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(_))
+      .map(_.group(1))
+      .map(id => id -> pinMarker(fs, marker, id)(foreign(_, id)))
+
+  /** An APPEND-ONLY store at `stateDir/<name>`: one `__batch=<id>`
+    * partition per delivered batch, plus the base `__batch=-1` that
+    * compaction folds them into. It cannot rebuild itself (the stream's
+    * past batches are gone from the source), so every writer [[heal]]s
+    * it first. Beside it sit the replay-fence marker `fenceName` and the
+    * stream-owner marker `ownerName` ([[pinStreamOwner]], thrown as
+    * `foreign`). */
+  private[graft] final class AppendStore(stateDir: String, name: String,
+      fenceName: String, ownerName: String,
+      foreign: (String, String) => Exception) {
+    val path: String = s"$stateDir/$name"
+    private def fencePath = s"$stateDir/$fenceName"
+    private def ownerPath = s"$stateDir/$ownerName"
+
+    /** The replay fence: the highest batch id a compaction folded into
+      * the base, -1 when none. A batch whose store write committed but
+      * whose streaming checkpoint did not is replayed after a restart;
+      * once folded, its own partitions no longer exist for the replay
+      * to replace, so [[append]] skips any batch at or below the fence.
+      * Its rows are present: folded, or still in their own partitions
+      * (the fence is written before the fold's renames, so it can only
+      * over-fence). */
+    def fence(fs: FileSystem): Long =
+      readMarker(fs, fencePath).map(_.toLong).getOrElse(-1L)
+
+    /** The recorded stream owner; None for a direct batch caller's. */
+    def owner(fs: FileSystem): Option[String] = readMarker(fs, ownerPath)
+
+    /** Reset the fence to -1 and forget the owner, so a new batch-id
+      * sequence can feed the store. A crash between the two leaves the
+      * old owner pinned: the new stream throws and the caller re-runs. */
+    def disown(fs: FileSystem): Unit = {
+      writeMarker(fs, fencePath, "-1")
+      fs.delete(new Path(ownerPath), false)
+    }
+
+    /** The batch ids held as their own partitions, the base excluded. */
+    def batches(spark: SparkSession): Seq[Long] =
+      listIds(fsOf(spark, stateDir), path, "__batch").filter(_ >= 0)
+
+    /** The compaction policy: run `compact` iff more than `maxBatchParts`
+      * batch partitions have accumulated — one directory listing.
+      * Returns whether it ran. */
+    def maybeCompact(spark: SparkSession, maxBatchParts: Int)(
+        compact: => Unit): Boolean = {
+      require(maxBatchParts >= 1, "maxBatchParts must be >= 1")
+      val due = batches(spark).size > maxBatchParts
+      if (due) compact
+      due
+    }
+
+    /** The append cycle for batch `batchId`: take the lease (a
+      * compaction staged before this batch landed would otherwise swap
+      * it away), heal, pin the stream owner, run the surface's `admit`
+      * checks, and skip the batch (None) at or below the fence.
+      * Otherwise `compute` its rows, check the lease at `<name>.append`
+      * and `write` them — through [[writeBatches]]' `replace`, so a
+      * replay replaces its own partitions instead of double-counting. */
+    def append[A, T](spark: SparkSession, batchId: Long)(
+        admit: (FileSystem, Lease) => Unit)(compute: => A)(
+        write: (A, Lease) => T): Option[T] = {
+      require(batchId >= 0, "batch ids are non-negative (-1 is the base)")
+      val lease = acquireLease(spark, stateDir)
+      try {
+        val fs = fsOf(spark, stateDir)
+        heal(fs, path)
+        val wm = fence(fs)
+        val query = pinStreamOwner(fs, stateDir, ownerPath)(foreign)
+        for ((id, adopted) <- query if adopted && wm >= 0)
+          log.warn(s"adopted streaming query $id as owner of the append " +
+            s"store at $path: its fence $wm predates ownership tracking")
+        admit(fs, lease)
+        if (batchId > wm) {
+          val rows = compute
+          lease.check(s"$name.append")
+          Some(write(rows, lease))
+        } else {
+          // a direct batch caller has no verifiable identity: the skip
+          // is right for a replay but loses data if the caller restarted
+          // its own id sequence — say so
+          if (query.isEmpty)
+            log.warn(s"append store at $path: skipping batch $batchId at " +
+              s"or below the replay fence $wm; unless it replays a folded " +
+              "batch, its data is being dropped")
+          None
+        }
+      } finally lease.release()
+    }
+
+    /** The compaction cycle: take the lease, heal, and let `plan` choose
+      * the fold — the highest batch id it consumes and the write that
+      * stages the folded store — then [[swap]] it in with the fence
+      * raised to that id BEFORE the renames. A crash between the two
+      * over-fences, which is safe (the folded rows are present either
+      * way); fencing after the swap would leave a window where a replay
+      * re-appends folded rows. `plan` answering None leaves the store
+      * as it is; `after` runs under the same lease once the fold is in,
+      * given the fold's id. Commit points `<name>.stage` and
+      * `<name>.swap`. */
+    def compact(spark: SparkSession)(
+        plan: (FileSystem, Lease) => Option[(Long, String => Unit)])(
+        after: (FileSystem, Long) => Unit): Unit = {
+      val lease = acquireLease(spark, stateDir)
+      try {
+        val fs = fsOf(spark, stateDir)
+        heal(fs, path)
+        plan(fs, lease).foreach { case (upTo, fold) =>
+          swap(fs, path, lease, fence =
+            if (upTo > fence(fs)) writeMarker(fs, fencePath, upTo.toString))(
+            fold)
+          after(fs, upTo)
+        }
+      } finally lease.release()
+    }
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 }

@@ -624,18 +624,11 @@ object StreamingOps {
       idCol: String = "doc_id", textCol: String = "text",
       maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.IncrementalAgg.vocabAppend(batch, batchId, stateDir,
-          idCol, textCol, nBuckets)
-        if (maxBatchParts > 0)
-          graft.ops.IncrementalAgg.maybeCompactVocabStore(
-            batch.sparkSession, stateDir, maxBatchParts)
-        ()
-      }
-      .start()
+    maintained(docs, stateDir, maxBatchParts)(
+      graft.ops.IncrementalAgg.vocabAppend(_, _, stateDir, idCol, textCol,
+        nBuckets))(
+      graft.ops.IncrementalAgg.maybeCompactVocabStore(_, stateDir,
+        maxBatchParts))
 
   /** CONTINUOUS inverted-index maintenance: fold an APPEND-ONLY document
     * stream into an [[graft.ops.Indexing.searchIndexIncremental]]-servable
@@ -658,20 +651,12 @@ object StreamingOps {
       idCol: String = "doc_id", textCol: String = "text",
       maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.IncrementalAgg.appendFold(batch, batchId, stateDir,
-          graft.ops.Indexing.postingsPartial(idCol, textCol), idCol,
-          nBuckets)
-        if (maxBatchParts > 0)
-          graft.ops.IncrementalAgg.maybeCompactAppendStore(
-            batch.sparkSession, stateDir, maxBatchParts,
-            Seq("term", "__id"), "tf")
-        ()
-      }
-      .start()
+    maintained(docs, stateDir, maxBatchParts)(
+      graft.ops.IncrementalAgg.appendFold(_, _, stateDir,
+        graft.ops.Indexing.postingsPartial(idCol, textCol), idCol,
+        nBuckets))(
+      graft.ops.IncrementalAgg.maybeCompactAppendStore(_, stateDir,
+        maxBatchParts, Seq("term", "__id"), "tf"))
 
   /** CONTINUOUS ANN-index maintenance: fold an APPEND-ONLY embedding
     * stream into a PQ code store — each micro-batch's vectors encode
@@ -689,19 +674,11 @@ object StreamingOps {
       nBuckets: Int = 256, idCol: String = "vec_id",
       vecCol: String = "embedding", maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Similarity.pqAppend(batch, batchId, stateDir, m,
-          idCol, vecCol, nBuckets)
-        if (maxBatchParts > 0)
-          graft.ops.IncrementalAgg.maybeCompactAppendStore(
-            batch.sparkSession, stateDir, maxBatchParts,
-            Seq(idCol, "sub"), "code")
-        ()
-      }
-      .start()
+    maintained(vecs, stateDir, maxBatchParts)(
+      graft.ops.Similarity.pqAppend(_, _, stateDir, m, idCol, vecCol,
+        nBuckets))(
+      graft.ops.IncrementalAgg.maybeCompactAppendStore(_, stateDir,
+        maxBatchParts, Seq(idCol, "sub"), "code"))
 
   /** CONTINUOUS near-dup SIGNATURE maintenance: fold an APPEND-ONLY
     * document stream into a [[graft.ops.Dedup.signaturesFromStore]]-
@@ -728,19 +705,11 @@ object StreamingOps {
       textCol: String = "text", shingleLen: Int = 3, numHashes: Int = 64,
       maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Dedup.minhashAppend(batch, batchId, stateDir,
-          idCol, textCol, shingleLen, numHashes, nBuckets)
-        if (maxBatchParts > 0)
-          graft.ops.IncrementalAgg.maybeCompactAppendStore(
-            batch.sparkSession, stateDir, maxBatchParts,
-            Seq("id", "h"), "sigv")
-        ()
-      }
-      .start()
+    maintained(docs, stateDir, maxBatchParts)(
+      graft.ops.Dedup.minhashAppend(_, _, stateDir, idCol, textCol,
+        shingleLen, numHashes, nBuckets))(
+      graft.ops.IncrementalAgg.maybeCompactAppendStore(_, stateDir,
+        maxBatchParts, Seq("id", "h"), "sigv"))
 
   /** CONTINUOUS first-occurrence ingest dedup with a PERSISTENT seen
     * set: filter an arriving stream to the first occurrence of each
@@ -758,18 +727,10 @@ object StreamingOps {
   def maintainSeen(rows: DataFrame, stateDir: String, fpCol: String,
       orderCol: String, nBuckets: Int = 256, maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.Curation.seenAppend(batch, batchId, stateDir, fpCol,
-          orderCol, nBuckets)
-        if (maxBatchParts > 0)
-          graft.ops.Curation.maybeCompactSeenStore(
-            batch.sparkSession, stateDir, maxBatchParts)
-        ()
-      }
-      .start()
+    maintained(rows, stateDir, maxBatchParts)(
+      graft.ops.Curation.seenAppend(_, _, stateDir, fpCol, orderCol,
+        nBuckets))(
+      graft.ops.Curation.maybeCompactSeenStore(_, stateDir, maxBatchParts))
 
   /** CONTINUOUS LOADER FEED: cut fixed-length training sequences from an
     * APPEND-ONLY document stream as it arrives — each micro-batch
@@ -795,23 +756,16 @@ object StreamingOps {
       boundary: Option[String] = Some("<|endoftext|>"),
       maxBatchParts: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val enc = graft.ops.Tokenize.bpeEncodeIds(batch, idCol, textCol,
-            merges, specials = specials, boundary = boundary)
-          .select(col("id"), col("token_ids"))
-          .withColumn("h", xxhash64(col("id")))
-          .withColumn("shard", pmod(col("h"), lit(nShards.toLong)))
-        graft.ops.SequenceFeed.sequencesAppend(enc, batchId, stateDir,
-          "shard", "h", "id", "token_ids", seqLen)
-        if (maxBatchParts > 0)
-          graft.ops.SequenceFeed.maybeCompactFeedStore(
-            batch.sparkSession, stateDir, maxBatchParts)
-        ()
-      }
-      .start()
+    maintained(docs, stateDir, maxBatchParts) { (batch, batchId) =>
+      val enc = graft.ops.Tokenize.bpeEncodeIds(batch, idCol, textCol,
+          merges, specials = specials, boundary = boundary)
+        .select(col("id"), col("token_ids"))
+        .withColumn("h", xxhash64(col("id")))
+        .withColumn("shard", pmod(col("h"), lit(nShards.toLong)))
+      graft.ops.SequenceFeed.sequencesAppend(enc, batchId, stateDir,
+        "shard", "h", "id", "token_ids", seqLen)
+    }(graft.ops.SequenceFeed.maybeCompactFeedStore(_, stateDir,
+      maxBatchParts))
 
   /** CONTINUOUS CURATED LOADER FEED: the full curation chain — quality
     * filter → PII redaction → persistent first-occurrence dedup →
@@ -839,15 +793,30 @@ object StreamingOps {
       benchmark: Option[DataFrame] = None, decontaminateNgram: Int = 8,
       writeLedger: Boolean = true)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
+    // curatedAppend runs both stores' compaction policy itself, in the
+    // order its crash discipline needs
+    maintained(docs, stateDir, maxBatchParts = 0)(
+      graft.ops.CuratedFeed.curatedAppend(_, _, stateDir, merges, seqLen,
+        nShards, idCol, textCol, minWords, maxWords, specials, boundary,
+        nBuckets, maxBatchParts, benchmark, decontaminateNgram,
+        writeLedger))(_ => ())
+
+  /** Drive `rows` into the store at `stateDir` one micro-batch at a
+    * time (foreachBatch, with the checkpoint at `{stateDir}/checkpoint`,
+    * where the stores read the stream's identity): `append` each batch,
+    * then run the store's `maybeCompact` policy unless `maxBatchParts`
+    * is 0. Caller stops the query. */
+  private def maintained(rows: DataFrame, stateDir: String,
+      maxBatchParts: Int)(append: (DataFrame, Long) => Unit)(
+      maybeCompact: SparkSession => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    rows.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", s"$stateDir/checkpoint")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.ops.CuratedFeed.curatedAppend(batch, batchId, stateDir,
-          merges, seqLen, nShards, idCol, textCol, minWords, maxWords,
-          specials, boundary, nBuckets, maxBatchParts,
-          benchmark, decontaminateNgram, writeLedger)
-        ()
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
+          batchId: Long) =>
+        append(batch, batchId)
+        if (maxBatchParts > 0) maybeCompact(batch.sparkSession)
       }
       .start()
 

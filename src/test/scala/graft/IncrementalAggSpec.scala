@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.IncrementalAgg
+import graft.state.StateStore
 
 /** Churn-priced materialized aggregates ([[graft.ops.IncrementalAgg]]):
   * identity against the full aggregation across randomized churn, the
@@ -481,7 +482,8 @@ class IncrementalAggSpec extends AnyFunSuite with SparkSpec {
           .select("__bucket").collect().map(_.getLong(0))
         assert(bs.nonEmpty && bs.sameElements(bs.sorted),
           "files must be bucket-sorted for row-group pruning")
-        assert(bs.forall(b => IncrementalAgg.appendGroupOf(b) == g),
+        assert(bs.forall(b =>
+          StateStore.groupOf(b, IncrementalAgg.APPEND_PHYS_PARTS) == g),
           s"bucket in wrong group dir: $d")
       }
     }

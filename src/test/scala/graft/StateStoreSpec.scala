@@ -93,8 +93,27 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
     assert(files(staging) == before, "the staging sibling must be untouched")
   }
 
+  test("storeHasData counts only the files a reader reads: a crashed " +
+      "write's _temporary or .spark-staging files are no data") {
+    val fs = StateStore.fsOf(spark, freshDir())
+    def storeWith(file: String): String = {
+      val store = s"${freshDir()}/store"
+      val p = Paths.get(store, file)
+      Files.createDirectories(p.getParent)
+      Files.write(p, "PAR1".getBytes)
+      store
+    }
+    assert(!StateStore.storeHasData(fs,
+      storeWith("_temporary/0/part-0.parquet")))
+    assert(!StateStore.storeHasData(fs,
+      storeWith(".spark-staging-1/__batch=0/part-0.parquet")))
+    assert(!StateStore.storeHasData(fs, storeWith("_SUCCESS")))
+    assert(StateStore.storeHasData(fs,
+      storeWith("__batch=0/__bgroup=3/part-0.parquet")))
+  }
+
   test("drift guard: only graft/state renames paths or defines the lease, " +
-      "marker, meta, swap, heal or grouped-layout primitives") {
+      "marker, meta, swap, heal, grouped-layout or append-store primitives") {
     val root = Paths.get("src/main/scala")
     val owned = root.resolve("graft/state")
     val forbidden = Seq(
@@ -102,12 +121,22 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       """class\s+\w*Lease\b""",
       """def\s+(acquireLease|breakLease|mustRename|readMarker|writeMarker|""" +
         """pinMarker|storeHasData|writeMeta|swapWrite|swap|heal|""" +
-        """recover\w*Store|groupSurgery|groupCount|groupOf)\b""",
+        """recover\w*Store|groupSurgery|groupCount|groupOf|landStaged|""" +
+        """writeBatches|pinStreamOwner)\b""",
       // the state-identity marker check (StoredArtifacts.metaMatches is
       // the unrelated parquet-table stamp check, taking a SparkSession)
       """def\s+metaMatches\(fs\b""",
       """GroupCount""",
-      """beforeMutationHook|commitPointHook""").map(_.r)
+      """beforeMutationHook|commitPointHook""",
+      // the append-store cycle: the dynamic-overwrite batch write, the
+      // replay fence, the stream-owner identity, `<prefix>=<id>` listings
+      // and the bucket-group function under any name
+      """partitionOverwriteMode""",
+      """def\s+\w*([Ww]atermark|[Ff]ence)\w*""",
+      """def\s+\w*([Ss]treamId|[Ss]treamOwner)\w*""",
+      """def\s+(batchPartitions|list\w*Ids|\w*BatchIds)\b""",
+      """stripPrefix\("\w*=""",
+      """def\s+(\w*[Gg]roupOf|appendGroup\w*)\b""").map(_.r)
     val st = Files.walk(root)
     val sources =
       try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -184,7 +213,7 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       IncrementalAgg.compactVocabStore(spark, appDir)
     } == Seq("agg.append", "agg.append", "agg.stage", "agg.swap"))
 
-    // sequence feed compaction
+    // sequence feed: the store write, the carry landing, the compaction
     val feedDir = freshDir()
     val batch = (0L until 20L).map(i => (i % 2, i, i, Array.fill(7)(i.toInt)))
       .toDF("shard", "ord", "doc", "ids")
@@ -192,7 +221,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       SequenceFeed.sequencesAppend(batch, 0L, feedDir, "shard", "ord", "doc",
         "ids", seqLen = 8)
       SequenceFeed.compactFeedStore(spark, feedDir)
-    } == Seq("seqstore.append", "seqstore.stage", "seqstore.swap"))
+    } == Seq("seqstore.append", "carry.commit", "seqstore.stage",
+      "seqstore.swap"))
 
     // PQ codebook fit: books, their signature marker, the seed error
     val corpus = (0 until 100).map { i =>
