@@ -250,9 +250,9 @@ object SequenceFeed {
       cut.persist()
       try {
         StateStore.writeBatches(cut.filter(!col("is_carry"))
-          .drop("is_carry", "docs").withColumn("__bucket", col("shard")),
-          Some(batchId), storePath(stateDir), "__bucket", None,
-          replace = true)
+          .drop("is_carry", "docs").withColumn("__batch", lit(batchId))
+          .withColumn("__bucket", col("shard")),
+          None, storePath(stateDir), "__bucket", None, replace = true)
         // the new carry: shards touched this batch take their fresh
         // tail; untouched shards carry the previous one forward —
         // nShards rows, driver-merged (metadata-sized by contract)

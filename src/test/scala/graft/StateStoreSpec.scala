@@ -113,7 +113,7 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("drift guard: only graft/state renames paths or defines the lease, " +
-      "marker, meta, swap, heal, grouped-layout or append-store primitives") {
+      "marker, meta, swap, heal or grouped-layout primitives") {
     val root = Paths.get("src/main/scala")
     val owned = root.resolve("graft/state")
     val forbidden = Seq(
