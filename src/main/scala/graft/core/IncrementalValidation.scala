@@ -1,6 +1,8 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
   StructField, StructType}
@@ -470,266 +472,65 @@ object IncrementalValidation {
   private def reportDigestsPath(stateDir: String) = s"$stateDir/report_digests"
 
   private val reportSchema = StructType(
-    Seq("kind", "id", "check_first", "check_second")
-      .map(StructField(_, StringType)))
-  private val multiReportSchema = StructType(
     Seq("kind", "id", "column_name", "check_first", "check_second")
       .map(StructField(_, StringType)))
 
-  /** The row-level report store's maintenance, shared by both report
-    * surfaces ([[StateStore.Witness.maintain]]): a rebuild rewrites the
-    * whole store; otherwise the dirty buckets' groups are recomputed
-    * from both sides filtered to the dirty set, materialized eagerly —
-    * the report is several joins, each would otherwise rescan and
-    * re-filter both inputs, and a lazy cache lets adaptive execution
-    * start every join stage against a cache still being filled.
-    * Returns whether it rebuilt. */
-  private def maintainReport(first: DataFrame, second: DataFrame,
-      w: StateStore.Witness, pr: StateStore.Compared, stateDir: String,
-      dirtyFractionLimit: Double, bucketCol: Option[String],
-      lease: StateStore.Lease)(
-      reportRows: (DataFrame, DataFrame) => DataFrame): Boolean =
-    w.maintain(pr, reportRowsPath(stateDir), "bucket", Nil,
-        dirtyFractionLimit, lease)(
-      reportRows(first, second),
-      dirty => reportRows(
-        first.filter(dirtyPred(first, bucketCol, w.nBuckets, dirty))
-          .localCheckpoint(),
-        second.filter(dirtyPred(second, bucketCol, w.nBuckets, dirty))
-          .localCheckpoint()))
-
-  /** The stored report rows with the `rows` columns, read with an
-    * explicit schema (the files add the row's `bucket`, the directories
-    * a LongType `__bgroup`), so the read needs no inference job. None
-    * when the store holds no data file — an all-clean table pair can
-    * leave a data-less report directory; any other read failure
-    * propagates. */
-  private def storedRows(spark: SparkSession, rowsPath: String,
-      rows: StructType): Option[DataFrame] = {
-    if (!StateStore.storeHasData(StateStore.fsOf(spark, rowsPath), rowsPath))
-      None
-    else Some(spark.read.schema(StructType(rows.fields ++ Seq(
-        StructField("bucket", LongType), StructField("__bgroup", LongType))))
-      .parquet(rowsPath)
-      .select(rows.fieldNames.map(col).toIndexedSeq: _*))
-  }
-
-  /** Incrementally-maintained ROW-LEVEL report — the reference's actual
-    * outputs (missing ids both ways + differing value pairs,
-    * `running_validation.py:262-275`) as a STORED, bucket-partitioned
-    * table where a re-run rewrites only the churned buckets'
-    * partitions:
-    *
-    * the long frame (kind ∈ {missing_in_first, missing_in_second,
-    * differing}, id, check_first, check_second) lives at
-    * `<stateDir>/report` hive-partitioned by the id's bucket (null ids
-    * in bucket -1 — they appear in the missing frames, never the join,
-    * exactly [[Validator.validate]]'s semantics). Anti-joins and the
-    * diff join are per-id, and buckets partition ids, so the full
-    * report is EXACTLY the union of per-bucket reports — a dirty
-    * bucket's partition is recomputed by running validate() over both
-    * sides filtered to the dirty set (pruning files on a
-    * [[withBucket]]-partitioned layout), clean partitions are never
-    * touched, and report I/O is proportional to the churn.
-    *
-    * Crash discipline: the digest witness is DELETED before the report
-    * partitions are mutated and swapped back in only after — a crash
-    * mid-mutation leaves no witness, so the next run rebuilds the
-    * report wholesale instead of trusting torn partitions. Use a
-    * DEDICATED stateDir per surface (the meta file is shared; pointing
-    * two surfaces at one directory degrades to rebuild-every-run, never
-    * to a wrong answer).
-    *
-    * Size `nBuckets` for the REPORT table, not the inputs: the stored
-    * table has one partition directory per bucket, and a report is tiny
-    * next to its inputs — hundreds of buckets usually suffice, while
-    * thousands of near-empty directories cost more in listing/footer
-    * overhead than the finer recompute granularity buys.
-    *
-    * @return (current full report — the stored table read once and
-    *         materialized, so it stays valid after the next maintenance
-    *         run — and the prune record). */
-  def reportIncremental(first: DataFrame, second: DataFrame,
-      mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
-      dirtyFractionLimit: Double = 0.25,
-      bucketCol: Option[String] = None): (DataFrame, IncrementalReport) = {
-    val m = reportIncrementalWithSummary(first, second, mode, stateDir,
-      nBuckets, dirtyFractionLimit, bucketCol)
-    (m.current, m.report)
-  }
-
-  /** [[reportIncremental]]'s outputs plus the run's six-metric summary. */
+  /** One run's outputs of the row-level report: the stored report read
+    * once and materialized (`current`), the prune record, and the
+    * summary derived from both. */
   final case class MaintainedReport(current: DataFrame,
       report: IncrementalReport, summary: DataFrame)
 
-  private val summarySchema = StructType(Seq("n_first", "n_second",
-    "missing_in_first", "missing_in_second", "n_differing", "n_matched")
-    .map(StructField(_, LongType)))
+  private val summarySchema = StructType(StructField("column_name",
+    StringType) +: termCols.map(StructField(_, LongType)))
 
-  /** [[reportIncremental]], also returning [[Validator.summaryFast]]'s
-    * one-row summary of the same inputs, built on the driver: the row
-    * counts are the current digests' per-side sums, the mismatch counts
-    * are observed on the one materializing read of the stored report,
-    * and the identities
+  /** Incrementally-maintained ROW-LEVEL report — the reference's actual
+    * outputs (missing ids both ways + differing value pairs,
+    * `running_validation.py:262-275`) for k check columns, as a STORED,
+    * bucket-grouped table where a re-run rewrites only the churned
+    * buckets' groups. The one report path: [[reportIncremental]],
+    * [[reportIncrementalWithSummary]] and [[reportIncrementalMulti]] are
+    * its callers.
+    *
+    * The store at `<stateDir>/report` is the long frame (kind, id,
+    * column_name, check_first, check_second): the two id-level missing
+    * kinds (one row per unmatched input row, null ids included,
+    * column_name null — missingness is a property of the id) plus
+    * [[Validator.diffMulti]]'s rows under kind `differing` (one row per
+    * differing (row-pair, column), m-by-n duplicate-key multiplicity).
+    * All three are per-id, and buckets partition ids (null ids ride the
+    * -1 sidecar bucket), so the full report is exactly the union of the
+    * per-bucket reports.
+    *
+    * Dirtiness comes from the WHOLE-ROW digest ([[multiValueExpr]] — one
+    * witness decides all columns, [[runMulti]]'s discipline); a dirty
+    * bucket's group is recomputed from both sides filtered to the dirty
+    * set (file-pruning on a [[withBucket]] layout), each slice
+    * materialized once — the report is several joins, each would
+    * otherwise rescan and re-filter the inputs. The witness cycle
+    * (delete before mutating, swap back after, so a crash rebuilds) is
+    * [[StateStore.Witness.maintain]]'s. Use a DEDICATED stateDir per
+    * surface. Size `nBuckets` for the REPORT table, not the inputs:
+    * hundreds of buckets usually suffice.
+    *
+    * The stored report is read ONCE, with its explicit schema, and
+    * materialized; the same pass observes the two missing kinds and
+    * each column's differing rows. The summary is then
+    * [[Validator.summaryMulti]]'s per-column shape, built on the driver:
+    * `n_first` / `n_second` are the current digests' per-side sums and
     *
     *   n_matched    = n_second - missing_in_first
-    *   n_differing  = |differing report rows|   (m-by-n pair multiplicity)
+    *   n_differing  = |the column's differing report rows|
     *
-    * hold exactly for summaryFast's semantics (a second-side row either
-    * matches some first id or is missing from first; null ids sit in the
-    * missing frames and in both sides' digest counts). The summary is a
-    * local one-row frame: collecting it launches no Spark job, and the
-    * whole daily run costs one digest scan plus churn-sized work. */
-  def reportIncrementalWithSummary(first: DataFrame, second: DataFrame,
-      mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
-      dirtyFractionLimit: Double = 0.25,
-      bucketCol: Option[String] = None): MaintainedReport = {
+    * (a second-side row either matches some first id or is missing from
+    * first). Collecting the summary launches no Spark job. */
+  def reportIncrementalMultiWithSummary(first: DataFrame, second: DataFrame,
+      checks: Seq[(String, CompareMode)], stateDir: String, nBuckets: Int,
+      dirtyFractionLimit: Double,
+      bucketCol: Option[String]): MaintainedReport = {
     require(nBuckets > 0, "nBuckets must be positive")
+    require(checks.nonEmpty, "the report needs at least one check column")
     val spark = first.sparkSession
-    import spark.implicits._
-    val rowsPath = reportRowsPath(stateDir)
-    val lease = StateStore.acquireLease(spark, stateDir)
-    try {
-
-    val (w, pr) = prune(first, second, nBuckets, bucketCol,
-      col("check").cast(StringType), stateDir, s"report:${modeKey(mode)}",
-      reportDigestsPath(stateDir))
-
-    def reportRows(f: DataFrame, s: DataFrame): DataFrame = {
-      val out = Validator.validate(f, s, mode)
-      def shaped(df: DataFrame, kind: String, cf: Column, cs: Column) =
-        df.select(lit(kind).as("kind"), col("id").cast(StringType).as("id"),
-          cf.cast(StringType).as("check_first"),
-          cs.cast(StringType).as("check_second"))
-      shaped(out.missingInFirst, "missing_in_first", lit(null), lit(null))
-        .unionByName(shaped(out.missingInSecond, "missing_in_second",
-          lit(null), lit(null)))
-        .unionByName(shaped(out.differing, "differing",
-          col("check_first"), col("check_second")))
-        .withColumn("bucket", bucketExpr(nBuckets))
-    }
-
-    val rebuild = maintainReport(first, second, w, pr, stateDir,
-      dirtyFractionLimit, bucketCol, lease)(reportRows)
-
-    // the stored report, read ONCE and materialized with its three kind
-    // counts observed on the same pass — the tidy files, the compat
-    // files and the summary all read this
-    val kindNames = Seq("missing_in_first", "missing_in_second", "differing")
-    val (current, counts) = storedRows(spark, rowsPath, reportSchema) match {
-      case Some(rows) =>
-        val kinds = Observation()
-        val cur = rows.observe(kinds, count_if(col("kind") === kindNames.head)
-            .as(kindNames.head),
-            kindNames.tail.map(k => count_if(col("kind") === k).as(k)): _*)
-          .localCheckpoint()
-        val got = kinds.get
-        (cur, kindNames.map(k => got(k).asInstanceOf[Long]))
-      case None => (emptyFrame(spark, reportSchema), kindNames.map(_ => 0L))
-    }
-    val Seq(missingInFirst, missingInSecond, nDiffering) = counts
-    val summary = spark.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row(
-        pr.sum("n1"), pr.sum("n2"), missingInFirst, missingInSecond,
-        nDiffering, pr.sum("n2") - missingInFirst)),
-      summarySchema)
-    MaintainedReport(current, pr.record(rebuild), summary)
-    } finally lease.release()
-  }
-
-  private def emptyFrame(spark: SparkSession, schema: StructType) =
-    spark.createDataFrame(
-      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
-
-  /** The per-column six-metric summary derived from a MAINTAINED
-    * multi-column report store — call after [[reportIncrementalMulti]]
-    * has run for the same inputs. Row counts come from the digest
-    * witness; the id-level missing counts (identical for every column)
-    * and the per-column differing-pair counts come from the stored
-    * report rows; n_matched = n_second - missing_in_first. Exactly
-    * [[Validator.summaryMulti]]'s output contract (one row per check
-    * column, zeros when a column never differs), for a metadata-sized
-    * read — the multi-column daily run needs ONE digest scan, total. */
-  def summaryMultiFromStoredReport(spark: SparkSession, stateDir: String,
-      columns: Seq[String]): DataFrame = {
-    require(columns.nonEmpty, "need the check-column list (names, in order)")
-    // explicit schemas, no inference jobs; a missing witness or an
-    // unreadable store file fails the read instead of answering zero
-    val dig = spark.read.schema(StructType(Seq(StructField("n1", LongType),
-        StructField("n2", LongType))))
-      .parquet(reportDigestsPath(stateDir))
-      .agg(sum(col("n1")).as("n_first"), sum(col("n2")).as("n_second"))
-      .na.fill(0L)
-    val rep = multiReportRows(spark, reportRowsPath(stateDir))
-      .select("kind", "column_name")
-    val missing = rep.agg(
-      sum(when(col("kind") === "missing_in_first", 1L).otherwise(0L))
-        .as("missing_in_first"),
-      sum(when(col("kind") === "missing_in_second", 1L).otherwise(0L))
-        .as("missing_in_second")).na.fill(0L)
-    val perCol = rep.filter(col("kind") === "differing")
-      .groupBy("column_name").agg(count(lit(1)).as("n_differing"))
-    import spark.implicits._
-    val seed = columns.toDF("column_name")
-    // broadcast the RIGHT side: left-outer cannot build left
-    seed.join(broadcast(perCol), Seq("column_name"), "left_outer")
-      .na.fill(0L, Seq("n_differing"))
-      .crossJoin(broadcast(dig))
-      .crossJoin(broadcast(missing))
-      .select(col("column_name"), col("n_first"), col("n_second"),
-        col("missing_in_first"), col("missing_in_second"),
-        col("n_differing"),
-        (col("n_second") - col("missing_in_first")).as("n_matched"))
-  }
-
-  private def multiReportRows(spark: SparkSession, rowsPath: String) =
-    storedRows(spark, rowsPath, multiReportSchema)
-      .getOrElse(emptyFrame(spark, multiReportSchema))
-
-  /** Incrementally-maintained MULTI-COLUMN row-level report: the two
-    * id-level missing frames (kind ∈ {missing_in_first,
-    * missing_in_second} — one row per unmatched input row, null ids
-    * included, column_name null: missingness is a property of the id,
-    * not of any one column) PLUS [[Validator.diffMulti]]'s long frame
-    * (kind = differing; one row per differing (row-pair, column), m-by-n
-    * duplicate-key multiplicity) as a stored, bucket-partitioned table
-    * where a re-run rewrites only the churned buckets' partitions.
-    *
-    * Dirtiness comes from the WHOLE-ROW digest ([[multiValueExpr]]'s
-    * position-salted hash over all k check columns — one witness decides
-    * all columns, exactly [[runMulti]]'s discipline): a change in any
-    * check column dirties its id's bucket, the bucket's partition is
-    * deleted and recomputed from both sides filtered to the dirty set
-    * (file-pruning on a [[withBucket]] layout), clean partitions are
-    * never touched. All three frames are per-id, and buckets partition
-    * ids, so the full report is exactly the union of per-bucket reports;
-    * null ids ride the -1 sidecar bucket's partition (they appear in the
-    * missing frames, never the join).
-    *
-    * Because the store carries the missing rows AND the digest witness
-    * carries the per-bucket row counts, the per-column summary is
-    * DERIVABLE from the store ([[summaryMultiFromStoredReport]]) — the
-    * multi-column daily run needs one digest scan, total.
-    *
-    * Crash discipline is [[reportIncremental]]'s, verified by the same
-    * torn-state spec shape: the digest witness is DELETED before any
-    * partition is mutated and swapped back only after, so a crash
-    * mid-mutation leaves no witness and the next run rebuilds wholesale.
-    * Use a DEDICATED stateDir per surface; size `nBuckets` for the
-    * report table (hundreds, not thousands — see [[reportIncremental]]).
-    *
-    * @return (current DIFFERING long frame — diffMulti's shape, read
-    *         from the stored table — and the prune record); the missing
-    *         frames are in the store under their kinds. */
-  def reportIncrementalMulti(first: DataFrame, second: DataFrame,
-      checks: Seq[(String, CompareMode)], stateDir: String,
-      nBuckets: Int = 4096, dirtyFractionLimit: Double = 0.25,
-      bucketCol: Option[String] = None): (DataFrame, IncrementalReport) = {
-    require(nBuckets > 0, "nBuckets must be positive")
-    require(checks.nonEmpty,
-      "reportIncrementalMulti needs at least one check column")
-    val spark = first.sparkSession
-    import spark.implicits._
     val rowsPath = reportRowsPath(stateDir)
     // ".v2": the store gained the kind column + missing rows — a
     // prior-format state mismatches on meta and rebuilds, never misreads
@@ -760,14 +561,83 @@ object IncrementalValidation {
             col("column_name"), col("check_first"), col("check_second")))
         .withColumn("bucket", bucketExpr(nBuckets))
     }
+    def slice(df: DataFrame, dirty: Seq[Long]) =
+      df.filter(dirtyPred(df, bucketCol, nBuckets, dirty)).localCheckpoint()
+    val rebuild = w.maintain(pr, rowsPath, "bucket", Nil, dirtyFractionLimit,
+        lease)(reportRows(first, second),
+      dirty => reportRows(slice(first, dirty), slice(second, dirty)))
 
-    val rebuild = maintainReport(first, second, w, pr, stateDir,
-      dirtyFractionLimit, bucketCol, lease)(reportRows)
-
-    val current = multiReportRows(spark, rowsPath)
-      .filter(col("kind") === "differing")
-      .select("id", "column_name", "check_first", "check_second")
-    (current, pr.record(rebuild))
+    // the files add the row's `bucket`, the directories a LongType
+    // `__bgroup`; an all-clean table pair can leave a data-less store,
+    // any other read failure propagates
+    val counted = (col("kind") === "missing_in_first") +:
+      (col("kind") === "missing_in_second") +: checks.map { case (c, _) =>
+        col("kind") === "differing" && col("column_name") === c }
+    val (current, counts) =
+      if (!StateStore.storeHasData(StateStore.fsOf(spark, rowsPath), rowsPath))
+        (spark.createDataFrame(java.util.Collections.emptyList[Row](),
+          reportSchema), counted.map(_ => 0L))
+      else {
+        val obs = Observation()
+        val metrics = counted.zipWithIndex.map { case (p, i) =>
+          count_if(p).as(s"n$i") }
+        val cur = spark.read.schema(StructType(reportSchema.fields ++
+            Seq("bucket", "__bgroup").map(StructField(_, LongType))))
+          .parquet(rowsPath)
+          .select(reportSchema.fieldNames.map(col).toIndexedSeq: _*)
+          .observe(obs, metrics.head, metrics.tail: _*)
+          .localCheckpoint()
+        val got = obs.get
+        (cur, counted.indices.map(i => got(s"n$i").asInstanceOf[Long]))
+      }
+    val (missingInFirst, missingInSecond) = (counts(0), counts(1))
+    val (nFirst, nSecond) = (pr.sum("n1"), pr.sum("n2"))
+    val summary = spark.createDataFrame(checks.zip(counts.drop(2)).map {
+      case ((c, _), nDiffering) => Row(c, nFirst, nSecond, missingInFirst,
+        missingInSecond, nDiffering, nSecond - missingInFirst)
+    }.asJava, summarySchema)
+    MaintainedReport(current, pr.record(rebuild), summary)
     } finally lease.release()
+  }
+
+  /** The differing rows of a report's `current` frame, in
+    * [[Validator.diffMulti]]'s shape. */
+  private[core] def differingRows(current: DataFrame): DataFrame =
+    current.filter(col("kind") === "differing")
+      .select("id", "column_name", "check_first", "check_second")
+
+  /** [[reportIncrementalMultiWithSummary]] with the one check column
+    * `check`: `current` is the stored report (kind, id, check_first,
+    * check_second) and `summary` [[Validator.summaryFast]]'s one row. */
+  def reportIncrementalWithSummary(first: DataFrame, second: DataFrame,
+      mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
+      dirtyFractionLimit: Double = 0.25,
+      bucketCol: Option[String] = None): MaintainedReport = {
+    val m = reportIncrementalMultiWithSummary(first, second,
+      Seq("check" -> mode), stateDir, nBuckets, dirtyFractionLimit, bucketCol)
+    MaintainedReport(m.current.drop("column_name"), m.report,
+      m.summary.drop("column_name"))
+  }
+
+  /** [[reportIncrementalWithSummary]] without the summary. */
+  def reportIncremental(first: DataFrame, second: DataFrame,
+      mode: CompareMode, stateDir: String, nBuckets: Int = 4096,
+      dirtyFractionLimit: Double = 0.25,
+      bucketCol: Option[String] = None): (DataFrame, IncrementalReport) = {
+    val m = reportIncrementalWithSummary(first, second, mode, stateDir,
+      nBuckets, dirtyFractionLimit, bucketCol)
+    (m.current, m.report)
+  }
+
+  /** [[reportIncrementalMultiWithSummary]]'s differing rows
+    * ([[Validator.diffMulti]]'s shape) and prune record; the missing
+    * rows stay in the store under their kinds. */
+  def reportIncrementalMulti(first: DataFrame, second: DataFrame,
+      checks: Seq[(String, CompareMode)], stateDir: String,
+      nBuckets: Int = 4096, dirtyFractionLimit: Double = 0.25,
+      bucketCol: Option[String] = None): (DataFrame, IncrementalReport) = {
+    val m = reportIncrementalMultiWithSummary(first, second, checks,
+      stateDir, nBuckets, dirtyFractionLimit, bucketCol)
+    (differingRows(m.current), m.report)
   }
 }

@@ -30,22 +30,8 @@ object ValidationJob {
         s"unknown data_type '$other' (expected integer|string|date)") // running_validation.py:651-653
     }
 
-  /** Read one side, apply the optional date-range filter (exclusive both
-    * ends — reference semantics), project to (id, check). */
-  private def side(spark: SparkSession, cfg: ValidationConfig,
-      spec: graft.config.SourceSpec, dateCol: Option[String]): DataFrame = {
-    val raw = SourceReader.read(spark, spec)
-    val filtered = (cfg.startDate, cfg.endDate, dateCol) match {
-      case (Some(s), Some(e), Some(dc)) =>
-        Validator.dateFiltered(raw, dc, s"$s 00:00:00", s"$e 00:00:00")
-      case _ => raw
-    }
-    Validator.keyed(filtered, cfg.compositeIdColumns, cfg.checkColumn)
-  }
-
-  /** One side projected to (id, every multi-check column) — the
-    * multi-column twin of [[side]]'s (id, check) projection; pushdown
-    * still prunes the source scan to keys + k checks + date col. */
+  /** Read one side and apply the optional date-range filter (exclusive
+    * both ends — reference semantics). */
   private def rawSide(spark: SparkSession, cfg: ValidationConfig,
       spec: graft.config.SourceSpec, dateCol: Option[String]): DataFrame = {
     val raw = SourceReader.read(spark, spec)
@@ -55,6 +41,12 @@ object ValidationJob {
       case _ => raw
     }
   }
+
+  /** [[rawSide]] projected to (id, check). */
+  private def side(spark: SparkSession, cfg: ValidationConfig,
+      spec: graft.config.SourceSpec, dateCol: Option[String]): DataFrame =
+    Validator.keyed(rawSide(spark, cfg, spec, dateCol),
+      cfg.compositeIdColumns, cfg.checkColumn)
 
   /** (id, every check column) — the multi-column twin of [[side]]'s
     * (id, check) projection; pushdown still prunes the source scan to
@@ -126,17 +118,18 @@ object ValidationJob {
     if (incremental && cfg.reportIncremental && writeReports) {
       // the fully-incremental multi-column daily run: ONE digest scan
       // steers the stored report (missing rows + per-column differing
-      // pairs, churned buckets' partitions rewritten only) and the
-      // per-column summary DERIVES from the same store — no second
-      // state surface, no third pass over the inputs
-      val (diff, _) = IncrementalValidation.reportIncrementalMulti(
-        first, second, checks, multiReportStateDir(cfg),
-        nBuckets = cfg.reportBuckets)
-      val summary = IncrementalValidation.summaryMultiFromStoredReport(
-        spark, multiReportStateDir(cfg), checks.map(_._1))
+      // pairs, churned buckets' groups rewritten only), the diff derives
+      // from the one materialized read of the store, and the per-column
+      // summary is built on the driver from the digests and the counts
+      // observed on that read — no second state surface, no third pass
+      // over the inputs
+      val maintained = IncrementalValidation.reportIncrementalMultiWithSummary(
+        first, second, checks, multiReportStateDir(cfg), cfg.reportBuckets,
+        dirtyFractionLimit = 0.25, bucketCol = None)
+      val diff = IncrementalValidation.differingRows(maintained.current)
       ReportWriter.writePartitioned(diff,
         s"${cfg.outputDirectory}/multi_diff", Seq("column_name"))
-      (summary, diff)
+      (maintained.summary, diff)
     } else {
       val summary =
         if (incremental)

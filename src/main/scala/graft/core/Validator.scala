@@ -369,8 +369,9 @@ object Validator {
     * never k copies of the id. Per-column values are pre-coerced to a
     * STRING group key whose equality agrees with the mode's `<=>` over
     * coerced values: doubles are zero-normalized (-0.0 -> 0.0; NaN is
-    * already one group, matching Spark's NaN = NaN semantics) and
-    * double/timestamp -> string casts are injective, so the (id, pos, v)
+    * already one group, matching Spark's NaN = NaN semantics), the
+    * double -> string cast is injective and a timestamp keys by its
+    * epoch microseconds ([[multiGroupKey]]), so the (id, pos, v)
     * grouping aligns exactly the pairs the mode calls equal. Fuzzy(t<1)
     * columns re-score their eq_pairs through the intrinsic per-column
     * pair join (id-only keys, id-partitioned — no added exchange; the
@@ -381,15 +382,18 @@ object Validator {
     * Null-id rows contribute through the same count-only sidecar
     * semantics as [[summaryFast]], identically for every column. */
   /** The per-mode STRING group key whose equality agrees with the mode's
-    * `<=>` over coerced values (zero-normalized doubles; injective
-    * double/timestamp -> string casts) — shared by [[summaryMulti]] and
-    * [[IncrementalValidation]]'s multi-column terms. */
+    * `<=>` over coerced values (zero-normalized doubles and their
+    * injective string cast; a timestamp's epoch microseconds, which —
+    * unlike its local-time string — never map the two instants of a
+    * repeated daylight-saving hour to one key) — shared by
+    * [[summaryMulti]] and [[IncrementalValidation]]'s multi-column
+    * terms. */
   private[core] def multiGroupKey(c: Column, mode: CompareMode): Column =
     mode match {
       case CompareMode.Numeric =>
         val d = toNumeric(c)
         when(d === lit(0.0), lit(0.0)).otherwise(d).cast(StringType)
-      case CompareMode.Date     => toTs(c).cast(StringType)
+      case CompareMode.Date     => unix_micros(toTs(c)).cast(StringType)
       case CompareMode.Fuzzy(_) => c.cast(StringType)
     }
 
@@ -471,19 +475,20 @@ object Validator {
     * calls would join k times). Long format: (id, column_name,
     * check_first, check_second), one row per differing (row-pair,
     * column) with [[validate]]'s m-by-n duplicate-key multiplicity.
-    * Values are string-cast up front — safe for every mode because the
-    * coercions themselves parse from strings (pandas-parity). */
+    * [[differs]] compares the typed values, as [[validate]] does (a Date
+    * check compares instants, not session-zone strings); only the output
+    * values are string-cast. */
   def diffMulti(first: DataFrame, second: DataFrame,
       checks: Seq[(String, CompareMode)]): DataFrame = {
     require(checks.nonEmpty, "diffMulti needs at least one check column")
     def sideSel(df: DataFrame, pfx: String) = df.select(
       col("id").cast(StringType).as("id") +:
-        checks.map { case (c, _) => col(c).cast(StringType).as(s"$pfx$c") }: _*)
+        checks.map { case (c, _) => col(c).as(s"$pfx$c") }: _*)
     val joined = sideSel(first, "__f_").join(sideSel(second, "__s_"), Seq("id"))
     val legs = array(checks.map { case (c, m) =>
       struct(lit(c).as("column_name"),
-        col(s"__f_$c").as("check_first"),
-        col(s"__s_$c").as("check_second"),
+        col(s"__f_$c").cast(StringType).as("check_first"),
+        col(s"__s_$c").cast(StringType).as("check_second"),
         differs(col(s"__f_$c"), col(s"__s_$c"), m).as("__d"))
     }: _*)
     joined

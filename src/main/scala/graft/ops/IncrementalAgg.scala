@@ -355,19 +355,21 @@ object IncrementalAgg {
     * [[compactVocabStore]] delegates here. */
   def compactAppendStore(spark: SparkSession, stateDir: String,
       keyCols: Seq[String], valCol: String): Unit =
-    appendStore(stateDir).compact(spark) { (_, lease) =>
+    appendStore(stateDir).compact(spark) { (fs, lease) =>
       ensureAppendLayout(spark, stateDir, lease)
       // the fold keeps the partition layout (later appends land in
       // __batch=K dirs next to the compacted __batch=-1)
       val store = spark.read.parquet(storePath(stateDir))
-      // the fence: the highest batch id this fold consumes — monotone
-      // across compactions (an already-compacted store's max is the
-      // base -1, which never lowers a previous fence). Partition
-      // discovery infers `__batch=<k>` as INT: cast, or getLong throws
-      val maxBatch = store.agg(max(col("__batch").cast("long"))).head() match {
-        case r if r.isNullAt(0) => -1L
-        case r => r.getLong(0)
-      }
+      // the fence: the highest batch id this fold consumes, from one
+      // listing — a batch directory without data (a crashed write's
+      // `_temporary` only) is not read by the fold, so it is not fenced
+      // and its re-delivery lands. Monotone across compactions (an
+      // already-compacted store answers the base -1, which never lowers
+      // a previous fence)
+      val maxBatch = appendStore(stateDir).batches(spark).sorted
+        .findLast(b => StateStore.storeHasData(fs,
+          s"${storePath(stateDir)}/__batch=$b"))
+        .getOrElse(-1L)
       Some(maxBatch -> { tmp =>
         writeAppend(store
           .groupBy(("__bucket" +: keyCols).map(col): _*)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.{CompareMode, IncrementalValidation, Validator}
 import graft.ops.{Curation, CuratedFeed, IncrementalAgg, SequenceFeed,
   TextAnalysis, Tokenize}
 import graft.state.StateStore
@@ -153,6 +154,88 @@ class AppendStoreSpec extends AnyFunSuite with SparkSpec {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
+  /** A witness-guarded surface: one run on the second side in a state
+    * directory, and the same answer computed from scratch. */
+  private final class Guarded(val name: String,
+      val run: (DataFrame, String) => Any, val fresh: DataFrame => Any)
+
+  test("witness family: a crash at every commit point a churned run " +
+      "crosses leaves a state whose next runs answer what a fresh " +
+      "computation does, on the churned inputs and on the earlier ones") {
+    val rnd = new scala.util.Random(20261019)
+    def keyed(n: Int) = Seq.fill(n) {
+      (if (rnd.nextDouble() < 0.04) null else rnd.nextInt(n / 2).toString,
+        if (rnd.nextDouble() < 0.2) null else rnd.nextInt(40).toString)
+    }.toDF("id", "check").withColumn("alt", concat(col("check"), lit("a")))
+    def churned(df: DataFrame, salt: Int, c: String) =
+      df.withColumn(c,
+        when(pmod(xxhash64(col("id"), lit(salt)), lit(10L)) === 0L,
+          concat(coalesce(col(c), lit("")), lit("~"))).otherwise(col(c)))
+    val f = viaParquet(keyed(300))
+    val s0 = viaParquet(keyed(300))
+    val s1 = viaParquet(churned(churned(s0, 1, "check"), 2, "alt"))
+    val mode = CompareMode.Numeric
+    val one = Seq("check" -> mode)
+    val two = one :+ ("alt" -> CompareMode.Fuzzy(1.0))
+    def byCol(df: DataFrame) =
+      df.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    def counts(df: DataFrame) = df.groupBy("check").agg(sum("c").as("c"))
+      .collect().map(r => r.get(0) -> r.getLong(1)).toMap
+    def str(v: Any) = Option(v).map(_.toString).orNull
+    def validated(s: DataFrame) = {
+      val out = Validator.validate(f, s, mode)
+      def kind(df: DataFrame, k: String) = df.collect().map(r =>
+        Seq[Any](k, str(r.get(0)), null, null))
+      (kind(out.missingInFirst, "missing_in_first") ++
+        kind(out.missingInSecond, "missing_in_second") ++
+        out.differing.collect().map(r => Seq[Any]("differing",
+          r.getString(0), str(r.get(1)), str(r.get(2))))).toSet
+    }
+    val partial: DataFrame => DataFrame =
+      _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c"))
+    val guarded = Seq(
+      new Guarded("reportIncremental", (s, d) => rows(IncrementalValidation
+        .reportIncremental(f, s, mode, d, nBuckets = 16,
+          dirtyFractionLimit = 1.0)._1), validated),
+      new Guarded("reportIncrementalMulti", (s, d) =>
+        rows(IncrementalValidation.reportIncrementalMulti(f, s, two, d,
+          nBuckets = 16, dirtyFractionLimit = 1.0)._1),
+        s => rows(Validator.diffMulti(f, s, two))),
+      new Guarded("run", (s, d) => IncrementalValidation.run(f, s, mode, d,
+          nBuckets = 16, dirtyFractionLimit = 1.0)._1.collect().head.toSeq,
+        s => Validator.summaryFast(f, s, mode).collect().head.toSeq),
+      new Guarded("runMulti", (s, d) => byCol(IncrementalValidation.runMulti(
+          f, s, two, d, nBuckets = 16, dirtyFractionLimit = 1.0)._1),
+        s => byCol(Validator.summaryMulti(f, s, two))),
+      new Guarded("IncrementalAgg.run", (s, d) => counts(IncrementalAgg.run(
+          s, "id", Seq("check"), partial, aggKey = "checkcount", d,
+          nBuckets = 16, dirtyFractionLimit = 1.0)._1),
+        s => counts(s.select(col("check"), lit(1L).as("c")))))
+    val failures = guarded.flatMap { g =>
+      val cleanDir = freshDir()
+      g.run(s0, cleanDir)
+      val fired = ArrayBuffer.empty[String]
+      StateStore.hook = fired += _
+      try g.run(s1, cleanDir) finally StateStore.hook = _ => ()
+      assert(fired.exists(_.endsWith(".mutate")), s"${g.name}: $fired")
+      val (want1, want0) = (g.fresh(s1), g.fresh(s0))
+      fired.distinct.flatMap { p =>
+        val dir = freshDir()
+        g.run(s0, dir)
+        StateStore.hook = q => if (q == p) throw new Crash(q)
+        try intercept[Crash](g.run(s1, dir))
+        finally StateStore.hook = _ => ()
+        Seq(s1 -> want1, s0 -> want0).zipWithIndex.flatMap {
+          case ((s, want), i) =>
+            val got = g.run(s, dir)
+            if (got == want) None
+            else Some(s"${g.name}, crash at $p, re-run ${i + 1}: $got != $want")
+        }
+      }
+    }
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
   /** Leave `dir` as a crashed Spark write leaves it: its one data file
     * only under the writer's `_temporary`, nothing else. */
   private def tear(dir: String): Unit = {
@@ -209,5 +292,37 @@ class AppendStoreSpec extends AnyFunSuite with SparkSpec {
     val got = CuratedFeed.ledger(spark, dir).filter(col("batch") === 1L)
       .collect().map(_.toSeq).toSeq
     assert(got == want)
+  }
+
+  /** A vocab store of three appended batches over 16 buckets. */
+  private def vocabStore(): String = {
+    val dir = freshDir()
+    (0L until 3L).foreach(b => IncrementalAgg.vocabAppend(
+      docs(b * 20, b * 20 + 20), b, dir, nBuckets = 16))
+    dir
+  }
+
+  test("compaction takes its fence from one listing: a three-batch vocab " +
+      "store compacts in the pinned number of Spark jobs") {
+    val dir = vocabStore()
+    val want = rows(IncrementalAgg.vocabFromStore(spark, dir))
+    val jobs = jobsLaunchedBy(IncrementalAgg.compactVocabStore(spark, dir))
+    assert(StateStore.readMarker(StateStore.fsOf(spark, dir),
+      s"$dir/agg_compact_watermark").contains("2"))
+    assert(rows(IncrementalAgg.vocabFromStore(spark, dir)) == want)
+    // 4 = the fold's store read, its staged write (3); a Spark scan for
+    // the fence (max of __batch) made it 6
+    assert(jobs <= 4, s"$jobs jobs for one compaction")
+  }
+
+  test("compaction never fences a torn batch: a batch directory holding " +
+      "only a crashed write's files is re-delivered and lands") {
+    val clean = vocabStore()
+    val dir = vocabStore()
+    tear(s"$dir/agg/__batch=2")
+    IncrementalAgg.compactVocabStore(spark, dir)
+    IncrementalAgg.vocabAppend(docs(40, 60), 2L, dir, nBuckets = 16)
+    assert(rows(IncrementalAgg.vocabFromStore(spark, dir)) ==
+      rows(IncrementalAgg.vocabFromStore(spark, clean)))
   }
 }

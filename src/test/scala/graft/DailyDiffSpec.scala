@@ -78,6 +78,52 @@ class DailyDiffSpec extends AnyFunSuite with SparkSpec {
     assert(collectJobs == 0, s"summary.collect launched $collectJobs jobs")
   }
 
+  test("job budget: one steady-state daily ValidationJob.runMulti " +
+      "(incremental report, churned day) launches at most the pinned " +
+      "number of Spark jobs, and collecting its summary launches none") {
+    val d = Files.createTempDirectory("graft_dailymulti").toString
+    (0 to 2).foreach(writeDay(d, _))
+    def cfg(day: Int) = ConfigLoader.fromYamlString(
+      s"""databases: [first, second]
+         |composite_id_columns: [pk]
+         |check_columns:
+         |  - column: model
+         |    data_type: string
+         |    threshold: 0.9
+         |  - column: pk
+         |    data_type: integer
+         |output_directory: $d/out
+         |incremental: true
+         |report_incremental: true
+         |report_buckets: 64
+         |sources:
+         |  first: { format: parquet, path: $d/day$day/a }
+         |  second: { format: parquet, path: $d/day$day/b }
+         |""".stripMargin)
+    ValidationJob.runMulti(spark, cfg(0))._1.collect()
+    ValidationJob.runMulti(spark, cfg(1))._1.collect()
+    var summary: DataFrame = null
+    val jobs = jobsLaunchedBy {
+      summary = ValidationJob.runMulti(spark, cfg(2))._1
+    }
+    var got: Map[String, Seq[Any]] = null
+    val collectJobs = jobsLaunchedBy {
+      got = summary.collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    }
+    def keyed(side: String) = spark.read.parquet(s"$d/day2/$side")
+      .selectExpr("CAST(pk AS STRING) AS id", "model", "pk")
+    val checks = Seq("model" -> graft.core.CompareMode.Fuzzy(0.9),
+      "pk" -> graft.core.CompareMode.Numeric)
+    val want = graft.core.Validator.summaryMulti(keyed("a"), keyed("b"),
+      checks).collect().map(r => r.getString(0) -> r.toSeq.tail).toMap
+    assert(got == want)
+    // 16 jobs, 0 to collect: the summary is built on the driver from
+    // the one observed read of the store. Deriving it with three more
+    // plans over the store cost 15 jobs in the run and 7 to collect
+    assert(jobs <= 16, s"$jobs jobs for one steady-state multi-column run")
+    assert(collectJobs == 0, s"summary.collect launched $collectJobs jobs")
+  }
+
   /** The per-row DECIMAL(38,0) digest formulation the limb kernel
     * replaced, inlined as the reference. */
   private def referenceDigests(first: DataFrame, second: DataFrame,

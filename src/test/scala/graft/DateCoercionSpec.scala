@@ -57,4 +57,44 @@ class DateCoercionSpec extends AnyFunSuite with SparkSpec {
       .collect()(0).getTimestamp(0)
     assert(got == ts)
   }
+
+  test("Date mode compares instants: the two instants of a repeated local " +
+      "hour differ in diffMulti, summaryMulti and run as in validate and " +
+      "summaryFast") {
+    import graft.core.{CompareMode, IncrementalValidation, Validator}
+    val conf = spark.conf
+    val zone = conf.get("spark.sql.session.timeZone")
+    // 05:30Z and 06:30Z are both 01:30 local on the day New York leaves
+    // daylight saving: one local-time string, two instants
+    conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      def side(instant: String) = {
+        val p = java.nio.file.Files.createTempDirectory("graft_dst").toString
+        Seq(("1", java.sql.Timestamp.from(java.time.Instant.parse(instant))))
+          .toDF("id", "check").write.mode("overwrite").parquet(p)
+        spark.read.parquet(p)
+      }
+      val (f, s) = (side("2024-11-03T05:30:00Z"), side("2024-11-03T06:30:00Z"))
+      val mode = CompareMode.Date
+      val want = Validator.validate(f, s, mode).differing
+        .select(col("id"), col("check_first").cast("string"),
+          col("check_second").cast("string"))
+        .collect().map(_.toSeq).toSet
+      assert(want.size == 1)
+      val got = Validator.diffMulti(f, s, Seq("check" -> mode))
+        .select("id", "check_first", "check_second")
+        .collect().map(_.toSeq).toSet
+      assert(got == want)
+      val fast = Validator.summaryFast(f, s, mode).collect().head.toSeq
+      assert(fast(4) == 1L, s"summaryFast: $fast")
+      val multi = Validator.summaryMulti(f, s, Seq("check" -> mode))
+        .drop("column_name").collect().head.toSeq
+      assert(multi == fast, s"summaryMulti $multi vs summaryFast $fast")
+      val stateDir = java.nio.file.Files.createTempDirectory("graft_dstst")
+        .toString
+      val (sum, _) = IncrementalValidation.run(f, s, mode, stateDir,
+        nBuckets = 8)
+      assert(sum.collect().head.toSeq == fast)
+    } finally conf.set("spark.sql.session.timeZone", zone)
+  }
 }

@@ -367,20 +367,16 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
       val f = viaParquet(randomMulti(rnd.nextInt(150) + 60, 60))
       val s0 = viaParquet(randomMulti(rnd.nextInt(150) + 60, 60))
       def check(s: DataFrame, ctx: String): Unit = {
-        val got = IncrementalValidation
-          .summaryMultiFromStoredReport(spark, stateDir,
-            multiChecks.map(_._1)).collect()
+        val got = IncrementalValidation.reportIncrementalMultiWithSummary(
+            f, s, multiChecks, stateDir, nBuckets = 16,
+            dirtyFractionLimit = 1.0, bucketCol = None).summary.collect()
           .map(r => r.getString(0) -> r.toSeq.tail).toMap
         val want = Validator.summaryMulti(f, s, multiChecks).collect()
           .map(r => r.getString(0) -> r.toSeq.tail).toMap
         assert(got == want, s"trial $trial $ctx: $got vs $want")
       }
-      IncrementalValidation.reportIncrementalMulti(f, s0, multiChecks,
-        stateDir, nBuckets = 16, dirtyFractionLimit = 1.0)
       check(s0, "build")
       val s1 = viaParquet(churnMulti(s0, salt = trial + 120, rate = 0.1))
-      IncrementalValidation.reportIncrementalMulti(f, s1, multiChecks,
-        stateDir, nBuckets = 16, dirtyFractionLimit = 1.0)
       check(s1, "churn")
     }
   }
