@@ -310,8 +310,8 @@ class AppendStoreSpec extends AnyFunSuite with SparkSpec {
     assert(StateStore.readMarker(StateStore.fsOf(spark, dir),
       s"$dir/agg_compact_watermark").contains("2"))
     assert(rows(IncrementalAgg.vocabFromStore(spark, dir)) == want)
-    // 4 = the fold's store read, its staged write (3); a Spark scan for
-    // the fence (max of __batch) made it 6
+    // 4 = the fold's store read and its staged write; the fence is a
+    // directory listing, no job
     assert(jobs <= 4, s"$jobs jobs for one compaction")
   }
 
