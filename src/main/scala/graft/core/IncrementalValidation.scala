@@ -4,8 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType,
-  StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType,
+  StringType, StructField, StructType, TimestampType}
 
 import graft.state.StateStore
 
@@ -61,14 +61,16 @@ import graft.state.StateStore
   * "1.0" -> "1.00" under Numeric) re-validate their bucket and get the
   * same terms back.
   *
-  * The state is `<stateDir>/state` (the per-bucket digest witness),
-  * `<stateDir>/terms` (the per-(bucket, column) summary terms) and
-  * `<stateDir>/meta`, a marker file holding (version, n_buckets, mode
-  * key). A missing or parameter-mismatched state — or a run whose dirty
-  * fraction exceeds `dirtyFractionLimit` — falls back to a full rebuild,
-  * so a stale or foreign state can never silently answer. The witness
-  * is deleted before the terms change and swapped back after, and every
-  * replacement is renames-only ([[graft.state.StateStore.Witness.mutate]]).
+  * The state is `<stateDir>/state`, the digest witness — one file
+  * holding the state's identity (version, n_buckets, mode key) and the
+  * per-bucket digests — and `<stateDir>/terms`, the per-(bucket, column)
+  * summary terms. A missing, unreadable or parameter-mismatched witness
+  * — or a run whose dirty fraction exceeds `dirtyFractionLimit` — falls
+  * back to a full rebuild, so a stale or foreign state can never
+  * silently answer. The witness is deleted before the terms change and
+  * written back after, landing at the commit point `state.commit`
+  * ([[graft.state.StateStore.Witness.mutate]]); the terms replacement
+  * is renames-only.
   */
 object IncrementalValidation {
 
@@ -89,7 +91,11 @@ object IncrementalValidation {
   // v3: marker-file meta (no Spark job to check state identity) +
   // bucket-GROUP physical layout for the report stores (see
   // StateStore.groupCount); a v2 state reads as no-state and rebuilds.
-  private val STATE_VERSION = 3
+  // v4: the witness is one driver-written file holding the identity and
+  // the digests, and a TIMESTAMP column also hashes its instant
+  // ([[rowHash]]); a v3 state (a parquet witness directory) reads as
+  // no-state and rebuilds once.
+  private val STATE_VERSION = 4
 
   private def modeKey(mode: CompareMode): String = mode match {
     case CompareMode.Numeric  => "numeric"
@@ -158,24 +164,37 @@ object IncrementalValidation {
     (aggs, totals)
   }
 
-  /** Whole-row digest payload for a k-column check list: one 64-bit
-    * value combining every check column, POSITION-SALTED — each column
-    * hashes with its index first (`xxhash64(lit(j), c_j)`), so a null
-    * column can never make two different rows collide by letting a
-    * value slide into another column's position (bare multi-arg
-    * xxhash64 skips nulls, which would do exactly that). */
-  private[graft] def multiValueExpr(checkCols: Seq[String]): Column =
-    xxhash64(checkCols.zipWithIndex.map { case (c, j) =>
-      xxhash64(lit(j), col(c).cast(StringType))
+  /** The row hash of every digest kernel: one 64-bit value over the
+    * columns `cols` of `df`, POSITION-SALTED — each column hashes with
+    * its index first (`xxhash64(lit(j), c_j)`), so a null column can
+    * never make two different rows collide by letting a value slide into
+    * another column's position (bare multi-arg xxhash64 skips nulls,
+    * which would do exactly that). A column hashes as its string cast,
+    * with two refinements. An ARRAY (an embedding) hashes natively:
+    * stringifying a dim-64 float array per row made the digest scan a
+    * material fraction of a full re-encode. A TIMESTAMP hashes as its
+    * string cast AND its `unix_micros`: under a daylight-saving session
+    * zone the two instants of a repeated local hour cast to one string,
+    * while a change of session zone still changes the string. */
+  private[graft] def rowHash(df: DataFrame, cols: Seq[String]): Column =
+    xxhash64(cols.zipWithIndex.map { case (c, j) =>
+      val v = col(c)
+      xxhash64(lit(j) +: (df.select(v).schema.head.dataType match {
+        case _: ArrayType => Seq(v)
+        case TimestampType => Seq(v.cast(StringType), unix_micros(v))
+        case _ => Seq(v.cast(StringType))
+      }): _*)
     }: _*)
 
   /** Per-bucket multiset digests of both sides in ONE aggregation over
     * the tagged union: (bucket, n1, h1a, h1b, n2, h2a, h2b). Map-side
     * combinable end to end; the exchange moves ~nBuckets rows per task.
-    * Exposed package-private so the plan spec can pin exactly that. */
+    * `valueExpr` is each side's row payload. Exposed package-private so
+    * the plan spec can pin exactly that. */
   private[graft] def digests(first: DataFrame, second: DataFrame,
       nBuckets: Int, bucketCol: Option[String] = None,
-      valueExpr: Column = col("check").cast(StringType)): DataFrame = {
+      valueExpr: DataFrame => Column = _ => col("check").cast(StringType))
+      : DataFrame = {
     // internal bucket ids are always LONG — a materialized partition
     // column may read back as INT (partition-type inference), and the
     // state/terms join must not depend on that
@@ -186,10 +205,8 @@ object IncrementalValidation {
     def side(df: DataFrame, tag: Int) = df.select(
       bucketCol.map(c => col(c).cast("long"))
         .getOrElse(bucketExpr(nBuckets)).as("bucket"),
-      xxhash64(col("id").cast(StringType), valueExpr)
-        .as("h"),
-      xxhash64(lit(1L), col("id").cast(StringType), valueExpr)
-        .as("h2"),
+      xxhash64(col("id").cast(StringType), valueExpr(df)).as("h"),
+      xxhash64(lit(1L), col("id").cast(StringType), valueExpr(df)).as("h2"),
       lit(tag).as("side"))
     def on(tag: Int, c: Column) =
       when(col("side") === tag, c).otherwise(lit(0L))
@@ -212,7 +229,6 @@ object IncrementalValidation {
     StructField("pos", IntegerType) +: termCols.map(StructField(_, LongType)))
 
   private def statePath(stateDir: String) = s"$stateDir/state"
-  private def metaPath(stateDir: String) = s"$stateDir/meta"
   private def termsPath(stateDir: String) = s"$stateDir/terms"
 
   /** [[Validator.summaryMulti]]'s per-(id, column) algebra with the
@@ -270,19 +286,17 @@ object IncrementalValidation {
       sum(when(col("tot1") > 0L, col("tot2")).otherwise(0L)).as("n_matched"))
   }
 
-  private val digestFields = Seq("n1", "h1a", "h1b", "n2", "h2a", "h2b")
-
   /** The digest-compare phase shared by every incremental surface: the
-    * current digests of both sides against the witness at `digestPath`
-    * ([[StateStore.Witness.compare]]). */
+    * current whole-row digests of both sides over `checkCols` against
+    * the witness at `digestPath` ([[StateStore.Witness.compare]]). */
   private def prune(first: DataFrame, second: DataFrame, nBuckets: Int,
-      bucketCol: Option[String], valueExpr: Column, stateDir: String,
-      modeStr: String, digestPath: String)
-      : (StateStore.Witness, StateStore.Compared) = {
-    val w = StateStore.Witness(digestPath, metaPath(stateDir), STATE_VERSION,
-      nBuckets, modeStr)
-    (w, w.compare(digests(first, second, nBuckets, bucketCol, valueExpr),
-      digestFields))
+      bucketCol: Option[String], checkCols: Seq[String], modeStr: String,
+      digestPath: String): (StateStore.Witness, StateStore.Compared) = {
+    val w = StateStore.Witness(
+      StateStore.fsOf(first.sparkSession, digestPath), digestPath,
+      STATE_VERSION, nBuckets, modeStr)
+    (w, w.compare(digests(first, second, nBuckets, bucketCol,
+      rowHash(_, checkCols))))
   }
 
   /** The dirty-bucket row predicate FOR ONE SIDE: a plain attribute
@@ -332,7 +346,7 @@ object IncrementalValidation {
     * null ids included), answered through stored per-(bucket, column)
     * terms wherever the bucket digests prove the data unchanged. The
     * WHOLE-ROW digest (one position-salted 64-bit value over all k check
-    * columns — see [[multiValueExpr]]) decides dirtiness per bucket,
+    * columns — see [[rowHash]]) decides dirtiness per bucket,
     * clean buckets carry all k columns' terms forward, and only dirty
     * buckets re-enter the one-exchange summaryMulti algebra. A change in
     * ANY check column dirties its bucket for ALL columns — per-column
@@ -341,7 +355,7 @@ object IncrementalValidation {
     * contribute the count-only sidecar identically for every column.
     * k = 1 is the single-check surface, [[run]].
     *
-    * State layout: see the object doc; the meta's mode key is the full
+    * State layout: see the object doc; the witness's mode key is the full
     * check list, so a state built for different columns, modes or
     * thresholds never answers. The state is FILTER-AGNOSTIC: digests are
     * computed over the inputs AS GIVEN, so changing an upstream predicate
@@ -388,9 +402,8 @@ object IncrementalValidation {
     // current digests (one scan of each side, tiny exchange) against the
     // witness; one-sided buckets (appeared or fully drained) are dirty
     val (w, pr) = prune(first, second, nBuckets, bucketCol,
-      multiValueExpr(checks.map(_._1)), stateDir, modeStr,
-      statePath(stateDir))
-    val cdDf = pr.cd
+      checks.map(_._1), modeStr, statePath(stateDir))
+    val cdDf = spark.createDataFrame(pr.rows.asJava, pr.schema)
     val oldTerms: Option[DataFrame] =
       if (pr.haveState)
         try Some(spark.read.schema(multiTermsSchema)
@@ -429,8 +442,7 @@ object IncrementalValidation {
           .select(col("bucket") +: col("pos") +: termCols.map(col): _*)
           .filter(!col("bucket").isin(-1L +: dirty: _*))
         // membership tracks the current digests: drained buckets drop.
-        // cdDf is a local nBuckets-row frame with no stats — hint the
-        // broadcast explicitly or the planner sort-merges this semi-join
+        // cdDf is the digests' local nBuckets-row relation: broadcast it
         carried.unionByName(recomputed).unionByName(nullTerms)
           .join(broadcast(cdDf.select("bucket")), Seq("bucket"), "left_semi")
       }
@@ -502,13 +514,13 @@ object IncrementalValidation {
     * -1 sidecar bucket), so the full report is exactly the union of the
     * per-bucket reports.
     *
-    * Dirtiness comes from the WHOLE-ROW digest ([[multiValueExpr]] — one
+    * Dirtiness comes from the WHOLE-ROW digest ([[rowHash]] — one
     * witness decides all columns, [[runMulti]]'s discipline); a dirty
     * bucket's group is recomputed from both sides filtered to the dirty
     * set (file-pruning on a [[withBucket]] layout), each slice
     * materialized once — the report is several joins, each would
     * otherwise rescan and re-filter the inputs. The witness cycle
-    * (delete before mutating, swap back after, so a crash rebuilds) is
+    * (delete before mutating, write back after, so a crash rebuilds) is
     * [[StateStore.Witness.maintain]]'s. Use a DEDICATED stateDir per
     * surface. Size `nBuckets` for the REPORT table, not the inputs:
     * hundreds of buckets usually suffice.
@@ -533,15 +545,14 @@ object IncrementalValidation {
     val spark = first.sparkSession
     val rowsPath = reportRowsPath(stateDir)
     // ".v2": the store gained the kind column + missing rows — a
-    // prior-format state mismatches on meta and rebuilds, never misreads
+    // prior-format state mismatches on its key and rebuilds, never misreads
     val modeStr = "multireport.v2:" + checks
       .map { case (c, m) => s"$c=${modeKey(m)}" }.mkString(",")
     val lease = StateStore.acquireLease(spark, stateDir)
     try {
 
     val (w, pr) = prune(first, second, nBuckets, bucketCol,
-      multiValueExpr(checks.map(_._1)), stateDir, modeStr,
-      reportDigestsPath(stateDir))
+      checks.map(_._1), modeStr, reportDigestsPath(stateDir))
 
     // all three frames emit the id string-cast; bucketExpr hashes the
     // same cast, so a report row's bucket equals its input rows' bucket

@@ -135,36 +135,18 @@ object Curation {
       tableName: String, numBuckets: Int = 256,
       force: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    val (nRows, h) = StoredArtifacts.stamp(corpus, fpCol)
-    val params = s"fp:buckets=$numBuckets,fp=$fpCol"
-    if (!force &&
-        StoredArtifacts.metaMatches(spark, s"${tableName}_meta", nRows, h, params)) {
-      try {
-        StoredArtifacts.register(spark, s"${tableName}_meta")
-        StoredArtifacts.register(spark, tableName,
-          Some((Seq(fpCol), Seq(fpCol), numBuckets)))
-        return // stamp hit: the stored index IS current
-      } catch {
-        // NonFatal only: an interrupt/OOM must propagate, never be
-        // silently converted into a full drop-and-rebuild of the index
-        case scala.util.control.NonFatal(e) =>
-          org.slf4j.LoggerFactory.getLogger(getClass)
-            .warn(s"fingerprint index '$tableName' stamp hit but " +
-              s"re-register failed (${e.getClass.getSimpleName}: " +
-              s"${e.getMessage}); rebuilding")
-      }
-    }
-    for (t <- Seq(tableName, s"${tableName}_meta"))
-      StoredArtifacts.dropAndClean(spark, t)
-    corpus.select(col(fpCol)).na.drop().distinct()
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, fpCol).sortBy(fpCol)
-      .saveAsTable(tableName)
-    // meta LAST: a crashed build never leaves a matching stamp
     import spark.implicits._
-    Seq((nRows, h, params, numBuckets))
-      .toDF("stamp_rows", "stamp_hash", "params", "num_buckets").coalesce(1)
-      .write.mode("overwrite").saveAsTable(s"${tableName}_meta")
+    val params = s"fp:buckets=$numBuckets,fp=$fpCol"
+    StoredArtifacts.fitOnce(corpus, fpCol, params, force,
+      s"${tableName}_meta",
+      Seq(tableName -> Some((Seq(fpCol), Seq(fpCol), numBuckets))))(
+      (nRows, h) => Seq((nRows, h, params, numBuckets))
+        .toDF("stamp_rows", "stamp_hash", "params", "num_buckets"))(()) { _ =>
+      corpus.select(col(fpCol)).na.drop().distinct()
+        .write.mode("overwrite")
+        .bucketBy(numBuckets, fpCol).sortBy(fpCol)
+        .saveAsTable(tableName)
+    }
   }
 
   /** [[incrementalNew]] for the 10^10-row regime, EXACT with O(1) driver

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -43,7 +43,7 @@ import graft.state.StateStore
   * median does not (store its countable partials instead).
   *
   * Crash discipline is [[graft.state.StateStore]]'s: the digest witness
-  * is DELETED before any store partition is mutated and swapped back
+  * is DELETED before any store partition is mutated and written back
   * only after, so a torn store can never read clean; the single-writer
   * lease guards every mutating run; a missing /
   * version-skewed / `aggKey`-mismatched state rebuilds wholesale (the
@@ -63,7 +63,10 @@ object IncrementalAgg {
   // store (see StateStore.groupCount). A v1 state mismatches the meta
   // check and rebuilds wholesale — the safe direction; run() stores are
   // always rebuildable from the table.
-  private val STATE_VERSION = 2
+  // v3: the witness is one file holding the identity and the digests,
+  // whose row hash also sees a TIMESTAMP's instant
+  // ([[IncrementalValidation.rowHash]]); a v2 state rebuilds once.
+  private val STATE_VERSION = 3
 
   private def storePath(stateDir: String) = s"$stateDir/agg"
 
@@ -93,7 +96,6 @@ object IncrementalAgg {
     StateStore.storeHasData(StateStore.fsOf(spark, stateDir),
       storePath(stateDir))
   private def digestsPath(stateDir: String) = s"$stateDir/agg_digests"
-  private def metaPath(stateDir: String) = s"$stateDir/meta"
 
   // ---- append-store physical layout ----------------------------------
   // The APPEND store's directory grain is the bucket GROUP, not the
@@ -145,34 +147,16 @@ object IncrementalAgg {
     StateStore.writeMarker(fs, layoutPath(stateDir), APPEND_LAYOUT_VERSION)
   }
 
-  /** Per-bucket single-table digests: (bucket, n, ha, hb). Map-side
+  /** Per-bucket single-table digests: (bucket, n, ha, hb) over the row
+    * hash of `dependsOn` ([[IncrementalValidation.rowHash]]). Map-side
     * combinable end to end; the two row hashes are independently salted
     * (see [[IncrementalValidation.digests]] — same 2^-128 false-clean
     * argument at matching counts). Package-private for the plan spec. */
-  /** Position-salted row-value hash over `dependsOn` — the
-    * [[IncrementalValidation.multiValueExpr]] contract, with ONE digest
-    * refinement: ARRAY columns (embeddings) hash natively instead of
-    * through a cast to string. Stringifying a dim-64 float array per
-    * row made the digest scan cost a material fraction of a full
-    * re-encode (rehearsal-measured); the native XxHash64 over the array
-    * is a few fused multiplies per element and equally
-    * session/partition-stable. Scalar columns keep the string cast —
-    * their digest values (and every committed vocab/bigram/posting
-    * state) are unchanged. */
-  private def valueExpr(table: DataFrame, dependsOn: Seq[String]): Column =
-    xxhash64(dependsOn.zipWithIndex.map { case (c, j) =>
-      val base = table.schema(c).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType => col(c)
-        case _ => col(c).cast(StringType)
-      }
-      xxhash64(lit(j), base)
-    }: _*)
-
   private[graft] def digests(table: DataFrame, idCol: String,
       dependsOn: Seq[String], nBuckets: Int,
       bucketCol: Option[String]): DataFrame = {
     val id = col(idCol).cast(StringType)
-    val v = valueExpr(table, dependsOn)
+    val v = IncrementalValidation.rowHash(table, dependsOn)
     val (limbAggs, totals) = IncrementalValidation.limbSums(
       Seq("ha" -> col("h"), "hb" -> col("h2")))
     table.select(
@@ -221,10 +205,9 @@ object IncrementalAgg {
     val fs = StateStore.fsOf(spark, stateDir)
     val lease = StateStore.acquireLease(spark, stateDir)
     try {
-      val w = StateStore.Witness(digestsPath(stateDir), metaPath(stateDir),
-        STATE_VERSION, nBuckets, aggKey)
-      val cmp = w.compare(digests(table, idCol, dependsOn, nBuckets, bucketCol),
-        Seq("n", "ha", "hb"))
+      val w = StateStore.Witness(fs, digestsPath(stateDir), STATE_VERSION,
+        nBuckets, aggKey)
+      val cmp = w.compare(digests(table, idCol, dependsOn, nBuckets, bucketCol))
 
       def withBucketCol(df: DataFrame) = df.withColumn("__bucket",
         bucketCol.map(c => col(c).cast("long")).getOrElse(

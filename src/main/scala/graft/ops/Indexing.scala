@@ -220,30 +220,21 @@ object Indexing {
       idCol: String = "doc_id", textCol: String = "text",
       force: Boolean = false): Long = {
     val spark = docs.sparkSession
-    val (nDocs, h) = StoredArtifacts.stamp(docs, idCol)
-    val params = s"text:block=$blockSize,buckets=$numBuckets,id=$idCol,text=$textCol"
-    if (!force &&
-        StoredArtifacts.metaMatches(spark, s"${name}_meta", nDocs, h, params)) {
-      try {
-        StoredArtifacts.register(spark, s"${name}_meta")
-        StoredArtifacts.register(spark, s"${name}_postings",
-          Some((Seq("term"), Seq("term", "block"), numBuckets)))
-        return spark.table(s"${name}_meta")
-          .select("n_docs").head().getLong(0)
-      } catch { case _: Exception => () /* damaged artifact: rebuild */ }
-    }
-    for (suffix <- Seq("_postings", "_meta"))
-      StoredArtifacts.dropAndClean(spark, s"$name$suffix")
-    invertedIndex(docs, idCol, textCol, blockSize)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, "term").sortBy("term", "block")
-      .saveAsTable(s"${name}_postings")
-    // meta LAST: a crashed build never leaves a matching stamp
     import spark.implicits._
-    Seq((nDocs, nDocs, h, params))
-      .toDF("n_docs", "stamp_rows", "stamp_hash", "params").coalesce(1)
-      .write.mode("overwrite").saveAsTable(s"${name}_meta")
-    nDocs
+    val params = s"text:block=$blockSize,buckets=$numBuckets,id=$idCol,text=$textCol"
+    StoredArtifacts.fitOnce(docs, idCol, params, force, s"${name}_meta",
+      Seq(s"${name}_postings" ->
+        Some((Seq("term"), Seq("term", "block"), numBuckets))))(
+      (nDocs, h) => Seq((nDocs, nDocs, h, params))
+        .toDF("n_docs", "stamp_rows", "stamp_hash", "params"))(
+      spark.table(s"${name}_meta").select("n_docs").head().getLong(0)) {
+      nDocs =>
+        invertedIndex(docs, idCol, textCol, blockSize)
+          .write.mode("overwrite")
+          .bucketBy(numBuckets, "term").sortBy("term", "block")
+          .saveAsTable(s"${name}_postings")
+        nDocs
+    }
   }
 
   /** [[searchIndex]] against the stored tables of [[indexWrite]] — the

@@ -602,34 +602,23 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       force: Boolean = false): Unit = {
     val spark = corpus.sparkSession
-    val (nRows, h) = StoredArtifacts.stamp(corpus, idCol)
-    val params = s"pq:m=$m,ksub=$ksub,buckets=$numBuckets,id=$idCol,vec=$vecCol"
-    if (!force &&
-        StoredArtifacts.metaMatches(spark, s"${name}_meta", nRows, h, params)) {
-      try {
-        StoredArtifacts.register(spark, s"${name}_meta")
-        StoredArtifacts.register(spark, s"${name}_books")
-        StoredArtifacts.register(spark, s"${name}_codes",
-          Some((Seq(idCol), Seq(idCol, "sub"), numBuckets)))
-        return // stamp hit: the stored artifact IS current
-      } catch { case _: Exception => () /* damaged artifact: rebuild */ }
-    }
-    for (suffix <- Seq("_books", "_codes", "_meta"))
-      StoredArtifacts.dropAndClean(spark, s"$name$suffix")
-    val books = pqFit(corpus, m, ksub, idCol, vecCol)
-    val bookRows = books.collect().toSeq // m*ksub*subDim longs — metadata
-    val bBooks = spark.createDataFrame(
-      spark.sparkContext.parallelize(bookRows, 1), books.schema)
-    bBooks.write.mode("overwrite").saveAsTable(s"${name}_books")
-    pqEncode(corpus, bBooks, m, idCol, vecCol)
-      .write.mode("overwrite")
-      .bucketBy(numBuckets, idCol).sortBy(idCol, "sub")
-      .saveAsTable(s"${name}_codes")
-    // meta LAST: a crashed build can leave partial tables but never a
-    // matching stamp, so the next run always rebuilds
     import spark.implicits._
-    Seq((nRows, h, params)).toDF("stamp_rows", "stamp_hash", "params")
-      .coalesce(1).write.mode("overwrite").saveAsTable(s"${name}_meta")
+    val params = s"pq:m=$m,ksub=$ksub,buckets=$numBuckets,id=$idCol,vec=$vecCol"
+    StoredArtifacts.fitOnce(corpus, idCol, params, force, s"${name}_meta",
+      Seq(s"${name}_books" -> None, s"${name}_codes" ->
+        Some((Seq(idCol), Seq(idCol, "sub"), numBuckets))))(
+      (nRows, h) => Seq((nRows, h, params))
+        .toDF("stamp_rows", "stamp_hash", "params"))(()) { _ =>
+      val books = pqFit(corpus, m, ksub, idCol, vecCol)
+      val bookRows = books.collect().toSeq // m*ksub*subDim longs — metadata
+      val bBooks = spark.createDataFrame(
+        spark.sparkContext.parallelize(bookRows, 1), books.schema)
+      bBooks.write.mode("overwrite").saveAsTable(s"${name}_books")
+      pqEncode(corpus, bBooks, m, idCol, vecCol)
+        .write.mode("overwrite")
+        .bucketBy(numBuckets, idCol).sortBy(idCol, "sub")
+        .saveAsTable(s"${name}_codes")
+    }
   }
 
   /** ADC search against a PREBUILT index ([[pqFit]]+[[pqEncode]] frames,

@@ -1,10 +1,13 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Cross-session persistence plumbing shared by the stored-index
-  * builders ([[Similarity.pqIndexWrite]], [[Indexing.indexWrite]]).
+  * builders ([[Similarity.pqIndexWrite]], [[Indexing.indexWrite]],
+  * [[Curation.writeFingerprintIndex]]), whose one cycle is [[fitOnce]].
   *
   * The fit-once/search-many contract only pays off if "once" survives
   * process boundaries: each builder stamps its input + parameters into a
@@ -136,4 +139,45 @@ private[ops] object StoredArtifacts {
       } catch { case _: Exception => false }
     }
   }
+
+  /** The fit-once cycle every stored-index builder runs: stamp `input`
+    * by `idCol`; unless `force`, when the stored `meta` table matches
+    * the stamp and `params`, re-register `meta` and then `tables` (name
+    * and bucket spec) and answer `reuse`. Otherwise — or when the
+    * re-register or `reuse` fails on a damaged artifact, which is
+    * logged — drop `tables` and `meta`, `build` the tables from the
+    * stamp's row count, and write `meta` LAST from `metaRow(rows,
+    * hash)`: a crashed build can leave partial tables but never a
+    * matching stamp, so the next run always rebuilds. NonFatal only:
+    * an interrupt or OOM propagates instead of turning into a rebuild. */
+  def fitOnce[A](input: DataFrame, idCol: String, params: String,
+      force: Boolean, meta: String,
+      tables: Seq[(String, Option[(Seq[String], Seq[String], Int)])])(
+      metaRow: (Long, String) => DataFrame)(reuse: => A)(
+      build: Long => A): A = {
+    val spark = input.sparkSession
+    val (rows, hash) = stamp(input, idCol)
+    val reused =
+      if (force || !metaMatches(spark, meta, rows, hash, params)) None
+      else try {
+        register(spark, meta)
+        for ((t, buckets) <- tables) register(spark, t, buckets)
+        Some(reuse)
+      } catch {
+        case NonFatal(e) =>
+          log.warn(s"stored artifact '$meta' stamp hit but re-register " +
+            s"failed (${e.getClass.getSimpleName}: ${e.getMessage}); " +
+            "rebuilding")
+          None
+      }
+    reused.getOrElse {
+      for (t <- tables.map(_._1) :+ meta) dropAndClean(spark, t)
+      val out = build(rows)
+      metaRow(rows, hash).coalesce(1).write.mode("overwrite")
+        .saveAsTable(meta)
+      out
+    }
+  }
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 }

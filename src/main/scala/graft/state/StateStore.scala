@@ -10,10 +10,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.core.IncrementalValidation.IncrementalReport
 
 /** The stored-state primitives every incremental surface is built on:
-  * the single-writer lease, marker files, the state-identity meta, the
-  * renames-only swap and its heal, the grouped `__bgroup` layout with
-  * its group surgery, the digest witness that guards a store (the
-  * driver-side compare and the maintenance cycle around it), and the
+  * the single-writer lease, marker files, the renames-only swap and its
+  * heal, the grouped `__bgroup` layout with its group surgery, the
+  * one-file digest witness that guards a store (the driver-side compare
+  * and the maintenance cycle around it), and the
   * append-store cycle: replay fence, stream-owner pin, batch listing,
   * `__batch` layout writer and fenced compaction.
   *
@@ -215,34 +215,6 @@ object StateStore {
     mustRename(fs, s, t)
   }
 
-  // ---- state identity ---------------------------------------------------
-
-  private def metaBody(version: Int, nBuckets: Int, key: String) =
-    s"$version\n$nBuckets\n$key"
-
-  /** State-identity meta as a MARKER FILE (`version\nnBuckets\nkey`):
-    * checking it is a driver-side read, never a Spark job — every
-    * incremental run pays this check. A legacy parquet meta DIRECTORY
-    * reads as no-state — the rebuild direction. `key` (the surface's
-    * mode or aggregate signature) may contain any character but a
-    * newline. */
-  private def metaMatches(fs: FileSystem, path: String, version: Int,
-      nBuckets: Int, key: String): Boolean =
-    try {
-      val p = new Path(path)
-      fs.exists(p) && !fs.getFileStatus(p).isDirectory &&
-        readMarker(fs, path).contains(metaBody(version, nBuckets, key))
-    } catch { case NonFatal(_) => false }
-
-  private def writeMeta(fs: FileSystem, path: String, version: Int,
-      nBuckets: Int, key: String): Unit = {
-    val p = new Path(path)
-    // a legacy parquet meta is a non-empty directory: clear it first
-    // (writeMarker's own delete is non-recursive)
-    if (fs.exists(p) && fs.getFileStatus(p).isDirectory) fs.delete(p, true)
-    writeMarker(fs, path, metaBody(version, nBuckets, key))
-  }
-
   // ---- swap and heal ----------------------------------------------------
 
   private def siblings(target: String): (Path, Path, Path) = {
@@ -383,44 +355,14 @@ object StateStore {
     fs.delete(staging, true)
   }
 
-  // ---- witness compare --------------------------------------------------
-
-  /** Driver-side digest compare: every bucket whose `fields` differ
-    * between the `current` digest rows and the `stored` witness rows, as
-    * (bucket, present in current). A bucket can go dirty by VANISHING
-    * (every row deleted) — its store rows must still be dropped. DECIMAL
-    * sums compare by value. */
-  private def dirtyBuckets(current: Seq[Row], stored: Seq[Row],
-      fields: Seq[String]): Seq[(Long, Boolean)] = {
-    def sig(rows: Seq[Row]): Map[Long, Seq[Any]] =
-      rows.map { r =>
-        r.getLong(r.fieldIndex("bucket")) ->
-          fields.map(f => r.get(r.fieldIndex(f)))
-      }.toMap
-    def same(a: Any, b: Any): Boolean = (a, b) match {
-      case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-        x.compareTo(y) == 0
-      case _ => a == b
-    }
-    val cur = sig(current)
-    val prev = sig(stored)
-    (cur.keySet ++ prev.keySet).toSeq.flatMap { b =>
-      (cur.get(b), prev.get(b)) match {
-        case (Some(c), Some(p))
-            if c.zip(p).forall { case (x, y) => same(x, y) } => None
-        case (c, _) => Some(b -> c.isDefined)
-      }
-    }
-  }
-
   // ---- witness-guarded stores -------------------------------------------
 
   /** The digest compare of one run: the current per-bucket digest `rows`
-    * (and `cd`, the same rows as one local partition — the witness
-    * rewrite source, one file), whether a state of this identity with a
-    * readable witness exists, and the dirty buckets against it (None
-    * without one). */
-  private[graft] final case class Compared(cd: DataFrame, rows: Seq[Row],
+    * of `schema`, whether a state of this identity with a readable
+    * witness exists, and the dirty buckets against it as (bucket, present
+    * in current) — None without one. A bucket can go dirty by VANISHING
+    * (every row deleted); its store rows must still be dropped. */
+  private[graft] final case class Compared(schema: StructType, rows: Seq[Row],
       haveState: Boolean, dirtyRows: Option[Seq[(Long, Boolean)]]) {
     def total: Long = rows.size.toLong
     def dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
@@ -440,50 +382,71 @@ object StateStore {
         else total - dirtyRows.map(_.count(_._2).toLong).getOrElse(0L))
   }
 
-  /** A stored state guarded by a digest WITNESS: `path` holds the
-    * per-bucket digest rows the state was cut from, `meta` the state's
-    * identity (`version`, `nBuckets`, `key`). A bucket whose current
-    * digest equals its witness row is clean — its stored rows stand. */
-  private[graft] final case class Witness(path: String, meta: String,
+  /** A stored state guarded by a digest WITNESS: the one file at `path`
+    * holds the state's identity (`version`, `nBuckets`, `key`, a line
+    * each) and then the per-bucket digest rows the state was cut from,
+    * one tab-separated line each. Longs and DECIMAL(38,0) sums are plain
+    * digits, so the compare stays exact. The rows are <= nBuckets+1 BY
+    * CONTRACT, metadata-sized at every scale: the witness is written
+    * and read on the driver, never by a Spark job. A bucket whose
+    * current digest equals its witness line is clean — its stored rows
+    * stand. `key` (the surface's mode or aggregate signature) may hold
+    * any character but a newline. */
+  private[graft] final case class Witness(fs: FileSystem, path: String,
       version: Int, nBuckets: Int, key: String) {
+    private def header = Seq(version.toString, nBuckets.toString, key)
 
-    /** Compare the current `digests` (<= nBuckets+1 rows BY CONTRACT,
-      * metadata-sized at every scale) with the witness on `fields`:
-      * collected and compared on the driver — one job for the scan
-      * instead of localCheckpoint + count + a join job. Explicit schema
-      * on the witness read: the witness is written from the digest
-      * schema, and skipping parquet inference skips its Spark job. An
-      * unreadable witness reads as no state (rebuild). */
-    def compare(digests: DataFrame, fields: Seq[String]): Compared = {
-      val spark = digests.sparkSession
+    private def cells(r: Row): Seq[String] = r.toSeq.map {
+      case d: java.math.BigDecimal => d.toPlainString
+      case v => String.valueOf(v)
+    }
+
+    /** The stored digest lines by bucket. A missing or unreadable file
+      * (a legacy witness directory too), another identity's header or a
+      * line that is not `width` integers reads as None: no state, the
+      * rebuild direction. */
+    private def stored(width: Int,
+        bucket: Int): Option[Map[Long, Seq[String]]] =
+      try {
+        val lines = readFile(fs, new Path(path)).split("\n", -1).toSeq
+        val rows = lines.drop(3).map(_.split("\t", -1).toSeq)
+        def parses(r: Seq[String]) =
+          r.size == width && r.forall(_.matches("-?\\d+"))
+        if (lines.take(3) != header || !rows.forall(parses)) None
+        else Some(rows.map(r => r(bucket).toLong -> r).toMap)
+      } catch { case NonFatal(_) => None }
+
+    /** Compare the current `digests` with the witness, on the driver:
+      * one job for the digest scan, one file read for the witness. */
+    def compare(digests: DataFrame): Compared = {
       val schema = digests.schema
       val rows = digests.collect().toSeq
-      val old =
-        if (metaMatches(fsOf(spark, meta), meta, version, nBuckets, key))
-          try Some(spark.read.schema(schema).parquet(path).collect().toSeq)
-          catch { case NonFatal(_) => None }
-        else None
-      Compared(
-        spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema),
-        rows, old.isDefined, old.map(dirtyBuckets(rows, _, fields)))
+      val bucket = schema.fieldIndex("bucket")
+      val cur = rows.map(r => r.getLong(bucket) -> cells(r)).toMap
+      val old = stored(schema.size, bucket)
+      Compared(schema, rows, old.isDefined, old.map { prev =>
+        (cur.keySet ++ prev.keySet).toSeq.collect {
+          case b if cur.get(b) != prev.get(b) => b -> cur.contains(b)
+        }
+      })
     }
 
     /** The witness cycle around one mutation of the `store` this witness
       * guards: check the lease at `<store name>.mutate`, DELETE the
-      * witness, run `mutation`, swap the current digests back in as the
-      * witness and, on a first build, write the meta. A crash anywhere in
-      * between leaves no witness, so the next run rebuilds instead of
-      * reading a torn store as clean. A kept state with zero dirty
-      * buckets leaves store and witness untouched. */
+      * witness, run `mutation`, check the lease at `<witness name>.commit`
+      * and land the current digests as the new witness file (write-tmp +
+      * rename). A crash anywhere in between leaves no witness, so the
+      * next run rebuilds instead of reading a torn store as clean. A kept
+      * state with zero dirty buckets leaves store and witness untouched. */
     def mutate(c: Compared, store: String, rebuild: Boolean, lease: Lease)(
         mutation: => Unit): Unit = {
       lease.check(s"${new Path(store).getName}.mutate")
       if (rebuild || c.dirty.exists(_.nonEmpty)) {
-        val fs = fsOf(c.cd.sparkSession, path)
         fs.delete(new Path(path), true)
         mutation
-        swapWrite(c.cd, path, lease)
-        if (!c.haveState) writeMeta(fs, meta, version, nBuckets, key)
+        lease.check(s"${new Path(path).getName}.commit")
+        writeMarker(fs, path,
+          (header ++ c.rows.map(cells(_).mkString("\t"))).mkString("\n"))
       }
     }
 

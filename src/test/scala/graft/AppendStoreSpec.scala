@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.{CompareMode, IncrementalValidation, Validator}
-import graft.ops.{Curation, CuratedFeed, IncrementalAgg, SequenceFeed,
-  TextAnalysis, Tokenize}
+import graft.ops.{Curation, CuratedFeed, IncrementalAgg, Indexing,
+  SequenceFeed, Similarity, TextAnalysis, Tokenize}
 import graft.state.StateStore
 
 /** The append-store family's crash discipline: a crash at every commit
@@ -193,6 +193,34 @@ class AppendStoreSpec extends AnyFunSuite with SparkSpec {
     }
     val partial: DataFrame => DataFrame =
       _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c"))
+    // the two index surfaces index their own corpora, churned on the
+    // same days: `s0` stands for the first corpus, `s1` for the second
+    def day[A](s: DataFrame, first: A, second: A) = if (s eq s0) first else second
+    val d0 = viaParquet(docs(0L, 80L))
+    val d1 = viaParquet(d0.withColumn("text", when(col("doc_id") % 9 === 2,
+      concat(col("text"), lit(" churned"))).otherwise(col("text")))
+      .filter(col("doc_id") =!= 40L))
+    def postings(store: DataFrame) = (rows(store.filter(col("term").isNotNull)
+        .select(col("term"), col("__id").cast("string"), col("tf"))),
+      store.filter(col("term").isNull).agg(sum("tf")).head().getLong(0))
+    def invertedPostings(d: DataFrame) = (rows(Indexing.invertedIndex(d,
+        "doc_id", "text")
+      .select(col("term"), explode(split(col("postings"), ",")).as("p"))
+      .select(col("term"), split(col("p"), ":").as("p"))
+      .select(col("term"), col("p")(0), col("p")(1).cast("long"))),
+      d.count())
+    def vectors(salt: Int) = (0 until 80).map { i =>
+      val r = new scala.util.Random(i * 7919 + salt)
+      (i.toLong, Array.fill(8)(r.nextFloat() * 2f - 1f))
+    }.toDF("vec_id", "embedding")
+    val e0 = viaParquet(vectors(0))
+    val e1 = viaParquet(e0.join(vectors(99).withColumnRenamed("embedding",
+        "moved"), Seq("vec_id"))
+      .withColumn("embedding", when(col("vec_id") % 9 === 4, col("moved"))
+        .otherwise(col("embedding"))).drop("moved"))
+    val booksDir = freshDir()
+    Similarity.pqBooksWrite(e0, booksDir, m = 4, ksub = 8)
+    val books = spark.read.parquet(s"$booksDir/books")
     val guarded = Seq(
       new Guarded("reportIncremental", (s, d) => rows(IncrementalValidation
         .reportIncremental(f, s, mode, d, nBuckets = 16,
@@ -210,7 +238,15 @@ class AppendStoreSpec extends AnyFunSuite with SparkSpec {
       new Guarded("IncrementalAgg.run", (s, d) => counts(IncrementalAgg.run(
           s, "id", Seq("check"), partial, aggKey = "checkcount", d,
           nBuckets = 16, dirtyFractionLimit = 1.0)._1),
-        s => counts(s.select(col("check"), lit(1L).as("c")))))
+        s => counts(s.select(col("check"), lit(1L).as("c")))),
+      new Guarded("Indexing.indexIncremental", (s, d) => postings(Indexing
+          .indexIncremental(day(s, d0, d1), d, nBuckets = 16,
+            dirtyFractionLimit = 1.0)._1),
+        s => invertedPostings(day(s, d0, d1))),
+      new Guarded("Similarity.pqIndexIncremental", (s, d) => rows(Similarity
+          .pqIndexIncremental(day(s, e0, e1), d, m = 4, ksub = 8,
+            nBuckets = 16, dirtyFractionLimit = 1.0)._1),
+        s => rows(Similarity.pqEncode(day(s, e0, e1), books, m = 4))))
     val failures = guarded.flatMap { g =>
       val cleanDir = freshDir()
       g.run(s0, cleanDir)

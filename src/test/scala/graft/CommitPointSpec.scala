@@ -128,16 +128,16 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     val s0 = viaParquet(randomKeyed(300, 150))
     IncrementalValidation.reportIncremental(f, s0, mode, stateDir,
       nBuckets = 32, dirtyFractionLimit = 1.0)
-    // an earlier run's complete witness of s0, left in staging
+    // an earlier run's complete witness of s0, left as the staging copy
     val fs = StateStore.fsOf(spark, stateDir)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new org.apache.hadoop.fs.Path(s"$stateDir/report_digests"), fs,
-      new org.apache.hadoop.fs.Path(s"$stateDir/report_digests__staging"),
+      new org.apache.hadoop.fs.Path(s"$stateDir/report_digests.tmp"),
       false, spark.sparkContext.hadoopConfiguration)
-    // a churned run rewrites the store, then aborts at the witness swap
+    // a churned run rewrites the store, then aborts at the witness commit
     val s1 = viaParquet(churn(s0, salt = 7))
     withHook {
-      case "report_digests.swap" => StateStore.breakLease(spark, stateDir)
+      case "report_digests.commit" => StateStore.breakLease(spark, stateDir)
       case _ => ()
     } {
       intercept[IllegalStateException] {
@@ -197,7 +197,8 @@ class CommitPointSpec extends AnyFunSuite with SparkSpec {
     // a churned run swaps its terms in, then crashes before the witness
     val s1 = viaParquet(churn(s0, salt = 11))
     withHook {
-      case "state.stage" => throw new RuntimeException("crash at state.stage")
+      case "state.commit" =>
+        throw new RuntimeException("crash at state.commit")
       case _ => ()
     } {
       intercept[RuntimeException](run(s1))

@@ -168,7 +168,7 @@ class ConfigJobSpec extends AnyFunSuite with SparkSpec {
     for (c <- Seq("n_first", "n_second", "missing_in_first",
         "missing_in_second", "n_differing", "n_matched"))
       assert(a.getAs[Long](c) == b.getAs[Long](c), s"col $c")
-    assert(new java.io.File(s"$outDir/validation_state/state").isDirectory,
+    assert(new java.io.File(s"$outDir/validation_state/state").exists(),
       "default state location must be <output>/validation_state")
     // second run: unchanged inputs answer from the state, same numbers
     val (_, sum2) = ValidationJob.run(spark, cfgInc, writeReports = false)
@@ -511,7 +511,7 @@ class ConfigJobSpec extends AnyFunSuite with SparkSpec {
     // exact input size (6) engages the incremental state
     val (_, sumAt) = ValidationJob.run(spark,
       ConfigLoader.fromYamlString(yaml(6)), writeReports = false)
-    assert(new java.io.File(s"$outDir/validation_state/state").isDirectory,
+    assert(new java.io.File(s"$outDir/validation_state/state").exists(),
       "at the floor the state must engage")
     assert(sumAt.collect()(0).toSeq == sumHigh.collect()(0).toSeq,
       "floor routing must never change the numbers")

@@ -74,7 +74,7 @@ class DailyDiffSpec extends AnyFunSuite with SparkSpec {
     // exchange as its own job. Pinned so a report output that starts
     // re-reading the store, or a state read that starts inferring its
     // schema, shows here
-    assert(jobs <= 20, s"$jobs jobs for one steady-state daily run")
+    assert(jobs <= 18, s"$jobs jobs for one steady-state daily run")
     assert(collectJobs == 0, s"summary.collect launched $collectJobs jobs")
   }
 
@@ -121,7 +121,7 @@ class DailyDiffSpec extends AnyFunSuite with SparkSpec {
     // counts observed on the one read of the store, so collecting it
     // launches no job. Pinned so a summary that starts re-reading the
     // store shows here
-    assert(jobs <= 16, s"$jobs jobs for one steady-state multi-column run")
+    assert(jobs <= 14, s"$jobs jobs for one steady-state multi-column run")
     assert(collectJobs == 0, s"summary.collect launched $collectJobs jobs")
   }
 

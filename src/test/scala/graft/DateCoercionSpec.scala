@@ -97,4 +97,61 @@ class DateCoercionSpec extends AnyFunSuite with SparkSpec {
       assert(sum.collect().head.toSeq == fast)
     } finally conf.set("spark.sql.session.timeZone", zone)
   }
+
+  test("stored state sees instants: a second side moved between the two " +
+      "instants of a repeated local hour dirties its bucket, so each " +
+      "incremental surface answers what a fresh computation does") {
+    import graft.core.{CompareMode, IncrementalValidation, Validator}
+    val conf = spark.conf
+    val zone = conf.get("spark.sql.session.timeZone")
+    conf.set("spark.sql.session.timeZone", "America/New_York")
+    try {
+      def side(instant: String) = {
+        val p = java.nio.file.Files.createTempDirectory("graft_dst").toString
+        Seq(("1", java.sql.Timestamp.from(java.time.Instant.parse(instant))))
+          .toDF("id", "check").write.mode("overwrite").parquet(p)
+        spark.read.parquet(p)
+      }
+      // day 0: the pair is equal; day 1: the second side moves by an
+      // hour that leaves its local-time string unchanged
+      val f = side("2024-11-03T05:30:00Z")
+      val days = Seq(f, side("2024-11-03T06:30:00Z"))
+      val mode = CompareMode.Date
+      val checks = Seq("check" -> mode)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq).toSet
+      def validated(s: org.apache.spark.sql.DataFrame) = {
+        val out = Validator.validate(f, s, mode)
+        rows(out.missingInFirst.select(lit("missing_in_first"), col("id"),
+            lit(null).cast("string"), lit(null).cast("string"))
+          .union(out.missingInSecond.select(lit("missing_in_second"),
+            col("id"), lit(null).cast("string"), lit(null).cast("string")))
+          .union(out.differing.select(lit("differing"), col("id"),
+            col("check_first").cast("string"),
+            col("check_second").cast("string"))))
+      }
+      val surfaces = Seq[(String, (org.apache.spark.sql.DataFrame,
+          String) => Any, org.apache.spark.sql.DataFrame => Any)](
+        ("reportIncremental", (s, d) => rows(IncrementalValidation
+          .reportIncremental(f, s, mode, d, nBuckets = 8)._1), validated),
+        ("reportIncrementalMulti", (s, d) => rows(IncrementalValidation
+          .reportIncrementalMulti(f, s, checks, d, nBuckets = 8)._1),
+          s => rows(Validator.diffMulti(f, s, checks))),
+        ("run", (s, d) => rows(IncrementalValidation.run(f, s, mode, d,
+          nBuckets = 8)._1), s => rows(Validator.summaryFast(f, s, mode))),
+        ("runMulti", (s, d) => rows(IncrementalValidation.runMulti(f, s,
+          checks, d, nBuckets = 8)._1),
+          s => rows(Validator.summaryMulti(f, s, checks))))
+      val failures = surfaces.flatMap { case (name, run, fresh) =>
+        val dir = java.nio.file.Files.createTempDirectory("graft_dstst")
+          .toString
+        days.zipWithIndex.flatMap { case (s, day) =>
+          val (got, want) = (run(s, dir), fresh(s))
+          if (got == want) None else Some(s"$name, day $day: $got != $want")
+        }
+      }
+      assert(validated(days(1)).nonEmpty, "day 1 must differ")
+      assert(failures.isEmpty, failures.mkString("\n"))
+    } finally conf.set("spark.sql.session.timeZone", zone)
+  }
 }

@@ -333,8 +333,13 @@ class Round14OpsSpec extends AnyFunSuite with SparkSpec {
       .select(col("id"), col("num").as("check")))
     IncrementalValidation.run(f, f, CompareMode.Numeric, stateDir,
       nBuckets = 8)
-    Seq((1, 8, "numeric")).toDF("version", "n_buckets", "mode")
-      .write.mode("overwrite").parquet(s"$stateDir/meta")
+    // the same witness under a version-1 header (through the
+    // filesystem, so its checksum stays valid)
+    val fs = StateStore.fsOf(spark, stateDir)
+    val witness = s"$stateDir/state"
+    val lines = StateStore.readMarker(fs, witness).get.split("\n", -1)
+    assert(lines(0) != "1")
+    StateStore.writeMarker(fs, witness, ("1" +: lines.tail).mkString("\n"))
     val (_, r) = IncrementalValidation.run(f, f, CompareMode.Numeric,
       stateDir, nBuckets = 8)
     assert(r.rebuilt, "a v1-format state must never answer a v2 run")

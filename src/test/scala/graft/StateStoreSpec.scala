@@ -9,13 +9,45 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{CompareMode, IncrementalValidation}
+import graft.core.{CompareMode, IncrementalValidation, Validator}
 import graft.ops.{IncrementalAgg, SequenceFeed, Similarity}
 import graft.state.StateStore
 
+/** The local filesystem under the `faulty` scheme (registered as
+  * `fs.faulty.impl`): inside [[FaultyFs.failing]], `open` or
+  * `listStatus` of the paths it names throws. */
+class FaultyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faulty:///")
+  override def getScheme: String = "faulty"
+  override def open(f: Path, bufferSize: Int) = {
+    FaultyFs.check("open", f)
+    super.open(f, bufferSize)
+  }
+  override def listStatus(f: Path) = {
+    FaultyFs.check("listStatus", f)
+    super.listStatus(f)
+  }
+}
+
+object FaultyFs {
+  @volatile private var fault: (String, String => Boolean) = ("", _ => false)
+
+  private def check(op: String, f: Path): Unit =
+    if (fault._1 == op && fault._2(f.toUri.getPath))
+      throw new java.io.IOException(s"injected $op fault at $f")
+
+  /** Run `body` with `op` failing on every path whose URI path `at`
+    * accepts. */
+  def failing[A](op: String, at: String => Boolean)(body: => A): A = {
+    fault = (op, at)
+    try body finally fault = ("", _ => false)
+  }
+}
+
 /** The stored-state module: checked renames in the swap, heal never
-  * touching a live store, one owner of the primitives, and the pinned
-  * list of commit points each surface crosses. */
+  * touching a live store, one owner of the primitives, the pinned list
+  * of commit points each surface crosses, and read faults on a witness
+  * or a store. */
 class StateStoreSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -176,16 +208,16 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
     report(s0)
     val s1 = viaParquet(churned(s0))
     assert(points(assert(!report(s1)._2.rebuilt)) == Seq("report.mutate",
-      "report.renames", "report_digests.stage", "report_digests.swap"))
+      "report.renames", "report_digests.commit"))
 
     // churned summaries, single- and multi-check: the terms swap inside
-    // the witness cycle
+    // the witness cycle, then the witness file lands
     val sumDir = freshDir()
     def summary(s: DataFrame) = IncrementalValidation.run(f, s,
       CompareMode.Numeric, sumDir, nBuckets = 32, dirtyFractionLimit = 1.0)
     summary(s0)
     val summaryPoints = Seq("terms.mutate", "terms.stage", "terms.swap",
-      "state.stage", "state.swap")
+      "state.commit")
     assert(points(assert(!summary(s1)._2.rebuilt)) == summaryPoints)
     val multiDir = freshDir()
     def alt(df: DataFrame) = df.withColumn("alt", upper(col("check")))
@@ -202,7 +234,7 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       aggKey = "checkcount", aggDir, nBuckets = 32, dirtyFractionLimit = 1.0)
     agg(s0)
     assert(points(assert(!agg(s1)._2.rebuilt)) == Seq("agg.mutate",
-      "agg.renames", "agg_digests.stage", "agg_digests.swap"))
+      "agg.renames", "agg_digests.commit"))
 
     // append fold, then the renames-only compaction with its fence
     val appDir = freshDir()
@@ -232,5 +264,65 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
     assert(points(Similarity.pqBooksWrite(corpus, freshDir(), m = 4,
       ksub = 8)) == Seq("pq.books", "books.stage", "books.swap",
       "pq.books_sig", "books_err.stage", "books_err.swap"))
+  }
+
+  /** A fresh state directory on the `faulty` filesystem. */
+  private def faultyDir(): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.faulty.impl", classOf[FaultyFs].getName)
+    s"faulty://${freshDir()}"
+  }
+
+  test("read faults: a witness file that cannot be opened reads as no " +
+      "state, so the run rebuilds and answers what a fresh computation " +
+      "does") {
+    val f = viaParquet(keyed(300))
+    val s = viaParquet(churned(keyed(300)))
+    val mode = CompareMode.Numeric
+    val partial: DataFrame => DataFrame =
+      _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val surfaces = Seq[(String, String => (Any, Boolean), Any)](
+      ("state", { d =>
+        val (sum, r) = IncrementalValidation.run(f, s, mode, d, nBuckets = 16)
+        (rows(sum), r.rebuilt)
+      }, rows(Validator.summaryFast(f, s, mode))),
+      ("report_digests", { d =>
+        val (cur, r) = IncrementalValidation.reportIncremental(f, s, mode, d,
+          nBuckets = 16)
+        (rows(cur.filter(col("kind") === "differing").drop("kind")), r.rebuilt)
+      }, rows(Validator.validate(f, s, mode).differing
+        .selectExpr("id", "CAST(check_first AS STRING)",
+          "CAST(check_second AS STRING)"))),
+      ("agg_digests", { d =>
+        val (store, r) = IncrementalAgg.run(s, "id", Seq("check"), partial,
+          aggKey = "checkcount", d, nBuckets = 16)
+        (rows(store.groupBy("check").agg(sum("c"))), r.rebuilt)
+      }, rows(s.groupBy("check").agg(count(lit(1))))))
+    for ((witness, run, want) <- surfaces) {
+      val dir = faultyDir()
+      assert(run(dir) == (want, true), s"$witness: first build")
+      assert(run(dir) == (want, false), s"$witness: kept state")
+      val got = FaultyFs.failing("open", _.endsWith(s"/$witness"))(run(dir))
+      assert(got == (want, true), s"$witness: an unopenable witness")
+    }
+  }
+
+  test("read faults: a report store whose files cannot be opened or " +
+      "listed fails the run; it never answers empty") {
+    val f = viaParquet(keyed(300))
+    val s = viaParquet(churned(keyed(300)))
+    for (op <- Seq("open", "listStatus")) {
+      val dir = faultyDir()
+      def report() = IncrementalValidation.reportIncremental(f, s,
+        CompareMode.Numeric, dir, nBuckets = 16)._1.collect()
+      assert(report().nonEmpty)
+      // unchanged inputs: zero dirty buckets, so the fault hits the read
+      val store = new Path(s"$dir/report").toUri.getPath
+      intercept[Exception] {
+        FaultyFs.failing(op, p => p == store || p.startsWith(s"$store/"))(
+          report())
+      }
+    }
   }
 }
