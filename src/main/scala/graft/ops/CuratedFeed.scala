@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.state.StateStore
 
@@ -87,6 +88,11 @@ object CuratedFeed {
   // not partition discovery (batch rides as a data column)
   private def ledgerPath(stateDir: String, batchId: Long) =
     s"$stateDir/ledger/b$batchId"
+
+  /** The ledger's columns, all LongType: its files' schema, passed to the
+    * read (no inference job). */
+  private val ledgerCols = Seq("batch", "rows_in", "quality_kept",
+    "decontaminated_kept", "novel_docs", "sequences_cut")
 
   /** Injective digest of a string list (length-prefixed UTF-8 — no
     * separator collisions). */
@@ -294,10 +300,9 @@ object CuratedFeed {
         .getOrElse(SequenceFeed.carrySeqTotal(spark, fd, batchId) -
           SequenceFeed.carrySeqTotal(spark, fd, batchId - 1))
       StateStore.landStaged(fs, s"$stateDir/ledger__staging", lp, ()) {
-        Seq((batchId, rowsIn, qualityKept, clearedKept, novel, cut))
-          .toDF("batch", "rows_in", "quality_kept", "decontaminated_kept",
-            "novel_docs", "sequences_cut")
-          .coalesce(1).write.parquet(_)
+        StateStore.writer(
+          Seq((batchId, rowsIn, qualityKept, clearedKept, novel, cut))
+            .toDF(ledgerCols: _*).coalesce(1)).parquet(_)
       }
     }
     // the feed fold is safe any time AFTER its own append: it only
@@ -333,11 +338,10 @@ object CuratedFeed {
     val p = new org.apache.hadoop.fs.Path(s"$stateDir/ledger")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p))
-      Seq.empty[(Long, Long, Long, Long, Long, Long)]
-        .toDF("batch", "rows_in", "quality_kept", "decontaminated_kept",
-          "novel_docs", "sequences_cut")
+      Seq.empty[(Long, Long, Long, Long, Long, Long)].toDF(ledgerCols: _*)
     else
-      spark.read.option("recursiveFileLookup", "true")
+      spark.read.schema(StructType(ledgerCols.map(StructField(_, LongType))))
+        .option("recursiveFileLookup", "true")
         .parquet(p.toString).orderBy("batch")
   }
 

@@ -222,15 +222,16 @@ object IncrementalAgg {
         partial(withBucketCol(table)),
         d => partial(withBucketCol(dirtySlice(d))))
 
-      // empty-table passes leave a data-less store dir (schema
-      // uninferable) — only THAT case answers empty; real read
-      // failures propagate
+      // the store's files hold the partial's columns: read with that
+      // schema (no inference job). Empty-table passes leave a data-less
+      // store dir — only THAT case answers empty; real read failures
+      // propagate
+      val empty = partial(withBucketCol(table.limit(0)))
       val current =
         if (StateStore.storeHasData(fs, storePath(stateDir)))
-          spark.read.parquet(storePath(stateDir))
-            .drop("__bucket", "__bgroup")
-        else partial(withBucketCol(table.limit(0))).drop("__bucket")
-      (current, cmp.record(rebuild))
+          StateStore.readGrouped(spark, storePath(stateDir), empty.schema)
+        else empty
+      (current.drop("__bucket", "__bgroup"), cmp.record(rebuild))
     } finally lease.release()
   }
 

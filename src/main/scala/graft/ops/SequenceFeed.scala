@@ -3,7 +3,7 @@ package graft.ops
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.state.StateStore
@@ -265,8 +265,8 @@ object SequenceFeed {
         val target = carryPath(stateDir, batchId)
         StateStore.landStaged(StateStore.fsOf(spark, stateDir),
             target + "__staging", target, lease.check("carry.commit")) {
-          spark.createDataset(rows).coalesce(1)
-            .write.mode(SaveMode.Overwrite).parquet(_)
+          StateStore.writer(spark.createDataset(rows).coalesce(1))
+            .parquet(_)
         }
         // both carry totals are already on the driver — return them so a
         // composed caller (the curated feed's ledger) can price the
@@ -416,10 +416,10 @@ object SequenceFeed {
       // so a crashed publish leaves only ignorable staging garbage
       StateStore.landStaged(fs, fin + "__staging", fin,
           lease.check("snapshots.publish")) {
-        readCarry(spark, stateDir, last)
+        StateStore.writer(readCarry(spark, stateDir, last)
           .select(col("shard"), col("next_seq").as("hwm"))
-          .coalesce(1)
-          .write.parquet(_)
+          .coalesce(1))
+          .parquet(_)
       }
       last
     } finally lease.release()

@@ -3,14 +3,16 @@ package graft.state
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset,
+  Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.IncrementalValidation.IncrementalReport
 
 /** The stored-state primitives every incremental surface is built on:
-  * the single-writer lease, marker files, the renames-only swap and its
+  * the single-writer lease, marker files, the one writer of state
+  * parquet files, the renames-only swap and its
   * heal, the grouped `__bgroup` layout with its group surgery, the
   * one-file digest witness that guards a store (the driver-side compare
   * and the maintenance cycle around it), and the
@@ -267,11 +269,19 @@ object StateStore {
     if (had) fs.delete(old, true)
   }
 
+  /** The one writer of every state parquet file: overwrite, zstd. The
+    * codec is recorded per column chunk in each file's footer, so a store
+    * written with another codec reads on unchanged and a compaction or
+    * surgery rewrites it in zstd — no version bump. Outputs (reports,
+    * pipeline and epoch files, catalog tables) keep Spark's default. */
+  private[graft] def writer[T](ds: Dataset[T]): DataFrameWriter[T] =
+    ds.write.mode(SaveMode.Overwrite).option("compression", "zstd")
+
   /** [[swap]] in `df`, written as parquet. */
   private[graft] def swapWrite(df: DataFrame, target: String,
       lease: Lease): Unit =
     swap(fsOf(df.sparkSession, target), target, lease, ()) { tmp =>
-      df.write.mode(SaveMode.Overwrite).parquet(tmp)
+      writer(df).parquet(tmp)
     }
 
   // ---- grouped layout ---------------------------------------------------
@@ -303,11 +313,20 @@ object StateStore {
     * reads and any `sortCols` filter prune on row-group min/max stats. */
   private def writeLaidOut(rows: DataFrame, bucketCol: String,
       groups: Int, sortCols: Seq[String], path: String): Unit =
-    rows.withColumn("__bgroup", groupCol(bucketCol, groups))
+    writer(rows.withColumn("__bgroup", groupCol(bucketCol, groups))
       .repartition(col("__bgroup"))
       .sortWithinPartitions(
-        (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*)
-      .write.mode(SaveMode.Overwrite).partitionBy("__bgroup").parquet(path)
+        (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*))
+      .partitionBy("__bgroup").parquet(path)
+
+  /** Read a grouped store whose files hold `rows`' columns, with that
+    * schema plus the LongType `__bgroup` directory level: no inference
+    * job, and a LongType group IN-list compares the raw partition
+    * attribute, so it prunes directories. */
+  private[graft] def readGrouped(spark: SparkSession, store: String,
+      rows: StructType): DataFrame =
+    spark.read.schema(StructType(rows.fields.map(_.copy(nullable = true)) :+
+      StructField("__bgroup", LongType))).parquet(store)
 
   /** Group-granular surgery on a grouped store: the dirty buckets'
     * GROUPS rewrite as (`recomputed` dirty rows) ∪ (the same groups'
@@ -323,15 +342,10 @@ object StateStore {
     val dirtyGroups = dirty.map(groupOf(_, groups)).distinct
     // an all-clean prior store can be data-less — carried is then empty
     // by construction. Any other read failure propagates: an empty
-    // stand-in would silently drop the clean buckets' rows. The explicit
-    // schema needs no inference job, and the LongType group IN-list
-    // compares the raw partition attribute, so it prunes directories
-    val storeSchema = StructType(
-      recomputed.schema.fields.map(_.copy(nullable = true)) :+
-        StructField("__bgroup", LongType))
+    // stand-in would silently drop the clean buckets' rows
     val carried =
       if (storeHasData(fs, store))
-        spark.read.schema(storeSchema).parquet(store)
+        readGrouped(spark, store, recomputed.schema)
           .filter(col("__bgroup").isin(dirtyGroups: _*) &&
             !col(bucketCol).isin(dirty: _*))
           .drop("__bgroup")
@@ -491,11 +505,10 @@ object StateStore {
     // group alone and lose the bucket order
     val sortCols = batch.fold(Seq("__batch"))(_ => Nil) :+ "__bgroup" :+
       bucketCol
-    val w = groups.fold(stamped.repartition(col(level)))(g =>
+    val w = writer(groups.fold(stamped.repartition(col(level)))(g =>
       stamped.withColumn("__bgroup", groupCol(bucketCol, g))
         .repartition(col("__bgroup"))
-        .sortWithinPartitions(sortCols.map(col): _*))
-      .write.mode(SaveMode.Overwrite)
+        .sortWithinPartitions(sortCols.map(col): _*)))
     (if (replace) w.option("partitionOverwriteMode", "dynamic") else w)
       .partitionBy("__batch", level).parquet(path)
   }

@@ -168,7 +168,10 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       """def\s+\w*([Ss]treamId|[Ss]treamOwner)\w*""",
       """def\s+(batchPartitions|list\w*Ids|\w*BatchIds)\b""",
       """stripPrefix\("\w*=""",
-      """def\s+(\w*[Gg]roupOf|appendGroup\w*)\b""").map(_.r)
+      """def\s+(\w*[Gg]roupOf|appendGroup\w*)\b""",
+      // the state files' codec: the `compression` write option or the
+      // session's parquet codec key
+      """[".]compression\b""").map(_.r)
     val st = Files.walk(root)
     val sources =
       try st.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
@@ -322,6 +325,44 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       intercept[Exception] {
         FaultyFs.failing(op, p => p == store || p.startsWith(s"$store/"))(
           report())
+      }
+    }
+  }
+
+  test("read faults: an unreadable terms store makes runMulti rebuild to " +
+      "summaryMulti's answer or throw; it never answers empty") {
+    val f = viaParquet(keyed(300))
+    val s = viaParquet(churned(keyed(300)))
+    val checks = Seq("check" -> CompareMode.Numeric)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val want = rows(Validator.summaryMulti(f, s, checks))
+    for (op <- Seq("open", "listStatus")) {
+      val dir = faultyDir()
+      def run() = rows(IncrementalValidation.runMulti(f, s, checks, dir,
+        nBuckets = 16)._1)
+      assert(run() == want)
+      val terms = new Path(s"$dir/terms").toUri.getPath
+      val got = scala.util.Try(FaultyFs.failing(op,
+        p => p == terms || p.startsWith(s"$terms/"))(run()))
+      got.foreach(g => assert(g == want, s"$op fault: answered $g"))
+      assert(run() == want, s"after the $op fault")
+    }
+  }
+
+  test("read faults: an unreadable churn-aggregate store makes " +
+      "IncrementalAgg.run throw; it never answers empty") {
+    val s = viaParquet(churned(keyed(300)))
+    for (op <- Seq("open", "listStatus")) {
+      val dir = faultyDir()
+      def run() = IncrementalAgg.run(s, "id", Seq("check"),
+        _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c")),
+        aggKey = "checkcount", dir, nBuckets = 16)._1.collect()
+      assert(run().nonEmpty)
+      // unchanged input: zero dirty buckets, so the fault hits the read
+      val store = new Path(s"$dir/agg").toUri.getPath
+      intercept[Exception] {
+        FaultyFs.failing(op, p => p == store || p.startsWith(s"$store/"))(
+          run())
       }
     }
   }
