@@ -217,16 +217,19 @@ object IncrementalAgg {
       def dirtySlice(d: Seq[Long]): DataFrame = table.filter(
         IncrementalValidation.dirtyPred(table, bucketCol, nBuckets, d, idCol))
 
-      val rebuild = w.maintain(cmp, storePath(stateDir), "__bucket",
-          storeSortCols, dirtyFractionLimit, lease)(
+      // the store is read back with the partial's schema (no inference
+      // job), so files written with other columns — an input type change
+      // the string-cast digests cannot see — are not kept: they rebuild
+      val empty = partial(withBucketCol(table.limit(0)))
+      val kept = StateStore.holdsSchema(fs, storePath(stateDir), empty.schema)
+      val rebuild = w.maintain(if (kept) cmp else cmp.withoutState,
+          storePath(stateDir), "__bucket", storeSortCols, dirtyFractionLimit,
+          lease)(
         partial(withBucketCol(table)),
         d => partial(withBucketCol(dirtySlice(d))))
 
-      // the store's files hold the partial's columns: read with that
-      // schema (no inference job). Empty-table passes leave a data-less
-      // store dir — only THAT case answers empty; real read failures
-      // propagate
-      val empty = partial(withBucketCol(table.limit(0)))
+      // empty-table passes leave a data-less store dir — only THAT case
+      // answers empty; real read failures propagate
       val current =
         if (StateStore.storeHasData(fs, storePath(stateDir)))
           StateStore.readGrouped(spark, storePath(stateDir), empty.schema)

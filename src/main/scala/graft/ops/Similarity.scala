@@ -673,17 +673,6 @@ object Similarity {
   private def booksPath(stateDir: String) = s"$stateDir/books"
   private def booksSigPath(stateDir: String) = s"$stateDir/books_sig"
 
-  /** The stored books, read with their fixed schema ([[pqFit]]'s rows:
-    * sub, cent_id, qcsv) — no inference job. */
-  private def readBooks(spark: org.apache.spark.sql.SparkSession,
-      stateDir: String): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.read.schema(StructType(Seq(StructField("sub", IntegerType),
-        StructField("cent_id", LongType),
-        StructField("qcsv", ArrayType(LongType)))))
-      .parquet(booksPath(stateDir))
-  }
-
   /** The stored books' [[booksSignature]] as a MARKER next to the books:
     * the signature is a pure function of the (frozen) codebook content,
     * so computing it once at fit time and reading the marker thereafter
@@ -695,7 +684,7 @@ object Similarity {
       stateDir: String): String = {
     val fs = StateStore.fsOf(spark, stateDir)
     StateStore.readMarker(fs, booksSigPath(stateDir)).getOrElse {
-      val sig = booksSignature(readBooks(spark, stateDir))
+      val sig = booksSignature(spark.read.parquet(booksPath(stateDir)))
       StateStore.writeMarker(fs, booksSigPath(stateDir), sig)
       sig
     }
@@ -909,7 +898,7 @@ object Similarity {
     * dimension they encode. */
   private def loadBooks(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (DataFrame, Int) = {
-    val books = readBooks(spark, stateDir)
+    val books = spark.read.parquet(booksPath(stateDir))
     val bookRows = books.collect().toSeq
     require(bookRows.nonEmpty,
       s"stored codebook at ${booksPath(stateDir)} is empty/damaged — " +
@@ -965,7 +954,7 @@ object Similarity {
   def pqSearchIncremental(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, queries: DataFrame, k: Int, m: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqSearch(readBooks(spark, stateDir),
+    pqSearch(spark.read.parquet(booksPath(stateDir)),
       IncrementalAgg.readStore(spark, stateDir), queries, k, m,
       idCol, vecCol)
 

@@ -3,16 +3,20 @@ package graft.state
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset,
   Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StructField,
+  StructType}
 
 import graft.core.IncrementalValidation.IncrementalReport
 
 /** The stored-state primitives every incremental surface is built on:
-  * the single-writer lease, marker files, the one writer of state
-  * parquet files, the renames-only swap and its
+  * the single-writer lease, marker files, the zstd writer of the
+  * append stores' and feed's files, the renames-only swap and its
   * heal, the grouped `__bgroup` layout with its group surgery, the
   * one-file digest witness that guards a store (the driver-side compare
   * and the maintenance cycle around it), and the
@@ -177,17 +181,20 @@ object StateStore {
     * failure (corrupt footer, transient FS error) must PROPAGATE, not
     * silently answer empty. */
   private[graft] def storeHasData(fs: FileSystem, path: String): Boolean = {
-    // Spark's file index skips these names, files or directories: a
-    // writer's `_temporary` and `.spark-staging-*` trees, `_SUCCESS`,
-    // checksums; `__batch=…`-style partition directories are read
-    def holds(p: Path): Boolean = fs.listStatus(p).exists { st =>
-      val n = st.getPath.getName
-      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".") &&
-        (!st.isDirectory || holds(st.getPath))
-    }
     val p = new Path(path)
-    fs.exists(p) && holds(p)
+    fs.exists(p) && firstDataFile(fs, p).isDefined
   }
+
+  /** The first file under the directory `p` that a reader reads. Spark's
+    * file index skips these names, files or directories: a writer's
+    * `_temporary` and `.spark-staging-*` trees, `_SUCCESS`, checksums;
+    * `__batch=…`-style partition directories are read. */
+  private def firstDataFile(fs: FileSystem, p: Path): Option[Path] =
+    fs.listStatus(p).iterator.filter { st =>
+      val n = st.getPath.getName
+      !(n.startsWith("_") && !n.contains("=")) && !n.startsWith(".")
+    }.map(st => if (st.isDirectory) firstDataFile(fs, st.getPath)
+      else Some(st.getPath)).collectFirst { case Some(f) => f }
 
   /** The ids of the `<prefix>=<id>` entries directly under `dir` (none
     * when it does not exist) — one driver-side listing. A name whose id
@@ -269,11 +276,17 @@ object StateStore {
     if (had) fs.delete(old, true)
   }
 
-  /** The one writer of every state parquet file: overwrite, zstd. The
-    * codec is recorded per column chunk in each file's footer, so a store
-    * written with another codec reads on unchanged and a compaction or
-    * surgery rewrites it in zstd — no version bump. Outputs (reports,
-    * pipeline and epoch files, catalog tables) keep Spark's default. */
+  /** The writer of the append stores' files ([[writeBatches]]: every
+    * batch and compaction fold) and of the feed's per-batch files (the
+    * sequence carry, the snapshot high-water mark, the curated ledger):
+    * overwrite, zstd. These hold whole corpora and grow with every batch,
+    * so they are where the stored bytes are. The codec is recorded per
+    * column chunk in each file's footer, so a store written with another
+    * codec reads on unchanged and its next compaction rewrites it in
+    * zstd — no version bump. The witness-guarded stores ([[swapWrite]],
+    * [[writeLaidOut]]) and every output keep Spark's default codec: they
+    * are churn-sized, rewritten on every dirty run, and zstd measured
+    * slower per op there for a few percent of bytes. */
   private[graft] def writer[T](ds: Dataset[T]): DataFrameWriter[T] =
     ds.write.mode(SaveMode.Overwrite).option("compression", "zstd")
 
@@ -281,7 +294,7 @@ object StateStore {
   private[graft] def swapWrite(df: DataFrame, target: String,
       lease: Lease): Unit =
     swap(fsOf(df.sparkSession, target), target, lease, ()) { tmp =>
-      writer(df).parquet(tmp)
+      df.write.mode(SaveMode.Overwrite).parquet(tmp)
     }
 
   // ---- grouped layout ---------------------------------------------------
@@ -313,20 +326,40 @@ object StateStore {
     * reads and any `sortCols` filter prune on row-group min/max stats. */
   private def writeLaidOut(rows: DataFrame, bucketCol: String,
       groups: Int, sortCols: Seq[String], path: String): Unit =
-    writer(rows.withColumn("__bgroup", groupCol(bucketCol, groups))
+    rows.withColumn("__bgroup", groupCol(bucketCol, groups))
       .repartition(col("__bgroup"))
       .sortWithinPartitions(
-        (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*))
-      .partitionBy("__bgroup").parquet(path)
+        (col("__bgroup") +: col(bucketCol) +: sortCols.map(col)): _*)
+      .write.mode(SaveMode.Overwrite).partitionBy("__bgroup").parquet(path)
 
   /** Read a grouped store whose files hold `rows`' columns, with that
     * schema plus the LongType `__bgroup` directory level: no inference
     * job, and a LongType group IN-list compares the raw partition
-    * attribute, so it prunes directories. */
+    * attribute, so it prunes directories. The files are not checked
+    * against `rows`: a caller whose columns can change under one state
+    * identity asks [[holdsSchema]] first. */
   private[graft] def readGrouped(spark: SparkSession, store: String,
       rows: StructType): DataFrame =
     spark.read.schema(StructType(rows.fields.map(_.copy(nullable = true)) :+
       StructField("__bgroup", LongType))).parquet(store)
+
+  /** Were `store`'s files written with `rows`' columns (names and types,
+    * nullability aside)? One footer read on the driver: the Spark schema
+    * the first data file records. A store with no data file holds any
+    * schema; a listing or footer fault propagates. */
+  private[graft] def holdsSchema(fs: FileSystem, store: String,
+      rows: StructType): Boolean = {
+    val p = new Path(store)
+    (if (fs.exists(p)) firstDataFile(fs, p) else None).forall { f =>
+      val in = ParquetFileReader.open(HadoopInputFile.fromPath(f,
+        fs.getConf))
+      val stored = try in.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY)
+      finally in.close()
+      stored != null &&
+        DataType.fromJson(stored).catalogString == rows.catalogString
+    }
+  }
 
   /** Group-granular surgery on a grouped store: the dirty buckets'
     * GROUPS rewrite as (`recomputed` dirty rows) ∪ (the same groups'
@@ -382,6 +415,9 @@ object StateStore {
     def dirty: Option[Seq[Long]] = dirtyRows.map(_.map(_._1))
     def tooDirty(limit: Double): Boolean =
       dirty.exists(d => total > 0 && d.size.toDouble / total > limit)
+    /** This compare with the stored state disowned: the rebuild
+      * direction, for a store whose files the caller cannot read. */
+    def withoutState: Compared = copy(haveState = false, dirtyRows = None)
     /** The column-sum of a LongType digest field, on the driver. */
     def sum(field: String): Long =
       rows.map(r => r.getLong(r.fieldIndex(field))).sum

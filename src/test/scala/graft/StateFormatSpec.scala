@@ -15,11 +15,13 @@ import graft.core.{CompareMode, IncrementalValidation}
 import graft.ops.{Curation, CuratedFeed, Dedup, IncrementalAgg, Indexing,
   SequenceFeed, Similarity, TextAnalysis, Tokenize}
 
-/** The on-disk format of stored state: every state parquet file goes
-  * through `StateStore.writer`, so every column chunk is zstd; a store
-  * written with another codec reads on unchanged and its next
-  * compaction rewrites it in zstd; and the reads that know their
-  * store's schema launch no schema-inference job. */
+/** The on-disk format of stored state: the append stores' and the feed's
+  * parquet files go through `StateStore.writer`, so their column chunks
+  * are zstd, while the witness-guarded stores keep the session's codec; a
+  * store written with another codec reads on unchanged and its next
+  * compaction rewrites it in zstd; and the reads that know their store's
+  * schema launch no schema-inference job, and rebuild a store whose files
+  * hold other columns. */
 class StateFormatSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
@@ -86,8 +88,8 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
   private lazy val merges = Tokenize.loadMerges(spark.read
     .parquet("src/test/resources/bpe_bytes_merges.parquet"))
 
-  test("every column chunk of every state parquet file of every stateful " +
-      "surface is zstd") {
+  test("every column chunk of every append-store and feed file is zstd; " +
+      "the witness-guarded stores keep the session's codec") {
     val f = viaParquet(keyed(1, 300))
     val s0 = viaParquet(keyed(2, 300))
     // a churned day: the witness surfaces take the surgery path too
@@ -109,7 +111,7 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
       append(batches(2), 2L, dir)
     }
     val curatedAll = viaParquet(docs(0L, 45L))
-    val surfaces = Seq[(String, String => Unit)](
+    val witnessed = Seq[(String, String => Unit)](
       "reportIncremental" -> (d => days(s => IncrementalValidation
         .reportIncremental(f, s, mode, d, nBuckets = 16,
           dirtyFractionLimit = 1.0))),
@@ -123,6 +125,8 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
         _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c")),
         aggKey = "checkcount", d, nBuckets = 16,
         dirtyFractionLimit = 1.0))),
+      "PQ books" -> (Similarity.pqBooksWrite(vecs, _, m = 4, ksub = 8)))
+    val appended = Seq[(String, String => Unit)](
       "vocab append + compaction" -> appends(
         IncrementalAgg.vocabAppend(_, _, _, nBuckets = 16),
         IncrementalAgg.compactVocabStore(spark, _)),
@@ -138,7 +142,7 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
       "signature append + compaction" -> appends(
         Dedup.minhashAppend(_, _, _, nBuckets = 16),
         IncrementalAgg.compactAppendStore(spark, _, Seq("id", "h"), "sigv")),
-      "PQ books, code append + compaction" -> { d =>
+      "PQ code append + compaction" -> { d =>
         Similarity.pqBooksWrite(vecs, d, m = 4, ksub = 8)
         for (b <- 0L until 3L) {
           Similarity.pqAppend(vecs.filter(col("vec_id") % 3 === b), b, d,
@@ -146,6 +150,9 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
           if (b == 1L) IncrementalAgg.compactAppendStore(spark, d,
             Seq("vec_id", "sub"), "code")
         }
+        // the books and their seed error are swapped stores, checked
+        // under "PQ books"
+        Seq("books", "books_err").foreach(b => deleteTree(Paths.get(d, b)))
       },
       "sequencesAppend + compaction" -> { d =>
         deliverFeed(d, 0L)
@@ -163,14 +170,26 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
         deliverFeed(d, 0L)
         SequenceFeed.publishSnapshot(spark, d)
       })
-    val failures = surfaces.flatMap { case (name, run) =>
-      val dir = freshDir()
-      run(dir)
-      val chunks = parquetFiles(dir).flatMap(p => codecs(p).map(p -> _))
-      if (chunks.isEmpty) Seq(s"$name: no column chunk under $dir")
-      else chunks.collect { case (p, c) if c != "ZSTD" => s"$name: $p is $c" }
-    }
+    val session = spark.conf.get("spark.sql.parquet.compression.codec")
+      .toUpperCase
+    assert(session != "ZSTD", "the session codec must differ from zstd")
+    val failures = (witnessed.map((session, _)) ++ appended.map(("ZSTD", _)))
+      .flatMap { case (want, (name, run)) =>
+        val dir = freshDir()
+        run(dir)
+        val chunks = parquetFiles(dir).flatMap(p => codecs(p).map(p -> _))
+        if (chunks.isEmpty) Seq(s"$name: no column chunk under $dir")
+        else chunks.collect {
+          case (p, c) if c != want => s"$name: $p is $c, not $want"
+        }
+      }
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  private def deleteTree(p: java.nio.file.Path): Unit = {
+    val st = Files.walk(p)
+    try st.iterator().asScala.toList.reverse.foreach(Files.delete)
+    finally st.close()
   }
 
   /** Rewrite every parquet file under `dir` in place as snappy — how a
@@ -234,5 +253,56 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
     // 0: the six-column schema is fixed. 1 when it was inferred
     assert(ledgerJobs == 0, s"$ledgerJobs jobs to open the ledger")
     assert(ledger.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L))
+  }
+
+  test("IncrementalAgg.run rebuilds a store whose files hold other " +
+      "columns than the partial, under the same aggKey and inputs") {
+    val s = viaParquet(keyed(3, 300))
+    val dir = freshDir()
+    def run(partial: DataFrame => DataFrame) = IncrementalAgg.run(s, "id",
+      Seq("check"), partial, aggKey = "checkcount", dir, nBuckets = 16)
+    val counted: DataFrame => DataFrame =
+      _.groupBy(col("__bucket"), col("check")).agg(count(lit(1)).as("c"))
+    val want = rows(s.groupBy("check").agg(count(lit(1)).as("c")))
+    def answer(df: DataFrame) = rows(df.groupBy("check")
+      .agg(sum(col("c")).cast("long").as("c")))
+    assert(run(counted)._2.rebuilt)
+    val (same, clean) = run(counted)
+    assert(!clean.rebuilt && clean.dirtyBuckets == 0, clean)
+    assert(answer(same) == want)
+    // a narrower type (bigint files, int partial) and an added column:
+    // the digests are unchanged, the stored files do not fit
+    for (partial <- Seq[DataFrame => DataFrame](
+        counted(_).withColumn("c", col("c").cast("int")),
+        counted(_).withColumn("d", col("c") * 2L))) {
+      val (got, rep) = run(partial)
+      assert(rep.rebuilt, rep)
+      assert(got.schema.map(f => (f.name, f.dataType)) ==
+        partial(s.withColumn("__bucket", lit(0L)).limit(0)).drop("__bucket")
+          .schema.map(f => (f.name, f.dataType)))
+      assert(answer(got) == want)
+      if (got.columns.contains("d"))
+        assert(got.filter(col("d").isNull).isEmpty)
+      assert(!run(partial)._2.rebuilt, "the rebuilt store is kept")
+    }
+  }
+
+  test("incremental PQ index over IntegerType ids: codes keep the id type " +
+      "and equal pqEncode under the stored books, rebuilt and clean") {
+    val e = viaParquet(vectors(120).withColumn("vec_id",
+      col("vec_id").cast("int")))
+    val dir = freshDir()
+    val books = () => spark.read.parquet(s"$dir/books")
+    for (first <- Seq(true, false)) {
+      val (codes, rep) = Similarity.pqIndexIncremental(e, dir, m = 4,
+        ksub = 8, nBuckets = 16)
+      assert(rep.rebuilt == first, rep)
+      val want = Similarity.pqEncode(e, books(), m = 4)
+      assert(codes.schema.map(_.dataType) == want.schema.map(_.dataType))
+      assert(rows(codes) == rows(want))
+    }
+    val q = e.filter(col("vec_id") < 3)
+    assert(Similarity.pqSearchIncremental(spark, dir, q, k = 3, m = 4)
+      .count() > 0)
   }
 }

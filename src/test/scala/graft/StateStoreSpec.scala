@@ -169,8 +169,8 @@ class StateStoreSpec extends AnyFunSuite with SparkSpec {
       """def\s+(batchPartitions|list\w*Ids|\w*BatchIds)\b""",
       """stripPrefix\("\w*=""",
       """def\s+(\w*[Gg]roupOf|appendGroup\w*)\b""",
-      // the state files' codec: the `compression` write option or the
-      // session's parquet codec key
+      // the append stores' codec (StateStore.writer): the `compression`
+      // write option or the session's parquet codec key
       """[".]compression\b""").map(_.r)
     val st = Files.walk(root)
     val sources =
