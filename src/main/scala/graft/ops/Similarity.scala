@@ -684,7 +684,8 @@ object Similarity {
       stateDir: String): String = {
     val fs = StateStore.fsOf(spark, stateDir)
     StateStore.readMarker(fs, booksSigPath(stateDir)).getOrElse {
-      val sig = booksSignature(spark.read.parquet(booksPath(stateDir)))
+      val sig = booksSignature(
+        StateStore.readStored(spark, booksPath(stateDir)))
       StateStore.writeMarker(fs, booksSigPath(stateDir), sig)
       sig
     }
@@ -898,7 +899,7 @@ object Similarity {
     * dimension they encode. */
   private def loadBooks(spark: org.apache.spark.sql.SparkSession,
       stateDir: String): (DataFrame, Int) = {
-    val books = spark.read.parquet(booksPath(stateDir))
+    val books = StateStore.readStored(spark, booksPath(stateDir))
     val bookRows = books.collect().toSeq
     require(bookRows.nonEmpty,
       s"stored codebook at ${booksPath(stateDir)} is empty/damaged — " +
@@ -954,7 +955,7 @@ object Similarity {
   def pqSearchIncremental(spark: org.apache.spark.sql.SparkSession,
       stateDir: String, queries: DataFrame, k: Int, m: Int,
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    pqSearch(spark.read.parquet(booksPath(stateDir)),
+    pqSearch(StateStore.readStored(spark, booksPath(stateDir)),
       IncrementalAgg.readStore(spark, stateDir), queries, k, m,
       idCol, vecCol)
 

@@ -343,23 +343,36 @@ object StateStore {
     spark.read.schema(StructType(rows.fields.map(_.copy(nullable = true)) :+
       StructField("__bgroup", LongType))).parquet(store)
 
-  /** Were `store`'s files written with `rows`' columns (names and types,
-    * nullability aside)? One footer read on the driver: the Spark schema
-    * the first data file records. A store with no data file holds any
-    * schema; a listing or footer fault propagates. */
-  private[graft] def holdsSchema(fs: FileSystem, store: String,
-      rows: StructType): Boolean = {
-    val p = new Path(store)
-    (if (fs.exists(p)) firstDataFile(fs, p) else None).forall { f =>
+  /** The Spark schema the first data file under `path` records in its
+    * footer: one driver-side read, no Spark job. None when `path` holds
+    * no data file, or the file carries no Spark schema; a listing or
+    * footer fault propagates. */
+  private[graft] def storedSchema(fs: FileSystem,
+      path: String): Option[StructType] = {
+    val p = new Path(path)
+    (if (fs.exists(p)) firstDataFile(fs, p) else None).flatMap { f =>
       val in = ParquetFileReader.open(HadoopInputFile.fromPath(f,
         fs.getConf))
-      val stored = try in.getFooter.getFileMetaData.getKeyValueMetaData
+      val json = try in.getFooter.getFileMetaData.getKeyValueMetaData
         .get(ParquetReadSupport.SPARK_METADATA_KEY)
       finally in.close()
-      stored != null &&
-        DataType.fromJson(stored).catalogString == rows.catalogString
+      Option(json).map(DataType.fromJson(_).asInstanceOf[StructType])
     }
   }
+
+  /** An unpartitioned store whose files share one schema, read with its
+    * [[storedSchema]]: what schema inference answers, without the
+    * inference job. */
+  private[graft] def readStored(spark: SparkSession, path: String): DataFrame =
+    storedSchema(fsOf(spark, path), path)
+      .fold(spark.read)(spark.read.schema(_)).parquet(path)
+
+  /** Were `store`'s files written with `rows`' columns (names and types,
+    * nullability aside)? Compares [[storedSchema]]; a store with no data
+    * file holds any schema. */
+  private[graft] def holdsSchema(fs: FileSystem, store: String,
+      rows: StructType): Boolean =
+    storedSchema(fs, store).forall(_.catalogString == rows.catalogString)
 
   /** Group-granular surgery on a grouped store: the dirty buckets'
     * GROUPS rewrite as (`recomputed` dirty rows) ∪ (the same groups'

@@ -294,9 +294,18 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
     val dir = freshDir()
     val books = () => spark.read.parquet(s"$dir/books")
     for (first <- Seq(true, false)) {
-      val (codes, rep) = Similarity.pqIndexIncremental(e, dir, m = 4,
-        ksub = 8, nBuckets = 16)
+      var codes: DataFrame = null
+      var rep: IncrementalAgg.IncrementalReport = null
+      val jobs = jobsLaunchedBy {
+        val r = Similarity.pqIndexIncremental(e, dir, m = 4, ksub = 8,
+          nBuckets = 16)
+        codes = r._1
+        rep = r._2
+      }
       assert(rep.rebuilt == first, rep)
+      // a clean run: the digest compare (2), the books' collect and the
+      // seed error's read; the books' schema comes from their footer
+      if (!first) assert(jobs <= 4, s"$jobs jobs for a clean PQ run")
       val want = Similarity.pqEncode(e, books(), m = 4)
       assert(codes.schema.map(_.dataType) == want.schema.map(_.dataType))
       assert(rows(codes) == rows(want))
