@@ -177,10 +177,11 @@ class StateFormatSpec extends AnyFunSuite with SparkSpec {
       .flatMap { case (want, (name, run)) =>
         val dir = freshDir()
         run(dir)
-        val chunks = parquetFiles(dir).flatMap(p => codecs(p).map(p -> _))
-        if (chunks.isEmpty) Seq(s"$name: no column chunk under $dir")
-        else chunks.collect {
-          case (p, c) if c != want => s"$name: $p is $c, not $want"
+        val files = parquetFiles(dir).map(p => p -> codecs(p).toSet)
+        if (files.forall(_._2.isEmpty))
+          Seq(s"$name: no column chunk under $dir")
+        else files.collect {
+          case (p, cs) if cs != Set(want) => s"$name: $p is $cs, not $want"
         }
       }
     assert(failures.isEmpty, failures.mkString("\n"))
